@@ -2122,6 +2122,8 @@ def rare_token_rate(
     IEEE expression; one final division — hash-equal to the SQL
     replay at any parallelism.
     """
+    if min_count is None and rel_threshold is None:
+        raise ValueError("rare_token_rate: set min_count or rel_threshold")
     ex = docs.select(id_col, F.explode(_words(text_col)).alias("_w"))
     ww = Window.partitionBy("_w")
     per = ex.withColumn("_cw", F.count("*").over(ww))

@@ -383,8 +383,3 @@ def resize_bilinear(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     bot = a[y1][:, x0] * (1 - wx) + a[y1][:, x1] * wx
     out = top * (1 - wy) + bot * wy
     return np.round(out).astype(np.uint8) if arr.dtype == np.uint8 else out
-
-
-def resize_stub(*args, **kw):
-    """Backward-compat alias from round 1, now implemented for real."""
-    return resize_bilinear(*args, **kw)

@@ -71,22 +71,6 @@ def forward_fill(
     return df.withColumn(out_col, F.last(value_col, ignorenulls=True).over(w))
 
 
-def backward_fill(
-    df: DataFrame,
-    *,
-    source_col: str = "source",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    out_col: str = "value_bf",
-) -> DataFrame:
-    w = (
-        Window.partitionBy(source_col)
-        .orderBy(ts_col)
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    return df.withColumn(out_col, F.first(value_col, ignorenulls=True).over(w))
-
-
 def interpolate_linear(
     df: DataFrame,
     *,

@@ -8,9 +8,16 @@ Default mode (driver contract): runs the headline queries at
 north-rule throughput metric (rolled-up points/sec across the 4
 retention tiers on the synthetic token-sequence table).
 
+The full report (extras + per-query steal) goes to
+``BENCH/report.json`` (override: ``$SPARK_GRAFT_BENCH_REPORT``).
+
 ``python bench.py --scaling`` additionally runs the tier pipeline at
 local[8] vs local[32] on the same input and reports scaling efficiency
 (the sandbox proxy for the N -> 4N executor gate, see BASELINE.md).
+
+``python bench.py --headroom OP [OP ...] [--small]`` times the named
+heavy ops (``HEADROOM_SERIES`` / ``HEADROOM_CORPUS``) at a base size
+and at 4x, one JSON line per reading.
 """
 
 from __future__ import annotations
@@ -21,10 +28,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# the whole local-mode JVM is the "cluster"; give it room before the
-# first session pins the heap
-os.environ.setdefault("SPARK_DRIVER_MEM", "32g")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -142,15 +145,127 @@ def run_tiers(spark, n_docs: int) -> tuple[float, int]:
         shutil.rmtree(work, ignore_errors=True)
 
 
+# contract queries (__spark_entry__.queries() keys) timed in the
+# headline suite, next to the tiers_tokens pipeline
+HEADLINE = (
+    "rollup_1m", "rollup_1h_2level", "quantile_ad", "persist_ad",
+    "rolling_median_w7c", "double_rolling_l1", "to_events",
+    "gapfill_lerp", "standard_scale", "doc_quality", "embed_cosine_top10",
+)
+
+# contract queries timed outside the headline value (report file only)
+EXTRAS = (
+    "lm_perplexity", "asof_join", "tier_route_2h", "m4_downsample_15m",
+    "repetition_stats", "min_cluster_ad", "cusum_ad", "ewma",
+    "rollup_topk_1h", "rollup_retention_1h", "gap_report", "zipf_slope",
+    "pack_sequences", "rollup_hist_1h", "rollup_distinct_1h", "sax_8m",
+    "ngram_contamination", "psi_drift", "ks_drift", "js_drift",
+    "token_entropy", "tfidf_topk", "bm25_topk", "seasonal_naive",
+    "vocab_kl", "ltob_downsample_15m", "lm_bigram_ppl", "rollup_slope_1h",
+    "embedding_contamination", "funnel", "cohort_retention",
+    "dedup_keep_best", "sax_motifs", "corr_matrix", "pmi_collocations",
+    "logodds_tokens", "interarrival_stats", "doc_novelty",
+    "trailing_percentile_ad", "boilerplate_prefixes", "hurst_exponent",
+    "embedding_centroid_drift", "session_stats", "peak_detection",
+    "user_concentration", "acf", "rare_token_rate", "ks_timeline",
+    "rolling_corr", "charset_stats", "presence_lift", "weekday_profile",
+    "mixture_sample", "quality_gate", "psi_timeline", "rollup_twa_1h",
+    "event_cooccurrence", "stratified_take", "winsorize",
+    "mixture_epochs", "seasonality_strength", "duplicate_spans",
+)
+
+
+# Production-configuration variants, timed beside EXTRAS. Dedup runs
+# xxhash64 banding + stars CC, not the contract queries' portable md5
+# oracle-replay path, which is ~10x slower by design.
+def _docs(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def _lsh_pairs(docs):
+    from adtk_spark.operators.corpus import minhash_lsh_pairs
+
+    return minhash_lsh_pairs(docs, jaccard_threshold=0.7, max_bucket=1000)
+
+
+def _stars_groups(docs):
+    from adtk_spark.operators.corpus import dedup_groups
+
+    return dedup_groups(_lsh_pairs(docs), docs, algorithm="stars")
+
+
+def _prod_minhash(spark, sf_dir):
+    return _lsh_pairs(_docs(spark, sf_dir))
+
+
+def _prod_dedup_groups(spark, sf_dir):
+    return _stars_groups(_docs(spark, sf_dir))
+
+
+def _prod_split_by_group(spark, sf_dir):
+    # LSH pairs + stars CC feed the group-atomic split
+    from adtk_spark.operators.corpus import split_by_group
+
+    docs = _docs(spark, sf_dir)
+    return split_by_group(docs.select("doc_id"), _stars_groups(docs),
+                          test_ratio=0.1, portable=False)
+
+
+def _prod_containment(spark, sf_dir):
+    # xxhash64 shingle keys (the contract query replays the ~20x-costlier
+    # portable-md5 oracle path instead)
+    from adtk_spark.operators.corpus import ngram_containment_pairs
+
+    return ngram_containment_pairs(_docs(spark, sf_dir), shingle_n=3,
+                                   threshold=0.8)
+
+
+def _embed_dups(spark, sf_dir):
+    # embedding near-dups including the oversized-cell recursive split,
+    # so the recovery path's cost is recorded, not assumed
+    from adtk_spark.operators.ann import embedding_dup_pairs, ivf_fit
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return embedding_dup_pairs(emb, ivf_fit(emb, n_lists=16),
+                               threshold=0.95, max_cell=2000)
+
+
+def _audio_feats(spark, _sf_dir):
+    # mapInPandas batch throughput of the vectorized decode loop: 2,000
+    # WAV payloads (8k samples each) -> RMS/ZCR/rfft centroid
+    from adtk_spark.operators.multimodal import (
+        extract_audio_features,
+        synthetic_wav_media,
+    )
+
+    return extract_audio_features(
+        synthetic_wav_media(spark, n=2000, duration_secs=1.0))
+
+
+def _image_feats(spark, _sf_dir):
+    # same for 4,000 BMP payloads (32x24 RGB) -> mean/std/entropy
+    from adtk_spark.operators.multimodal import (
+        extract_features,
+        synthetic_bmp_media,
+    )
+
+    return extract_features(synthetic_bmp_media(spark, n=4000))
+
+
+PROD_EXTRAS = {
+    "minhash_dedup_prod": _prod_minhash,
+    "dedup_groups_prod": _prod_dedup_groups,
+    "split_by_group_prod": _prod_split_by_group,
+    "ngram_containment_prod": _prod_containment,
+    "embedding_dup_prod": _embed_dups,
+    "audio_features_2k": _audio_feats,
+    "image_features_4k": _image_feats,
+}
+
+
 def bench_queries(spark, sf_dir: str) -> dict[str, float]:
     import __spark_entry__ as entrymod
 
-    names = [
-        "rollup_1m", "rollup_1h_2level", "quantile_ad", "persist_ad",
-        "rolling_median_w7c", "double_rolling_l1", "to_events",
-        "gapfill_lerp", "standard_scale", "doc_quality",
-        "embed_cosine_top10",
-    ]
     # warm the parquet footers / JVM before timing
     for t in ("events", "documents", "embeddings"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
@@ -165,7 +280,7 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
     # third try makes back-to-back bursts non-fatal without lengthening
     # quiet runs.
     steal = {}
-    for name in names:
+    for name in HEADLINE:
         best, best_steal = float("inf"), float("nan")
         for attempt in range(3):
             if attempt == 2 and best <= 5.0:
@@ -399,6 +514,157 @@ def run_pandas_baseline() -> dict:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def text_corpus(spark, n_docs: int, vocab: int = 5000, seed: int = 1,
+                partitions: int = 32):
+    """Deterministic expression-generated text corpus (the sf0.1
+    documents table is only 5k rows — too small for a headroom curve).
+    Zipf-skewed word draws (u^4 head-heavy) so k-grams repeat
+    naturally, plus a fixed 30-word boilerplate header on ~10% of docs —
+    the span structure duplicate_spans exists to cut."""
+    from pyspark.sql import functions as F
+
+    ids = spark.range(0, n_docs, 1, partitions)
+
+    def u(k: int):
+        h = F.xxhash64(F.lit(seed * 100 + k), F.col("id"))
+        return (F.pmod(h, F.lit(1_000_000_007)).cast("double") + 0.5) \
+            / 1_000_000_007.0
+
+    n_words = (F.lit(20) + F.pmod(F.xxhash64(F.lit(seed), F.col("id")),
+                                  F.lit(80))).cast("int")
+    words = F.transform(
+        F.sequence(F.lit(1), n_words),
+        lambda i: F.concat(F.lit("w"), F.floor(
+            F.lit(float(vocab)) * F.pow(
+                (F.pmod(F.xxhash64(F.lit(seed), F.col("id") * 7919
+                                   + i.cast("long")),
+                        F.lit(1_000_000_007)).cast("double") + 0.5)
+                / 1_000_000_007.0,
+                F.lit(4.0))).cast("long")),
+    )
+    header = " ".join(f"hdr{i}" for i in range(30))
+    body = F.array_join(words, " ")
+    text = F.when(u(9) < 0.1, F.concat(F.lit(header + " "), body)) \
+        .otherwise(body)
+    return ids.select(F.col("id").alias("doc_id"), text.alias("text"))
+
+
+def _headroom_sax(raw):
+    from pyspark.sql import functions as F
+
+    from adtk_spark.plans.tiers import sax_downsample
+
+    m1 = (raw.groupBy("source",
+                      F.date_trunc("minute", F.col("ts")).alias("bucket_ts"))
+          .agg((F.sum("value") / F.count("value")).alias("mean")))
+    return sax_downsample(m1, segment_secs=480, alphabet=4)
+
+
+def _headroom_cooc(raw):
+    # sparse anomaly sessions: the top ~3% of values, the detector-output
+    # shape this op consumes in production
+    from pyspark.sql import functions as F
+
+    from adtk_spark.operators.events import event_cooccurrence, sessionize
+
+    sess = sessionize(raw.where(F.col("value") > 150.0), gap_secs=600)
+    return event_cooccurrence(sess, start_col="session_start",
+                              end_col="session_end")
+
+
+def _headroom_hurst(raw):
+    from adtk_spark.operators.hd import hurst_exponent
+
+    return hurst_exponent(raw)
+
+
+def _headroom_dup_spans(docs):
+    from adtk_spark.operators.corpus import duplicate_spans
+
+    return duplicate_spans(docs, k=5)
+
+
+def _headroom_contamination(docs):
+    from pyspark.sql import functions as F
+
+    from adtk_spark.operators.corpus import ngram_contamination
+
+    bench = docs.where(F.col("doc_id") % 97 == 0)
+    return ngram_contamination(docs.where(F.col("doc_id") % 97 != 0), bench,
+                               n=5)
+
+
+def _headroom_novelty(docs):
+    from adtk_spark.operators.corpus import doc_novelty
+
+    return doc_novelty(docs)
+
+
+# --headroom ops over the scaling-series generator (2048 Zipf-skewed
+# sources, 6-day span) at 64M and 256M raw rows ...
+HEADROOM_SERIES = {
+    "sax_8m": _headroom_sax,
+    "event_cooccurrence": _headroom_cooc,
+    "hurst_exponent": _headroom_hurst,
+}
+# ... and over text_corpus at 100k and 400k docs. The 4x corpus repeats
+# every gram 4x as often, so duplicate_spans' broadcast set of
+# duplicated hashes reaches its vocabulary maximum.
+HEADROOM_CORPUS = {
+    "duplicate_spans": _headroom_dup_spans,
+    "ngram_contamination": _headroom_contamination,
+    "doc_novelty": _headroom_novelty,
+}
+
+
+def run_headroom(ops: list[str], small: bool) -> None:
+    """Data-size headroom: each op at a base size and at 4x, one timed
+    run each with its hypervisor-steal column, so a contended window is
+    distinguishable from a slow engine. Prints one JSON line per
+    reading. ``small`` divides every size by 100 (smoke only)."""
+    import shutil
+    import tempfile
+
+    from adtk_spark.session import get_spark
+    from adtk_spark.sources.tokens import token_corpus, token_series
+
+    known = {**HEADROOM_CORPUS, **HEADROOM_SERIES}
+    if not ops or not set(ops) <= set(known):
+        raise SystemExit(f"--headroom takes one or more of: {', '.join(known)}")
+    scale = 100 if small else 1
+    spark = get_spark("headroom", cores=CPUS, shuffle_partitions=2 * CPUS,
+                      extra_conf={"spark.local.dir": "/dev/shm/spark-local"})
+    spark.sparkContext.setLogLevel("ERROR")
+
+    def reading(op, df, unit, n, **tags):
+        sec, steal = timed(lambda: materialize(df))
+        print(json.dumps({"op": op, unit: n, **tags, "sec": round(sec, 2),
+                          "steal_sec": round(steal, 2),
+                          f"{unit}_per_sec": round(n / sec)}), flush=True)
+
+    corpus_ops = [op for op in ops if op in HEADROOM_CORPUS]
+    series_ops = [op for op in ops if op in HEADROOM_SERIES]
+    for tag, n_docs in (("1x", 100_000), ("4x", 400_000)) if corpus_ops else ():
+        docs = text_corpus(spark, n_docs // scale)
+        n = docs.count()
+        for op in corpus_ops:
+            reading(op, HEADROOM_CORPUS[op](docs), "docs", n, corpus=tag)
+    for n_rows in (64_000_000, 256_000_000) if series_ops else ():
+        work = tempfile.mkdtemp(prefix="headroom_")
+        try:
+            token_series(
+                token_corpus(spark, n_rows // scale, n_sources=2048,
+                             span_secs=6 * 86400, partitions=64)
+            ).write.mode("overwrite").parquet(f"{work}/raw")
+            raw = spark.read.parquet(f"{work}/raw")
+            n = raw.count()
+            for op in series_ops:
+                reading(op, HEADROOM_SERIES[op](raw), "rows", n)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+    spark.stop()
+
+
 def main():
     from adtk_spark.session import get_spark
 
@@ -413,170 +679,32 @@ def main():
         print(json.dumps(run_pandas_baseline()))
         return
 
+    if "--headroom" in sys.argv:
+        ops = [a for a in sys.argv[sys.argv.index("--headroom") + 1:]
+               if not a.startswith("--")]
+        run_headroom(ops, small="--small" in sys.argv)
+        return
+
     probe = noise_probe()
     # shuffle files on tmpfs: local-mode shuffle on the virtio root disk
     # serializes on I/O; a real cluster keeps shuffle on executor-local
     # SSDs (same rationale as the --scaling mode, BENCH/BASELINE.md)
     spark = get_spark("bench", cores=CPUS, shuffle_partitions=2 * CPUS,
                       extra_conf={"spark.local.dir": "/dev/shm/spark-local"})
+    # keeps the captured stdout tail free of WindowExec WARN lines
+    spark.sparkContext.setLogLevel("ERROR")
     t_all = time.time()
     tier_sec, tier_points = run_tiers(spark, n_docs)
     queries = bench_queries(spark, SF_DIR)
     # corpus/join ops timed OUTSIDE the headline (kept out of `value`
     # so round-over-round comparisons stay apples-to-apples with the
-    # recorded baseline suite). Dedup runs the PRODUCTION configuration
-    # (xxhash64 banding + stars CC), not the contract queries' portable
-    # md5 oracle-replay path, which is ~10x slower by design.
+    # recorded baseline suite)
     import __spark_entry__ as entrymod
 
-    def _prod_containment(spark_, sf_dir):
-        # production config: xxhash64 shingle keys (the contract query
-        # replays the ~20x-costlier portable-md5 oracle path instead)
-        from adtk_spark.operators.corpus import ngram_containment_pairs
-
-        docs = spark_.read.parquet(f"{sf_dir}/documents.parquet")
-        return ngram_containment_pairs(docs, shingle_n=3, threshold=0.8)
-
-    def _prod_minhash(spark_, sf_dir):
-        from adtk_spark.operators.corpus import minhash_lsh_pairs
-
-        docs = spark_.read.parquet(f"{sf_dir}/documents.parquet")
-        return minhash_lsh_pairs(docs, jaccard_threshold=0.7, max_bucket=1000)
-
-    def _prod_dedup_groups(spark_, sf_dir):
-        from adtk_spark.operators.corpus import dedup_groups, minhash_lsh_pairs
-
-        docs = spark_.read.parquet(f"{sf_dir}/documents.parquet")
-        pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.7, max_bucket=1000)
-        return dedup_groups(pairs, docs, algorithm="stars")
-
-    def _prod_split_by_group(spark_, sf_dir):
-        # production config: xxhash64 LSH pairs + stars CC feed the
-        # group-atomic split (the contract query replays the slower
-        # portable-md5 exact-jaccard oracle path instead)
-        from adtk_spark.operators.corpus import (
-            dedup_groups,
-            minhash_lsh_pairs,
-            split_by_group,
-        )
-
-        docs = spark_.read.parquet(f"{sf_dir}/documents.parquet")
-        pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.7, max_bucket=1000)
-        groups = dedup_groups(pairs, docs, algorithm="stars")
-        return split_by_group(
-            docs.select("doc_id"), groups, test_ratio=0.1, portable=False
-        )
-
-    def _embed_dups(spark_, sf_dir):
-        # production embedding near-dup config including the oversized-
-        # cell recursive split (r4 VERDICT item #6 done-criterion: the
-        # recovery path's cost is recorded, not assumed)
-        from adtk_spark.operators.ann import embedding_dup_pairs, ivf_fit
-
-        emb = spark_.read.parquet(f"{sf_dir}/embeddings.parquet")
-        centers = ivf_fit(emb, n_lists=16)
-        return embedding_dup_pairs(emb, centers, threshold=0.95,
-                                   max_cell=2000)
-
-    def _audio_feats(spark_, _sf_dir):
-        # r03 VERDICT item #7 done-criterion: measured mapInPandas batch
-        # throughput for the vectorized (zip-over-numpy-columns) decode
-        # loop — 2,000 real WAV payloads (8k samples each) through the
-        # audio feature extractor (decode + RMS/ZCR/rfft centroid)
-        from adtk_spark.operators.multimodal import (
-            extract_audio_features,
-            synthetic_wav_media,
-        )
-
-        return extract_audio_features(
-            synthetic_wav_media(spark_, n=2000, duration_secs=1.0))
-
-    def _image_feats(spark_, _sf_dir):
-        # same for 4,000 real BMP payloads (32x24 RGB) through the
-        # image feature extractor (decode + mean/std/entropy)
-        from adtk_spark.operators.multimodal import (
-            extract_features,
-            synthetic_bmp_media,
-        )
-
-        return extract_features(synthetic_bmp_media(spark_, n=4000))
-
-    eqs = entrymod.queries()
-    extra_fns = {
-        "minhash_dedup_prod": _prod_minhash,
-        "dedup_groups_prod": _prod_dedup_groups,
-        "lm_perplexity": eqs.get("lm_perplexity"),
-        "asof_join": eqs.get("asof_join"),
-        "tier_route_2h": eqs.get("tier_route_2h"),
-        "m4_downsample_15m": eqs.get("m4_downsample_15m"),
-        "repetition_stats": eqs.get("repetition_stats"),
-        "split_by_group_prod": _prod_split_by_group,
-        "min_cluster_ad": eqs.get("min_cluster_ad"),
-        "cusum_ad": eqs.get("cusum_ad"),
-        "ewma": eqs.get("ewma"),
-        "rollup_topk_1h": eqs.get("rollup_topk_1h"),
-        "rollup_retention_1h": eqs.get("rollup_retention_1h"),
-        "gap_report": eqs.get("gap_report"),
-        "zipf_slope": eqs.get("zipf_slope"),
-        "pack_sequences": eqs.get("pack_sequences"),
-        "rollup_hist_1h": eqs.get("rollup_hist_1h"),
-        "rollup_distinct_1h": eqs.get("rollup_distinct_1h"),
-        "audio_features_2k": _audio_feats,
-        "image_features_4k": _image_feats,
-        "embedding_dup_prod": _embed_dups,
-        "sax_8m": eqs.get("sax_8m"),
-        "ngram_contamination": eqs.get("ngram_contamination"),
-        "psi_drift": eqs.get("psi_drift"),
-        "ks_drift": eqs.get("ks_drift"),
-        "js_drift": eqs.get("js_drift"),
-        "token_entropy": eqs.get("token_entropy"),
-        "tfidf_topk": eqs.get("tfidf_topk"),
-        "bm25_topk": eqs.get("bm25_topk"),
-        "seasonal_naive": eqs.get("seasonal_naive"),
-        "vocab_kl": eqs.get("vocab_kl"),
-        "ltob_downsample_15m": eqs.get("ltob_downsample_15m"),
-        "lm_bigram_ppl": eqs.get("lm_bigram_ppl"),
-        "rollup_slope_1h": eqs.get("rollup_slope_1h"),
-        "embedding_contamination": eqs.get("embedding_contamination"),
-        "funnel": eqs.get("funnel"),
-        "cohort_retention": eqs.get("cohort_retention"),
-        "dedup_keep_best": eqs.get("dedup_keep_best"),
-        "sax_motifs": eqs.get("sax_motifs"),
-        "ngram_containment_prod": _prod_containment,
-        "corr_matrix": eqs.get("corr_matrix"),
-        "pmi_collocations": eqs.get("pmi_collocations"),
-        "logodds_tokens": eqs.get("logodds_tokens"),
-        "interarrival_stats": eqs.get("interarrival_stats"),
-        "doc_novelty": eqs.get("doc_novelty"),
-        "trailing_percentile_ad": eqs.get("trailing_percentile_ad"),
-        "boilerplate_prefixes": eqs.get("boilerplate_prefixes"),
-        "hurst_exponent": eqs.get("hurst_exponent"),
-        "embedding_centroid_drift": eqs.get("embedding_centroid_drift"),
-        "session_stats": eqs.get("session_stats"),
-        "peak_detection": eqs.get("peak_detection"),
-        "user_concentration": eqs.get("user_concentration"),
-        "acf": eqs.get("acf"),
-        "rare_token_rate": eqs.get("rare_token_rate"),
-        "ks_timeline": eqs.get("ks_timeline"),
-        "rolling_corr": eqs.get("rolling_corr"),
-        "charset_stats": eqs.get("charset_stats"),
-        "presence_lift": eqs.get("presence_lift"),
-        "weekday_profile": eqs.get("weekday_profile"),
-        "mixture_sample": eqs.get("mixture_sample"),
-        "quality_gate": eqs.get("quality_gate"),
-        "psi_timeline": eqs.get("psi_timeline"),
-        "rollup_twa_1h": eqs.get("rollup_twa_1h"),
-        "event_cooccurrence": eqs.get("event_cooccurrence"),
-        "stratified_take": eqs.get("stratified_take"),
-        "winsorize": eqs.get("winsorize"),
-        "mixture_epochs": eqs.get("mixture_epochs"),
-        "seasonality_strength": eqs.get("seasonality_strength"),
-        "duplicate_spans": eqs.get("duplicate_spans"),
-    }
+    qs = entrymod.queries()
+    extra_fns = {**{name: qs[name] for name in EXTRAS}, **PROD_EXTRAS}
     extras, extras_steal = {}, {}
     for name, fn in extra_fns.items():
-        if fn is None:
-            continue
         best, best_steal = float("inf"), float("nan")
         for _ in range(2):
             el, st = timed(lambda: materialize(fn(spark, SF_DIR)))
@@ -626,7 +754,7 @@ def main():
     report_path = os.environ.get(
         "SPARK_GRAFT_BENCH_REPORT",
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH", "report_r05.json"),
+                     "BENCH", "report.json"),
     )
     os.makedirs(os.path.dirname(report_path), exist_ok=True)
     with open(report_path, "w") as f:
@@ -638,4 +766,7 @@ def main():
 
 
 if __name__ == "__main__":
+    # the whole local-mode JVM is the "cluster"; give it room before the
+    # first session pins the heap
+    os.environ.setdefault("SPARK_DRIVER_MEM", "32g")
     main()

@@ -1581,6 +1581,15 @@ def test_rare_token_rate_relative_mode(spark):
     assert out_abs[900]["n_rare"] == 0
 
 
+def test_rare_token_rate_needs_a_threshold():
+    """With neither threshold set the call fails with a clear error
+    before any plan is built (docs is never touched)."""
+    from adtk_spark.operators.corpus import rare_token_rate
+
+    with pytest.raises(ValueError, match="set min_count or rel_threshold"):
+        rare_token_rate(None, min_count=None, rel_threshold=None)
+
+
 def test_charset_stats_classes(spark):
     """Exact class ratios on a crafted doc; mojibake (non-ASCII) drops
     ascii_ratio while token-level stats stay blind; empty doc -> NULL

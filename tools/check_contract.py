@@ -10,11 +10,12 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -76,7 +77,6 @@ def dtype_audit(sf_dir: str, only: list[str] | None = None) -> int:
     import __spark_entry__ as entrymod
     from adtk_spark.session import get_spark
 
-    import os
     cores = int(os.environ.get("SPARK_GRAFT_CHECK_CORES", "8"))
     spark = get_spark("dtype-audit", cores=cores, shuffle_partitions=cores)
     con = duckdb.connect()
@@ -126,7 +126,6 @@ def main(sf_dir: str, only: list[str] | None = None):
     import __spark_entry__ as entrymod
     from adtk_spark.session import get_spark
 
-    import os
     cores = int(os.environ.get("SPARK_GRAFT_CHECK_CORES", "8"))
     spark = get_spark("contract-check", cores=cores, shuffle_partitions=cores)
     con = duckdb.connect()
