@@ -350,24 +350,21 @@ def cohort_retention(
     as a MIN window over the user partition (Exchange 2) -> (cohort,
     offset) count (Exchange 3). All keys are high-cardinality or
     grow with the time span; per-user state is never buffered (the
-    window is an unordered MIN). Offsets are integer bucket deltas
-    computed from epoch seconds, so the matrix is integers end-to-end
-    — no float anywhere.
+    window is an unordered MIN). Offsets are CALENDAR-day deltas
+    between the truncated buckets (``datediff``), so a 23/25 h DST day
+    in a non-UTC session timezone still counts as one day — and the
+    matrix is integers end-to-end.
     """
-    widths = {"day": 86400, "week": 604800}
-    if bucket not in widths:
+    days = {"day": 1, "week": 7}
+    if bucket not in days:
         raise ValueError(f"cohort_retention: bucket must be one of "
-                         f"{sorted(widths)}, got {bucket!r}")
-    w_secs = widths[bucket]
+                         f"{sorted(days)}, got {bucket!r}")
     b = F.date_trunc(bucket, F.col(ts_col))
     act = df.select(F.col(user_col).alias("_u"), b.alias("_b")).distinct()
     cohort = F.min("_b").over(Window.partitionBy("_u"))
     d = act.withColumn("_c", cohort)
-    off = (
-        (F.unix_micros(F.col("_b").cast("timestamp"))
-         - F.unix_micros(F.col("_c").cast("timestamp")))
-        / F.lit(w_secs * 1_000_000)
-    ).cast("long")
+    off = (F.datediff(F.col("_b"), F.col("_c"))
+           / F.lit(days[bucket])).cast("long")
     return (
         d.select(F.col("_u"), F.col("_c").alias("cohort"),
                  off.alias("offset"))

@@ -20,6 +20,9 @@ Scale notes:
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -375,6 +378,113 @@ def rollup_topk_up(
     )
 
 
+def bin_index(v: Column, edges: list[float]) -> Column:
+    """Number of ``edges`` <= v (NULL for NULL): a branch-free sum of
+    indicator casts — whole-stage codegen, identical in any SQL dialect."""
+    return reduce(operator.add,
+                  [(v >= F.lit(float(e))).cast("int") for e in edges])
+
+
+def bin_counts(bin_col: Column, k: int) -> list[Column]:
+    """The ``k`` bins unrolled as integer sums ``_c0.._c{k-1}``: one row
+    per group, and a bin empty in that group reads 0 (no missing row)."""
+    return [F.sum((bin_col == i).cast("long")).alias(f"_c{i}")
+            for i in range(k)]
+
+
+def psi_term(p: Column, q: Column, eps: float) -> Column:
+    """One bin's ``(p - q) * ln(p / q)`` over eps-floored proportions (a
+    NULL one floors too), 1e-9-quantized so DECIMAL sums are exact in
+    any order — the one association every PSI path shares."""
+    p = F.greatest(p, F.lit(eps))
+    q = F.greatest(q, F.lit(eps))
+    return F.round((p - q) * F.log(p / q), 9)
+
+
+def psi_sum(ps: list[Column], qs: list[Column], eps: float) -> Column:
+    """PSI over unrolled per-bin proportions, rounded to 6 places: the
+    ``psi_term`` chain, equal to ``psi_drift``'s order-free DECIMAL sum."""
+    # decimal(20,9), NOT (38,9): Spark grows precision by 1 per chained
+    # add and SILENTLY DROPS SCALE (9 -> 8 -> ... -> 6) once the cap of
+    # 38 is hit — (20,9) leaves 18 digits of headroom for the chain
+    total = reduce(operator.add, [psi_term(p, q, eps).cast("decimal(20,9)")
+                                  for p, q in zip(ps, qs)])
+    return F.round(total.cast("double"), 6)
+
+
+def split_counts(df: DataFrame, key: Column, split_ts, *,
+                 source_col: str = "source", ts_col: str = "ts",
+                 value_col: str = "value") -> DataFrame:
+    """(source, k, cref, ccur): per (source, ``key``) counts of the
+    reference (``ts < split_ts``) and current windows over the non-NULL
+    values — one map-side combinable shuffle."""
+    is_ref = F.col(ts_col) < F.lit(split_ts)
+    return (
+        df.where(F.col(value_col).isNotNull())
+        .groupBy(source_col, key.alias("k"))
+        .agg(F.sum(F.when(is_ref, 1).otherwise(0)).alias("cref"),
+             F.sum(F.when(is_ref, 0).otherwise(1)).alias("ccur"))
+    )
+
+
+def distribution_compare(counts: DataFrame, stat: str, by: list[str], *,
+                         eps: float = 1e-6,
+                         extra: tuple[Column, ...] = ()) -> DataFrame:
+    """Score reference vs current per ``by`` group of a (``by``, k, cref,
+    ccur) count table: ``stat`` ``psi`` or ``jsd`` over bins ``k``, or
+    ``ks`` (max ECDF gap over ordered values ``k``). Emits ``by``, the
+    ``extra`` aggregates, ``n_ref``, ``n_cur`` and the score named
+    ``stat``. An empty side floors PSI proportions at eps; JSD and KS
+    are NULL then.
+
+    Plan: totals (and KS's cumulative counts) are WINDOW sums over the
+    ``by`` partitioning, which the final reduce reuses — one Exchange,
+    no join (a totals-aggregate + join-back plans the counts twice).
+    Integer counts, 1e-9-quantized DECIMAL term sums and KS's integer
+    cross products make every score bit-stable at any parallelism.
+    """
+    if stat not in ("psi", "jsd", "ks"):
+        raise ValueError(
+            f"distribution_compare: stat must be psi, jsd or ks, got {stat!r}")
+    w = Window.partitionBy(*by)
+    j = (counts.withColumn("n_ref", F.sum("cref").over(w))
+         .withColumn("n_cur", F.sum("ccur").over(w)))
+    n_ref, n_cur = F.col("n_ref"), F.col("n_cur")
+    if stat == "ks":
+        wcum = w.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
+        j = (j.withColumn("rc", F.sum("cref").over(wcum))
+             .withColumn("cc", F.sum("ccur").over(wcum)))
+        # DECIMAL products, numerator AND denominator: two ~3e9+ counts
+        # multiplied as int64 wrap (r04 ADVICE); (38,0) holds 1e26
+        dec = "decimal(20,0)"
+        agg = F.max(F.abs(F.col("rc").cast(dec) * n_cur.cast(dec)
+                          - F.col("cc").cast(dec) * n_ref.cast(dec)))
+        score = F.round(F.col("_s").cast("double") / (
+            n_ref.cast(dec) * n_cur.cast(dec)).cast("double"), 6)
+    else:
+        p = F.when(n_ref > 0, F.col("cref") / n_ref)
+        q = F.when(n_cur > 0, F.col("ccur") / n_cur)
+        if stat == "psi":
+            term = psi_term(p, q, eps)
+        else:
+            m = (p + q) * F.lit(0.5)
+            term = F.round(
+                F.when(p > 0, F.lit(0.5) * p * F.log(p / m)).otherwise(0.0)
+                + F.when(q > 0, F.lit(0.5) * q * F.log(q / m)).otherwise(0.0),
+                9)
+        agg = F.sum(term.cast("decimal(38,9)")).cast("double")
+        score = F.round("_s", 6)
+    if stat != "psi":
+        score = F.when((n_ref > 0) & (n_cur > 0), score)
+    return (
+        j.groupBy(*by)
+        .agg(*extra, F.min("n_ref").alias("n_ref"),
+             F.min("n_cur").alias("n_cur"), agg.alias("_s"))
+        .withColumn(stat, score)
+        .drop("_s")
+    )
+
+
 def rollup_hist(
     df: DataFrame,
     edges: list[float],
@@ -385,30 +495,22 @@ def rollup_hist(
     value_col: str = "value",
 ) -> DataFrame:
     """Mergeable histogram tier: per (source, bucket, bin) row counts
-    over EXPLICIT bin edges — the exact, trivially re-aggregable
-    distribution tier. Bin counts SUM upward (``rollup_hist_up``), so a
-    1m -> 1h -> 1d heatmap chain reads raw once; fixed bins are the
-    exact complement to the adaptive t-digest column (sketch.py) when
-    the value range is known (latency SLO buckets, token-count bands).
-
-    Bin index = number of edges <= value (0 = below the first edge,
-    len(edges) = above the last), computed as a branch-free sum of
-    indicator casts — whole-stage codegen, identical in any SQL
-    dialect. Relational one-row-per-nonempty-bin form keeps the upward
-    merge algebraic and skew-free.
+    over EXPLICIT bin edges (``bin_index``) — the exact, trivially
+    re-aggregable distribution tier. Bin counts SUM upward
+    (``rollup_hist_up``), so a 1m -> 1h -> 1d heatmap chain reads raw
+    once; fixed bins are the exact complement to the adaptive t-digest
+    column (sketch.py) when the value range is known (latency SLO
+    buckets, token-count bands). Relational one-row-per-nonempty-bin
+    form keeps the upward merge algebraic and skew-free.
     """
     trunc = TIER_INTERVALS[tier]
     v = F.col(value_col)
-    bin_expr = None
-    for e in edges:
-        ind = (v >= F.lit(float(e))).cast("int")
-        bin_expr = ind if bin_expr is None else bin_expr + ind
     return (
         df.where(v.isNotNull())
         .groupBy(
             source_col,
             F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"),
-            bin_expr.alias("bin"),
+            bin_index(v, edges).alias("bin"),
         )
         .agg(F.count("*").alias("cnt"))
     )
@@ -448,55 +550,13 @@ def psi_drift(
     pipeline runs per source per day to catch upstream regressions
     before they reach a model.
 
-    Plan shape: one (source, bin) shuffle with conditional counts
-    (map-side combinable), then the per-source totals as WINDOW sums
-    over the source partitioning and a final per-source reduce that
-    reuses that same partitioning — exactly two Exchanges, no join, no
-    duplicated aggregation subtree (a totals-aggregate + join-back
-    formulation plans the bin-count aggregate twice). Bins empty in
-    both windows contribute exactly 0, so only observed (source, bin)
-    rows ever materialize.
-
-    Determinism: counts are integers; each bin's PSI term is computed
-    with one fixed association ``(p - q) * ln(p / q)`` and the terms
-    are 1e-9-quantized DECIMAL-summed, so the score is bit-stable at
-    any parallelism and hash-equal to the SQL replay.
+    Plan shape: ``split_counts`` over the observed (source, bin) pairs,
+    then ``distribution_compare`` — exactly two Exchanges, no join.
     """
-    v = F.col(value_col)
-    bin_expr = None
-    for e in edges:
-        ind = (v >= F.lit(float(e))).cast("int")
-        bin_expr = ind if bin_expr is None else bin_expr + ind
-    is_ref = F.col(ts_col) < F.lit(split_ts)
-    per = (
-        df.where(v.isNotNull())
-        .groupBy(source_col, bin_expr.alias("bin"))
-        .agg(
-            F.sum(F.when(is_ref, 1).otherwise(0)).alias("cref"),
-            F.sum(F.when(is_ref, 0).otherwise(1)).alias("ccur"),
-        )
-    )
-    wsrc = Window.partitionBy(source_col)
-    j = per.withColumn("n_ref", F.sum("cref").over(wsrc)).withColumn(
-        "n_cur", F.sum("ccur").over(wsrc))
-    p = F.when(F.col("n_ref") == 0, F.lit(eps)).otherwise(
-        F.greatest(F.col("cref") / F.col("n_ref"), F.lit(eps)))
-    q = F.when(F.col("n_cur") == 0, F.lit(eps)).otherwise(
-        F.greatest(F.col("ccur") / F.col("n_cur"), F.lit(eps)))
-    term = (p - q) * F.log(p / q)
-    return (
-        j.groupBy(source_col)
-        .agg(
-            F.min("n_ref").alias("n_ref"),
-            F.min("n_cur").alias("n_cur"),
-            F.sum(F.round(term, 9).cast("decimal(38,9)"))
-            .cast("double").alias("_psi"),
-        )
-        .select(
-            source_col, "n_ref", "n_cur",
-            F.round("_psi", 6).alias("psi"),
-        )
-    )
+    counts = split_counts(df, bin_index(F.col(value_col), edges), split_ts,
+                          source_col=source_col, ts_col=ts_col,
+                          value_col=value_col)
+    return distribution_compare(counts, "psi", [source_col], eps=eps)
 
 
 def rollup_twa(
@@ -633,17 +693,10 @@ def psi_reference(
     bit-equal wherever they are re-embedded.
     """
     v = F.col(value_col)
-    bin_expr = None
-    for e in edges:
-        ind = (v >= F.lit(float(e))).cast("int")
-        bin_expr = ind if bin_expr is None else bin_expr + ind
     k = len(edges) + 1
-    d = df.where(v.isNotNull()).withColumn("_bin", bin_expr)
+    d = df.where(v.isNotNull()).withColumn("_bin", bin_index(v, edges))
     agg = d.groupBy(source_col).agg(
-        F.count(F.lit(1)).alias("n_ref"),
-        *[F.sum((F.col("_bin") == i).cast("long")).alias(f"_c{i}")
-          for i in range(k)],
-    )
+        F.count(F.lit(1)).alias("n_ref"), *bin_counts(F.col("_bin"), k))
     props = F.array(*[F.col(f"_c{i}") / F.col("n_ref") for i in range(k)])
     return agg.select(source_col, "n_ref", props.alias("props"))
 
@@ -666,18 +719,12 @@ def ks_drift(
     runs both (PSI for interpretable per-bin attribution, KS for the
     edge-free alarm).
 
-    Plan shape: one (source, value) shuffle with conditional integer
-    counts (map-side combinable), then cumulative window sums over the
-    source partitioning ordered by value, and a final per-source max
-    that reuses that same partitioning — exactly two Exchanges, no
-    join, mirror of ``psi_drift``.
-
-    Determinism: the statistic is computed ENTIRELY in integers —
-    ``D = max |rc*n_cur - cc*n_ref| / (n_ref*n_cur)`` where rc/cc are
-    cumulative counts at each distinct value — so the max is exact (no
-    float ECDF subtraction ties) and the single final division makes
-    the score bit-stable at any parallelism and hash-equal to the SQL
-    replay. Sources empty on either side emit NULL ks.
+    Plan shape: ``split_counts`` over (source, value), then
+    ``distribution_compare`` — exactly two Exchanges, no join. The
+    statistic is ENTIRELY integer, ``D = max |rc*n_cur - cc*n_ref| /
+    (n_ref*n_cur)`` over cumulative counts rc/cc at each distinct value:
+    an exact max (no float ECDF ties) and one final division. Sources
+    empty on either side emit NULL ks.
 
     Scale caveat: the second stage's per-source cumsum runs over the
     DISTINCT values of that source — already-quantized data (token
@@ -691,53 +738,9 @@ def ks_drift(
     v = F.col(value_col)
     if round_to is not None:
         v = F.round(v, round_to)
-    is_ref = F.col(ts_col) < F.lit(split_ts)
-    per = (
-        df.where(v.isNotNull())
-        .groupBy(source_col, v.alias("v"))
-        .agg(
-            F.sum(F.when(is_ref, 1).otherwise(0)).alias("cref"),
-            F.sum(F.when(is_ref, 0).otherwise(1)).alias("ccur"),
-        )
-    )
-    wsrc = Window.partitionBy(source_col)
-    wcum = wsrc.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    j = (
-        per.withColumn("n_ref", F.sum("cref").over(wsrc))
-        .withColumn("n_cur", F.sum("ccur").over(wsrc))
-        .withColumn("rc", F.sum("cref").over(wcum))
-        .withColumn("cc", F.sum("ccur").over(wcum))
-    )
-    # DECIMAL cross-products: two ~1e12 per-source counts would
-    # overflow int64 multiplied; (20,0)x(20,0) -> (38,0) holds 1e26.
-    dec = "decimal(20,0)"
-    gap = F.abs(
-        F.col("rc").cast(dec) * F.col("n_cur").cast(dec)
-        - F.col("cc").cast(dec) * F.col("n_ref").cast(dec)
-    )
-    return (
-        j.groupBy(source_col)
-        .agg(
-            F.min("n_ref").alias("n_ref"),
-            F.min("n_cur").alias("n_cur"),
-            F.max(gap).alias("_gap"),
-        )
-        .select(
-            source_col, "n_ref", "n_cur",
-            F.when(
-                (F.col("n_ref") > 0) & (F.col("n_cur") > 0),
-                F.round(
-                    F.col("_gap").cast("double")
-                    # the denominator needs the same DECIMAL treatment as
-                    # the numerator: two ~3e9+ per-source counts multiplied
-                    # as int64 would silently wrap (r04 ADVICE)
-                    / (F.col("n_ref").cast(dec) * F.col("n_cur").cast(dec))
-                    .cast("double"),
-                    6,
-                ),
-            ).alias("ks"),
-        )
-    )
+    counts = split_counts(df, v, split_ts, source_col=source_col,
+                          ts_col=ts_col, value_col=value_col)
+    return distribution_compare(counts, "ks", [source_col])
 
 
 def js_drift(
@@ -762,62 +765,15 @@ def js_drift(
     attribution, KS for the edge-free alarm, JSD for the bounded
     cross-source comparable score.
 
-    Plan shape: identical to ``psi_drift`` — one (source, bin) shuffle
-    with conditional integer counts (map-side combinable), per-source
-    totals as WINDOW sums over the source partitioning, final reduce
-    on that same partitioning: exactly two Exchanges, no join. Bins
-    empty in both windows never materialize and would contribute 0.
-
-    Determinism: counts are integers; each bin's term is computed with
-    one fixed association ``0.5*p*ln(p/m) + 0.5*q*ln(q/m)`` (each half
-    gated to 0 when its proportion is 0) and the terms are
-    1e-9-quantized DECIMAL-summed, so the score is bit-stable at any
-    parallelism and hash-equal to the SQL replay. Sources empty on
-    either side emit NULL jsd (KS convention — "distance to no data"
-    is not 0.5*ln2).
+    Plan shape: identical to ``psi_drift``. Each bin's term is
+    ``0.5*p*ln(p/m) + 0.5*q*ln(q/m)``. Sources empty on either side
+    emit NULL jsd (KS convention — "distance to no data" is not
+    0.5*ln2).
     """
-    v = F.col(value_col)
-    bin_expr = None
-    for e in edges:
-        ind = (v >= F.lit(float(e))).cast("int")
-        bin_expr = ind if bin_expr is None else bin_expr + ind
-    is_ref = F.col(ts_col) < F.lit(split_ts)
-    per = (
-        df.where(v.isNotNull())
-        .groupBy(source_col, bin_expr.alias("bin"))
-        .agg(
-            F.sum(F.when(is_ref, 1).otherwise(0)).alias("cref"),
-            F.sum(F.when(is_ref, 0).otherwise(1)).alias("ccur"),
-        )
-    )
-    wsrc = Window.partitionBy(source_col)
-    j = per.withColumn("n_ref", F.sum("cref").over(wsrc)).withColumn(
-        "n_cur", F.sum("ccur").over(wsrc))
-    p = F.when(F.col("n_ref") == 0, F.lit(0.0)).otherwise(
-        F.col("cref") / F.col("n_ref"))
-    q = F.when(F.col("n_cur") == 0, F.lit(0.0)).otherwise(
-        F.col("ccur") / F.col("n_cur"))
-    m = (p + q) * F.lit(0.5)
-    term = (
-        F.when(p > 0, F.lit(0.5) * p * F.log(p / m)).otherwise(F.lit(0.0))
-        + F.when(q > 0, F.lit(0.5) * q * F.log(q / m)).otherwise(F.lit(0.0))
-    )
-    return (
-        j.groupBy(source_col)
-        .agg(
-            F.min("n_ref").alias("n_ref"),
-            F.min("n_cur").alias("n_cur"),
-            F.sum(F.round(term, 9).cast("decimal(38,9)"))
-            .cast("double").alias("_jsd"),
-        )
-        .select(
-            source_col, "n_ref", "n_cur",
-            F.when(
-                (F.col("n_ref") > 0) & (F.col("n_cur") > 0),
-                F.round("_jsd", 6),
-            ).alias("jsd"),
-        )
-    )
+    counts = split_counts(df, bin_index(F.col(value_col), edges), split_ts,
+                          source_col=source_col, ts_col=ts_col,
+                          value_col=value_col)
+    return distribution_compare(counts, "jsd", [source_col])
 
 
 def psi_timeline(
@@ -842,27 +798,18 @@ def psi_timeline(
     conditional integer sums (no (source, bucket, bin) row
     materialization — a lag over sparse bin rows would silently skip
     empty bins), then ONE lag window over the source partitioning —
-    two Exchanges, no join. Same association and DECIMAL term
-    quantization as psi_drift/streaming_psi_drift: bit-stable at any
-    parallelism.
+    two Exchanges, no join. Scored by ``psi_sum``, bit-equal to
+    psi_drift/streaming_psi_drift at any parallelism.
     """
     trunc = TIER_INTERVALS[tier]
     v = F.col(value_col)
-    bin_expr = None
-    for e in edges:
-        ind = (v >= F.lit(float(e))).cast("int")
-        bin_expr = ind if bin_expr is None else bin_expr + ind
     k = len(edges) + 1
     per = (
         df.where(v.isNotNull())
-        .withColumn("_bin", bin_expr)
+        .withColumn("_bin", bin_index(v, edges))
         .groupBy(source_col,
                  F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"))
-        .agg(
-            F.count(F.lit(1)).alias("n_cur"),
-            *[F.sum((F.col("_bin") == i).cast("long")).alias(f"_c{i}")
-              for i in range(k)],
-        )
+        .agg(F.count(F.lit(1)).alias("n_cur"), *bin_counts(F.col("_bin"), k))
     )
     w = Window.partitionBy(source_col).orderBy("bucket_ts")
     lagged = per.select(
@@ -872,19 +819,11 @@ def psi_timeline(
         *[F.col(f"_c{i}") for i in range(k)],
         *[F.lag(f"_c{i}").over(w).alias(f"_p{i}") for i in range(k)],
     )
-    # decimal(20,9), NOT (38,9): Spark grows precision by 1 per chained
-    # add and SILENTLY DROPS SCALE (9 -> 8 -> ... -> 6) once the cap of
-    # 38 is hit — (20,9) leaves 18 digits of headroom for the chain
-    terms = None
-    for i in range(k):
-        p = F.greatest(F.col(f"_p{i}") / F.col("n_prev"), F.lit(eps))
-        q = F.greatest(F.col(f"_c{i}") / F.col("n_cur"), F.lit(eps))
-        term = F.round((p - q) * F.log(p / q), 9).cast("decimal(20,9)")
-        terms = term if terms is None else terms + term
     # F.greatest skips NULLs: without the gate, the first bucket would
     # score against an eps-floored phantom instead of emitting NULL
-    psi = F.when(F.col("n_prev").isNotNull(),
-                 F.round(terms.cast("double"), 6))
+    psi = F.when(F.col("n_prev").isNotNull(), psi_sum(
+        [F.col(f"_p{i}") / F.col("n_prev") for i in range(k)],
+        [F.col(f"_c{i}") / F.col("n_cur") for i in range(k)], eps))
     return lagged.select(
         source_col, "bucket_ts", "prev_bucket_ts", "n_prev", "n_cur",
         psi.alias("psi"),
@@ -1609,14 +1548,10 @@ def ks_timeline(
     bucket's counts then serve two roles — "cur" of its own pair and
     "ref" of the source's NEXT observed bucket (a broadcast of the
     tiny distinct-bucket lead map, then a 2x role union) — one
-    (source, pair, value) re-aggregation, cumulative ECDF windows on
-    that same partitioning, one final reduce. No per-pair data
-    re-scan: raw rows are touched once.
-
-    Determinism: identical integer device as ks_drift — ``D = max
-    |rc*n_cur - cc*n_ref| / (n_ref*n_cur)`` with DECIMAL cross
-    products — bit-stable at any parallelism and hash-equal to the SQL
-    replay. Same ``round_to`` caveat for continuous floats.
+    (source, pair, value) re-aggregation, then ``distribution_compare``
+    by (source, pair) on that same partitioning. No per-pair data
+    re-scan: raw rows are touched once. Same integer KS device and
+    ``round_to`` caveat as ks_drift.
     """
     trunc = TIER_INTERVALS[tier]
     v = F.col(value_col)
@@ -1626,7 +1561,7 @@ def ks_timeline(
         df.where(v.isNotNull())
         .groupBy(source_col,
                  F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"),
-                 v.alias("v"))
+                 v.alias("k"))
         .agg(F.count(F.lit(1)).alias("c"))
         # lazy lineage cut: per feeds the bucket-lead map AND both
         # union roles — without it the raw scan + count re-runs three
@@ -1638,41 +1573,22 @@ def ks_timeline(
            .withColumn("_next", F.lead("bucket_ts").over(wsrc)))
     cur = per.select(source_col, F.col("bucket_ts").alias("pair_ts"),
                      F.lit(None).cast("timestamp").alias("prev_bucket_ts"),
-                     "v", F.lit(0).alias("cref"), F.col("c").alias("ccur"))
+                     "k", F.lit(0).alias("cref"), F.col("c").alias("ccur"))
     ref = (per.join(F.broadcast(nxt), [source_col, "bucket_ts"])
            .where(F.col("_next").isNotNull())
            .select(source_col, F.col("_next").alias("pair_ts"),
                    F.col("bucket_ts").alias("prev_bucket_ts"),
-                   "v", F.col("c").alias("cref"), F.lit(0).alias("ccur")))
+                   "k", F.col("c").alias("cref"), F.lit(0).alias("ccur")))
     u = (cur.unionByName(ref)
-         .groupBy(source_col, "pair_ts", "v")
+         .groupBy(source_col, "pair_ts", "k")
          .agg(F.sum("cref").alias("cref"), F.sum("ccur").alias("ccur"),
               F.max("prev_bucket_ts").alias("prev_bucket_ts")))
-    wp = Window.partitionBy(source_col, "pair_ts")
-    wcum = wp.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    j = (u.withColumn("n_ref", F.sum("cref").over(wp))
-         .withColumn("n_cur", F.sum("ccur").over(wp))
-         .withColumn("rc", F.sum("cref").over(wcum))
-         .withColumn("cc", F.sum("ccur").over(wcum)))
-    dec = "decimal(20,0)"
-    gap = F.abs(F.col("rc").cast(dec) * F.col("n_cur").cast(dec)
-                - F.col("cc").cast(dec) * F.col("n_ref").cast(dec))
-    return (
-        j.groupBy(source_col, F.col("pair_ts").alias("bucket_ts"))
-        .agg(F.max("prev_bucket_ts").alias("prev_bucket_ts"),
-             F.min("n_ref").alias("n_prev"),
-             F.min("n_cur").alias("n_cur"),
-             F.max(gap).alias("_gap"))
-        .select(
-            source_col, "bucket_ts", "prev_bucket_ts", "n_prev", "n_cur",
-            F.when(
-                (F.col("n_prev") > 0) & (F.col("n_cur") > 0),
-                F.round(F.col("_gap").cast("double")
-                        / (F.col("n_prev").cast(dec)
-                           * F.col("n_cur").cast(dec)).cast("double"), 6),
-            ).alias("ks"),
-        )
-    )
+    scored = distribution_compare(
+        u, "ks", [source_col, "pair_ts"],
+        extra=(F.max("prev_bucket_ts").alias("prev_bucket_ts"),))
+    return scored.select(
+        source_col, F.col("pair_ts").alias("bucket_ts"), "prev_bucket_ts",
+        F.col("n_ref").alias("n_prev"), "n_cur", "ks")
 
 
 def weekday_profile(

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.tiers import bin_counts, bin_index, psi_sum
+
 RAW_SCHEMA = "source string, ts timestamp, value double"
 
 
@@ -129,36 +131,20 @@ def streaming_psi_drift(
     nref_of = F.create_map(*n_entries)
 
     v = F.col("value")
-    bin_expr = None
-    for e in edges:
-        ind = (v >= F.lit(float(e))).cast("int")
-        bin_expr = ind if bin_expr is None else bin_expr + ind
-
     stream = spark.readStream.schema(RAW_SCHEMA).parquet(source_dir)
     agged = (
         stream.where(v.isNotNull())
-        .withColumn("_bin", bin_expr)
+        .withColumn("_bin", bin_index(v, edges))
         .withWatermark("ts", watermark)
         .groupBy("source", F.window("ts", window).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_cur"),
-            *[F.sum((F.col("_bin") == i).cast("long")).alias(f"_c{i}")
-              for i in range(k)],
-        )
+        .agg(F.count(F.lit(1)).alias("n_cur"), *bin_counts(F.col("_bin"), k))
     )
     props = props_of[F.col("source")]
-    # decimal(20,9), NOT (38,9): chained decimal adds grow precision by
-    # 1 each and Spark silently reduces SCALE once the 38 cap is hit —
-    # (20,9) keeps the full 9-digit scale through any realistic chain
-    terms = None
-    for i in range(k):
-        p = F.greatest(props[i], F.lit(eps))
-        q = F.greatest(F.col(f"_c{i}") / F.col("n_cur"), F.lit(eps))
-        term = F.round((p - q) * F.log(p / q), 9).cast("decimal(20,9)")
-        terms = term if terms is None else terms + term
     # F.greatest skips NULLs, so a missing reference would silently
     # degrade to the eps floor — gate the whole score on a fitted ref
-    psi = F.when(props.isNotNull(), F.round(terms.cast("double"), 6))
+    psi = F.when(props.isNotNull(), psi_sum(
+        [props[i] for i in range(k)],
+        [F.col(f"_c{i}") / F.col("n_cur") for i in range(k)], eps))
     return agged.select(
         "source", F.col("w.start").alias("w_start"),
         nref_of[F.col("source")].alias("n_ref"), "n_cur",

@@ -341,6 +341,33 @@ def test_cohort_retention_golden(spark):
         cohort_retention(df, "fortnight")
 
 
+def test_cohort_retention_dst_offsets(spark):
+    """Offsets are calendar deltas: across the US spring-forward day
+    (2025-03-09, 23 h) in an America/New_York session, a 14-day and a
+    2-day return still land at offsets 14 and 2, and the weekly matrix
+    at 2 and 1 (fixed 86400/604800 s deltas truncated to one less)."""
+    import datetime as dt
+
+    from adtk_spark.operators.events import cohort_retention
+
+    prev_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        d = lambda m, day: dt.datetime(2025, m, day, 12, 0)
+        rows = [(1, d(3, 1)), (1, d(3, 15)),    # 14 days, over the DST day
+                (2, d(3, 8)), (2, d(3, 10)),    # 2 days, over the DST day
+                (3, d(2, 26)), (3, d(3, 12)),   # weeks of Feb 24 -> Mar 10
+                (4, d(3, 5)), (4, d(3, 11))]    # weeks of Mar 3 -> Mar 10
+        df = spark.createDataFrame(rows, "user_id long, ts timestamp")
+        days = {r["offset"] for r in cohort_retention(df, "day").collect()}
+        assert days == {0, 2, 6, 14}, days
+        weeks = {(r["cohort"].day, r["offset"]): r["users"]
+                 for r in cohort_retention(df, "week").collect()}
+        assert weeks == {(24, 0): 2, (24, 2): 2, (3, 0): 2, (3, 1): 2}, weeks
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+
+
 def test_cohort_retention_plan_three_exchanges_no_join(spark):
     import datetime as dt
     import re

@@ -126,6 +126,28 @@ def test_ks_drift_two_exchanges_no_join(spark):
     assert "Join" not in plan, plan
 
 
+def test_ks_timeline_plan_shape(spark):
+    from adtk_spark.plans.tiers import ks_timeline
+
+    df = series_df(spark, list(range(50)))
+    plan = plan_of(ks_timeline(df, "1d"))
+    # value counts, the bucket-lead map, the role re-aggregation and
+    # the (source, pair) scoring partitioning; the lead map broadcasts
+    assert count_exchanges(plan) == 4, plan
+    assert len(re.findall(r"BroadcastExchange", plan)) == 1, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_psi_reference_one_exchange_no_window(spark):
+    from adtk_spark.plans.tiers import psi_reference
+
+    df = series_df(spark, list(range(50)))
+    plan = plan_of(psi_reference(df, [10.0, 20.0]))
+    # bins unrolled as columns: one map-side combined groupBy(source)
+    assert count_exchanges(plan) == 1, plan
+    assert "Window" not in plan, plan
+
+
 def test_quality_gate_broadcast_thresholds(spark):
     from adtk_spark.operators.corpus import quality_quantile_gate
 
@@ -776,6 +798,67 @@ def test_ks_timeline_detects_shift_day(spark):
     out2 = {r["bucket_ts"]: tuple(r)
             for r in ks_timeline(df.repartition(9), "1d").collect()}
     assert out2 == {k: tuple(v) for k, v in out.items()}
+
+
+@pytest.mark.parametrize("op", ["psi_drift", "js_drift", "ks_drift",
+                                "psi_timeline", "ks_timeline",
+                                "psi_reference", "rollup_hist"])
+def test_drift_family_partition_invariant(spark, op):
+    """Every drift monitor emits identical rows whatever the input
+    partitioning (1 vs 13) and the shuffle width (1 vs 7, with AQE
+    coalescing off so the width is really used)."""
+    import datetime as dt
+    import random
+
+    from adtk_spark.plans import tiers
+
+    split = dt.datetime(2025, 1, 3)
+    edges = [5.0, 10.0, 20.0]
+    run = {
+        "psi_drift": lambda d: tiers.psi_drift(d, split, edges),
+        "js_drift": lambda d: tiers.js_drift(d, split, edges),
+        "ks_drift": lambda d: tiers.ks_drift(d, split),
+        "psi_timeline": lambda d: tiers.psi_timeline(d, edges, "1d"),
+        "ks_timeline": lambda d: tiers.ks_timeline(d, "1d"),
+        "psi_reference": lambda d: tiers.psi_reference(d, edges),
+        "rollup_hist": lambda d: tiers.rollup_hist(d, edges, "1h"),
+    }[op]
+    rng = random.Random(20251017)
+    t0 = dt.datetime(2025, 1, 1)
+    rows = [(s, t0 + dt.timedelta(minutes=37 * i),
+             None if rng.random() < 0.05 else round(rng.expovariate(0.1), 1))
+            for s in ("a", "b", "c") for i in range(300)]
+    df = spark.createDataFrame(
+        rows, "source string, ts timestamp, value double")
+
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    prev = {k: spark.conf.get(k) for k in keys}
+    got = {}
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        for width in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(width))
+            for parts in (1, 13):
+                got[(width, parts)] = sorted(
+                    (tuple(r) for r in run(df.repartition(parts)).collect()),
+                    key=repr)
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    want = got[(1, 1)]
+    assert want
+    for layout, rows_ in got.items():
+        assert rows_ == want, layout
+
+
+def test_distribution_compare_rejects_unknown_stat(spark):
+    from adtk_spark.plans.tiers import distribution_compare
+
+    counts = spark.createDataFrame(
+        [("a", 0, 1, 1)], "source string, k int, cref long, ccur long")
+    with pytest.raises(ValueError, match="stat"):
+        distribution_compare(counts, "kl", ["source"])
 
 
 def test_weekday_profile_golden(spark):
