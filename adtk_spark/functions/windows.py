@@ -153,7 +153,16 @@ def single_row_arr(value_col: str) -> Column:
     )
 
 
-def _interp_sorted(arr: Column, p: float) -> Column:
+def type7_ranks(n: Column, p: float) -> tuple[Column, Column, Column]:
+    """The two order statistics a type-7 ``p``-quantile of ``n`` values
+    interpolates between: (1-based lower rank, 1-based upper rank,
+    interpolation weight). Feed the picked values to `type7_interp`."""
+    pos = F.lit(float(p)) * (n.cast("double") - 1.0)  # 0-based fractional rank
+    lo_i = F.floor(pos).cast("int")
+    return lo_i + 1, F.least(lo_i + 2, n), pos - lo_i.cast("double")
+
+
+def type7_interp(n: Column, frac: Column, lo: Column, hi: Column) -> Column:
     # Type-7 linear interpolation, floating-point-associated EXACTLY like
     # DuckDB's quantile_cont (Interpolator in quantile.cpp): rank
     # RN = q*(n-1), and when RN is fractional the result is
@@ -162,22 +171,24 @@ def _interp_sorted(arr: Column, p: float) -> Column:
     # by up to 1 ulp, which is enough to flip a downstream round(x, 6)
     # at a half-way boundary — the r02 rollup_sliding_5m hash flake.
     # Matching the association makes Spark/DuckDB bit-identical on
-    # identical frame values at any parallelism.
-    n = F.size(arr)
-    if p <= 0.0:
-        return F.element_at(arr, 1).cast("double")
-    if p >= 1.0:
-        return F.element_at(arr, n).cast("double")
-    pos = F.lit(float(p)) * (n.cast("double") - 1.0)  # 0-based fractional rank
-    lo_i = F.floor(pos).cast("int")
-    frac = pos - lo_i.cast("double")
-    lo = F.element_at(arr, lo_i + 1).cast("double")
-    hi = F.element_at(arr, F.least(lo_i + 2, n)).cast("double")
+    # identical values at any parallelism, whichever way (sorted array
+    # or window ranks) the two order statistics were picked.
     return (
         F.when(n == 0, F.lit(None))
         .when(frac == 0.0, lo)  # DuckDB returns v[FRN] directly when CRN==FRN
         .otherwise(lo * (F.lit(1.0) - frac) + hi * frac)
     )
+
+
+def _interp_sorted(arr: Column, p: float) -> Column:
+    n = F.size(arr)
+    if p <= 0.0:
+        return F.element_at(arr, 1).cast("double")
+    if p >= 1.0:
+        return F.element_at(arr, n).cast("double")
+    lo_k, hi_k, frac = type7_ranks(n, p)
+    return type7_interp(n, frac, F.element_at(arr, lo_k).cast("double"),
+                        F.element_at(arr, hi_k).cast("double"))
 
 
 def _quantile_name(q: float) -> str:

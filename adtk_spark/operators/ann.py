@@ -210,9 +210,11 @@ def ivf_split_oversized(
         samp = (idx.where(F.col(list_col).isin(list(hot)))
                 .withColumn("_rn", F.row_number().over(wnd))
                 .where(F.col("_rn") <= sample)
-                .select(list_col, vec_col).collect())
+                .select(list_col, vec_col, "_rn").collect())
+        # collect() returns rows in partition-arrival order; _kmeans seeds
+        # by position, so put each cell's sample in md5 order first
         by_cell: dict = {}
-        for r in samp:
+        for r in sorted(samp, key=lambda r: (r[list_col], r["_rn"])):
             by_cell.setdefault(r[list_col], []).append(r[vec_col])
         sub_centers = {}
         for cell, vecs in by_cell.items():

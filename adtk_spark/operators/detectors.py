@@ -14,6 +14,13 @@ column expression.
 adtk's tri-state AND/OR label algebra (aggregator/_aggregator.py:124-126,
 209-212) is exactly SQL three-valued logic, so compound detectors use
 plain boolean ``&``/``|`` on nullable booleans.
+
+The compound trio's fit_detect wrappers (``persist_ad``,
+``level_shift_ad``, ``volatility_shift_ad``) do not broadcast-join: they
+build the feature frame once and fit the IQR bounds as window columns on
+its own source partitioning (``_compound_fit_detect``). Their
+``*_fit`` / ``*_detect`` pairs keep the bounds table for train/test
+splits and the streaming detectors.
 """
 
 from __future__ import annotations
@@ -23,7 +30,13 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.windows import double_rolling_agg, exact_quantile_agg, rolling_agg
+from ..functions.windows import (
+    double_rolling_agg,
+    exact_quantile_agg,
+    rolling_agg,
+    type7_interp,
+    type7_ranks,
+)
 
 INF = float("inf")
 
@@ -100,15 +113,22 @@ def iqr_ad_fit(
     ``c`` may be a scalar or a (c_low, c_high) tuple; None factors mean
     an unbounded side.
     """
-    c_lo, c_hi = c if isinstance(c, tuple) else (c, c)
     v = F.col(value_col)
-    q1, q3 = exact_quantile_agg(v, 0.25), exact_quantile_agg(v, 0.75)
-    iqr = q3 - q1
-    lo = (q1 - iqr * F.lit(float(c_lo))) if c_lo is not None else F.lit(-INF)
-    hi = (q3 + iqr * F.lit(float(c_hi))) if c_hi is not None else F.lit(INF)
+    lo, hi = _iqr_bounds(exact_quantile_agg(v, 0.25), exact_quantile_agg(v, 0.75), c)
     return train.groupBy(source_col).agg(
         lo.alias("abs_low"), hi.alias("abs_high"), F.count(v).alias("_n_valid")
     )
+
+
+def _iqr_bounds(q1: Column, q3: Column, c) -> tuple[Column, Column]:
+    """(abs_low, abs_high) of the IQR rule from Q1/Q3 — shared by the
+    groupBy fit and the fit-once window core so both do the same
+    arithmetic."""
+    c_lo, c_hi = c if isinstance(c, tuple) else (c, c)
+    iqr = q3 - q1
+    lo = (q1 - iqr * F.lit(float(c_lo))) if c_lo is not None else F.lit(-INF)
+    hi = (q3 + iqr * F.lit(float(c_hi))) if c_hi is not None else F.lit(INF)
+    return lo, hi
 
 
 def apply_bounds(
@@ -461,7 +481,6 @@ def _compound_detect(
     diff_col: str,
     mag_col: str,
     out_col: str,
-    drop_internal: bool = True,
 ) -> DataFrame:
     """IQR rule on magnitude AND sign rule on signed diff.
 
@@ -470,13 +489,62 @@ def _compound_detect(
     TRUE & NULL = NULL.
     """
     joined = df.join(F.broadcast(bounds), on=source_col, how="left")
+    return _compound_label(joined, side, diff_col=diff_col, mag_col=mag_col,
+                           out_col=out_col)
+
+
+def _compound_label(joined, side, *, diff_col, mag_col, out_col):
+    # the label over a frame that already carries abs_low / abs_high
     iqr_label = threshold_label(F.col(mag_col), F.col("abs_low"), F.col("abs_high"))
     sign_label = _side_sign_label(F.col(diff_col), side)
     out = joined.withColumn(out_col, _as_double(iqr_label & sign_label))
-    out = out.drop("abs_low", "abs_high", "_n_valid")
-    if drop_internal:
-        out = out.drop(diff_col, mag_col)
-    return out
+    return out.drop("abs_low", "abs_high", "_n_valid", diff_col, mag_col)
+
+
+def _compound_fit_detect(
+    d: DataFrame,
+    c: float,
+    side: str,
+    *,
+    source_col: str,
+    ts_col: str,
+    out_col: str,
+) -> DataFrame:
+    """Fit the IQR rule on ``_mag`` and label ``d`` in the same plan.
+
+    ``d`` is a feature frame (``_diff``, ``_mag``) built by window
+    functions partitioned by source, so the per-source type-7 Q1/Q3 come
+    from window columns on that same partitioning: ``count`` and
+    ``row_number`` ordered by ``_mag`` (nulls last), then the order
+    statistics picked as unbounded ``max(when(rank == k, _mag))``, then
+    the bounds and the label in one projection. One scan, one Exchange,
+    no join: equal, row for row, to ``iqr_ad_fit`` + ``_compound_detect``
+    on the same frame (NULL sources get NULL bounds, as the left join
+    gives them), with the rows re-sorted by (source, ts) within
+    partitions as the feature windows left them.
+    """
+    mag = F.col("_mag")
+    by_mag = Window.partitionBy(source_col).orderBy(mag.asc_nulls_last())
+    whole = by_mag.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranked = d.select("*", F.count(mag).over(whole).alias("_n"),
+                      F.row_number().over(by_mag).alias("_rk"))
+    n, rk = F.col("_n"), F.col("_rk")
+    fracs, picks = [], []
+    for j, q in enumerate((0.25, 0.75)):
+        lo_k, hi_k, frac = type7_ranks(n, q)
+        fracs.append(frac)
+        picks += [F.max(F.when(rk == lo_k, mag)).over(whole).alias(f"_lo{j}"),
+                  F.max(F.when(rk == hi_k, mag)).over(whole).alias(f"_hi{j}")]
+    q1, q3 = (type7_interp(n, frac, F.col(f"_lo{j}"), F.col(f"_hi{j}"))
+              for j, frac in enumerate(fracs))
+    lo, hi = _iqr_bounds(q1, q3, (None, c))
+    known = F.col(source_col).isNotNull()
+    with_bounds = ranked.select("*", *picks).select(
+        source_col, *[k for k in d.columns if k != source_col],
+        F.when(known, lo).alias("abs_low"), F.when(known, hi).alias("abs_high"))
+    out = _compound_label(with_bounds, side, diff_col="_diff", mag_col="_mag",
+                          out_col=out_col)
+    return out.sortWithinPartitions(source_col, ts_col)
 
 
 def _persist_diffs(df, window, min_periods, agg, *, source_col, ts_col, value_col):
@@ -536,9 +604,12 @@ def persist_ad_detect(
 
 
 def persist_ad(df, window=1, c=3.0, side="both", min_periods=None, agg="median", **kw):
-    """PersistAD fit_detect on one series table."""
-    bounds = persist_ad_fit(df, window, c, min_periods, agg, **kw)
-    return persist_ad_detect(df, bounds, window, side, min_periods, agg, **kw)
+    """PersistAD fit_detect on one series table: one feature frame, the
+    IQR fit as window columns over it (``_compound_fit_detect``)."""
+    kw = {**_series_kw({}), **kw}  # an unknown key raises in _persist_diffs
+    d = _persist_diffs(df, window, min_periods, agg, **kw)
+    return _compound_fit_detect(d, c, side, source_col=kw["source_col"],
+                                ts_col=kw["ts_col"], out_col="label")
 
 
 def _shift_diffs(df, window, min_periods, agg, diff_mag, *, source_col, ts_col, value_col):
@@ -575,9 +646,13 @@ def _shift_diffs(df, window, min_periods, agg, diff_mag, *, source_col, ts_col, 
     src = df.select("*", *extra) if extra else df
     left = agg_exprs(value_col, lwin, agg, None, mps[0], lmp, arr=larr)[None]
     right = agg_exprs(value_col, rwin, agg, None, mps[1], rmp, arr=rarr)[None]
+    # project the two window aggregates once: WindowExec does not dedupe,
+    # and the magnitude references ``left`` a second time
+    lr = src.select(*df.columns, left.alias("_left"), right.alias("_right"))
+    left, right = F.col("_left"), F.col("_right")
     diff = right - left
     mag = F.abs(diff) if diff_mag == "l1" else F.abs(diff) / left
-    return src.select(*df.columns, diff.alias("_diff"), mag.alias("_mag"))
+    return lr.select(*df.columns, diff.alias("_diff"), mag.alias("_mag"))
 
 
 def level_shift_ad_fit(train, window, c=6.0, min_periods=None, **kw):
@@ -593,8 +668,8 @@ def level_shift_ad_detect(df, bounds, window, side="both", min_periods=None, *, 
 
 
 def level_shift_ad(df, window, c=6.0, side="both", min_periods=None, **kw):
-    bounds = level_shift_ad_fit(df, window, c, min_periods, **kw)
-    return level_shift_ad_detect(df, bounds, window, side, min_periods, **kw)
+    d = _shift_diffs(df, window, min_periods, "median", "l1", **_series_kw(kw))
+    return _shift_fit_detect(d, c, side, kw)
 
 
 def volatility_shift_ad_fit(train, window, c=6.0, min_periods=None, agg="std", **kw):
@@ -613,13 +688,21 @@ def volatility_shift_ad_detect(df, bounds, window, side="both", min_periods=None
 
 
 def volatility_shift_ad(df, window, c=6.0, side="both", min_periods=None, agg="std", **kw):
-    bounds = volatility_shift_ad_fit(df, window, c, min_periods, agg, **kw)
-    return volatility_shift_ad_detect(df, bounds, window, side, min_periods, agg, **kw)
+    if agg not in ("std", "iqr", "idr"):
+        raise ValueError("agg must be 'std', 'iqr' or 'idr'")
+    d = _shift_diffs(df, window, min_periods, agg, "abs_rel_diff", **_series_kw(kw))
+    return _shift_fit_detect(d, c, side, kw)
 
 
 def _series_kw(kw):
     return {k: kw.get(k, d) for k, d in
             (("source_col", "source"), ("ts_col", "ts"), ("value_col", "value"))}
+
+
+def _shift_fit_detect(d, c, side, kw):
+    return _compound_fit_detect(d, c, side, source_col=kw.get("source_col", "source"),
+                                ts_col=kw.get("ts_col", "ts"),
+                                out_col=kw.get("out_col", "label"))
 
 
 # ---------------------------------------------------------------------------

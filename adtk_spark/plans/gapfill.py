@@ -9,9 +9,11 @@ are built-in window tricks — no UDFs:
   left join (missing points become NULL rows, adtk's asfreq semantics)
 - ffill: ``last(value, ignorenulls=True)`` over an unbounded-preceding
   frame
-- lerp: ffill'ed (value, ts) + backward ``first(..., ignorenulls=True)``
-  anchors, then the interpolation formula; trailing NULLs take the last
-  value and leading NULLs stay NULL (pandas Series.interpolate parity)
+- lerp: ffill'ed (value, ts) + backfilled next anchors, both running
+  ``last(..., ignorenulls=True)`` frames (the backward one over
+  descending ts, so every frame is O(n) per source), then the
+  interpolation formula; trailing NULLs take the last value and leading
+  NULLs stay NULL (pandas Series.interpolate parity)
 """
 
 from __future__ import annotations
@@ -84,12 +86,24 @@ def interpolate_linear(
     value forward, leading NULLs stay NULL."""
     v = F.col(value_col)
     t = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    # next anchor = the last non-NULL of a running frame over DESCENDING
+    # ts: a growing frame is O(1) per row, where the equivalent
+    # first(...) over rowsBetween(0, unboundedFollowing) re-aggregates
+    # the shrinking tail on every row (O(n^2) per source)
     wp = Window.partitionBy(source_col).orderBy(ts_col).rowsBetween(Window.unboundedPreceding, 0)
-    wn = Window.partitionBy(source_col).orderBy(ts_col).rowsBetween(0, Window.unboundedFollowing)
-    pv = F.last(v, ignorenulls=True).over(wp)
-    pt = F.last(F.when(v.isNotNull(), t), ignorenulls=True).over(wp)
-    nv = F.first(v, ignorenulls=True).over(wn)
-    nt = F.first(F.when(v.isNotNull(), t), ignorenulls=True).over(wn)
+    wn = (Window.partitionBy(source_col).orderBy(F.col(ts_col).desc())
+          .rowsBetween(Window.unboundedPreceding, 0))
+    vt = F.when(v.isNotNull(), t)
+    # anchors projected once and referenced by name (WindowExec does not
+    # dedupe the formula's repeated references); the descending frame
+    # goes first so rows leave the ascending one in (source, ts) order
+    anchored = (
+        df.select("*", F.last(v, ignorenulls=True).over(wn).alias("_nv"),
+                  F.last(vt, ignorenulls=True).over(wn).alias("_nt"))
+        .select("*", F.last(v, ignorenulls=True).over(wp).alias("_pv"),
+                F.last(vt, ignorenulls=True).over(wp).alias("_pt"))
+    )
+    pv, pt, nv, nt = (F.col(k) for k in ("_pv", "_pt", "_nv", "_nt"))
     lerp = (
         F.when(v.isNotNull(), v)
         .when(
@@ -98,7 +112,7 @@ def interpolate_linear(
         )
         .when(pv.isNotNull(), pv)
     )
-    return df.withColumn(out_col, lerp)
+    return anchored.withColumn(out_col, lerp).drop("_pv", "_pt", "_nv", "_nt")
 
 
 def counter_rate(

@@ -1613,3 +1613,23 @@ def test_charset_stats_classes(spark):
     assert got[3]["ascii_ratio"] is None and got[3]["n_chars"] == 0
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 0
+
+
+def test_ivf_split_oversized_deterministic_across_layouts(spark):
+    """The per-cell k-means sample is ordered by its md5 rank before the
+    fit, so the sub-cell ids do not depend on the input partitioning."""
+    import numpy as np
+
+    from adtk_spark.operators.ann import ivf_split_oversized
+
+    rng = np.random.RandomState(5)
+    rows = [(i, [float(x) for x in rng.randn(4)], i % 2) for i in range(400)]
+    idx = spark.createDataFrame(rows, "id long, v array<double>, list_id int")
+
+    def ids(parts):
+        out = ivf_split_oversized(idx.repartition(parts), max_cell=60, sample=128)
+        return sorted((r["id"], r["list_id"]) for r in out.collect())
+
+    one = ids(1)
+    assert len({cell for _, cell in one}) > 2  # the two cells were split
+    assert ids(7) == one

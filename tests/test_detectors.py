@@ -328,3 +328,92 @@ def test_peak_detection_unique_max_rule(spark):
     got2 = {(r["ts"] - t0).total_seconds() / 3600: r["local_rise"]
             for r in peak_detection(df.repartition(9), min_distance=5).collect()}
     assert got2 == got
+
+
+# the compound trio's fit_detect wrappers vs their fit + detect pairs
+COMPOUND = {
+    "persist_ad": (
+        lambda d: D.persist_ad(d, window=2, c=1.5),
+        lambda d: D.persist_ad_detect(d, D.persist_ad_fit(d, 2, 1.5), 2)),
+    "persist_ad_pos": (
+        lambda d: D.persist_ad(d, window=3, c=1.0, side="positive"),
+        lambda d: D.persist_ad_detect(d, D.persist_ad_fit(d, 3, 1.0), 3,
+                                      "positive")),
+    "level_shift_ad": (
+        lambda d: D.level_shift_ad(d, window=4, c=1.0),
+        lambda d: D.level_shift_ad_detect(d, D.level_shift_ad_fit(d, 4, 1.0), 4)),
+    "volatility_shift_ad": (
+        lambda d: D.volatility_shift_ad(d, window=5, c=1.0),
+        lambda d: D.volatility_shift_ad_detect(
+            d, D.volatility_shift_ad_fit(d, 5, 1.0), 5)),
+    "volatility_shift_ad_idr_neg": (
+        lambda d: D.volatility_shift_ad(d, window=10, c=0.5, side="negative",
+                                        agg="idr"),
+        lambda d: D.volatility_shift_ad_detect(
+            d, D.volatility_shift_ad_fit(d, 10, 0.5, agg="idr"), 10, "negative",
+            agg="idr")),
+}
+
+
+def _compound_series(spark, seed):
+    """Tie-heavy minute series: values from a few levels (so ``_mag``
+    repeats), level steps, spikes and NULLs, plus a NULL-source series
+    and one source with no values at all."""
+    import datetime as dt
+    import random
+
+    rng = random.Random(seed)
+    t0 = dt.datetime(2025, 1, 1)
+    rows = []
+    for s in ("a", "b", None, "c"):
+        for i in range(90):
+            v = None if s == "c" or rng.random() < 0.06 else float(
+                rng.choice([1, 2, 2, 3]) + (8 if i >= 45 else 0)
+                + (30 if rng.random() < 0.04 else 0))
+            rows.append((s, t0 + dt.timedelta(minutes=i), v))
+    return spark.createDataFrame(rows, "source string, ts timestamp, value double")
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("name", sorted(COMPOUND))
+def test_compound_fit_detect_matches_fit_then_detect(spark, name):
+    fit_detect, pair = COMPOUND[name]
+    df = _compound_series(spark, 20251017)
+    got, want = fit_detect(df), pair(df)
+    assert got.columns == want.columns
+    rows = _rows(got)
+    assert rows == _rows(want)
+    labels = [r[-1] for r in rows]
+    assert 1.0 in labels and 0.0 in labels
+    # the NULL source keeps NULL bounds, so it is never flagged
+    assert all(r[-1] != 1.0 for r in rows if r[0] is None)
+
+
+@pytest.mark.parametrize("name", ["persist_ad", "level_shift_ad",
+                                  "volatility_shift_ad"])
+def test_compound_fit_detect_partition_invariant(spark, name):
+    """Identical rows whatever the input partitioning (1 vs 13) and the
+    shuffle width (1 vs 7, with AQE coalescing off so the width is
+    really used)."""
+    fit_detect, _ = COMPOUND[name]
+    df = _compound_series(spark, 7)
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    prev = {k: spark.conf.get(k) for k in keys}
+    got = {}
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        for width in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(width))
+            for parts in (1, 13):
+                got[(width, parts)] = _rows(fit_detect(df.repartition(parts)))
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    want = got[(1, 1)]
+    assert want
+    for layout, rows_ in got.items():
+        assert rows_ == want, layout

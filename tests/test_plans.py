@@ -883,3 +883,65 @@ def test_weekday_profile_golden(spark):
     out2 = {(r["dow"], r["hour"]): tuple(r)
             for r in weekday_profile(df.repartition(7)).collect()}
     assert out2 == {k: tuple(v) for k, v in out.items()}
+
+
+@pytest.mark.parametrize("op", ["persist_ad", "level_shift_ad",
+                                "volatility_shift_ad"])
+def test_compound_fit_detect_one_scan_one_exchange(spark, tmp_path, op):
+    """The compound trio's fit_detect fits its IQR bounds as window
+    columns on the feature frame's own partitioning: one scan, one
+    shuffle, no broadcast and no join; rows leave re-sorted by ts."""
+    from adtk_spark.operators import detectors as D
+
+    path = str(tmp_path / "series")
+    series_df(spark, [float(i % 7) for i in range(40)]).write.parquet(path)
+    df = spark.read.parquet(path)
+    run = {
+        "persist_ad": lambda d: D.persist_ad(d, window=3),
+        "level_shift_ad": lambda d: D.level_shift_ad(d, window=5),
+        "volatility_shift_ad": lambda d: D.volatility_shift_ad(d, window=5),
+    }[op]
+    out = run(df)
+    plan = plan_of(out)
+    assert plan.count("FileScan") == 1, plan
+    assert count_exchanges(plan) == 1, plan
+    assert "BroadcastExchange" not in plan, plan
+    assert "Join" not in plan, plan
+    assert_ts_ascending_per_source(out)
+
+
+def assert_ts_ascending_per_source(df):
+    # rows leave in (source, ts) order, as written files keep them
+    seen = {}
+    for r in df.collect():
+        seen.setdefault(r["source"], []).append(r["ts"])
+    assert seen and all(ts == sorted(ts) for ts in seen.values())
+
+
+def test_shift_features_one_window_expression_each(spark):
+    """volatility_shift_ad's feature frame evaluates each of its four
+    window aggregates (left/right count and std) once, though the
+    magnitude references the left one twice."""
+    from adtk_spark.operators.detectors import volatility_shift_ad_detect
+
+    df = series_df(spark, [float(i % 7) for i in range(40)])
+    bounds = spark.createDataFrame(
+        [("A", float("-inf"), 1.0), ("B", float("-inf"), 1.0)],
+        "source string, abs_low double, abs_high double")
+    plan = plan_of(volatility_shift_ad_detect(df, bounds, window=3))
+    assert plan.count("windowspecdefinition") == 4, plan
+
+
+def test_interpolate_linear_no_unbounded_following(spark):
+    """Both lerp anchors come from running frames (the next anchor over
+    descending ts): no frame reaches UnboundedFollowing, whose cost
+    grows quadratically per source, and the rows still leave in
+    ascending ts order."""
+    from adtk_spark.plans.gapfill import interpolate_linear, time_spine
+
+    df = series_df(spark, [1.0, None, None, 4.0, None, 6.0])
+    out = interpolate_linear(time_spine(df, "1 day"))
+    plan = plan_of(out)
+    assert "Window" in plan, plan
+    assert "unboundedfollowing" not in plan.lower(), plan
+    assert_ts_ascending_per_source(out)
