@@ -112,17 +112,14 @@ def refresh_tiers(
     if last is None or last <= wm:
         return {"processed": 0, "watermark": wm}
 
-    # flavor sniff for the mode guards below: inspect ONLY the newest
-    # live tier_1m snapshot's schema (one snap= dir), not a union of
-    # every live snapshot — under always-on streaming ingest the
-    # full-catalog listing grows with snapshot count per refresh (r03
-    # ADVICE). The guards themselves keep flavors uniform across
-    # snapshots, so the newest dir's schema speaks for all of them.
-    _last_tier = catalog.last_snapshot("tier_1m")
-    existing = (
-        catalog._read_ids(spark, "tier_1m", [_last_tier])
-        if _last_tier is not None else None
-    )
+    # flavor sniff for the mode guards below: the columns of the newest
+    # live tier_1m snapshot, from the manifest's recorded schema (no
+    # job; an unrecorded one is inferred from that one snap= dir, never
+    # from a union of every live snapshot, which under always-on
+    # streaming ingest grows with snapshot count per refresh). The
+    # guards themselves keep flavors uniform across snapshots, so the
+    # newest snapshot's columns speak for all of them.
+    existing = catalog.columns(spark, "tier_1m")
 
     if sketch:
         from .tiers import rollup_raw_sketch, rollup_up_sketch
@@ -132,7 +129,7 @@ def refresh_tiers(
         # with historical rows that have no vdigest — NULL digests crash
         # the merge UDF, and skipping them would silently drop history
         # from the quantile estimate. Demand an explicit restatement.
-        if existing is not None and "vdigest" not in existing.columns:
+        if existing is not None and "vdigest" not in existing:
             raise ValueError(
                 "sketch=True on a catalog whose existing tier snapshots "
                 "have no vdigest column: restate the tiers first (new "
@@ -154,7 +151,7 @@ def refresh_tiers(
         # can silently disappear (or the read fails nondeterministically
         # depending on which file is sampled). Same answer: demand an
         # explicit restatement.
-        if existing is not None and "vdigest" in existing.columns:
+        if existing is not None and "vdigest" in existing:
             raise ValueError(
                 "sketch=False on a catalog whose existing tier snapshots "
                 "carry a vdigest column: restate the tiers first (new "
@@ -191,20 +188,16 @@ def refresh_tiers(
                                   {"raw_watermark": last})
     stats["tier_1m"] = snap_1m
 
-    # affected coarser buckets derive from the restated 1m buckets; they
-    # must re-aggregate the LATEST full set of finer buckets they cover
-    latest_1m = read_tier_latest(catalog, spark, "tier_1m")
+    # affected coarser buckets: every touched minute is a restated 1m
+    # bucket, so the hours/days they fall in are exactly the coarser
+    # buckets to restate; each re-aggregates the LATEST full set of
+    # finer buckets it covers
     for finer, tier, table in (("tier_1m", "1h", "tier_1h"), ("tier_1h", "1d", "tier_1d")):
         trunc = TIER_INTERVALS[tier]
-        affected = t1m.select(
+        affected = touched.select(
             "source", F.date_trunc(trunc, F.col("bucket_ts")).alias("_b")
-        ).distinct() if finer == "tier_1m" else None
-        finer_latest = latest_1m if finer == "tier_1m" else read_tier_latest(catalog, spark, finer)
-        if affected is None:
-            affected = catalog.read_since(spark, finer, stats[finer] - 1).select(
-                "source", F.date_trunc(trunc, F.col("bucket_ts")).alias("_b")
-            ).distinct()
-        scoped_finer = finer_latest.alias("f").join(
+        ).distinct()
+        scoped_finer = read_tier_latest(catalog, spark, finer).alias("f").join(
             F.broadcast(affected.alias("a")),
             on=(
                 (F.col("f.source") == F.col("a.source"))

@@ -41,7 +41,7 @@ def commit_with_lineage(catalog, spark, df: DataFrame, table: str,
                         *, source_col: str = "source",
                         ts_col: str = "bucket_ts") -> int:
     snap_id = catalog.commit(df, table, meta)
-    written = catalog.read_since(spark, table, snap_id - 1)
+    written = catalog.read_snapshot(spark, table, snap_id)
     lin = lineage_rows(written, table, snap_id, source_col=source_col, ts_col=ts_col)
     catalog.commit(lin, "_lineage", {"for_table": table, "for_snapshot": snap_id})
     return snap_id

@@ -10,6 +10,16 @@ lives in the manifest too. On a real cluster the same API maps onto
 ``spark.read.format("iceberg")`` + snapshot ids; here each snapshot is a
 parquet subdirectory ``<root>/<table>/snap=<id>/``.
 
+Like an Iceberg manifest, ours also carries what a reader would
+otherwise open data files to learn: each snapshot's min/max of its time
+column (the zone map ``read_range`` prunes on, observed while the
+snapshot is written) and, once per table, the written schema. Reads pass
+that schema to ``spark.read.schema``, so building a read DataFrame runs
+no schema-inference job. A table whose snapshots differ in schema, or
+that was committed with ``partition_by``, has no recorded schema and is
+read with parquet inference, as is every table of a manifest written
+before schemas were recorded.
+
 Crash safety: data files are written first, then the manifest is
 replaced atomically (tmp file + os.replace). A crash between the two
 leaves an orphan directory that is never read — exactly Iceberg's
@@ -22,8 +32,9 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def _split_schema(s: str) -> list[str]:
@@ -41,6 +52,19 @@ def _split_schema(s: str) -> list[str]:
     if cur:
         out.append("".join(cur))
     return out
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` nullable at every level: the schema a parquet write records
+    and a parquet read infers back."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                           for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 class TierCatalog:
@@ -89,33 +113,44 @@ class TierCatalog:
         skips whole snapshot directories whose range cannot intersect a
         time-bounded query — pruning that happens on the DRIVER from
         the manifest alone, before any file is listed or opened
-        (Iceberg's manifest-entry min/max file skipping). The stats
-        scan reads only that column from the just-written files, which
-        parquet serves from footer metadata."""
+        (Iceberg's manifest-entry min/max file skipping). The min/max
+        are observed on the rows as the write job produces them
+        (``DataFrame.observe``); no job re-reads the snapshot.
+
+        The table's first commit records the written schema in the
+        manifest, which later reads use instead of inferring it. A
+        commit whose schema differs from the recorded one, or one with
+        ``partition_by``, drops the record: the table is read with
+        parquet schema inference from then on."""
         m = self._load()
         t = m["tables"].setdefault(table, {"snapshots": []})
         snap_id = (t["snapshots"][-1]["id"] + 1) if t["snapshots"] else 1
         path = os.path.join(self.root, table, f"snap={snap_id}")
+        if stats_col == "auto":
+            stats_col = next(
+                (c for c in ("bucket_ts", "ts") if c in df.columns), None)
+        obs = None
+        if stats_col is not None:
+            # unnamed: a random name cannot collide across catalogs or
+            # streaming epochs sharing the session
+            obs = Observation()
+            df = df.observe(obs, F.min(stats_col).alias("lo"),
+                            F.max(stats_col).alias("hi"))
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
-        if stats_col == "auto":
-            stats_col = next(
-                (c for c in ("bucket_ts", "ts") if c in df.columns), None)
-        stats = None
-        if stats_col is not None:
-            spark = df.sparkSession
-            row = spark.read.parquet(path).agg(
-                F.min(stats_col).alias("lo"), F.max(stats_col).alias("hi")
-            ).collect()[0]
-            if row["lo"] is not None:
-                stats = {"col": stats_col,
-                         "min": self._iso(row["lo"]),
-                         "max": self._iso(row["hi"])}
         entry = {"id": snap_id, "committed_at": time.time(), "meta": meta or {}}
-        if stats:
-            entry["stats"] = stats
+        row = obs.get if obs is not None else None
+        if row and row["lo"] is not None:
+            entry["stats"] = {"col": stats_col,
+                              "min": self._iso(row["lo"]),
+                              "max": self._iso(row["hi"])}
+        schema = _nullable(df.schema).json()
+        if not t["snapshots"] and not partition_by:
+            t["schema"] = schema
+        elif partition_by or t.get("schema") != schema:
+            t.pop("schema", None)
         t["snapshots"].append(entry)
         self._store(m)
         return snap_id
@@ -210,39 +245,66 @@ class TierCatalog:
         return spark.table(name)
 
     # -- reads -------------------------------------------------------------
-    def snapshots(self, table: str) -> list[int]:
-        """Live (non-superseded) snapshot ids, oldest first."""
-        t = self._load()["tables"].get(table, {})
+    def _table(self, table: str) -> dict:
+        return self._load()["tables"].get(table, {})
+
+    @staticmethod
+    def _live(t: dict) -> list[int]:
         dead = set(t.get("superseded", []))
         return [s["id"] for s in t.get("snapshots", []) if s["id"] not in dead]
+
+    def snapshots(self, table: str) -> list[int]:
+        """Live (non-superseded) snapshot ids, oldest first."""
+        return self._live(self._table(table))
 
     def last_snapshot(self, table: str) -> int | None:
         ids = self.snapshots(table)
         return ids[-1] if ids else None
 
-    def _read_ids(self, spark: SparkSession, table: str, ids: list[int]) -> DataFrame | None:
+    def columns(self, spark: SparkSession, table: str) -> list[str] | None:
+        """Data columns of the newest live snapshot of ``table`` (None
+        if it has none): the recorded schema's, else inferred from that
+        one snapshot dir (one Spark job)."""
+        t = self._table(table)
+        ids = self._live(t)
+        if not ids:
+            return None
+        if "schema" in t:
+            return StructType.fromJson(json.loads(t["schema"])).fieldNames()
+        return self._read_ids(spark, table, ids[-1:], t).drop("snap").columns
+
+    def _read_ids(self, spark: SparkSession, table: str, ids: list[int],
+                  t: dict) -> DataFrame | None:
+        """Snapshot dirs ``ids`` of ``table`` (manifest entry ``t``) plus
+        their ``snap`` column; with a recorded schema no job runs."""
         if not ids:
             return None
         paths = [os.path.join(self.root, table, f"snap={i}") for i in ids]
-        return spark.read.option("basePath", os.path.join(self.root, table)).parquet(*paths)
+        r = spark.read.option("basePath", os.path.join(self.root, table))
+        if "schema" in t:
+            r = r.schema(StructType.fromJson(json.loads(t["schema"])))
+        return r.parquet(*paths)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
         """All committed snapshots (uncommitted orphan dirs invisible)."""
-        return self._read_ids(spark, table, self.snapshots(table))
+        t = self._table(table)
+        return self._read_ids(spark, table, self._live(t), t)
 
     def read_snapshot(self, spark: SparkSession, table: str,
                       snapshot_id: int) -> DataFrame | None:
         """Exactly one committed snapshot — e.g. re-reading what a
         ``commit()`` just wrote for reporting, instead of re-executing
         the uncached pipeline that produced it (r04 ADVICE)."""
-        ids = [i for i in self.snapshots(table) if i == snapshot_id]
-        return self._read_ids(spark, table, ids)
+        t = self._table(table)
+        ids = [i for i in self._live(t) if i == snapshot_id]
+        return self._read_ids(spark, table, ids, t)
 
     def read_since(self, spark: SparkSession, table: str, snapshot_id: int) -> DataFrame | None:
         """Rows committed strictly after ``snapshot_id`` — the
         incremental-refresh cursor."""
-        ids = [i for i in self.snapshots(table) if i > snapshot_id]
-        return self._read_ids(spark, table, ids)
+        t = self._table(table)
+        ids = [i for i in self._live(t) if i > snapshot_id]
+        return self._read_ids(spark, table, ids, t)
 
     def snapshots_in_range(self, table: str, start=None, end=None) -> list[int]:
         """Live snapshot ids whose manifest zone map can intersect
@@ -251,6 +313,10 @@ class TierCatalog:
         Superseded snapshots are excluded exactly as in ``snapshots()``:
         after compact_tier + vacuum their snap= dirs are gone, so a
         range read that still listed them would fail PATH_NOT_FOUND."""
+        return self._in_range(self._table(table), start, end)
+
+    @staticmethod
+    def _in_range(t: dict, start, end) -> list[int]:
         import datetime as _dt
 
         def _ts(v):
@@ -259,7 +325,6 @@ class TierCatalog:
             except (ValueError, TypeError):
                 return None  # unparseable stats -> keep (conservative)
 
-        t = self._load()["tables"].get(table, {})
         dead = set(t.get("superseded", []))
         out = []
         for s in t.get("snapshots", []):
@@ -285,13 +350,13 @@ class TierCatalog:
         parquet scan of what remains. Latest-wins restatement safety:
         a snapshot restating an in-range bucket has that bucket inside
         its own min/max, so it always survives the pruning — skipped
-        snapshots can only hold out-of-range rows."""
-        ids = self.snapshots_in_range(table, start, end)
-        df = self._read_ids(spark, table, ids)
+        snapshots can only hold out-of-range rows. Reads the manifest
+        once."""
+        t = self._table(table)
+        df = self._read_ids(spark, table, self._in_range(t, start, end), t)
         if df is None:
             return None
-        snaps = self._load()["tables"].get(table, {}).get("snapshots", [])
-        cols = {s.get("stats", {}).get("col") for s in snaps if s.get("stats")}
+        cols = {s["stats"]["col"] for s in t["snapshots"] if s.get("stats")}
         col = cols.pop() if len(cols) == 1 else (
             "bucket_ts" if "bucket_ts" in df.columns else "ts")
         if start is not None:

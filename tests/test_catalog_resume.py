@@ -1,5 +1,10 @@
 """TierCatalog snapshot/commit/read-since + kill-and-resume refresh."""
 
+import contextlib
+import datetime as dt
+import os
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -273,3 +278,234 @@ def test_range_read_after_compact_vacuum(spark, tmp_path):
     assert ranged.count() == 3
     latest = read_tier_latest(cat, spark, "tier_1m", lo, hi)
     assert {r["mean"] for r in latest.collect()} == {0.0, 1.0, 2.0}
+
+
+# -- manifest-held stats and schema --------------------------------------
+
+@contextlib.contextmanager
+def _jobs(spark, name):
+    """Collect the ids of the Spark jobs started inside the block."""
+    sc = spark.sparkContext
+    group = f"{name}-{uuid.uuid4().hex}"
+    ids = []
+    sc.setJobGroup(group, name)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _inferred(spark, cat, table):
+    """What a parquet read of every live snapshot infers, as before the
+    manifest recorded schemas."""
+    paths = [os.path.join(cat.root, table, f"snap={i}")
+             for i in cat.snapshots(table)]
+    return spark.read.option("basePath", os.path.join(cat.root, table)) \
+        .parquet(*paths)
+
+
+def _strip_schemas(cat):
+    """Rewrite the manifest as one written before schemas were recorded."""
+    m = cat._load()
+    for t in m["tables"].values():
+        t.pop("schema", None)
+    cat._store(m)
+
+
+def _minutes(spark, day, n):
+    return spark.createDataFrame(
+        [("s", dt.datetime(2025, 6, day, 0, m), float(m)) for m in range(n)],
+        "source string, bucket_ts timestamp, mean double")
+
+
+@pytest.mark.parametrize("case", ["rows", "empty", "partition_by"])
+def test_commit_observed_stats_match_reread(spark, tmp_path, case):
+    """The zone map observed during the write equals a min/max scan of
+    the written snapshot, and the commit runs one job: the write."""
+    cat = TierCatalog(str(tmp_path / "obs"))
+    df = _minutes(spark, 3, 40).union(_minutes(spark, 1, 5))
+    kw = {}
+    if case == "empty":
+        df = df.where(F.col("mean") < 0)
+    elif case == "partition_by":
+        df = df.withColumn("day", F.to_date("bucket_ts"))
+        kw = {"partition_by": ["day"]}
+    with _jobs(spark, "commit") as ids:
+        snap = cat.commit(df, "t", **kw)
+    if case != "partition_by":  # a partitioned write may sort first
+        assert len(ids) == 1
+
+    entry = cat._table("t")["snapshots"][0]
+    row = spark.read.parquet(os.path.join(cat.root, "t", f"snap={snap}")).agg(
+        F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi")).first()
+    if case == "empty":
+        assert row["lo"] is None and "stats" not in entry
+    else:
+        assert entry["stats"] == {"col": "bucket_ts",
+                                  "min": row["lo"].isoformat(),
+                                  "max": row["hi"].isoformat()}
+        assert row["lo"] == dt.datetime(2025, 6, 1)
+
+
+def _raw_ntz(spark, first):
+    return spark.createDataFrame(
+        [(f"d{i}", [i, i + 1], "s", dt.datetime(2025, 6, 1, 0, i % 60, 5))
+         for i in range(first, first + 30)],
+        "doc_id string, tokens array<int>, source string, ts timestamp_ntz")
+
+
+@pytest.mark.parametrize("kind", ["raw", "tier", "sketch_tier"])
+def test_stored_schema_read_equals_inferred(spark, tmp_path, kind):
+    """A read planned from the recorded schema has exactly the schema
+    (nullability and the ``snap`` partition column included) and rows a
+    parquet-inferring read has."""
+    from adtk_spark.plans.tiers import rollup_raw, rollup_raw_sketch
+
+    cat = TierCatalog(str(tmp_path / "sch"))
+    series = spark.createDataFrame(
+        [("s", dt.datetime(2025, 6, 1, 0, i // 3), float(i)) for i in range(30)],
+        "source string, ts timestamp, value double")
+    for first in (0, 30):
+        if kind == "raw":
+            df = _raw_ntz(spark, first)
+        elif kind == "tier":
+            df = rollup_raw(series, "1m")
+        else:
+            df = rollup_raw_sketch(series, "1m")
+        cat.commit(df, kind)
+    assert "schema" in cat._table(kind)
+    with _jobs(spark, "read") as ids:
+        got = cat.read(spark, kind)
+    assert ids == []
+    want = _inferred(spark, cat, kind)
+    assert got.schema == want.schema
+    assert ("ts", "timestamp_ntz") in got.dtypes or kind != "raw"
+    assert ("vdigest" in got.columns) == (kind == "sketch_tier")
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_mixed_or_partitioned_table_falls_back_to_inference(spark, tmp_path):
+    """A second snapshot schema, or a partition_by commit, drops the
+    table's recorded schema; reads then infer it as before."""
+    cat = TierCatalog(str(tmp_path / "mix"))
+    cat.commit(spark.range(3).select(F.col("id").alias("x")), "t")
+    cat.commit(spark.range(3).select(F.col("id").alias("x")), "t")
+    assert "schema" in cat._table("t")  # same schema twice: kept
+    cat.commit(spark.range(3).select(F.col("id").alias("x"),
+                                     F.lit("a").alias("y")), "t")
+    assert "schema" not in cat._table("t")
+    cat.commit(spark.range(3).select(F.col("id").alias("x")), "t")
+    assert "schema" not in cat._table("t")  # never re-recorded
+    got = cat.read(spark, "t")
+    assert got.schema == _inferred(spark, cat, "t").schema
+    assert got.count() == 12
+
+    cat.commit(_minutes(spark, 2, 3).withColumn("day", F.to_date("bucket_ts")),
+               "p", partition_by=["day"])
+    assert "schema" not in cat._table("p")
+    p = cat.read(spark, "p")
+    assert dict(p.dtypes)["day"] == "date" and p.count() == 3
+
+
+def test_manifest_without_schema_reads_and_refreshes(spark, tmp_path):
+    """A catalog whose manifest predates recorded schemas still reads
+    and refreshes exactly; its tables stay on inference."""
+    from adtk_spark.plans.tiers import rollup_raw
+    from adtk_spark.sources.tokens import token_series
+
+    cat = TierCatalog(str(tmp_path / "old"))
+    cat.commit(token_corpus(spark, 600, n_sources=4, seed=3,
+                            span_secs=7200), "raw")
+    refresh_tiers(cat, spark)
+    _strip_schemas(cat)
+    cat.commit(token_corpus(spark, 300, n_sources=4, seed=4,
+                            span_secs=7200), "raw")
+    assert refresh_tiers(cat, spark)["processed"] == 1
+    for table in ("raw", "tier_1m", "tier_1h", "tier_1d", "_lineage"):
+        assert "schema" not in cat._table(table)
+        assert cat.read(spark, table).schema == \
+            _inferred(spark, cat, table).schema
+    full = token_series(cat.read(spark, "raw").drop("snap"))
+    key = lambda r: (r["source"], r["bucket_ts"], r["cnt"], r["vsum"])
+    for tier, want in (("tier_1m", rollup_raw(full, "1m")),
+                       ("tier_1d", rollup_raw(full, "1d"))):
+        got = read_tier_latest(cat, spark, tier)
+        assert {key(r) for r in got.collect()} == \
+            {key(r) for r in want.collect()}
+
+
+@pytest.mark.parametrize("recorded", [True, False])
+def test_sketch_flavor_guards_raise(spark, tmp_path, recorded):
+    """Both sketch/no-sketch guards in refresh_tiers still raise, with
+    the tier_1m columns from the manifest or, without a recorded
+    schema, inferred."""
+    for first, second, match in ((False, True, "no vdigest"),
+                                 (True, False, "carry a vdigest")):
+        cat = TierCatalog(str(tmp_path / f"g{first}"))
+        cat.commit(token_corpus(spark, 200, n_sources=2, seed=5,
+                                span_secs=600), "raw")
+        refresh_tiers(cat, spark, sketch=first)
+        if not recorded:
+            _strip_schemas(cat)
+        cat.commit(token_corpus(spark, 100, n_sources=2, seed=6,
+                                span_secs=600), "raw")
+        with pytest.raises(ValueError, match=match):
+            refresh_tiers(cat, spark, sketch=second)
+
+
+def test_lineage_reads_only_its_own_snapshot(spark, tmp_path):
+    """commit_with_lineage summarizes the snapshot it committed, even
+    when another writer (e.g. the streaming sink) commits to the same
+    table before the lineage read."""
+    from adtk_spark.plans.lineage import commit_with_lineage
+
+    other = _minutes(spark, 2, 7)
+
+    class RacingCatalog(TierCatalog):
+        def commit(self, df, table, *a, **kw):
+            snap = super().commit(df, table, *a, **kw)
+            if table == "t" and snap == 1:
+                super().commit(other, "t")  # lands before the lineage read
+            return snap
+
+    cat = RacingCatalog(str(tmp_path / "race"))
+    assert commit_with_lineage(cat, spark, _minutes(spark, 1, 5), "t") == 1
+    assert cat.snapshots("t") == [1, 2]
+    lin = cat.read(spark, "_lineage").collect()
+    assert {r["snapshot_id"] for r in lin} == {1}
+    assert sum(r["n_rows"] for r in lin) == 5
+    assert max(r["max_ts"] for r in lin) == dt.datetime(2025, 6, 1, 0, 4)
+
+
+# Spark jobs of the one-append refresh_tiers below, as measured at 4
+# cores; a commit that re-reads its snapshot, a read that infers its
+# schema or a restatement that re-runs the raw rollup pushes it over.
+REFRESH_JOBS = 23
+
+
+def test_refresh_and_reads_job_budget(spark, tmp_path):
+    """Job-count guard: a one-append refresh_tiers on a tiny catalog
+    stays within REFRESH_JOBS Spark jobs, and building catalog reads
+    starts none (a reintroduced re-read or inference job fails here)."""
+    cat = TierCatalog(str(tmp_path / "jobs"))
+    cat.commit(token_corpus(spark, 300, n_sources=4, seed=1,
+                            span_secs=3600), "raw")
+    refresh_tiers(cat, spark)
+    cat.commit(token_corpus(spark, 100, n_sources=4, seed=2,
+                            span_secs=3600), "raw")
+    with _jobs(spark, "refresh") as ids:
+        assert refresh_tiers(cat, spark)["processed"] == 1
+    assert len(ids) <= REFRESH_JOBS, len(ids)
+
+    lo, hi = dt.datetime(2025, 1, 1), dt.datetime(2025, 1, 2)
+    with _jobs(spark, "reads") as ids:
+        assert cat.read(spark, "_lineage") is not None
+        for table in ("raw", "tier_1m", "tier_1h", "tier_1d"):
+            assert cat.read(spark, table) is not None
+            assert cat.read_range(spark, table, lo, hi) is not None
+        read_tier_latest(cat, spark, "tier_1h", lo, hi)
+    assert ids == []
