@@ -17,7 +17,7 @@ import os
 import re
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -25,12 +25,16 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 # Order-independent float policy for re-aggregated sums: double addition
 # is non-associative, so a 2- or 3-level rollup chain can flip the last
 # digit of round(sum, 6) depending on partial-aggregation order (the
-# round-1 tier_1d_3level hash flake). All oracle-facing sums/avgs in the
-# rollup family go through DECIMAL(38,9) — exact and associative — then
-# cast to double once at the end. The double->decimal cast itself is
-# deterministic across engines (a double's decimal expansion is never
-# exactly at a half-tie at digit 9 unless the remaining digits are zero,
-# in which case no rounding happens).
+# round-1 tier_1d_3level hash flake). The rollup queries therefore cast
+# the input ``value`` to DECIMAL(38,9) before the engine's tier rollups
+# (``_dec_events``), whose sums are then exact and associative, and cast
+# each output to double once at the end (``_r6``). The event values have
+# two decimals, so the cast is exact and min/max round-trip unchanged.
+# ``_dsum`` is the same decimal sum for the queries that aggregate
+# inline; the double->decimal cast itself is deterministic across
+# engines (a double's decimal expansion is never exactly at a half-tie
+# at digit 9 unless the remaining digits are zero, in which case no
+# rounding happens).
 def _dsum():
     return F.sum(F.col("value").cast("decimal(38,9)"))
 
@@ -40,6 +44,28 @@ _DSUM_SQL = "sum(CAST(value AS DECIMAL(38,9)))"
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
+
+
+def _dec_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events as the (source, ts, value) tier input, ``value`` cast to
+    DECIMAL(38,9) so the engine's tier sums are exact in any order."""
+    return _events(spark, sf_dir).select(
+        F.col("event_type").alias("source"), "ts",
+        F.col("value").cast("decimal(38,9)").alias("value"))
+
+
+def _r6(col: str) -> Column:
+    """A (possibly DECIMAL) output column as a double rounded to 6."""
+    return F.round(F.col(col).cast("double"), 6).alias(col)
+
+
+def _tier_out(tier: DataFrame, mean_as: str | None = "vavg") -> DataFrame:
+    """A tier's (source, bucket_ts, cnt, vmin, vmax, vsum[, mean]) in
+    the contract's form: doubles rounded to 6, mean renamed."""
+    cols = ["source", "bucket_ts", "cnt", _r6("vmin"), _r6("vmax"), _r6("vsum")]
+    if mean_as is not None:
+        cols.append(_r6("mean").alias(mean_as))
+    return tier.select(*cols)
 
 
 def _series(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,45 +94,17 @@ _DEDUP_CTE = """
 # ---------------------------------------------------------------------------
 
 def q_rollup_1m(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    return (
-        ev.groupBy(
-            F.col("event_type").alias("source"),
-            F.date_trunc("minute", F.col("ts")).alias("bucket_ts"),
-        )
-        .agg(
-            F.count("value").alias("cnt"),
-            F.round(F.min("value"), 6).alias("vmin"),
-            F.round(F.max("value"), 6).alias("vmax"),
-            F.round(_dsum().cast("double"), 6).alias("vsum"),
-            F.round(_dsum().cast("double") / F.count("value"), 6).alias("vavg"),
-        )
-    )
+    from adtk_spark.plans.tiers import rollup_raw
+
+    return _tier_out(rollup_raw(_dec_events(spark, sf_dir)))
 
 
 def q_rollup_1h_2level(spark, sf_dir):
     """1h tier computed FROM the 1m tier (continuous-aggregate path);
     oracle computes 1h directly from raw — results must agree."""
-    ev = _events(spark, sf_dir)
-    m1 = ev.groupBy(
-        F.col("event_type").alias("source"),
-        F.date_trunc("minute", F.col("ts")).alias("m"),
-    ).agg(
-        F.count("value").alias("cnt"),
-        F.min("value").alias("vmin"),
-        F.max("value").alias("vmax"),
-        _dsum().alias("vsum"),
-    )
-    return (
-        m1.groupBy("source", F.date_trunc("hour", F.col("m")).alias("bucket_ts"))
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.round(F.min("vmin"), 6).alias("vmin"),
-            F.round(F.max("vmax"), 6).alias("vmax"),
-            F.round(F.sum("vsum").cast("double"), 6).alias("vsum"),
-            F.round(F.sum("vsum").cast("double") / F.sum("cnt"), 6).alias("vavg"),
-        )
-    )
+    from adtk_spark.plans.tiers import rollup_raw, rollup_up
+
+    return _tier_out(rollup_up(rollup_raw(_dec_events(spark, sf_dir)), "1h"))
 
 
 def q_rollup_sliding_5m(spark, sf_dir):
@@ -116,30 +114,13 @@ def q_rollup_sliding_5m(spark, sf_dir):
     reproduces the same two-level computation with a DuckDB RANGE
     frame. vsum stays DECIMAL(38,9) until the final cast so the
     sliding sums are order-independent."""
-    from adtk_spark.plans.tiers import rollup_sliding
+    from adtk_spark.plans.tiers import rollup_raw, rollup_sliding
 
-    ev = _events(spark, sf_dir)
-    m1 = (
-        ev.groupBy(
-            F.col("event_type").alias("source"),
-            F.date_trunc("minute", F.col("ts")).alias("bucket_ts"),
-        )
-        .agg(
-            F.count("value").alias("cnt"),
-            F.min("value").alias("vmin"),
-            F.max("value").alias("vmax"),
-            _dsum().alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum").cast("double") / F.col("cnt"))
-    )
+    m1 = rollup_raw(_dec_events(spark, sf_dir))
     sl = rollup_sliding(m1, width_secs=300, step_secs=60, quantile=0.5)
     return sl.select(
-        "source", "bucket_ts", "w_cnt",
-        F.round("w_min", 6).alias("w_min"),
-        F.round("w_max", 6).alias("w_max"),
-        F.round(F.col("w_sum").cast("double"), 6).alias("w_sum"),
-        F.round("w_q", 6).alias("w_q"),
-        F.round("w_mean", 6).alias("w_mean"),
+        "source", "bucket_ts", "w_cnt", _r6("w_min"), _r6("w_max"),
+        _r6("w_sum"), _r6("w_q"), _r6("w_mean"),
     )
 
 
@@ -1653,24 +1634,9 @@ def q_payload_roundtrip_1m(spark, sf_dir):
 def q_tier_1d_3level(spark, sf_dir):
     """1d tier computed raw -> 1m -> 1h -> 1d (three re-aggregations);
     oracle computes 1d directly from raw."""
-    ev = _events(spark, sf_dir)
-    m1 = ev.groupBy(
-        F.col("event_type").alias("source"),
-        F.date_trunc("minute", F.col("ts")).alias("b"),
-    ).agg(F.count("value").alias("cnt"), F.min("value").alias("vmin"),
-          F.max("value").alias("vmax"), _dsum().alias("vsum"))
-    h1 = m1.groupBy("source", F.date_trunc("hour", F.col("b")).alias("b")).agg(
-        F.sum("cnt").alias("cnt"), F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"), F.sum("vsum").alias("vsum"))
-    return h1.groupBy(
-        "source", F.date_trunc("day", F.col("b")).alias("bucket_ts")
-    ).agg(
-        F.sum("cnt").alias("cnt"),
-        F.round(F.min("vmin"), 6).alias("vmin"),
-        F.round(F.max("vmax"), 6).alias("vmax"),
-        F.round(F.sum("vsum").cast("double"), 6).alias("vsum"),
-        F.round(F.sum("vsum").cast("double") / F.sum("cnt"), 6).alias("vavg"),
-    )
+    from adtk_spark.plans.tiers import build_tiers
+
+    return _tier_out(build_tiers(_dec_events(spark, sf_dir))["1d"])
 
 
 def q_seasonal_resid(spark, sf_dir):
@@ -1809,17 +1775,8 @@ def q_salted_rollup_1m(spark, sf_dir):
     DECIMAL(38,9) so the two-level partial sums are order-independent."""
     from adtk_spark.plans.tiers import salt_partials
 
-    ev = _events(spark, sf_dir).select(
-        F.col("event_type").alias("source"), "ts",
-        F.col("value").cast("decimal(38,9)").alias("value"),
-    )
-    out = salt_partials(ev, "1m", n_salts=8)
-    return out.select(
-        "source", "bucket_ts", "cnt",
-        F.round(F.col("vmin").cast("double"), 6).alias("vmin"),
-        F.round(F.col("vmax").cast("double"), 6).alias("vmax"),
-        F.round(F.col("vsum").cast("double"), 6).alias("vsum"),
-    )
+    return _tier_out(salt_partials(_dec_events(spark, sf_dir), "1m", n_salts=8),
+                     mean_as=None)
 
 
 def q_one_hot_docs(spark, sf_dir):
@@ -2326,39 +2283,11 @@ def q_tier_route_2h(spark, sf_dir):
     rests on). DECIMAL(38,9) sums keep all three levels
     order-independent."""
     from adtk_spark.plans.router import route_rollup
+    from adtk_spark.plans.tiers import rollup_raw, rollup_up
 
-    ev = _events(spark, sf_dir)
-    m1 = (
-        ev.groupBy(
-            F.col("event_type").alias("source"),
-            F.date_trunc("minute", F.col("ts")).alias("bucket_ts"),
-        )
-        .agg(
-            F.count("value").alias("cnt"),
-            F.min("value").alias("vmin"),
-            F.max("value").alias("vmax"),
-            _dsum().alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum").cast("double") / F.col("cnt"))
-    )
-    h1 = (
-        m1.groupBy("source", F.date_trunc("hour", F.col("bucket_ts")).alias("bucket_ts"))
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum").cast("double") / F.col("cnt"))
-    )
-    routed = route_rollup({"1m": m1, "1h": h1}, 7200)
-    return routed.select(
-        "source", "bucket_ts", "cnt",
-        F.round("vmin", 6).alias("vmin"),
-        F.round("vmax", 6).alias("vmax"),
-        F.round(F.col("vsum").cast("double"), 6).alias("vsum"),
-        F.round("mean", 6).alias("mean"),
-    )
+    m1 = rollup_raw(_dec_events(spark, sf_dir))
+    routed = route_rollup({"1m": m1, "1h": rollup_up(m1, "1h")}, 7200)
+    return _tier_out(routed, mean_as="mean")
 
 
 def _rotation_order(names: list[str], records: list[str]) -> list[str]:

@@ -143,10 +143,9 @@ def counter_rate(
     misstate the per-second rate on those days (r03 ADVICE). Under UTC
     the expression constant-folds to the familiar 60/3600/86400.
     """
-    from .tiers import TIER_INTERVALS
+    from .tiers import TIER_STEPS, tier_bucket
 
-    shift = {"1m": "INTERVAL 1 MINUTE", "1h": "INTERVAL 1 HOUR",
-             "1d": "INTERVAL 1 DAY"}[tier]
+    shift = TIER_STEPS[tier]
     w = Window.partitionBy(source_col).orderBy(ts_col)
     v = F.col(value_col)
     prev = F.lag(v).over(w)
@@ -154,9 +153,7 @@ def counter_rate(
         F.when(v < prev, v).otherwise(v - prev))
     return (
         df.select(source_col, ts_col, inc.alias("_inc"))
-        .groupBy(source_col,
-                 F.date_trunc(TIER_INTERVALS[tier], F.col(ts_col))
-                 .alias("bucket_ts"))
+        .groupBy(source_col, tier_bucket(F.col(ts_col), tier))
         .agg(
             # DECIMAL-quantized exact sum: the per-bucket increase (and
             # every threshold decision on it) is bit-identical at any

@@ -15,11 +15,13 @@ MERGE-on-read semantics expressed as a window dedup.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .lineage import commit_with_lineage
-from .tiers import TIER_INTERVALS, rollup_raw, rollup_up
+from .tiers import TIER_INTERVALS, rollup_raw, rollup_up, tier_bucket
 
 RAW_TABLE = "raw"
 WATERMARK_KEY = "tiers_from_raw"
@@ -121,44 +123,26 @@ def refresh_tiers(
     # newest snapshot's columns speak for all of them.
     existing = catalog.columns(spark, "tier_1m")
 
+    # keep tier flavors uniform: a sketch refresh over sketchless
+    # history would feed NULL digests to the merge UDF (or silently drop
+    # that history from the quantile estimate), and a sketchless refresh
+    # over digest history would leave the tier directories with mixed
+    # schemas and nondeterministic reads. Either way: restate first.
+    if existing is not None and ("vdigest" in existing) != sketch:
+        found = "have no vdigest" if sketch else "carry a vdigest"
+        raise ValueError(
+            f"sketch={sketch} on a catalog whose existing tier snapshots "
+            f"{found} column: restate the tiers first (new catalog root, "
+            "or reset the watermark and re-rollup) — mixing tier flavors "
+            "would corrupt the quantile estimates or the reads"
+        )
     if sketch:
         from .tiers import rollup_raw_sketch, rollup_up_sketch
 
-        # switching sketch on over a catalog that already holds
-        # pre-sketch tier snapshots would merge restated (digest) rows
-        # with historical rows that have no vdigest — NULL digests crash
-        # the merge UDF, and skipping them would silently drop history
-        # from the quantile estimate. Demand an explicit restatement.
-        if existing is not None and "vdigest" not in existing:
-            raise ValueError(
-                "sketch=True on a catalog whose existing tier snapshots "
-                "have no vdigest column: restate the tiers first (new "
-                "catalog root, or reset the watermark and re-rollup) — "
-                "mixing sketchless history into digest merges would "
-                "corrupt the quantile estimates"
-            )
-
-        def r_raw(df, tier, q):
-            return rollup_raw_sketch(df, tier, q, delta)
-
-        def r_up(df, tier, q):
-            return rollup_up_sketch(df, tier, q, delta)
+        r_raw = partial(rollup_raw_sketch, delta=delta)
+        r_up = partial(rollup_up_sketch, delta=delta)
     else:
-        # mirror of the guard above: sketch=False over a catalog whose
-        # existing snapshots DO carry vdigest would union snapshot dirs
-        # with mismatched schemas — spark.read.parquet without
-        # mergeSchema infers from a sampled file, so the digest column
-        # can silently disappear (or the read fails nondeterministically
-        # depending on which file is sampled). Same answer: demand an
-        # explicit restatement.
-        if existing is not None and "vdigest" in existing:
-            raise ValueError(
-                "sketch=False on a catalog whose existing tier snapshots "
-                "carry a vdigest column: restate the tiers first (new "
-                "catalog root, or reset the watermark and re-rollup) — "
-                "appending sketchless snapshots would leave the tier "
-                "directories with mixed schemas and nondeterministic reads"
-            )
+        # module globals, looked up per call: tracers wrap these names
         r_raw, r_up = rollup_raw, rollup_up
 
     series_of = series_of or token_series
@@ -168,11 +152,7 @@ def refresh_tiers(
     full_series = series_of(all_raw)
 
     # affected 1m buckets: only windows the new snapshots touch
-    touched = (
-        new_series.select(
-            "source", F.date_trunc("minute", F.col("ts")).alias("bucket_ts")
-        ).distinct()
-    )
+    touched = new_series.select("source", tier_bucket(F.col("ts"), "1m")).distinct()
     scoped = full_series.alias("s").join(
         F.broadcast(touched.alias("t")),
         on=(

@@ -28,10 +28,11 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.windows import exact_quantile_agg
+from .tiers import tier_mean, tier_stats, with_digest
 
 #: seconds per bucket of each materialized tier
 TIER_WIDTH_SECS = {"1m": 60, "1h": 3600, "1d": 86400}
@@ -71,6 +72,35 @@ def pick_tier(
     return best
 
 
+def _in_range(df: DataFrame, col: str, start, end) -> DataFrame:
+    """Rows of ``df`` with ``col`` in ``[start, end)`` (open bounds: None)."""
+    if start is not None:
+        df = df.where(F.col(col) >= F.lit(start))
+    if end is not None:
+        df = df.where(F.col(col) < F.lit(end))
+    return df
+
+
+def _serving_tier(tiers: dict[str, DataFrame], resolution_secs: int,
+                  start, end, available, kind: str,
+                  fallback: str) -> tuple[str, DataFrame]:
+    """The tier ``pick_tier`` chooses from ``tiers`` and its rows in
+    ``[start, end)``; KeyError naming ``fallback`` when none qualifies."""
+    name = pick_tier(resolution_secs, available, start=start)
+    if name is None or name not in tiers:
+        raise KeyError(
+            f"no materialized {kind}tier divides resolution="
+            f"{resolution_secs}s (have {sorted(tiers)}); {fallback}")
+    return name, _in_range(tiers[name], "bucket_ts", start, end)
+
+
+def _epoch_bucket(ts_col: str, resolution_secs: int) -> Column:
+    """``bucket_ts`` of the floor-epoch ``resolution_secs`` window."""
+    epoch = F.unix_timestamp(F.col(ts_col)).cast("long")
+    return F.timestamp_seconds(
+        epoch - F.pmod(epoch, F.lit(resolution_secs))).alias("bucket_ts")
+
+
 def route_rollup(
     tiers: dict[str, DataFrame],
     resolution_secs: int,
@@ -90,40 +120,20 @@ def route_rollup(
     serving tier's ``mean`` points per output window — the same
     per-tier series semantics as ``rollup_up``. Raises KeyError when no
     tier divides R (the caller should then aggregate raw via
-    ``rollup_raw``-style floor-epoch windows — routing exists precisely
-    to avoid that scan, so it is an explicit decision, not a silent
-    fallback).
+    ``rollup_at`` — routing exists precisely to avoid that scan, so it
+    is an explicit decision, not a silent fallback).
     """
-    name = pick_tier(resolution_secs, available, start=start)
-    if name is None or name not in tiers:
-        raise KeyError(
-            f"no materialized tier divides resolution={resolution_secs}s "
-            f"(have {sorted(tiers)}); aggregate from raw explicitly")
-    t = tiers[name]
-    if start is not None:
-        t = t.where(F.col("bucket_ts") >= F.lit(start))
-    if end is not None:
-        t = t.where(F.col("bucket_ts") < F.lit(end))
-
+    name, t = _serving_tier(tiers, resolution_secs, start, end, available,
+                            "", "aggregate from raw explicitly")
     if TIER_WIDTH_SECS[name] == resolution_secs and quantile is None:
         # exact-width fast path: filter + project, no shuffle
         return t.select(source_col, "bucket_ts", *_ALGEBRAIC, "mean")
 
-    epoch = F.unix_timestamp(F.col("bucket_ts")).cast("long")
-    win = F.timestamp_seconds(
-        (epoch - F.pmod(epoch, F.lit(resolution_secs)))
-    ).alias("bucket_ts")
-    aggs = [
-        F.sum("cnt").alias("cnt"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
-        F.sum("vsum").alias("vsum"),
-    ]
+    aggs = tier_stats()
     if quantile is not None:
         aggs.append(exact_quantile_agg(F.col("mean"), quantile).alias("vq"))
-    out = t.groupBy(source_col, win).agg(*aggs)
-    return out.withColumn(
-        "mean", F.col("vsum").cast("double") / F.col("cnt"))
+    return (t.groupBy(source_col, _epoch_bucket("bucket_ts", resolution_secs))
+            .agg(*aggs).select("*", tier_mean()))
 
 
 def route_twa(
@@ -152,24 +162,12 @@ def route_twa(
     Same retention-ledger semantics as ``pick_tier``; raises KeyError
     when no tier divides R.
     """
-    name = pick_tier(resolution_secs, available, start=start)
-    if name is None or name not in tiers:
-        raise KeyError(
-            f"no materialized TWA tier divides resolution="
-            f"{resolution_secs}s (have {sorted(tiers)}); run rollup_twa "
-            "on raw explicitly")
-    t = tiers[name]
-    if start is not None:
-        t = t.where(F.col("bucket_ts") >= F.lit(start))
-    if end is not None:
-        t = t.where(F.col("bucket_ts") < F.lit(end))
+    name, t = _serving_tier(tiers, resolution_secs, start, end, available,
+                            "TWA ", "run rollup_twa on raw explicitly")
     if TIER_WIDTH_SECS[name] == resolution_secs:
         # exact-width fast path: filter + project, no shuffle
         return t.select(source_col, "bucket_ts", "covered_secs", "twa")
-    epoch = F.unix_timestamp(F.col("bucket_ts")).cast("long")
-    win = F.timestamp_seconds(
-        epoch - F.pmod(epoch, F.lit(resolution_secs))).alias("bucket_ts")
-    g = t.groupBy(source_col, win).agg(
+    g = t.groupBy(source_col, _epoch_bucket("bucket_ts", resolution_secs)).agg(
         F.sum("_w_us").alias("_w_us"), F.sum("_vw").alias("_vw"))
     return g.select(
         source_col, "bucket_ts",
@@ -197,19 +195,11 @@ def rollup_at(
     series, same output schema as ``route_rollup``. This is the scan
     routing exists to avoid — callers reach it deliberately via
     ``pick_tier(...) is None``, never as a silent downgrade."""
-    v = F.col(value_col)
-    if start is not None:
-        raw = raw.where(F.col(ts_col) >= F.lit(start))
-    if end is not None:
-        raw = raw.where(F.col(ts_col) < F.lit(end))
-    epoch = F.unix_timestamp(F.col(ts_col)).cast("long")
-    win = F.timestamp_seconds(
-        epoch - F.pmod(epoch, F.lit(resolution_secs))).alias("bucket_ts")
     return (
-        raw.groupBy(source_col, win)
-        .agg(F.count(v).alias("cnt"), F.min(v).alias("vmin"),
-             F.max(v).alias("vmax"), F.sum(v).alias("vsum"))
-        .withColumn("mean", F.col("vsum").cast("double") / F.col("cnt"))
+        _in_range(raw, ts_col, start, end)
+        .groupBy(source_col, _epoch_bucket(ts_col, resolution_secs))
+        .agg(*tier_stats(F.col(value_col)))
+        .select("*", tier_mean())
     )
 
 
@@ -231,35 +221,13 @@ def route_rollup_sketch(
     the requested resolution (rank error O(1/delta)) — without the
     coarser-tier caveat of quantile-of-means, and still never touching
     raw. Same tier-choice rule as ``route_rollup``."""
-    from ..functions.sketch import digest_quantile, merge_digests
+    from ..functions.sketch import merge_digests
 
-    name = pick_tier(resolution_secs, available, start=start)
-    if name is None or name not in tiers:
-        raise KeyError(
-            f"no sketch tier divides resolution={resolution_secs}s "
-            f"(have {sorted(tiers)}); use rollup_raw_sketch on raw")
-    t = tiers[name]
-    if start is not None:
-        t = t.where(F.col("bucket_ts") >= F.lit(start))
-    if end is not None:
-        t = t.where(F.col("bucket_ts") < F.lit(end))
-    epoch = F.unix_timestamp(F.col("bucket_ts")).cast("long")
-    win = F.timestamp_seconds(
-        epoch - F.pmod(epoch, F.lit(resolution_secs))).alias("bucket_ts")
-    agged = t.groupBy(source_col, win).agg(
-        F.sum("cnt").alias("cnt"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
-        F.sum("vsum").alias("vsum"),
-        F.collect_list("vdigest").alias("_ds"),
-    )
-    return (
-        agged.withColumn("vdigest", merge_digests(F.col("_ds"), delta))
-        .drop("_ds")
-        .withColumn("mean", F.col("vsum").cast("double") / F.col("cnt"))
-        .withColumn("vq", digest_quantile(F.col("vdigest"), quantile,
-                                          F.col("vmin"), F.col("vmax")))
-    )
+    _, t = _serving_tier(tiers, resolution_secs, start, end, available,
+                         "sketch ", "use rollup_raw_sketch on raw")
+    agged = t.groupBy(source_col, _epoch_bucket("bucket_ts", resolution_secs)).agg(
+        *tier_stats(), F.collect_list("vdigest").alias("_parts"))
+    return with_digest(agged, merge_digests(F.col("_parts"), delta), quantile)
 
 
 def route_from_catalog(

@@ -8,6 +8,13 @@ sum of sums, count of counts; mean = vsum/cnt) and take their quantile
 over the *finer tier's mean series* (a tier's series IS its points;
 adtk detector semantics then apply per tier).
 
+The tier algebra is defined once: ``tier_bucket`` (the bucket key),
+``tier_stats`` (the raw aggregates and their finer-tier merge),
+``tier_mean`` and ``with_digest`` (the t-digest tail). Every producer of
+tier rows uses them — the rollups here, the router's merges and raw
+fallback, and the streaming 1m rollups — so ``tier_stats`` is the one
+place where the type of ``vsum`` is decided.
+
 Scale notes:
 - groupBy keys are (source, bucket): cardinality grows with time span,
   so parallelism scales with data; per-key size is bounded by
@@ -29,7 +36,60 @@ from pyspark.sql import functions as F
 from ..functions.windows import _interp_sorted, exact_quantile_agg, sorted_frame_arr
 
 TIER_INTERVALS = {"1m": "minute", "1h": "hour", "1d": "day"}
+#: one bucket of each tier as a CALENDAR interval (DST-safe bucket steps)
+TIER_STEPS = {"1m": "INTERVAL 1 MINUTE", "1h": "INTERVAL 1 HOUR",
+              "1d": "INTERVAL 1 DAY"}
 TIER_ORDER = ["raw", "1m", "1h", "1d"]
+
+
+def tier_bucket(ts: Column, tier: str) -> Column:
+    """The ``bucket_ts`` key of ``tier``: ``ts`` truncated to the tier's
+    calendar unit."""
+    return F.date_trunc(TIER_INTERVALS[tier], ts).alias("bucket_ts")
+
+
+def tier_stats(v: Column | None = None) -> list[Column]:
+    """The algebraic tier aggregates ``cnt, vmin, vmax, vsum``: of the
+    raw values ``v``, or, with no ``v``, merged from a finer tier's
+    columns (sum of counts, min of mins, max of maxes, sum of sums).
+    Every producer of tier rows aggregates through this list, so the
+    sum's type is decided here and nowhere else: ``vsum`` has the type
+    of ``F.sum`` over the value (a double for double input, an exact
+    DECIMAL for DECIMAL input)."""
+    if v is None:
+        return [F.sum("cnt").alias("cnt"), F.min("vmin").alias("vmin"),
+                F.max("vmax").alias("vmax"), F.sum("vsum").alias("vsum")]
+    return [F.count(v).alias("cnt"), F.min(v).alias("vmin"),
+            F.max(v).alias("vmax"), F.sum(v).alias("vsum")]
+
+
+def tier_mean() -> Column:
+    """``mean = vsum / cnt`` as a double. The cast is a no-op for a
+    double ``vsum`` (Catalyst drops it) and turns a DECIMAL one into a
+    double mean instead of a DECIMAL quotient."""
+    return (F.col("vsum").cast("double") / F.col("cnt")).alias("mean")
+
+
+def with_digest(agged: DataFrame, digest: Column, quantile: float) -> DataFrame:
+    """The sketch-tier tail: ``agged`` holds the keys, the ``tier_stats``
+    columns and the ``_parts`` list that ``digest`` compresses into a
+    t-digest; the result appends ``vdigest, mean, vq`` in that order.
+
+    One ``select`` on purpose: the digest UDF appears twice in it (as
+    ``vdigest`` and inside ``vq``) and Spark evaluates identical Python
+    UDFs of one projection once. Chained ``withColumn`` calls get
+    collapsed into the aggregate instead, which then collects the list
+    and runs the digest twice per group."""
+    from ..functions.sketch import digest_quantile
+
+    keep = [c for c in agged.columns if c != "_parts"]
+    return agged.select(
+        *keep,
+        digest.alias("vdigest"),
+        tier_mean(),
+        digest_quantile(digest, quantile, F.col("vmin"), F.col("vmax"))
+        .alias("vq"),
+    )
 
 
 def rollup_raw(
@@ -42,18 +102,11 @@ def rollup_raw(
     value_col: str = "value",
 ) -> DataFrame:
     """First-level rollup from raw points."""
-    trunc = TIER_INTERVALS[tier]
     v = F.col(value_col)
     return (
-        df.groupBy(source_col, F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"))
-        .agg(
-            F.count(v).alias("cnt"),
-            F.min(v).alias("vmin"),
-            F.max(v).alias("vmax"),
-            F.sum(v).alias("vsum"),
-            exact_quantile_agg(v, quantile).alias("vq"),
-        )
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
+        df.groupBy(source_col, tier_bucket(F.col(ts_col), tier))
+        .agg(*tier_stats(v), exact_quantile_agg(v, quantile).alias("vq"))
+        .select("*", tier_mean())
     )
 
 
@@ -67,17 +120,11 @@ def rollup_up(
     """Re-aggregate a finer tier into a coarser one. Algebraic stats
     merge exactly; the quantile is the quantile of the finer tier's mean
     points (per-tier series semantics)."""
-    trunc = TIER_INTERVALS[tier]
     return (
-        finer.groupBy(source_col, F.date_trunc(trunc, F.col("bucket_ts")).alias("bucket_ts"))
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-            exact_quantile_agg(F.col("mean"), quantile).alias("vq"),
-        )
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
+        finer.groupBy(source_col, tier_bucket(F.col("bucket_ts"), tier))
+        .agg(*tier_stats(),
+             exact_quantile_agg(F.col("mean"), quantile).alias("vq"))
+        .select("*", tier_mean())
     )
 
 
@@ -185,29 +232,13 @@ def rollup_raw_sketch(
     rows — never a raw re-scan. ``vq`` is the digest estimate
     (rank error O(1/delta)); cnt/min/max/sum/mean stay exact.
     """
-    from ..functions.sketch import digest_of_sorted_arr, digest_quantile
+    from ..functions.sketch import digest_of_sorted_arr
 
-    trunc = TIER_INTERVALS[tier]
     v = F.col(value_col)
-    agged = df.groupBy(
-        source_col, F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts")
-    ).agg(
-        F.count(v).alias("cnt"),
-        F.min(v).alias("vmin"),
-        F.max(v).alias("vmax"),
-        F.sum(v).alias("vsum"),
-        F.collect_list(v).alias("_vals"),
-    )
-    return (
-        agged.withColumn("vdigest", digest_of_sorted_arr(F.col("_vals"), delta))
-        .drop("_vals")
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
-        .withColumn(
-            "vq",
-            digest_quantile(F.col("vdigest"), quantile,
-                            F.col("vmin"), F.col("vmax")),
-        )
-    )
+    agged = df.groupBy(source_col, tier_bucket(F.col(ts_col), tier)).agg(
+        *tier_stats(v), F.collect_list(v).alias("_parts"))
+    return with_digest(agged, digest_of_sorted_arr(F.col("_parts"), delta),
+                       quantile)
 
 
 def rollup_up_sketch(
@@ -222,28 +253,11 @@ def rollup_up_sketch(
     exactly; digests merge by concat + one vectorized re-compress, so
     ``vq`` estimates the *raw* distribution's quantile at every level
     without touching raw again."""
-    from ..functions.sketch import digest_quantile, merge_digests
+    from ..functions.sketch import merge_digests
 
-    trunc = TIER_INTERVALS[tier]
-    agged = finer.groupBy(
-        source_col, F.date_trunc(trunc, F.col("bucket_ts")).alias("bucket_ts")
-    ).agg(
-        F.sum("cnt").alias("cnt"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
-        F.sum("vsum").alias("vsum"),
-        F.collect_list("vdigest").alias("_ds"),
-    )
-    return (
-        agged.withColumn("vdigest", merge_digests(F.col("_ds"), delta))
-        .drop("_ds")
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
-        .withColumn(
-            "vq",
-            digest_quantile(F.col("vdigest"), quantile,
-                            F.col("vmin"), F.col("vmax")),
-        )
-    )
+    agged = finer.groupBy(source_col, tier_bucket(F.col("bucket_ts"), tier)).agg(
+        *tier_stats(), F.collect_list("vdigest").alias("_parts"))
+    return with_digest(agged, merge_digests(F.col("_parts"), delta), quantile)
 
 
 def rollup_ohlc(
@@ -265,11 +279,10 @@ def rollup_ohlc(
     dedups); with duplicate timestamps min_by/max_by tie-break
     arbitrarily.
     """
-    trunc = TIER_INTERVALS[tier]
     v, t = F.col(value_col), F.col(ts_col)
     return (
         df.where(v.isNotNull())
-        .groupBy(source_col, F.date_trunc(trunc, t).alias("bucket_ts"))
+        .groupBy(source_col, tier_bucket(t, tier))
         .agg(
             F.min_by(v, t).alias("open"),
             F.max(v).alias("high"),
@@ -297,9 +310,8 @@ def rollup_distinct(
     10^12-row regime where that re-scan is the bottleneck, use
     ``rollup_distinct_sketch`` (mergeable HLL) instead.
     """
-    trunc = TIER_INTERVALS[tier]
     return (
-        df.groupBy(source_col, F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"))
+        df.groupBy(source_col, tier_bucket(F.col(ts_col), tier))
         .agg(F.countDistinct(key_col).alias("n_distinct"))
     )
 
@@ -323,10 +335,9 @@ def rollup_topk(
     Misra-Gries summary in the streaming path; this operator is the
     exact serving-layer form.
     """
-    trunc = TIER_INTERVALS[tier]
     counts = df.groupBy(
         source_col,
-        F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"),
+        tier_bucket(F.col(ts_col), tier),
         F.col(key_col).alias("key"),
     ).agg(F.count("*").alias("cnt"))
     w = Window.partitionBy(source_col, "bucket_ts").orderBy(
@@ -363,10 +374,9 @@ def rollup_topk_up(
     number at most m per finer bucket, then the same deterministic rank
     window — the whole merge touches tier rows only.
     """
-    trunc = TIER_INTERVALS[tier]
     g = topk_finer.groupBy(
         source_col,
-        F.date_trunc(trunc, F.col("bucket_ts")).alias("bucket_ts"),
+        tier_bucket(F.col("bucket_ts"), tier),
         "key",
     ).agg(F.sum("cnt").alias("cnt"))
     w = Window.partitionBy(source_col, "bucket_ts").orderBy(
@@ -503,13 +513,12 @@ def rollup_hist(
     buckets, token-count bands). Relational one-row-per-nonempty-bin
     form keeps the upward merge algebraic and skew-free.
     """
-    trunc = TIER_INTERVALS[tier]
     v = F.col(value_col)
     return (
         df.where(v.isNotNull())
         .groupBy(
             source_col,
-            F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"),
+            tier_bucket(F.col(ts_col), tier),
             bin_index(v, edges).alias("bin"),
         )
         .agg(F.count("*").alias("cnt"))
@@ -524,11 +533,8 @@ def rollup_hist_up(
 ) -> DataFrame:
     """Merge a finer histogram tier up to ``tier``: bin counts sum —
     one algebraic groupBy over tier rows, never the raw values."""
-    trunc = TIER_INTERVALS[tier]
     return finer.groupBy(
-        source_col,
-        F.date_trunc(trunc, F.col("bucket_ts")).alias("bucket_ts"),
-        "bin",
+        source_col, tier_bucket(F.col("bucket_ts"), tier), "bin",
     ).agg(F.sum("cnt").alias("cnt"))
 
 
@@ -596,8 +602,7 @@ def rollup_twa(
     # mislabel or skip those buckets — same hazard fixed in
     # rollup_retention and counter_rate (r04 ADVICE). In UTC the
     # arithmetic is bit-identical to the fixed-step version.
-    shift = {"1m": "INTERVAL 1 MINUTE", "1h": "INTERVAL 1 HOUR",
-             "1d": "INTERVAL 1 DAY"}[tier]
+    shift = TIER_STEPS[tier]
     w = Window.partitionBy(source_col).orderBy(ts_col)
     seg = (
         df.where(F.col(value_col).isNotNull())
@@ -657,11 +662,8 @@ def rollup_twa_up(
     bounded by 5e-7 x pieces / covered_secs, far below the 1e-6 output
     rounding for any real bucket (tolerance-tested).
     """
-    trunc = TIER_INTERVALS[tier]
-    g = twa_finer.groupBy(
-        source_col,
-        F.date_trunc(trunc, F.col("bucket_ts")).alias("bucket_ts"),
-    ).agg(F.sum("_w_us").alias("_w_us"), F.sum("_vw").alias("_vw"))
+    g = twa_finer.groupBy(source_col, tier_bucket(F.col("bucket_ts"), tier)).agg(
+        F.sum("_w_us").alias("_w_us"), F.sum("_vw").alias("_vw"))
     return g.select(
         source_col, "bucket_ts",
         F.round(F.col("_w_us").cast("double") / 1000000.0, 6)
@@ -801,14 +803,12 @@ def psi_timeline(
     two Exchanges, no join. Scored by ``psi_sum``, bit-equal to
     psi_drift/streaming_psi_drift at any parallelism.
     """
-    trunc = TIER_INTERVALS[tier]
     v = F.col(value_col)
     k = len(edges) + 1
     per = (
         df.where(v.isNotNull())
         .withColumn("_bin", bin_index(v, edges))
-        .groupBy(source_col,
-                 F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"))
+        .groupBy(source_col, tier_bucket(F.col(ts_col), tier))
         .agg(F.count(F.lit(1)).alias("n_cur"), *bin_counts(F.col("_bin"), k))
     )
     w = Window.partitionBy(source_col).orderBy("bucket_ts")
@@ -1045,12 +1045,10 @@ def rollup_retention(
     and a fixed 86400 s shift would miss the join and silently read
     retention 0 on those days (r03 ADVICE).
     """
-    trunc = TIER_INTERVALS[tier]
-    shift = {"1m": "INTERVAL 1 MINUTE", "1h": "INTERVAL 1 HOUR",
-             "1d": "INTERVAL 1 DAY"}[tier]
+    shift = TIER_STEPS[tier]
     cur = df.select(
         source_col,
-        F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"),
+        tier_bucket(F.col(ts_col), tier),
         F.col(key_col).alias("key"),
     ).distinct()
     prev_shifted = cur.select(
@@ -1097,9 +1095,8 @@ def rollup_distinct_sketch(
     (the Iceberg theta/HLL-sketch pattern). ~0.8% relative error at
     lg_k=12 with 4 KB per bucket.
     """
-    trunc = TIER_INTERVALS[tier]
     return (
-        df.groupBy(source_col, F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"))
+        df.groupBy(source_col, tier_bucket(F.col(ts_col), tier))
         .agg(F.hll_sketch_agg(key_col, F.lit(lg_k)).alias("hll"))
         .withColumn("n_distinct_est", F.hll_sketch_estimate("hll").cast("long"))
     )
@@ -1114,11 +1111,8 @@ def rollup_distinct_up(
     """Union a finer sketch tier up to ``tier``: hll_union_agg merges
     the per-bucket sketches — one shuffle over sketch rows (thousands
     of bytes per bucket), never the raw keys."""
-    trunc = TIER_INTERVALS[tier]
     return (
-        finer.groupBy(
-            source_col, F.date_trunc(trunc, F.col("bucket_ts")).alias("bucket_ts")
-        )
+        finer.groupBy(source_col, tier_bucket(F.col("bucket_ts"), tier))
         .agg(F.hll_union_agg("hll").alias("hll"))
         .withColumn("n_distinct_est", F.hll_sketch_estimate("hll").cast("long"))
     )
@@ -1489,31 +1483,15 @@ def salt_partials(
     merges. Only algebraic stats (no exact quantile) — use when a single
     bucket can exceed a task's memory; otherwise prefer rollup_raw.
     """
-    trunc = TIER_INTERVALS[tier]
     v = F.col(value_col)
     salt = F.pmod(F.xxhash64(F.col(ts_col)), F.lit(n_salts))
-    partial = (
-        df.groupBy(
-            source_col,
-            F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"),
-            salt.alias("_salt"),
-        )
-        .agg(
-            F.count(v).alias("cnt"),
-            F.min(v).alias("vmin"),
-            F.max(v).alias("vmax"),
-            F.sum(v).alias("vsum"),
-        )
-    )
+    partial = df.groupBy(
+        source_col, tier_bucket(F.col(ts_col), tier), salt.alias("_salt"),
+    ).agg(*tier_stats(v))
     return (
         partial.groupBy(source_col, "bucket_ts")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
+        .agg(*tier_stats())
+        .select("*", tier_mean())
     )
 
 
@@ -1553,14 +1531,13 @@ def ks_timeline(
     re-scan: raw rows are touched once. Same integer KS device and
     ``round_to`` caveat as ks_drift.
     """
-    trunc = TIER_INTERVALS[tier]
     v = F.col(value_col)
     if round_to is not None:
         v = F.round(v, round_to)
     per = (
         df.where(v.isNotNull())
         .groupBy(source_col,
-                 F.date_trunc(trunc, F.col(ts_col)).alias("bucket_ts"),
+                 tier_bucket(F.col(ts_col), tier),
                  v.alias("k"))
         .agg(F.count(F.lit(1)).alias("c"))
         # lazy lineage cut: per feeds the bucket-lead map AND both

@@ -7,17 +7,43 @@ are not mergeable, so detectors stay batch. This module covers the
 1-minute tumbling aggregates with a watermark for late data. Streaming
 aggregates are algebraic only (count/min/max/sum -> mean); the exact
 per-bucket quantile is backfilled by the next incremental batch refresh
-(the classic lambda split, stated in the tier table docs).
+(the classic lambda split, stated in the tier table docs). Both 1m
+streams aggregate through the batch tier algebra (``tier_stats``,
+``tier_mean``, ``with_digest``), keyed by the start of a watermarked
+``F.window`` instead of ``tier_bucket``, so streamed rows have the
+batch tier's values, types and column order.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.tiers import bin_counts, bin_index, psi_sum
+from ..plans.router import TIER_WIDTH_SECS
+from ..plans.tiers import (
+    bin_counts,
+    bin_index,
+    psi_sum,
+    tier_mean,
+    tier_stats,
+    with_digest,
+)
 
 RAW_SCHEMA = "source string, ts timestamp, value double"
+
+
+def _stream_1m(spark: SparkSession, source_dir: str, watermark: str,
+               *extra: Column) -> DataFrame:
+    """Watermarked 1-minute ``tier_stats`` (plus ``extra`` aggregates)
+    of the raw parquet stream, keyed (source, bucket_ts)."""
+    stream = spark.readStream.schema(RAW_SCHEMA).parquet(source_dir)
+    agged = (
+        stream.withWatermark("ts", watermark)
+        .groupBy("source", F.window("ts", "1 minute").alias("w"))
+        .agg(*tier_stats(F.col("value")), *extra)
+    )
+    return agged.select("source", F.col("w.start").alias("bucket_ts"),
+                        *agged.columns[2:])
 
 
 def streaming_rollup_1m(
@@ -26,22 +52,7 @@ def streaming_rollup_1m(
     watermark: str = "5 minutes",
 ) -> DataFrame:
     """readStream(parquet dir) -> watermarked 1-minute tumbling rollup."""
-    stream = spark.readStream.schema(RAW_SCHEMA).parquet(source_dir)
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("source", F.window("ts", "1 minute").alias("w"))
-        .agg(
-            F.count("value").alias("cnt"),
-            F.min("value").alias("vmin"),
-            F.max("value").alias("vmax"),
-            F.sum("value").alias("vsum"),
-        )
-        .select(
-            "source", F.col("w.start").alias("bucket_ts"),
-            "cnt", "vmin", "vmax", "vsum",
-            (F.col("vsum") / F.col("cnt")).alias("mean"),
-        )
-    )
+    return _stream_1m(spark, source_dir, watermark).select("*", tier_mean())
 
 
 def streaming_rollup_1m_sketch(
@@ -53,8 +64,8 @@ def streaming_rollup_1m_sketch(
 ) -> DataFrame:
     """Sketch-carrying variant of the streaming 1m rollup: each finalized
     bucket also gets a mergeable t-digest of its raw values (same
-    ``vdigest`` schema as the batch ``rollup_raw_sketch``), so streamed
-    snapshots can feed ``rollup_up_sketch`` re-aggregation and
+    columns, in the same order, as the batch ``rollup_raw_sketch``), so
+    streamed snapshots can feed ``rollup_up_sketch`` re-aggregation and
     ``route_rollup_sketch`` raw-distribution quantile queries directly —
     the streaming ingest edge stops being a sketch-less second class.
 
@@ -63,30 +74,12 @@ def streaming_rollup_1m_sketch(
     (exactly the batch path's per-task frame); the digest compress runs
     once per *finalized* bucket in the post-aggregation projection,
     never per micro-batch update."""
-    from ..functions.sketch import digest_of_sorted_arr, digest_quantile
+    from ..functions.sketch import digest_of_sorted_arr
 
-    stream = spark.readStream.schema(RAW_SCHEMA).parquet(source_dir)
-    agged = (
-        stream.withWatermark("ts", watermark)
-        .groupBy("source", F.window("ts", "1 minute").alias("w"))
-        .agg(
-            F.count("value").alias("cnt"),
-            F.min("value").alias("vmin"),
-            F.max("value").alias("vmax"),
-            F.sum("value").alias("vsum"),
-            F.collect_list("value").alias("_vals"),
-        )
-    )
-    return (
-        agged.select(
-            "source", F.col("w.start").alias("bucket_ts"),
-            "cnt", "vmin", "vmax", "vsum",
-            (F.col("vsum") / F.col("cnt")).alias("mean"),
-            digest_of_sorted_arr(F.col("_vals"), delta).alias("vdigest"),
-        )
-        .withColumn("vq", digest_quantile(F.col("vdigest"), quantile,
-                                          F.col("vmin"), F.col("vmax")))
-    )
+    agged = _stream_1m(spark, source_dir, watermark,
+                       F.collect_list("value").alias("_parts"))
+    return with_digest(agged, digest_of_sorted_arr(F.col("_parts"), delta),
+                       quantile)
 
 
 def streaming_psi_drift(
@@ -241,7 +234,7 @@ def streaming_twa_partials(
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    step = {"1m": 60, "1h": 3600, "1d": 86400}[tier]
+    step = TIER_WIDTH_SECS[tier]
     step_us = step * 1_000_000
     q6 = Decimal("0.000001")
 

@@ -98,6 +98,31 @@ def test_sketch_plan_single_shuffle(spark):
     assert plan.count("Exchange") <= 3  # gen roundrobin + one per tier
 
 
+
+def test_sketch_tiers_digest_once_per_group(spark):
+    """Each sketch producer collects its group's list once and runs its
+    digest UDF once: one ``collect_list`` and one ``digest_of_arr`` /
+    ``merge_digest_lists`` per optimized plan, although ``vdigest`` is
+    both emitted and read by ``vq``."""
+    from adtk_spark.plans.router import route_rollup_sketch
+    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_up_sketch
+    from adtk_spark.sources.tokens import token_corpus, token_series
+
+    raw = token_series(token_corpus(spark, 300, n_sources=3, seed=43))
+    s1m = rollup_raw_sketch(raw, "1m")
+    done = s1m.localCheckpoint()  # the upper plans show only their own level
+    plans = {
+        "rollup_raw_sketch": s1m,
+        "rollup_up_sketch": rollup_up_sketch(done, "1h"),
+        "route_rollup_sketch": route_rollup_sketch({"1m": done}, 600),
+    }
+    for name, df in plans.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("collect_list(") == 1, (name, plan)
+        udfs = plan.count("digest_of_arr(") + plan.count("merge_digest_lists(")
+        assert udfs == 1, (name, plan)
+        assert plan.count("quantile_of_digest(") == 1, (name, plan)
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 

@@ -857,3 +857,93 @@ def test_streaming_twa_partials_match_batch(spark, tmp_path):
         assert r["covered_secs"] == covered, k
         assert r["twa"] == twa, k            # bit-equal final division
     raw.unpersist()
+
+
+def _integer_raw(spark, t0, n=240):
+    """(source, ts, value) with integer-valued doubles, so every sum is
+    exact in any order and producers must agree bit for bit."""
+    import datetime as dt
+
+    rows = [(src, t0 + dt.timedelta(seconds=7 * i + off), float((i * 5 + off) % 23))
+            for src, off in (("a", 0), ("b", 3)) for i in range(n)]
+    return spark.createDataFrame(rows, "source string, ts timestamp, value double")
+
+
+def test_tier_producers_share_one_algebra(spark, tmp_path):
+    """rollup_raw, salt_partials, rollup_at at 60 s and the plain 1m
+    stream emit the same cnt/vmin/vmax/vsum/mean values and dtypes; the
+    batch, routed and streamed sketch tiers emit one column list."""
+    import datetime as dt
+
+    from adtk_spark.plans.router import rollup_at, route_rollup_sketch
+    from adtk_spark.plans.tiers import rollup_raw, rollup_raw_sketch, salt_partials
+    from adtk_spark.streaming.rollup_stream import (
+        run_available_now,
+        streaming_rollup_1m,
+        streaming_rollup_1m_sketch,
+    )
+
+    t0 = dt.datetime(2025, 9, 1)
+    src, out = str(tmp_path / "raw_stream"), str(tmp_path / "out")
+    _integer_raw(spark, t0).write.parquet(src)
+    # a later heartbeat moves the watermark past every data minute
+    _integer_raw(spark, t0 + dt.timedelta(hours=2), n=1) \
+        .write.mode("append").parquet(src)
+    run_available_now(streaming_rollup_1m(spark, src), out,
+                      str(tmp_path / "ckpt"))
+
+    raw = spark.read.parquet(src)
+    cols = ["source", "bucket_ts", "cnt", "vmin", "vmax", "vsum", "mean"]
+    producers = {
+        "rollup_raw": rollup_raw(raw),
+        "salt_partials": salt_partials(raw, "1m", n_salts=4),
+        "rollup_at": rollup_at(raw, 60),
+        "stream": spark.read.parquet(out),
+    }
+    cutoff = t0 + dt.timedelta(hours=1)
+    got = {}
+    for name, df in producers.items():
+        df = df.select(*cols).where(F.col("bucket_ts") < F.lit(cutoff))
+        got[name] = (df.dtypes, sorted(map(tuple, df.collect())))
+    want = got.pop("rollup_raw")
+    assert len(want[1]) == 2 * 28  # 240 points 7 s apart: 28 minutes a source
+    for name, g in got.items():
+        assert g == want, name
+
+    s1m = rollup_raw_sketch(raw, "1m")
+    sketch = {
+        "routed": route_rollup_sketch({"1m": s1m}, 60),
+        "stream": streaming_rollup_1m_sketch(spark, src),
+    }
+    for name, df in sketch.items():
+        assert df.dtypes == s1m.dtypes, name
+
+
+def test_stream_sketch_keeps_batch_sketch_schema(spark, tmp_path):
+    """A batch sketch commit to tier_1m followed by the sketch stream's
+    commits (rollup_job --stream-sketch: refresh with sketch=True, then
+    drain the stream) keeps the table's recorded schema, so reads of
+    the table stay on the manifest schema instead of inference."""
+    import datetime as dt
+
+    from adtk_spark.plans.tiers import rollup_raw_sketch
+    from adtk_spark.sources.catalog import TierCatalog
+    from adtk_spark.streaming.rollup_stream import (
+        run_into_catalog,
+        streaming_rollup_1m_sketch,
+    )
+
+    t0 = dt.datetime(2025, 9, 2)
+    cat = TierCatalog(str(tmp_path / "cat"))
+    batch = _integer_raw(spark, t0, n=60)
+    cat.commit(rollup_raw_sketch(batch, "1m"), "tier_1m")
+    assert "schema" in cat._load()["tables"]["tier_1m"]
+
+    src = str(tmp_path / "raw_stream")
+    _integer_raw(spark, t0 + dt.timedelta(hours=1), n=60).write.parquet(src)
+    _integer_raw(spark, t0 + dt.timedelta(hours=3), n=1) \
+        .write.mode("append").parquet(src)
+    run_into_catalog(streaming_rollup_1m_sketch(spark, src), cat, "tier_1m",
+                     str(tmp_path / "ckpt"))
+    assert len(cat.snapshots("tier_1m")) >= 2
+    assert "schema" in cat._load()["tables"]["tier_1m"]
