@@ -5,7 +5,7 @@ Re-expresses the query semantics of arundo/adtk (reference checkout at
 ``(source: string, ts: timestamp, value: double)``, and adds the storage
 layer the reference lacks: tiered continuous aggregates (raw -> 1m -> 1h
 -> 1d) with retention, gap-fill, Gorilla/delta-of-delta compressed
-payloads, snapshot checkpoint/resume and per-partition lineage.
+payloads, snapshot checkpoint/resume and per-snapshot lineage.
 
 Design rules (see SURVEY.md):
 - fit is an *action* producing a small model table (per-source scalars);

@@ -1,9 +1,9 @@
 """Multimodal columns: opaque binary payloads with typed metadata.
 
 Image/audio/video bytes are treated as ``binary`` columns next to a
-typed metadata struct; decode / feature-extraction / resize /
-frame-sampling run as Arrow-batched ``mapInPandas`` UDFs so the Spark
-plumbing (schema, partition sizing, batch shape) is real and tested.
+typed metadata struct; decode and feature extraction run as
+Arrow-batched ``mapInPandas`` UDFs so the Spark plumbing (schema,
+partition sizing, batch shape) is real and tested.
 Decoding: TWO formats decode for REAL with zero external deps —
 uncompressed 24-bit BMP via a pure-numpy codec (``bmp_encode``/
 ``bmp_decode``) and 16-bit PCM WAV via the stdlib ``wave`` module
@@ -125,14 +125,6 @@ def decode_image(payload: bytes, width: int, height: int) -> np.ndarray:
     if payload[:2] == b"BM":
         return _luma(bmp_decode(payload))
     return _fake_decode(payload, width, height)
-
-
-def resize_nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize in pure numpy (2D or HxWx3)."""
-    h, w = arr.shape[:2]
-    yi = (np.arange(out_h) * (h / out_h)).astype(np.int64).clip(0, h - 1)
-    xi = (np.arange(out_w) * (w / out_w)).astype(np.int64).clip(0, w - 1)
-    return arr[yi][:, xi]
 
 
 def synthetic_bmp_media(spark, n: int, width: int = 32, height: int = 24,
@@ -350,36 +342,3 @@ def audio_stats(media: DataFrame, decode_fn: Callable | None = None) -> DataFram
     schema = ("doc_id string, n_samples long, duration_sec double, "
               "rms double, zcr_hz double")
     return media.mapInPandas(run, schema=schema)
-
-
-def frame_sample(media: DataFrame, every_k: int = 8) -> DataFrame:
-    """Frame sampling plan: explode frame indices 0, k, 2k, ... per video
-    row — pure expressions; the per-frame decode would plug into
-    extract_features downstream."""
-    frames = F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_k))
-    return (
-        media.where(F.col("media_type") == "video")
-        .select("doc_id", F.explode(frames).alias("frame_idx"))
-    )
-
-
-def resize_bilinear(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Bilinear resize in pure numpy (2D grayscale or HxWx3), using the
-    half-pixel-center sample grid (the OpenCV/PIL convention). float64
-    intermediate; uint8 inputs round back to uint8."""
-    h, w = arr.shape[:2]
-    ys = (np.arange(out_h) + 0.5) * (h / out_h) - 0.5
-    xs = (np.arange(out_w) + 0.5) * (w / out_w) - 0.5
-    y0 = np.clip(np.floor(ys), 0, h - 1).astype(np.int64)
-    x0 = np.clip(np.floor(xs), 0, w - 1).astype(np.int64)
-    y1 = np.clip(y0 + 1, 0, h - 1)
-    x1 = np.clip(x0 + 1, 0, w - 1)
-    wy = np.clip(ys - y0, 0.0, 1.0)[:, None]
-    wx = np.clip(xs - x0, 0.0, 1.0)[None, :]
-    if arr.ndim == 3:
-        wy, wx = wy[..., None], wx[..., None]
-    a = arr.astype(np.float64)
-    top = a[y0][:, x0] * (1 - wx) + a[y0][:, x1] * wx
-    bot = a[y1][:, x0] * (1 - wx) + a[y1][:, x1] * wx
-    out = top * (1 - wy) + bot * wy
-    return np.round(out).astype(np.uint8) if arr.dtype == np.uint8 else out

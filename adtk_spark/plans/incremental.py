@@ -20,11 +20,19 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .lineage import commit_with_lineage
 from .tiers import TIER_INTERVALS, rollup_raw, rollup_up, tier_bucket
 
 RAW_TABLE = "raw"
 WATERMARK_KEY = "tiers_from_raw"
+
+
+def commit_with_lineage(catalog, df: DataFrame, table: str,
+                        meta: dict | None = None) -> int:
+    """Commit one tier snapshot. ``TierCatalog.commit`` records the
+    snapshot's lineage (rows, sources, time range, commit time) in its
+    manifest entry during the write; this name stays as the tier-commit
+    step that ``perfbench/spans.py`` traces."""
+    return catalog.commit(df, table, meta)
 
 
 def read_tier_latest(
@@ -164,7 +172,7 @@ def refresh_tiers(
 
     stats = {}
     t1m = r_raw(scoped, "1m", quantile)
-    snap_1m = commit_with_lineage(catalog, spark, t1m, "tier_1m",
+    snap_1m = commit_with_lineage(catalog, t1m, "tier_1m",
                                   {"raw_watermark": last})
     stats["tier_1m"] = snap_1m
 
@@ -186,7 +194,7 @@ def refresh_tiers(
             how="leftsemi",
         )
         out = r_up(scoped_finer, tier, quantile)
-        stats[table] = commit_with_lineage(catalog, spark, out, table,
+        stats[table] = commit_with_lineage(catalog, out, table,
                                            {"raw_watermark": last})
 
     catalog.set_watermark(WATERMARK_KEY, last)

@@ -11,14 +11,19 @@ lives in the manifest too. On a real cluster the same API maps onto
 parquet subdirectory ``<root>/<table>/snap=<id>/``.
 
 Like an Iceberg manifest, ours also carries what a reader would
-otherwise open data files to learn: each snapshot's min/max of its time
-column (the zone map ``read_range`` prunes on, observed while the
-snapshot is written) and, once per table, the written schema. Reads pass
-that schema to ``spark.read.schema``, so building a read DataFrame runs
-no schema-inference job. A table whose snapshots differ in schema, or
-that was committed with ``partition_by``, has no recorded schema and is
-read with parquet inference, as is every table of a manifest written
-before schemas were recorded.
+otherwise open data files to learn. Each snapshot's entry holds its
+lineage, observed while the snapshot is written (one ``Observation`` on
+the write job, no re-read): its row count, its number of distinct
+``source`` values, when it was committed, and the min/max of its time
+column (the zone map ``read_range`` prunes on); ``lineage`` returns
+these for every live snapshot without a Spark job. Once per table the
+manifest also holds the written schema. Reads pass that schema to
+``spark.read.schema``, so building a read DataFrame runs no
+schema-inference job. A table whose snapshots differ in schema, or that
+was committed with ``partition_by``, has no recorded schema and is read
+with parquet inference, as is every table of a manifest written before
+schemas were recorded; snapshots committed before lineage was recorded
+report ``None`` rows and sources.
 
 Crash safety: data files are written first, then the manifest is
 replaced atomically (tmp file + os.replace). A crash between the two
@@ -96,7 +101,6 @@ class TierCatalog:
         table: str,
         meta: dict | None = None,
         partition_by: list[str] | None = None,
-        stats_col: str | None = "auto",
     ) -> int:
         """Write df as a new snapshot of ``table``; returns snapshot id.
 
@@ -107,15 +111,16 @@ class TierCatalog:
         plan, never opening old files). The Iceberg analogue is the
         ``days(bucket_ts)`` partition transform.
 
-        ``stats_col`` records a manifest-level zone map: the committed
-        snapshot's min/max of that column (``"auto"`` = ``bucket_ts``
-        if present, else ``ts``, else nothing). ``read_range`` then
-        skips whole snapshot directories whose range cannot intersect a
-        time-bounded query — pruning that happens on the DRIVER from
-        the manifest alone, before any file is listed or opened
-        (Iceberg's manifest-entry min/max file skipping). The min/max
-        are observed on the rows as the write job produces them
-        (``DataFrame.observe``); no job re-reads the snapshot.
+        The snapshot's manifest entry records its lineage, observed on
+        the rows as the write job produces them (``DataFrame.observe``;
+        no job re-reads the snapshot): ``rows``, ``n_sources`` (exact
+        distinct non-NULL ``source`` values, if the frame has that
+        column) and a zone map ``stats``, the min/max of ``bucket_ts``
+        if present, else ``ts``. ``read_range`` skips whole snapshot
+        directories whose range cannot intersect a time-bounded query —
+        pruning that happens on the DRIVER from the manifest alone,
+        before any file is listed or opened (Iceberg's manifest-entry
+        min/max file skipping).
 
         The table's first commit records the written schema in the
         manifest, which later reads use instead of inferring it. A
@@ -126,23 +131,29 @@ class TierCatalog:
         t = m["tables"].setdefault(table, {"snapshots": []})
         snap_id = (t["snapshots"][-1]["id"] + 1) if t["snapshots"] else 1
         path = os.path.join(self.root, table, f"snap={snap_id}")
-        if stats_col == "auto":
-            stats_col = next(
-                (c for c in ("bucket_ts", "ts") if c in df.columns), None)
-        obs = None
+        stats_col = next((c for c in ("bucket_ts", "ts") if c in df.columns),
+                         None)
+        metrics = [F.count(F.lit(1)).alias("rows")]
         if stats_col is not None:
-            # unnamed: a random name cannot collide across catalogs or
-            # streaming epochs sharing the session
-            obs = Observation()
-            df = df.observe(obs, F.min(stats_col).alias("lo"),
-                            F.max(stats_col).alias("hi"))
+            metrics += [F.min(stats_col).alias("lo"),
+                        F.max(stats_col).alias("hi")]
+        if "source" in df.columns:
+            # observe rejects DISTINCT aggregates; a set's size is exact
+            metrics.append(F.size(F.collect_set("source")).alias("n_sources"))
+        # unnamed: a random name cannot collide across catalogs or
+        # streaming epochs sharing the session
+        obs = Observation()
+        df = df.observe(obs, *metrics)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
-        entry = {"id": snap_id, "committed_at": time.time(), "meta": meta or {}}
-        row = obs.get if obs is not None else None
-        if row and row["lo"] is not None:
+        row = obs.get
+        entry = {"id": snap_id, "committed_at": time.time(),
+                 "meta": meta or {}, "rows": row["rows"]}
+        if "n_sources" in row:
+            entry["n_sources"] = row["n_sources"]
+        if row.get("lo") is not None:
             entry["stats"] = {"col": stats_col,
                               "min": self._iso(row["lo"]),
                               "max": self._iso(row["hi"])}
@@ -253,6 +264,23 @@ class TierCatalog:
         dead = set(t.get("superseded", []))
         return [s["id"] for s in t.get("snapshots", []) if s["id"] not in dead]
 
+    def lineage(self, table: str) -> dict[int, dict]:
+        """What each live snapshot of ``table`` holds, by snapshot id,
+        oldest first, from the manifest alone (no Spark job): ``rows``,
+        ``n_sources`` (None for a table without ``source``), ``min`` and
+        ``max`` of the zone-map column as ISO strings (None for an empty
+        snapshot or one without a time column) and ``committed_at``
+        (epoch seconds). Snapshots committed before lineage was recorded
+        report ``None`` rows and sources."""
+        t = self._table(table)
+        live = set(self._live(t))
+        return {s["id"]: {"rows": s.get("rows"),
+                          "n_sources": s.get("n_sources"),
+                          "min": s.get("stats", {}).get("min"),
+                          "max": s.get("stats", {}).get("max"),
+                          "committed_at": s["committed_at"]}
+                for s in t.get("snapshots", []) if s["id"] in live}
+
     def snapshots(self, table: str) -> list[int]:
         """Live (non-superseded) snapshot ids, oldest first."""
         return self._live(self._table(table))
@@ -343,7 +371,7 @@ class TierCatalog:
     def read_range(
         self, spark: SparkSession, table: str, start=None, end=None,
     ) -> DataFrame | None:
-        """Committed rows with ``stats_col`` in [start, end): snapshot
+        """Committed rows with the zone-map column in [start, end): snapshot
         dirs outside the range are skipped entirely (never listed or
         opened — the scan's InMemoryFileIndex only sees surviving
         snapshots), then the residual row filter is pushed to the

@@ -5,7 +5,7 @@ Schema per the north rule input_hint (BASELINE.json):
 ts timestamp)`` — ``n_tok == size(tokens)`` by construction and the
 whole table is a pure function of (seed, n_docs): regenerating yields
 bit-identical rows (the per-row token-array-equality invariant is
-checked by tests/test_tokens.py and plans.lineage.token_equality_check).
+checked by tests/test_tiers_tokens.py with ``token_equality_check``).
 
 Everything is JVM-side expression work over ``spark.range`` — no Python
 RNG, no UDFs — so generation distributes and scales with cores.

@@ -6,12 +6,12 @@ are not mergeable, so detectors stay batch. This module covers the
 *ingest edge*: a file stream of raw token-series rows rolled into
 1-minute tumbling aggregates with a watermark for late data. Streaming
 aggregates are algebraic only (count/min/max/sum -> mean); the exact
-per-bucket quantile is backfilled by the next incremental batch refresh
-(the classic lambda split, stated in the tier table docs). Both 1m
-streams aggregate through the batch tier algebra (``tier_stats``,
-``tier_mean``, ``with_digest``), keyed by the start of a watermarked
-``F.window`` instead of ``tier_bucket``, so streamed rows have the
-batch tier's values, types and column order.
+per-bucket quantile ``vq`` is emitted NULL and backfilled by the next
+incremental batch refresh (the classic lambda split, stated in the tier
+table docs). Both 1m streams aggregate through the batch tier algebra
+(``tier_stats``, ``tier_mean``, ``with_digest``), keyed by the start of
+a watermarked ``F.window`` instead of ``tier_bucket``, so streamed rows
+have the batch tier's values, types and column order.
 """
 
 from __future__ import annotations
@@ -51,8 +51,10 @@ def streaming_rollup_1m(
     source_dir: str,
     watermark: str = "5 minutes",
 ) -> DataFrame:
-    """readStream(parquet dir) -> watermarked 1-minute tumbling rollup."""
-    return _stream_1m(spark, source_dir, watermark).select("*", tier_mean())
+    """readStream(parquet dir) -> watermarked 1-minute tumbling rollup,
+    with the batch ``rollup_raw`` columns in order; ``vq`` is NULL."""
+    return _stream_1m(spark, source_dir, watermark).select(
+        "*", F.lit(None).cast("double").alias("vq"), tier_mean())
 
 
 def streaming_rollup_1m_sketch(

@@ -52,7 +52,7 @@ def _bounds_map(bounds: DataFrame, source_col: str) -> dict[str, tuple[float, fl
 
     NULL fitted bounds (a source whose training series was too short —
     see detectors.require_fit) become NaN, so that source's stream rows
-    degrade to NaN labels instead of killing the query."""
+    degrade to undecided labels instead of killing the query."""
     return {
         r[source_col]: (
             float(r["abs_low"]) if r["abs_low"] is not None else math.nan,
@@ -70,20 +70,6 @@ import warnings as _warnings
 _warnings.filterwarnings("ignore", message=".*All-NaN slice.*")
 _warnings.filterwarnings("ignore", message=".*[Mm]ean of empty slice.*")
 _warnings.filterwarnings("ignore", message=".*Degrees of freedom <= 0.*")
-
-
-def _trailing_agg(windows: np.ndarray, agg: str) -> np.ndarray:
-    # all-NaN head windows are expected (NaN-padded tail); the result is
-    # masked by the min_periods check, so the numpy warning is noise
-    if agg == "median":
-        return np.nanmedian(windows, axis=1)
-    if agg == "mean":
-        return np.nanmean(windows, axis=1)
-    if agg == "min":
-        return np.nanmin(windows, axis=1)
-    if agg == "max":
-        return np.nanmax(windows, axis=1)
-    return np.nansum(windows, axis=1)
 
 
 def streaming_threshold_ad(stream: DataFrame, low=None, high=None, **kw) -> DataFrame:
@@ -122,7 +108,8 @@ def streaming_persist_ad(
     ``detectors.persist_ad_fit`` — per-source ``abs_low``/``abs_high``
     over |value - agg(prev window rows)|. Labels follow the batch
     three-valued convention: 1.0 anomaly, 0.0 normal, NaN undecidable
-    (NULL value, unfilled min_periods tail, or unknown source).
+    (NULL value, unfilled min_periods tail, or unknown source — unless
+    ``side`` rules the point out, which gives 0.0 as in batch).
 
     Arrival contract: rows may arrive unordered *within* a micro-batch
     (sorted per batch); rows older than the retained tail across batches
@@ -156,24 +143,11 @@ def streaming_persist_ad(
             ]
             n_valid = np.count_nonzero(~np.isnan(wins), axis=1)
             with np.errstate(all="ignore"):
-                left = np.where(n_valid >= mp, _trailing_agg(wins, agg), np.nan)
+                left = np.where(n_valid >= mp, _window_stat(wins, agg), np.nan)
             diff = new - left
-            mag = np.abs(diff)
-            # IQR rule & sign check in three-valued logic: NaN mag -> NaN
-            flag = (mag > hi) | (mag < lo)
-            if side == "positive":
-                flag &= diff > 0
-            elif side == "negative":
-                flag &= diff < 0
-            # NaN in EITHER bound (unknown source, or a fitted bound
-            # that is NULL because the source was unfittable) -> NaN
-            # labels, matching the batch three-valued join semantics
-            label = np.where(
-                np.isnan(mag) | math.isnan(lo) | math.isnan(hi),
-                np.nan, flag.astype(float))
             out = pdf[[ts_col, value_col]].copy()
             out.insert(0, source_col, key[0])
-            out[out_col] = label
+            out[out_col] = _label(np.abs(diff), diff, lo, hi, side)
             tail = vals[-w:] if len(vals) >= w else vals
             yield out
         state.update((tail.tolist(),))
@@ -258,8 +232,19 @@ def streaming_volatility_shift_ad(
 
 
 def _window_stat(wins: np.ndarray, agg: str) -> np.ndarray:
+    """Per-row statistic of the NaN-padded windows ``wins``; all-NaN
+    windows are expected (the callers mask them by min_periods), so
+    numpy's warnings for them are filtered above."""
     if agg == "median":
         return np.nanmedian(wins, axis=1)
+    if agg == "mean":
+        return np.nanmean(wins, axis=1)
+    if agg == "min":
+        return np.nanmin(wins, axis=1)
+    if agg == "max":
+        return np.nanmax(wins, axis=1)
+    if agg == "sum":
+        return np.nansum(wins, axis=1)
     if agg == "std":
         # sample std, matching the batch F.stddev_samp
         return np.nanstd(wins, axis=1, ddof=1)
@@ -269,6 +254,26 @@ def _window_stat(wins: np.ndarray, agg: str) -> np.ndarray:
     # idr
     return (np.nanpercentile(wins, 90, axis=1)
             - np.nanpercentile(wins, 10, axis=1))
+
+
+def _label(mag: np.ndarray, diff: np.ndarray, lo: float, hi: float,
+           side: str) -> np.ndarray:
+    """Batch-parity labels: the IQR flag on ``mag`` AND the side-sign
+    flag on ``diff``, combined with SQL THREE-VALUED AND — a False leg
+    forces 0.0 even when the other leg is NULL (NaN ``mag``, or a NaN
+    bound: an unknown source, or one whose fitted bound is NULL
+    because it was unfittable)."""
+    iqr_f = np.where(
+        np.isnan(mag) | math.isnan(lo) | math.isnan(hi),
+        np.nan, ((mag > hi) | (mag < lo)).astype(float))
+    if side == "both":
+        sign_f = np.where(np.isnan(diff), np.nan, 1.0)
+    elif side == "positive":
+        sign_f = np.where(np.isnan(diff), np.nan, (diff > 0).astype(float))
+    else:
+        sign_f = np.where(np.isnan(diff), np.nan, (diff < 0).astype(float))
+    return np.where((iqr_f == 0) | (sign_f == 0), 0.0,
+                    np.where(np.isnan(iqr_f) | np.isnan(sign_f), np.nan, 1.0))
 
 
 def _streaming_shift_ad(
@@ -338,29 +343,11 @@ def _streaming_shift_ad(
                         # as NaN, not numpy's inf
                         mag = np.where(stat_l == 0, np.nan,
                                        np.abs(diff) / stat_l)
-                # batch parity: IQR flag on mag AND side-sign flag on
-                # diff, combined with SQL THREE-VALUED AND (a False leg
-                # forces 0.0 even when the other leg is NULL)
-                iqr_f = np.where(
-                    np.isnan(mag) | math.isnan(lo) | math.isnan(hi),
-                    np.nan, ((mag > hi) | (mag < lo)).astype(float))
-                if side == "both":
-                    sign_f = np.where(np.isnan(diff), np.nan, 1.0)
-                elif side == "positive":
-                    sign_f = np.where(np.isnan(diff), np.nan,
-                                      (diff > 0).astype(float))
-                else:
-                    sign_f = np.where(np.isnan(diff), np.nan,
-                                      (diff < 0).astype(float))
-                label = np.where(
-                    (iqr_f == 0) | (sign_f == 0), 0.0,
-                    np.where(np.isnan(iqr_f) | np.isnan(sign_f),
-                             np.nan, 1.0))
                 out = pd.DataFrame({
                     source_col: key[0],
                     ts_col: pd.to_datetime(tss[idx], unit="us"),
                     value_col: vals[idx],
-                    out_col: label,
+                    out_col: _label(mag, diff, lo, hi, side),
                 })
                 yield out
             tail_v, tail_t = vals[-keep:], tss[-keep:]

@@ -10,8 +10,10 @@ Each run: (1) optionally ingests a new deterministic corpus snapshot,
 (2) rolls every unprocessed raw snapshot into the 1m/1h/1d tiers
 (resuming from the manifest watermark — kill it anywhere and rerun),
 (3) writes compressed payload blocks for the fresh 1m buckets,
-(4) enforces retention, (5) records per-partition lineage for every
-materialization (inside refresh_tiers/commit_with_lineage).
+(4) enforces retention. Every catalog commit records its snapshot's
+lineage (rows, distinct sources, time range, commit time) in the
+manifest during the write, so the report's row counts come from
+``catalog.lineage`` instead of re-running the plans just written.
 
 On a real cluster the TierCatalog maps onto Iceberg snapshots; in this
 sandbox it is parquet + a JSON manifest with identical commit/read-since
@@ -214,7 +216,7 @@ def main(argv=None):
                 {"threshold": args.lsh_threshold, "max_bucket": cap})
             report["lsh"] = {
                 "pairs_snapshot": snap,
-                "n_pairs": pairs.count(),
+                "n_pairs": catalog.lineage("lsh_pairs")[snap]["rows"],
                 "max_bucket": cap,
                 "dropped_buckets": int(dropped["buckets"]),
                 "dropped_doc_slots": int(dropped["doc_slots"]),
@@ -255,7 +257,7 @@ def main(argv=None):
              "n_lists": args.embed_lists})
         report["embed_dedup"] = {
             "pairs_snapshot": snap,
-            "n_pairs": pairs.count(),
+            "n_pairs": catalog.lineage("embed_dup_pairs")[snap]["rows"],
             "max_cell": cap,
             "dropped_cells_post_split": int(dropped["cells"]),
             "dropped_vec_slots": int(dropped["vec_slots"]),
@@ -282,7 +284,9 @@ def main(argv=None):
             snap = catalog.commit(
                 drift, "drift_report",
                 {"split": args.psi_split, "edges": args.psi_edges})
-            rows = drift.select("source", "psi", "ks").collect()
+            # from the snapshot just written, not a re-run of `drift`
+            rows = catalog.read_snapshot(spark, "drift_report", snap).select(
+                "source", "psi", "ks").collect()
             worst = sorted(rows, key=lambda r: -(r["psi"] or 0))[:3]
             worst_ks = sorted(rows, key=lambda r: -(r["ks"] or 0))[:3]
             report["psi"] = {
@@ -303,16 +307,15 @@ def main(argv=None):
             tl = psi_timeline(tier_series(t1m, "mean"), edges, "1d")
             snap = catalog.commit(tl, "drift_timeline",
                                   {"edges": args.psi_edges, "tier": "1d"})
-            # report from the snapshot just written — counting/sorting
-            # the uncached `tl` would re-execute the whole tier-scan
-            # pipeline once per report field (r04 ADVICE)
+            # report from the snapshot just written — sorting the
+            # uncached `tl` would re-execute the whole tier-scan pipeline
             committed = catalog.read_snapshot(spark, "drift_timeline", snap)
             worst = (committed.where(F.col("psi").isNotNull())
                      .orderBy(F.desc("psi")).limit(3)
                      .select("source", "bucket_ts", "psi").collect())
             report["psi_timeline"] = {
                 "snapshot": snap,
-                "rows": committed.count(),
+                "rows": catalog.lineage("drift_timeline")[snap]["rows"],
                 "worst": [(r["source"], str(r["bucket_ts"]),
                            float(r["psi"])) for r in worst],
             }
@@ -325,9 +328,11 @@ def main(argv=None):
 
             keep_after = cutoff - dt.timedelta(days=args.retention_days_1m)
             kept = retention_filter(t1m, keep_after)
-            report["retention_snapshot"] = catalog.commit(
+            snap = catalog.commit(
                 kept, "tier_1m_retained", {"keep_after": str(keep_after)})
-            report["retention_kept_rows"] = kept.count()
+            report["retention_snapshot"] = snap
+            report["retention_kept_rows"] = (
+                catalog.lineage("tier_1m_retained")[snap]["rows"])
             # ledger: 1m history older than the cutoff is no longer
             # guaranteed — the router must serve it from coarser tiers
             catalog.set_retention("tier_1m", keep_after)

@@ -67,11 +67,11 @@ def test_incremental_refresh_and_resume(spark, tmp_path):
     assert cat2.get_watermark(WATERMARK_KEY) == cat.get_watermark(WATERMARK_KEY)
     assert refresh_tiers(cat2, spark)["processed"] == 0
 
-    # lineage rows recorded for every tier commit
-    lin = cat.read(spark, "_lineage")
-    tables = {r["table"] for r in lin.select("table").distinct().collect()}
-    assert {"tier_1m", "tier_1h", "tier_1d"} <= tables
-    assert lin.where(F.col("n_rows") <= 0).count() == 0
+    # lineage recorded in the manifest for every tier commit
+    for table in ("tier_1m", "tier_1h", "tier_1d"):
+        lin = cat.lineage(table)
+        assert len(lin) == 2
+        assert all(e["rows"] > 0 for e in lin.values())
 
 
 def test_bucketed_compaction_no_exchange(spark, tmp_path):
@@ -425,7 +425,8 @@ def test_manifest_without_schema_reads_and_refreshes(spark, tmp_path):
     cat.commit(token_corpus(spark, 300, n_sources=4, seed=4,
                             span_secs=7200), "raw")
     assert refresh_tiers(cat, spark)["processed"] == 1
-    for table in ("raw", "tier_1m", "tier_1h", "tier_1d", "_lineage"):
+    assert "_lineage" not in cat._load()["tables"]
+    for table in ("raw", "tier_1m", "tier_1h", "tier_1d"):
         assert "schema" not in cat._table(table)
         assert cat.read(spark, table).schema == \
             _inferred(spark, cat, table).schema
@@ -458,10 +459,10 @@ def test_sketch_flavor_guards_raise(spark, tmp_path, recorded):
 
 
 def test_lineage_reads_only_its_own_snapshot(spark, tmp_path):
-    """commit_with_lineage summarizes the snapshot it committed, even
-    when another writer (e.g. the streaming sink) commits to the same
-    table before the lineage read."""
-    from adtk_spark.plans.lineage import commit_with_lineage
+    """commit_with_lineage records the snapshot it committed, even when
+    another writer (e.g. the streaming sink) commits to the same table
+    right after it."""
+    from adtk_spark.plans.incremental import commit_with_lineage
 
     other = _minutes(spark, 2, 7)
 
@@ -469,22 +470,116 @@ def test_lineage_reads_only_its_own_snapshot(spark, tmp_path):
         def commit(self, df, table, *a, **kw):
             snap = super().commit(df, table, *a, **kw)
             if table == "t" and snap == 1:
-                super().commit(other, "t")  # lands before the lineage read
+                super().commit(other, "t")  # lands right after snapshot 1
             return snap
 
     cat = RacingCatalog(str(tmp_path / "race"))
-    assert commit_with_lineage(cat, spark, _minutes(spark, 1, 5), "t") == 1
+    assert commit_with_lineage(cat, _minutes(spark, 1, 5), "t") == 1
     assert cat.snapshots("t") == [1, 2]
-    lin = cat.read(spark, "_lineage").collect()
-    assert {r["snapshot_id"] for r in lin} == {1}
-    assert sum(r["n_rows"] for r in lin) == 5
-    assert max(r["max_ts"] for r in lin) == dt.datetime(2025, 6, 1, 0, 4)
+    lin = cat.lineage("t")
+    assert lin[1]["rows"] == 5
+    assert lin[1]["max"] == dt.datetime(2025, 6, 1, 0, 4).isoformat()
+    assert lin[2]["rows"] == 7
+
+
+def test_lineage_from_manifest_without_jobs(spark, tmp_path):
+    """Every live snapshot's rows, min/max, n_sources and committed_at
+    come from the manifest with zero Spark jobs and equal a scan of the
+    snapshot; superseded snapshots drop out."""
+    from adtk_spark.plans.incremental import compact_tier
+
+    cat = TierCatalog(str(tmp_path / "lin"))
+    two = _minutes(spark, 1, 3).union(
+        _minutes(spark, 1, 2).withColumn("source", F.lit("u")))
+    cat.commit(two, "t")
+    cat.commit(_minutes(spark, 2, 4).where(F.col("mean") < 0), "t")  # empty
+    cat.commit(spark.range(6).select(F.col("id").alias("x")), "plain")
+    with _jobs(spark, "lineage") as ids:
+        lin, plain = cat.lineage("t"), cat.lineage("plain")
+    assert ids == []
+
+    for snap, e in lin.items():
+        got = cat.read_snapshot(spark, "t", snap).agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.countDistinct("source").alias("n_sources"),
+            F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi"),
+        ).first()
+        assert (e["rows"], e["n_sources"]) == (got["rows"], got["n_sources"])
+        assert (e["min"], e["max"]) == (
+            got["lo"] and got["lo"].isoformat(),
+            got["hi"] and got["hi"].isoformat())
+        assert e["committed_at"] <= dt.datetime.now().timestamp()
+    assert [(e["rows"], e["n_sources"]) for e in lin.values()] == \
+        [(5, 2), (0, 0)]
+    assert plain == {1: {"rows": 6, "n_sources": None, "min": None,
+                         "max": None,
+                         "committed_at": plain[1]["committed_at"]}}
+
+    assert compact_tier(cat, spark, "t") == 3
+    assert list(cat.lineage("t")) == [3]
+    assert cat.lineage("t")[3]["rows"] == 5
+    assert not os.path.exists(os.path.join(cat.root, "_lineage"))
+
+
+def test_manifest_without_lineage_reads_prunes_and_refreshes(spark, tmp_path):
+    """A manifest written before lineage was recorded (no ``rows`` /
+    ``n_sources`` in its entries) still reads, prunes and refreshes
+    exactly; its old snapshots report None rows, new ones are counted."""
+    from adtk_spark.plans.tiers import rollup_raw
+    from adtk_spark.sources.tokens import token_series
+
+    cat = TierCatalog(str(tmp_path / "old"))
+    cat.commit(token_corpus(spark, 600, n_sources=4, seed=3,
+                            span_secs=7200), "raw")
+    refresh_tiers(cat, spark)
+    m = cat._load()
+    for t in m["tables"].values():
+        for e in t["snapshots"]:
+            e.pop("rows"), e.pop("n_sources", None)
+    cat._store(m)
+    assert cat.lineage("tier_1m")[1]["rows"] is None
+
+    cat.commit(token_corpus(spark, 300, n_sources=4, seed=4,
+                            span_secs=7200), "raw")
+    assert refresh_tiers(cat, spark)["processed"] == 1
+    lin = cat.lineage("tier_1m")
+    assert lin[1]["rows"] is None and lin[2]["rows"] > 0
+    assert lin[2]["n_sources"] == 4
+
+    full = token_series(cat.read(spark, "raw").drop("snap"))
+    key = lambda r: (r["source"], r["bucket_ts"], r["cnt"], r["vsum"])
+    got = read_tier_latest(cat, spark, "tier_1m")
+    assert {key(r) for r in got.collect()} == \
+        {key(r) for r in rollup_raw(full, "1m").collect()}
+    lo = dt.datetime.fromisoformat(lin[1]["max"]) + dt.timedelta(days=1)
+    assert cat.snapshots_in_range("tier_1m", lo, None) == []
+    assert cat.snapshots_in_range("tier_1m", None, lo) == [1, 2]
+
+
+def test_tier_commit_runs_no_job_beyond_bare_commit(spark, tmp_path):
+    """commit_with_lineage runs exactly the jobs of a bare commit of the
+    same frame: lineage costs no read-back and no second commit."""
+    from adtk_spark.plans.incremental import commit_with_lineage
+    from adtk_spark.plans.tiers import rollup_raw
+
+    series = spark.createDataFrame(
+        [("s", dt.datetime(2025, 6, 1, 0, i // 3), float(i)) for i in range(30)],
+        "source string, ts timestamp, value double")
+    cat = TierCatalog(str(tmp_path / "jobs"))
+    with _jobs(spark, "bare") as bare:
+        cat.commit(rollup_raw(series, "1m"), "bare")
+    with _jobs(spark, "tier") as tier:
+        commit_with_lineage(cat, rollup_raw(series, "1m"), "tier_1m")
+    assert len(tier) == len(bare), (tier, bare)
+    assert cat.lineage("tier_1m")[1]["rows"] == 10
+    assert set(cat._load()["tables"]) == {"bare", "tier_1m"}
 
 
 # Spark jobs of the one-append refresh_tiers below, as measured at 4
-# cores; a commit that re-reads its snapshot, a read that infers its
-# schema or a restatement that re-runs the raw rollup pushes it over.
-REFRESH_JOBS = 23
+# cores; a commit that re-reads its snapshot (or writes a lineage side
+# table), a read that infers its schema or a restatement that re-runs
+# the raw rollup pushes it over.
+REFRESH_JOBS = 14
 
 
 def test_refresh_and_reads_job_budget(spark, tmp_path):
@@ -503,8 +598,8 @@ def test_refresh_and_reads_job_budget(spark, tmp_path):
 
     lo, hi = dt.datetime(2025, 1, 1), dt.datetime(2025, 1, 2)
     with _jobs(spark, "reads") as ids:
-        assert cat.read(spark, "_lineage") is not None
         for table in ("raw", "tier_1m", "tier_1h", "tier_1d"):
+            assert all(e["rows"] > 0 for e in cat.lineage(table).values())
             assert cat.read(spark, table) is not None
             assert cat.read_range(spark, table, lo, hi) is not None
         read_tier_latest(cat, spark, "tier_1h", lo, hi)

@@ -238,12 +238,7 @@ def test_embedding_dup_pairs_multiprobe_boundary(spark):
 
 
 def test_multimodal_plumbing(spark):
-    from adtk_spark.operators.multimodal import (
-        extract_features,
-        frame_sample,
-        resize_bilinear,
-        synthetic_media,
-    )
+    from adtk_spark.operators.multimodal import extract_features, synthetic_media
 
     media = synthetic_media(spark, 50)
     assert media.where(F.col("media").isNull()).count() == 0
@@ -254,18 +249,6 @@ def test_multimodal_plumbing(spark):
     # determinism of the fake decoder
     again = {r["doc_id"]: r["px_mean"] for r in extract_features(media).collect()}
     assert {r["doc_id"]: r["px_mean"] for r in rows} == again
-    fs = frame_sample(media, every_k=8)
-    assert fs.count() > 0 and fs.where(F.col("frame_idx") % 8 != 0).count() == 0
-    # bilinear resize (pure numpy): identity at same size, exact
-    # constant preservation, and exact midpoint interpolation on 1x2
-    import numpy as np
-
-    img = np.arange(48, dtype=np.uint8).reshape(6, 8)
-    assert np.array_equal(resize_bilinear(img, 8, 6), img)
-    const = np.full((5, 5, 3), 77, dtype=np.uint8)
-    assert np.array_equal(resize_bilinear(const, 11, 3), np.full((3, 11, 3), 77))
-    two = np.array([[0.0, 10.0]])
-    assert resize_bilinear(two, 4, 1)[0].tolist() == [0.0, 2.5, 7.5, 10.0]
 
 
 def test_minhash_hot_bucket_cap(spark):
@@ -353,7 +336,7 @@ def test_extract_features_real_bmp_decode(spark):
     import numpy as np
 
     from adtk_spark.operators.multimodal import (
-        bmp_encode, extract_features, resize_nearest, synthetic_bmp_media,
+        bmp_encode, extract_features, synthetic_bmp_media,
     )
 
     media = synthetic_bmp_media(spark, 12)
@@ -366,10 +349,6 @@ def test_extract_features_real_bmp_decode(spark):
     y = np.round(0.299 * arr[..., 0] + 0.587 * arr[..., 1]
                  + 0.114 * arr[..., 2]).astype(np.uint8)
     assert abs(feats["bmp0"]["px_mean"] - y.mean()) < 1e-9
-    # nearest-neighbor resize: shape + corner-pixel fidelity
-    small = resize_nearest(arr, 8, 6)
-    assert small.shape == (6, 8, 3)
-    assert (small[0, 0] == arr[0, 0]).all()
 
 
 def test_wav_codec_roundtrip():

@@ -185,6 +185,13 @@ def test_streaming_into_catalog_routes(spark, tmp_path):
     assert a == b2 and a
 
 
+def _snapshot_rows(spark, cat, table, snap):
+    """Rows of one committed snapshot, counted from its files."""
+    from adtk_spark.sources.catalog import TierCatalog
+
+    return TierCatalog(cat).read_snapshot(spark, table, snap).count()
+
+
 def test_rollup_job_cli(spark, tmp_path, capsys):
     import json
 
@@ -199,6 +206,8 @@ def test_rollup_job_cli(spark, tmp_path, capsys):
     assert rep["refresh"]["processed"] == 1
     assert rep["payload_snapshot"] >= 1
     assert rep["retention_kept_rows"] > 0
+    assert rep["retention_kept_rows"] == _snapshot_rows(
+        spark, cat, "tier_1m_retained", rep["retention_snapshot"])
     # second run with nothing new: pure resume, no reprocessing
     main(["--catalog", cat, "--cores", "4"])
     rep2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -237,6 +246,8 @@ def test_rollup_job_cli(spark, tmp_path, capsys):
           "--lsh-max-bucket", "50"])
     rep5 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep5["lsh"]["pairs_snapshot"] >= 1
+    assert rep5["lsh"]["n_pairs"] == _snapshot_rows(
+        spark, cat, "lsh_pairs", rep5["lsh"]["pairs_snapshot"])
     assert {"n_pairs", "max_bucket", "dropped_buckets",
             "dropped_doc_slots"} <= set(rep5["lsh"])
     # PSI drift report over the 1m tier: committed as a drift_report
@@ -257,6 +268,8 @@ def test_rollup_job_cli(spark, tmp_path, capsys):
     rep7 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep7["psi_timeline"]["snapshot"] >= 1
     assert rep7["psi_timeline"]["rows"] > 0
+    assert rep7["psi_timeline"]["rows"] == _snapshot_rows(
+        spark, cat, "drift_timeline", rep7["psi_timeline"]["snapshot"])
     assert TierCatalog(cat).last_snapshot("drift_timeline") >= 1
 
 
@@ -320,6 +333,47 @@ def test_streaming_persist_ad_matches_batch(spark, tmp_path):
             n_anom += int(b == 1.0)
     assert n_anom > 0  # the comparison is not vacuous
     raw.unpersist()
+
+
+def test_streaming_persist_ad_unfitted_source_side(spark, tmp_path):
+    """side='positive' with one source missing from the bounds: the
+    stream labels that source like persist_ad_detect, i.e. SQL
+    three-valued AND (a non-positive diff gives 0.0 even though the
+    IQR leg is NULL), not NaN for every point."""
+    import math
+
+    from adtk_spark.operators.data import validate_series
+    from adtk_spark.operators.detectors import persist_ad_detect, persist_ad_fit
+    from adtk_spark.sources.tokens import token_corpus, token_series
+    from adtk_spark.streaming.stateful import streaming_persist_ad
+
+    raw = validate_series(
+        token_series(token_corpus(spark, 600, n_sources=3, seed=71,
+                                  span_secs=3600)))
+    missing = min(r["source"] for r in raw.select("source").distinct().collect())
+    bounds = persist_ad_fit(raw, window=5).where(F.col("source") != missing)
+    want = {(r["source"], r["ts"]): r["label"]
+            for r in persist_ad_detect(raw, bounds, window=5,
+                                       side="positive").collect()}
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    raw.write.parquet(src)
+    stream = spark.readStream.schema(
+        "source string, ts timestamp, value double").parquet(src)
+    q = (streaming_persist_ad(stream, bounds, window=5, side="positive")
+         .writeStream.outputMode("append").trigger(availableNow=True)
+         .option("checkpointLocation", ckpt)
+         .format("parquet").option("path", out).start())
+    q.awaitTermination()
+    got = {(r["source"], r["ts"]): r["label"]
+           for r in spark.read.parquet(out).collect()}
+
+    assert set(got) == set(want)
+    nan = lambda v: v is None or math.isnan(v)
+    for k, w in want.items():
+        assert (nan(got[k]) and nan(w)) or got[k] == w, (k, got[k], w)
+    # not vacuous: the unfitted source has decided 0.0 labels
+    assert any(k[0] == missing and w == 0.0 for k, w in want.items())
 
 
 def test_streaming_bounds_ad_stream_static_join(spark, tmp_path):
@@ -872,7 +926,8 @@ def _integer_raw(spark, t0, n=240):
 def test_tier_producers_share_one_algebra(spark, tmp_path):
     """rollup_raw, salt_partials, rollup_at at 60 s and the plain 1m
     stream emit the same cnt/vmin/vmax/vsum/mean values and dtypes; the
-    batch, routed and streamed sketch tiers emit one column list."""
+    batch, routed and streamed sketch tiers emit one column list, and
+    so do the batch and streamed plain tiers."""
     import datetime as dt
 
     from adtk_spark.plans.router import rollup_at, route_rollup_sketch
@@ -910,13 +965,16 @@ def test_tier_producers_share_one_algebra(spark, tmp_path):
     for name, g in got.items():
         assert g == want, name
 
+    # one column list per tier flavor: the plain stream's NULL vq sits
+    # where the batch quantile does
     s1m = rollup_raw_sketch(raw, "1m")
-    sketch = {
-        "routed": route_rollup_sketch({"1m": s1m}, 60),
-        "stream": streaming_rollup_1m_sketch(spark, src),
+    schemas = {
+        "routed": (route_rollup_sketch({"1m": s1m}, 60), s1m),
+        "stream_sketch": (streaming_rollup_1m_sketch(spark, src), s1m),
+        "stream": (streaming_rollup_1m(spark, src), producers["rollup_raw"]),
     }
-    for name, df in sketch.items():
-        assert df.dtypes == s1m.dtypes, name
+    for name, (df, ref) in schemas.items():
+        assert df.dtypes == ref.dtypes, name
 
 
 def test_stream_sketch_keeps_batch_sketch_schema(spark, tmp_path):
