@@ -146,11 +146,13 @@ def sorted_frame_arr(value_col: str, win: WindowSpec) -> Column:
 def single_row_arr(value_col: str) -> Column:
     """collect_list-equivalent for a degenerate single-row ROWS frame
     (e.g. DoubleRolling right window=1): [] when NULL else [value] —
-    a pure projection, no window buffer at all."""
+    a pure projection, no window buffer at all. Built as a ``slice`` so
+    whole-stage codegen compiles it: a ``CASE`` between ``array(v)`` and
+    ``array()`` fails to compile for a non-nullable ``v`` (the stage
+    drops to the interpreter), and ``array_compact`` is a higher-order
+    function, evaluated interpreted on every row."""
     v = F.col(value_col)
-    return F.when(v.isNotNull(), F.array(v)).otherwise(
-        F.array().cast("array<double>")
-    )
+    return F.slice(F.array(v), 1, v.isNotNull().cast("int"))
 
 
 def type7_ranks(n: Column, p: float) -> tuple[Column, Column, Column]:
@@ -393,8 +395,8 @@ def _double_frames(
             right = (kr, 0, sr - 1, sr, 1)
     else:
         # mixed-kind center=False pairs don't reduce to two frames over
-        # the same row ordering; double_rolling_agg routes them to
-        # _double_rolling_mixed before calling here
+        # the same row ordering; double_rolling_sides routes them to
+        # _mixed_sides before calling here
         if kr == ROWS:
             right = (kr, -(sr - 1), 0, sr, sr)
             assert kl == ROWS
@@ -420,11 +422,45 @@ def _callable_diff(fn: Callable, left: Column, right: Column) -> Column:
     return _d(left, right)
 
 
-def _double_rolling_mixed(
-    df: DataFrame, wl, wr, aggs, aps, mps, diff,
-    source_col: str, ts_col: str, value_col: str, out: str,
+def double_rolling_sides(df: DataFrame, window, agg="mean", agg_params=None,
+                         center: bool = True, min_periods=None, *,
+                         source_col="source", ts_col="ts", value_col="value") -> DataFrame:
+    """``df``'s columns plus the left and right window aggregates of
+    ``double_rolling_agg`` (same arguments) as plain columns: ``_l`` /
+    ``_r``, or ``_l_<sfx>`` / ``_r_<sfx>`` per output of multi-output
+    aggs. The one two-window builder: ``double_rolling_agg`` and the
+    shift detectors only combine these columns, so each side is one
+    window evaluation however often the combination references it
+    (WindowExec does not dedupe identical window expressions)."""
+    aggs = agg if isinstance(agg, tuple) else (agg, agg)
+    aps = agg_params if isinstance(agg_params, tuple) else (agg_params, agg_params)
+    mps = min_periods if isinstance(min_periods, tuple) else (min_periods, min_periods)
+    wl, wr = window if isinstance(window, tuple) else (window, window)
+    if not center and parse_window(wl)[0] != parse_window(wr)[0]:
+        return _mixed_sides(df, wl, wr, aggs, aps, mps, source_col, ts_col, value_col)
+    extra, cols = [], []
+    for tag, agg_, ap, mp, (kind, lo, hi, _size, default_mp) in zip(
+            "lr", aggs, aps, mps, _double_frames(window, center)):
+        win = _win(source_col, ts_col, kind, lo, hi)
+        arr = None
+        if agg_ in QUANTILE_AGGS:
+            if kind == ROWS and lo == hi == 0:
+                arr = single_row_arr(value_col)
+            else:
+                extra.append(sorted_frame_arr(value_col, win).alias(f"_qarr_{tag}"))
+                arr = F.col(f"_qarr_{tag}")
+        exprs = agg_exprs(value_col, win, agg_, ap, mp, default_mp, arr=arr)
+        cols += [c.alias(f"_{tag}" if sfx is None else f"_{tag}_{sfx}")
+                 for sfx, c in exprs.items()]
+    src = df.select("*", *extra) if extra else df
+    return src.select(*df.columns, *cols)
+
+
+def _mixed_sides(
+    df: DataFrame, wl, wr, aggs, aps, mps,
+    source_col: str, ts_col: str, value_col: str,
 ) -> DataFrame:
-    """DoubleRollingAggregate with center=False and MIXED window kinds
+    """``double_rolling_sides`` for center=False and MIXED window kinds
     (one int, one time), mirroring the reference's shift tricks
     (_transformer_1d.py:558-598):
 
@@ -435,7 +471,6 @@ def _double_rolling_mixed(
       winning ts collisions), evaluated at the original index -> build
       that union frame, roll, join back on (source, ts).
     """
-    kl, _sl = parse_window(wl)
     kr, sr = parse_window(wr)
     right = rolling_agg(df, wr, aggs[1], aps[1], center=False,
                         min_periods=mps[1], source_col=source_col,
@@ -449,39 +484,35 @@ def _double_rolling_mixed(
         both = rolling_agg(shifted, wl, aggs[0], aps[0], center=False,
                            min_periods=mps[0], source_col=source_col,
                            ts_col=ts_col, value_col="_vshift", out_col="_l")
-        both = both.drop("_vshift")
-    else:
-        # int left over the union-index frame {ts + Dr} ∪ {ts}
-        tsu = F.unix_micros(F.col(ts_col).cast("timestamp"))
-        shifted = df.select(
-            F.col(source_col), (tsu + F.lit(sr)).alias("_tsk"),
-            F.col(value_col).cast("double").alias("_vu"), F.lit(0).alias("_pri"),
-        )
-        spine = df.select(
-            F.col(source_col), tsu.alias("_tsk"),
-            F.lit(None).cast("double").alias("_vu"), F.lit(1).alias("_pri"),
-        )
-        u = (shifted.unionByName(spine)
-             .groupBy(source_col, "_tsk")
-             .agg(F.min_by("_vu", "_pri").alias("_vu"))
-             .withColumn("_tsu", F.timestamp_micros(F.col("_tsk"))))
-        la = rolling_agg(u, wl, aggs[0], aps[0], center=False,
-                         min_periods=mps[0], source_col=source_col,
-                         ts_col="_tsu", value_col="_vu", out_col="_l")
-        lcols = [c for c in la.columns if c == "_l" or c.startswith("_l_")]
-        lsel = la.select(source_col, "_tsk", *lcols)
-        both = (right.withColumn("_tsk", tsu)
-                .join(lsel, [source_col, "_tsk"], "left")
-                .drop("_tsk"))
-    lkeys = {None if c == "_l" else c[3:]: F.col(f"`{c}`")
-             for c in both.columns if c == "_l" or c.startswith("_l_")}
-    rkeys = {None if c == "_r" else c[3:]: F.col(f"`{c}`")
-             for c in both.columns if c == "_r" or c.startswith("_r_")}
-    if set(lkeys) != set(rkeys):
-        raise ValueError("left/right aggs must produce matching outputs")
-    c = _diff_col(lkeys, rkeys, diff)
-    keep = [col for col in df.columns]
-    return both.select(*keep, c.alias(out))
+        return both.drop("_vshift")
+    # int left over the union-index frame {ts + Dr} ∪ {ts}
+    tsu = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    shifted = df.select(
+        F.col(source_col), (tsu + F.lit(sr)).alias("_tsk"),
+        F.col(value_col).cast("double").alias("_vu"), F.lit(0).alias("_pri"),
+    )
+    spine = df.select(
+        F.col(source_col), tsu.alias("_tsk"),
+        F.lit(None).cast("double").alias("_vu"), F.lit(1).alias("_pri"),
+    )
+    u = (shifted.unionByName(spine)
+         .groupBy(source_col, "_tsk")
+         .agg(F.min_by("_vu", "_pri").alias("_vu"))
+         .withColumn("_tsu", F.timestamp_micros(F.col("_tsk"))))
+    la = rolling_agg(u, wl, aggs[0], aps[0], center=False,
+                     min_periods=mps[0], source_col=source_col,
+                     ts_col="_tsu", value_col="_vu", out_col="_l")
+    lsel = la.select(source_col, "_tsk", *la.columns[len(u.columns):])
+    return (right.withColumn("_tsk", tsu)
+            .join(lsel, [source_col, "_tsk"], "left")
+            .drop("_tsk"))
+
+
+def _side_cols(cols: list[str], tag: str) -> "dict[str | None, Column]":
+    # {suffix: column} of one side among a ``double_rolling_sides`` frame's
+    # added columns
+    return {None if c == tag else c[len(tag) + 1:]: F.col(f"`{c}`")
+            for c in cols if c == tag or c.startswith(tag + "_")}
 
 
 def _diff_col(lexprs: dict, rexprs: dict, diff) -> Column:
@@ -562,45 +593,13 @@ def double_rolling_agg(
     Parity target: _transformer_1d.py:347-628. ``window``/``agg``/
     ``agg_params``/``min_periods`` accept 2-tuples (left, right).
     """
-    aggs = agg if isinstance(agg, tuple) else (agg, agg)
-    aps = agg_params if isinstance(agg_params, tuple) else (agg_params, agg_params)
-    mps = min_periods if isinstance(min_periods, tuple) else (min_periods, min_periods)
-    wl_, wr_ = window if isinstance(window, tuple) else (window, window)
-    if not center and parse_window(wl_)[0] != parse_window(wr_)[0]:
-        return _double_rolling_mixed(
-            df, wl_, wr_, aggs, aps, mps, diff,
-            source_col, ts_col, value_col, out_col or f"{value_col}_droll")
-    (lk, llo, lhi, _lsz, lmp), (rk, rlo, rhi, _rsz, rmp) = _double_frames(window, center)
-
-    lwin = _win(source_col, ts_col, lk, llo, lhi)
-    rwin = _win(source_col, ts_col, rk, rlo, rhi)
-    extra, larr, rarr = [], None, None
-    if aggs[0] in QUANTILE_AGGS:
-        if lk == ROWS and llo == 0 and lhi == 0:
-            larr = single_row_arr(value_col)
-        else:
-            extra.append(sorted_frame_arr(value_col, lwin).alias("_qarr_l"))
-            larr = F.col("_qarr_l")
-    if aggs[1] in QUANTILE_AGGS:
-        if rk == ROWS and rlo == 0 and rhi == 0:
-            rarr = single_row_arr(value_col)
-        else:
-            extra.append(sorted_frame_arr(value_col, rwin).alias("_qarr_r"))
-            rarr = F.col("_qarr_r")
-    src = df.select("*", *extra) if extra else df
-    lexprs = agg_exprs(value_col, lwin, aggs[0], aps[0], mps[0], lmp, arr=larr)
-    rexprs = agg_exprs(value_col, rwin, aggs[1], aps[1], mps[1], rmp, arr=rarr)
-    if set(lexprs) != set(rexprs):
+    lr = double_rolling_sides(df, window, agg, agg_params, center, min_periods,
+                              source_col=source_col, ts_col=ts_col,
+                              value_col=value_col)
+    keep = df.columns
+    added = [c for c in lr.columns if c not in keep]
+    lcols, rcols = _side_cols(added, "_l"), _side_cols(added, "_r")
+    if set(lcols) != set(rcols):
         raise ValueError("left/right aggs must produce matching outputs")
-
-    out = out_col or f"{value_col}_droll"
-    if callable(diff) and len(lexprs) == 1 and None in lexprs:
-        # materialize the two window aggregates behind a projection so
-        # the pandas UDF consumes plain columns, not window expressions
-        tmp = src.select(*df.columns, lexprs[None].alias("_dl"),
-                         rexprs[None].alias("_dr"))
-        return tmp.select(
-            *df.columns,
-            _callable_diff(diff, F.col("_dl"), F.col("_dr")).alias(out))
-    c = _diff_col(lexprs, rexprs, diff)
-    return src.select(*df.columns, c.alias(out))
+    c = _diff_col(lcols, rcols, diff)
+    return lr.select(*keep, c.alias(out_col or f"{value_col}_droll"))

@@ -15,12 +15,14 @@ adtk's tri-state AND/OR label algebra (aggregator/_aggregator.py:124-126,
 209-212) is exactly SQL three-valued logic, so compound detectors use
 plain boolean ``&``/``|`` on nullable booleans.
 
-The compound trio's fit_detect wrappers (``persist_ad``,
-``level_shift_ad``, ``volatility_shift_ad``) do not broadcast-join: they
-build the feature frame once and fit the IQR bounds as window columns on
-its own source partitioning (``_compound_fit_detect``). Their
-``*_fit`` / ``*_detect`` pairs keep the bounds table for train/test
-splits and the streaming detectors.
+The compound detectors label with one rule, ``_compound_label``: the IQR
+rule on a magnitude AND a sign rule on the signed diff. Their
+fit_detect wrappers (``persist_ad``, ``level_shift_ad``,
+``volatility_shift_ad``, ``seasonal_ad`` and ``hd``'s ``regression_ad`` /
+``pca_ad``) do not broadcast-join: they build the feature frame once and
+fit the IQR bounds as window columns on its own source partitioning
+(``_compound_fit_detect``). The ``*_fit`` / ``*_detect`` pairs keep the
+bounds table for train/test splits and the streaming detectors.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.windows import (
-    double_rolling_agg,
+    double_rolling_sides,
     exact_quantile_agg,
     rolling_agg,
     type7_interp,
@@ -478,23 +480,23 @@ def _compound_detect(
     side: str,
     *,
     source_col: str,
-    diff_col: str,
-    mag_col: str,
     out_col: str,
 ) -> DataFrame:
-    """IQR rule on magnitude AND sign rule on signed diff.
+    """Label the feature frame ``df`` (``_diff``, ``_mag``) with a
+    per-source bounds table: the train/test form of the compound rule."""
+    joined = df.join(F.broadcast(bounds), on=source_col, how="left")
+    return _compound_label(joined, side, out_col=out_col)
+
+
+def _compound_label(joined, side, *, diff_col="_diff", mag_col="_mag", out_col):
+    """IQR rule on the magnitude AND sign rule on the signed diff, over a
+    frame that already carries ``abs_low`` / ``abs_high``; drops the
+    bounds and both feature columns.
 
     SQL three-valued AND replicates AndAggregator's NaN semantics
     (_aggregator.py:209-212) natively: FALSE & NULL = FALSE,
     TRUE & NULL = NULL.
     """
-    joined = df.join(F.broadcast(bounds), on=source_col, how="left")
-    return _compound_label(joined, side, diff_col=diff_col, mag_col=mag_col,
-                           out_col=out_col)
-
-
-def _compound_label(joined, side, *, diff_col, mag_col, out_col):
-    # the label over a frame that already carries abs_low / abs_high
     iqr_label = threshold_label(F.col(mag_col), F.col("abs_low"), F.col("abs_high"))
     sign_label = _side_sign_label(F.col(diff_col), side)
     out = joined.withColumn(out_col, _as_double(iqr_label & sign_label))
@@ -503,27 +505,30 @@ def _compound_label(joined, side, *, diff_col, mag_col, out_col):
 
 def _compound_fit_detect(
     d: DataFrame,
-    c: float,
+    c,
     side: str,
     *,
     source_col: str,
-    ts_col: str,
+    ts_col: str | None,
     out_col: str,
+    diff_col: str = "_diff",
+    mag_col: str = "_mag",
 ) -> DataFrame:
-    """Fit the IQR rule on ``_mag`` and label ``d`` in the same plan.
+    """Fit the IQR rule (``c`` as in ``iqr_ad_fit``) on ``mag_col`` and
+    label ``d`` in the same plan.
 
-    ``d`` is a feature frame (``_diff``, ``_mag``) built by window
-    functions partitioned by source, so the per-source type-7 Q1/Q3 come
-    from window columns on that same partitioning: ``count`` and
-    ``row_number`` ordered by ``_mag`` (nulls last), then the order
-    statistics picked as unbounded ``max(when(rank == k, _mag))``, then
-    the bounds and the label in one projection. One scan, one Exchange,
-    no join: equal, row for row, to ``iqr_ad_fit`` + ``_compound_detect``
-    on the same frame (NULL sources get NULL bounds, as the left join
-    gives them), with the rows re-sorted by (source, ts) within
-    partitions as the feature windows left them.
+    The per-source type-7 Q1/Q3 come from window columns partitioned by
+    source: ``count`` and ``row_number`` ordered by the magnitude (nulls
+    last), then the order statistics picked as unbounded
+    ``max(when(rank == k, mag))``, then the bounds and the label in one
+    projection. One Exchange at most (none when ``d`` is already
+    partitioned by source, as window-built feature frames are), no join:
+    equal, row for row, to ``iqr_ad_fit`` + ``_compound_detect`` on the
+    same frame (NULL sources get NULL bounds, as the left join gives
+    them). With a ``ts_col`` the rows leave re-sorted by (source, ts)
+    within partitions.
     """
-    mag = F.col("_mag")
+    mag = F.col(mag_col)
     by_mag = Window.partitionBy(source_col).orderBy(mag.asc_nulls_last())
     whole = by_mag.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     ranked = d.select("*", F.count(mag).over(whole).alias("_n"),
@@ -537,34 +542,42 @@ def _compound_fit_detect(
                   F.max(F.when(rk == hi_k, mag)).over(whole).alias(f"_hi{j}")]
     q1, q3 = (type7_interp(n, frac, F.col(f"_lo{j}"), F.col(f"_hi{j}"))
               for j, frac in enumerate(fracs))
-    lo, hi = _iqr_bounds(q1, q3, (None, c))
+    lo, hi = _iqr_bounds(q1, q3, c)
     known = F.col(source_col).isNotNull()
     with_bounds = ranked.select("*", *picks).select(
         source_col, *[k for k in d.columns if k != source_col],
         F.when(known, lo).alias("abs_low"), F.when(known, hi).alias("abs_high"))
-    out = _compound_label(with_bounds, side, diff_col="_diff", mag_col="_mag",
+    out = _compound_label(with_bounds, side, diff_col=diff_col, mag_col=mag_col,
                           out_col=out_col)
-    return out.sortWithinPartitions(source_col, ts_col)
+    return out if ts_col is None else out.sortWithinPartitions(source_col, ts_col)
 
 
-def _persist_diffs(df, window, min_periods, agg, *, source_col, ts_col, value_col):
-    # PersistAD pipenet (_detector_1d.py:424-478): DoubleRollingAggregate
-    # with window=(w, 1), center=True, min_periods=(mp, 1). The reference
-    # evaluates the l1 and diff branches separately; for scalar aggs
-    # l1 == abs(diff), so we compute the signed diff once and share it.
-    out = double_rolling_agg(
-        df,
-        window=(window, 1),
-        agg=agg,
-        center=True,
-        min_periods=(min_periods, 1),
-        diff="diff",
-        source_col=source_col,
-        ts_col=ts_col,
-        value_col=value_col,
-        out_col="_diff",
-    )
-    return out.withColumn("_mag", F.abs(F.col("_diff")))
+def _shift_diffs(df, window, min_periods, agg, diff_mag, source_col, ts_col, value_col):
+    # The compound window detectors' feature frame: the signed diff of a
+    # center=True DoubleRollingAggregate and its magnitude (l1 or
+    # abs_rel_diff), from one Window node and no join.
+    lr = double_rolling_sides(df, window, agg, None, True, min_periods,
+                              source_col=source_col, ts_col=ts_col,
+                              value_col=value_col)
+    left, right = F.col("_l"), F.col("_r")
+    diff = right - left
+    mag = F.abs(diff) if diff_mag == "l1" else F.abs(diff) / left
+    return lr.select(*df.columns, diff.alias("_diff"), mag.alias("_mag"))
+
+
+def _persist_diffs(df, window, min_periods, agg, source_col, ts_col, value_col):
+    # PersistAD pipenet (_detector_1d.py:424-478): window=(w, 1),
+    # min_periods=(mp, 1); for scalar aggs its l1 branch is abs(diff)
+    return _shift_diffs(df, (window, 1), (min_periods, 1), agg, "l1",
+                        source_col, ts_col, value_col)
+
+
+def _volatility_diffs(df, window, min_periods, agg, source_col, ts_col, value_col):
+    # VolatilityShiftAD: abs_rel_diff of a volatility agg
+    if agg not in ("std", "iqr", "idr"):
+        raise ValueError("agg must be 'std', 'iqr' or 'idr'")
+    return _shift_diffs(df, window, min_periods, agg, "abs_rel_diff",
+                        source_col, ts_col, value_col)
 
 
 def persist_ad_fit(
@@ -579,8 +592,7 @@ def persist_ad_fit(
     value_col: str = "value",
 ) -> DataFrame:
     """PersistAD fit (_detector_1d.py:369-534): IQR bounds of |diff|."""
-    d = _persist_diffs(train, window, min_periods, agg,
-                       source_col=source_col, ts_col=ts_col, value_col=value_col)
+    d = _persist_diffs(train, window, min_periods, agg, source_col, ts_col, value_col)
     return iqr_ad_fit(d, c=(None, c), source_col=source_col, value_col="_mag")
 
 
@@ -597,112 +609,61 @@ def persist_ad_detect(
     value_col: str = "value",
     out_col: str = "label",
 ) -> DataFrame:
-    d = _persist_diffs(df, window, min_periods, agg,
-                       source_col=source_col, ts_col=ts_col, value_col=value_col)
-    return _compound_detect(d, bounds, side, source_col=source_col,
-                            diff_col="_diff", mag_col="_mag", out_col=out_col)
+    d = _persist_diffs(df, window, min_periods, agg, source_col, ts_col, value_col)
+    return _compound_detect(d, bounds, side, source_col=source_col, out_col=out_col)
 
 
-def persist_ad(df, window=1, c=3.0, side="both", min_periods=None, agg="median", **kw):
+def persist_ad(df, window=1, c=3.0, side="both", min_periods=None, agg="median", *,
+               source_col="source", ts_col="ts", value_col="value", out_col="label"):
     """PersistAD fit_detect on one series table: one feature frame, the
     IQR fit as window columns over it (``_compound_fit_detect``)."""
-    kw = {**_series_kw({}), **kw}  # an unknown key raises in _persist_diffs
-    d = _persist_diffs(df, window, min_periods, agg, **kw)
-    return _compound_fit_detect(d, c, side, source_col=kw["source_col"],
-                                ts_col=kw["ts_col"], out_col="label")
+    d = _persist_diffs(df, window, min_periods, agg, source_col, ts_col, value_col)
+    return _compound_fit_detect(d, (None, c), side, source_col=source_col,
+                                ts_col=ts_col, out_col=out_col)
 
 
-def _shift_diffs(df, window, min_periods, agg, diff_mag, *, source_col, ts_col, value_col):
-    # LevelShiftAD / VolatilityShiftAD share the two-adjacent-windows
-    # shape (center=True); magnitude branch uses l1 or abs_rel_diff.
-    # Compute the left/right aggregates once (one Window node, zero
-    # joins) and derive both the signed diff and the magnitude.
-    from ..functions.windows import (
-        QUANTILE_AGGS,
-        _double_frames,
-        _win,
-        agg_exprs,
-        sorted_frame_arr,
-    )
-
-    mps = min_periods if isinstance(min_periods, tuple) else (min_periods, min_periods)
-    (lk, llo, lhi, _ls, lmp), (rk, rlo, rhi, _rs, rmp) = _double_frames(window, True)
-    lwin = _win(source_col, ts_col, lk, llo, lhi)
-    rwin = _win(source_col, ts_col, rk, rlo, rhi)
-    from ..functions.windows import ROWS, single_row_arr
-
-    extra, larr, rarr = [], None, None
-    if agg in QUANTILE_AGGS:
-        if lk == ROWS and llo == 0 and lhi == 0:
-            larr = single_row_arr(value_col)
-        else:
-            extra.append(sorted_frame_arr(value_col, lwin).alias("_qarr_l"))
-            larr = F.col("_qarr_l")
-        if rk == ROWS and rlo == 0 and rhi == 0:
-            rarr = single_row_arr(value_col)
-        else:
-            extra.append(sorted_frame_arr(value_col, rwin).alias("_qarr_r"))
-            rarr = F.col("_qarr_r")
-    src = df.select("*", *extra) if extra else df
-    left = agg_exprs(value_col, lwin, agg, None, mps[0], lmp, arr=larr)[None]
-    right = agg_exprs(value_col, rwin, agg, None, mps[1], rmp, arr=rarr)[None]
-    # project the two window aggregates once: WindowExec does not dedupe,
-    # and the magnitude references ``left`` a second time
-    lr = src.select(*df.columns, left.alias("_left"), right.alias("_right"))
-    left, right = F.col("_left"), F.col("_right")
-    diff = right - left
-    mag = F.abs(diff) if diff_mag == "l1" else F.abs(diff) / left
-    return lr.select(*df.columns, diff.alias("_diff"), mag.alias("_mag"))
-
-
-def level_shift_ad_fit(train, window, c=6.0, min_periods=None, **kw):
+def level_shift_ad_fit(train, window, c=6.0, min_periods=None, *,
+                       source_col="source", ts_col="ts", value_col="value"):
     """LevelShiftAD (_detector_1d.py:537-692): |median_R - median_L| IQR rule."""
-    d = _shift_diffs(train, window, min_periods, "median", "l1", **_series_kw(kw))
-    return iqr_ad_fit(d, c=(None, c), source_col=kw.get("source_col", "source"), value_col="_mag")
+    d = _shift_diffs(train, window, min_periods, "median", "l1", source_col, ts_col, value_col)
+    return iqr_ad_fit(d, c=(None, c), source_col=source_col, value_col="_mag")
 
 
-def level_shift_ad_detect(df, bounds, window, side="both", min_periods=None, *, out_col="label", **kw):
-    d = _shift_diffs(df, window, min_periods, "median", "l1", **_series_kw(kw))
-    return _compound_detect(d, bounds, side, source_col=kw.get("source_col", "source"),
-                            diff_col="_diff", mag_col="_mag", out_col=out_col)
+def level_shift_ad_detect(df, bounds, window, side="both", min_periods=None, *,
+                          source_col="source", ts_col="ts", value_col="value",
+                          out_col="label"):
+    d = _shift_diffs(df, window, min_periods, "median", "l1", source_col, ts_col, value_col)
+    return _compound_detect(d, bounds, side, source_col=source_col, out_col=out_col)
 
 
-def level_shift_ad(df, window, c=6.0, side="both", min_periods=None, **kw):
-    d = _shift_diffs(df, window, min_periods, "median", "l1", **_series_kw(kw))
-    return _shift_fit_detect(d, c, side, kw)
+def level_shift_ad(df, window, c=6.0, side="both", min_periods=None, *,
+                   source_col="source", ts_col="ts", value_col="value", out_col="label"):
+    d = _shift_diffs(df, window, min_periods, "median", "l1", source_col, ts_col, value_col)
+    return _compound_fit_detect(d, (None, c), side, source_col=source_col,
+                                ts_col=ts_col, out_col=out_col)
 
 
-def volatility_shift_ad_fit(train, window, c=6.0, min_periods=None, agg="std", **kw):
+def volatility_shift_ad_fit(train, window, c=6.0, min_periods=None, agg="std", *,
+                            source_col="source", ts_col="ts", value_col="value"):
     """VolatilityShiftAD (_detector_1d.py:695-860): abs_rel_diff of a
     volatility agg (std/iqr/idr), IQR rule."""
-    if agg not in ("std", "iqr", "idr"):
-        raise ValueError("agg must be 'std', 'iqr' or 'idr'")
-    d = _shift_diffs(train, window, min_periods, agg, "abs_rel_diff", **_series_kw(kw))
-    return iqr_ad_fit(d, c=(None, c), source_col=kw.get("source_col", "source"), value_col="_mag")
+    d = _volatility_diffs(train, window, min_periods, agg, source_col, ts_col, value_col)
+    return iqr_ad_fit(d, c=(None, c), source_col=source_col, value_col="_mag")
 
 
-def volatility_shift_ad_detect(df, bounds, window, side="both", min_periods=None, agg="std", *, out_col="label", **kw):
-    d = _shift_diffs(df, window, min_periods, agg, "abs_rel_diff", **_series_kw(kw))
-    return _compound_detect(d, bounds, side, source_col=kw.get("source_col", "source"),
-                            diff_col="_diff", mag_col="_mag", out_col=out_col)
+def volatility_shift_ad_detect(df, bounds, window, side="both", min_periods=None,
+                               agg="std", *, source_col="source", ts_col="ts",
+                               value_col="value", out_col="label"):
+    d = _volatility_diffs(df, window, min_periods, agg, source_col, ts_col, value_col)
+    return _compound_detect(d, bounds, side, source_col=source_col, out_col=out_col)
 
 
-def volatility_shift_ad(df, window, c=6.0, side="both", min_periods=None, agg="std", **kw):
-    if agg not in ("std", "iqr", "idr"):
-        raise ValueError("agg must be 'std', 'iqr' or 'idr'")
-    d = _shift_diffs(df, window, min_periods, agg, "abs_rel_diff", **_series_kw(kw))
-    return _shift_fit_detect(d, c, side, kw)
-
-
-def _series_kw(kw):
-    return {k: kw.get(k, d) for k, d in
-            (("source_col", "source"), ("ts_col", "ts"), ("value_col", "value"))}
-
-
-def _shift_fit_detect(d, c, side, kw):
-    return _compound_fit_detect(d, c, side, source_col=kw.get("source_col", "source"),
-                                ts_col=kw.get("ts_col", "ts"),
-                                out_col=kw.get("out_col", "label"))
+def volatility_shift_ad(df, window, c=6.0, side="both", min_periods=None, agg="std", *,
+                        source_col="source", ts_col="ts", value_col="value",
+                        out_col="label"):
+    d = _volatility_diffs(df, window, min_periods, agg, source_col, ts_col, value_col)
+    return _compound_fit_detect(d, (None, c), side, source_col=source_col,
+                                ts_col=ts_col, out_col=out_col)
 
 
 # ---------------------------------------------------------------------------
@@ -794,12 +755,9 @@ def autoregression_ad_detect(
         pred = pred + F.element_at(F.col("coefs"), i) * F.col(f"_lag{i}")
     resid = F.col(value_col) - pred  # NULL if any lag/value is NULL (dropna parity)
     d = joined.withColumn("_diff", resid).withColumn("_mag", F.abs(resid))
-    # model already carries the IQR bounds from the single broadcast join
-    iqr_label = threshold_label(F.col("_mag"), F.col("abs_low"), F.col("abs_high"))
-    sign_label = _side_sign_label(F.col("_diff"), side)
-    out = d.withColumn(out_col, _as_double(iqr_label & sign_label))
-    return out.drop("intercept", "coefs", "abs_low", "abs_high", "_diff", "_mag",
-                    *[f"_lag{i}" for i in range(1, n_steps + 1)])
+    # the model already carries the IQR bounds from the single broadcast join
+    out = _compound_label(d, side, out_col=out_col)
+    return out.drop("intercept", "coefs", *[f"_lag{i}" for i in range(1, n_steps + 1)])
 
 
 def autoregression_ad(df, n_steps=1, step_size=1, c=3.0, side="both", **kw):
@@ -822,36 +780,28 @@ def seasonal_ad(
     ts_col: str = "ts",
     value_col: str = "value",
     out_col: str = "label",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """SeasonalAD fit_detect (_detector_1d.py:1023-1164).
 
-    The chain is fit-heavy: the input feeds the ACF/phase fit AND the
-    residual transform, and the residual feeds BOTH the IQR bounds fit
-    and the final detect. Lazy ``localCheckpoint``s cut those shared
-    lineages so each stage materializes once instead of re-deriving its
-    upstream per consumer (the r04 plan census read 14 Exchanges from
-    exactly that re-derivation). ``checkpoint=False`` opts out for
-    callers that manage their own persistence (checkpoint blocks live on
-    executors; on clusters with aggressive executor churn prefer an
-    explicit snapshot commit between fit and detect).
+    The input feeds both the ACF/phase fit and the residual transform,
+    and the fitted model feeds both of the transform's joins; lazy
+    ``localCheckpoint``s cut those shared lineages so each materializes
+    once instead of re-deriving its upstream per consumer (the r04 plan
+    census read 14 Exchanges from exactly that re-derivation). The
+    residual has a single consumer: ``_compound_fit_detect`` fits the
+    IQR bounds as window columns over it and labels it in the same
+    plan.
     """
     from .transformers import seasonal_fit, seasonal_transform
 
-    if checkpoint:
-        df = df.localCheckpoint(eager=False)
+    df = df.localCheckpoint(eager=False)
     model = seasonal_fit(df, freq=freq, trend=trend, source_col=source_col,
-                         ts_col=ts_col, value_col=value_col)
-    if checkpoint:
-        model = model.localCheckpoint(eager=False)
+                         ts_col=ts_col, value_col=value_col).localCheckpoint(eager=False)
     resid = seasonal_transform(df, model, trend=trend, source_col=source_col,
                                ts_col=ts_col, value_col=value_col, out_col="_diff")
     resid = resid.withColumn("_mag", F.abs(F.col("_diff")))
-    if checkpoint:
-        resid = resid.localCheckpoint(eager=False)
-    bounds = iqr_ad_fit(resid, c=(None, c), source_col=source_col, value_col="_mag")
-    return _compound_detect(resid, bounds, side, source_col=source_col,
-                            diff_col="_diff", mag_col="_mag", out_col=out_col)
+    return _compound_fit_detect(resid, (None, c), side, source_col=source_col,
+                                ts_col=ts_col, out_col=out_col)
 
 
 def require_fit(model: DataFrame, *, source_col: str = "source") -> DataFrame:

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .detectors import _as_double, _side_sign_label, iqr_ad_fit, threshold_label
+from .detectors import _as_double, _compound_fit_detect
 
 
 def _require_feature_cols(df: DataFrame, features: list[str]) -> None:
@@ -106,13 +106,8 @@ def regression_ad(
     resid = regression_residual(df, model, target, features,
                                 source_col=source_col, out_col="_diff")
     resid = resid.withColumn("_mag", F.abs(F.col("_diff")))
-    bounds = iqr_ad_fit(resid, c=(None, c), source_col=source_col, value_col="_mag")
-    joined = resid.join(F.broadcast(bounds), on=source_col, how="left")
-    label = threshold_label(F.col("_mag"), F.col("abs_low"), F.col("abs_high")) \
-        & _side_sign_label(F.col("_diff"), side)
-    return joined.withColumn(out_col, _as_double(label)).drop(
-        "abs_low", "abs_high", "_n_valid", "_diff", "_mag"
-    )
+    return _compound_fit_detect(resid, (None, c), side, source_col=source_col,
+                                ts_col=None, out_col=out_col)
 
 
 # ---------------------------------------------------------------------------
@@ -235,16 +230,15 @@ def pca_ad(
     df: DataFrame, features: list[str], k: int = 1, c: float = 5.0,
     *, source_col: str = "source", out_col: str = "label",
 ) -> DataFrame:
-    """PcaAD (_detector_hd.py:330-383): reconstruction error -> IQR rule."""
+    """PcaAD (_detector_hd.py:330-383): reconstruction error -> IQR rule
+    (the error is both the compound rule's residual and its magnitude;
+    side='both' makes the sign rule true wherever the error is known)."""
     model = pca_fit(df, features, k, source_col=source_col)
     err = pca_reconstruction_error(df, model, features, k,
                                    source_col=source_col, out_col="_err")
-    bounds = iqr_ad_fit(err, c=c, source_col=source_col, value_col="_err")
-    joined = err.join(F.broadcast(bounds), on=source_col, how="left")
-    label = threshold_label(F.col("_err"), F.col("abs_low"), F.col("abs_high"))
-    return joined.withColumn(out_col, _as_double(label)).drop(
-        "abs_low", "abs_high", "_n_valid", "_err"
-    )
+    return _compound_fit_detect(err, (c, c), "both", source_col=source_col,
+                                ts_col=None, out_col=out_col,
+                                diff_col="_err", mag_col="_err")
 
 
 # ---------------------------------------------------------------------------

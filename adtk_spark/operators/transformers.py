@@ -260,11 +260,10 @@ def seasonal_transform(
     windows offset in either direction. Residual = value - seasonal
     (- centered-MA trend of the *test* series when trend=True).
     """
-    meta = model.groupBy(source_col).agg(
-        F.first("datum_micros").alias("datum_micros"),
-        F.first("dt_micros").alias("dt_micros"),
-        F.first("freq").alias("freq"),
-    )
+    # datum/dT/freq are constant per source, so the phase-0 row carries
+    # them: a filter, not a shuffled aggregate over the model
+    meta = model.where(F.col("phase") == 0).select(
+        source_col, "datum_micros", "dt_micros", "freq")
     out = df.join(F.broadcast(meta), on=source_col, how="left")
     step = F.round(
         (F.unix_micros(F.col(ts_col).cast("timestamp")) - F.col("datum_micros"))

@@ -6,8 +6,11 @@ SVR-regressor AutoregressionAD variants are covered separately/later.
 """
 
 import pytest
+from pyspark.sql import functions as F
 
 from adtk_spark.operators import detectors as D
+from adtk_spark.operators import hd as H
+from adtk_spark.operators import transformers as T
 from tests.conftest import NAN, assert_series, series_df
 
 THRESH6 = [0, -10, 0, NAN, 0, 10]
@@ -352,7 +355,54 @@ COMPOUND = {
         lambda d: D.volatility_shift_ad_detect(
             d, D.volatility_shift_ad_fit(d, 10, 0.5, agg="idr"), 10, "negative",
             agg="idr")),
+    "seasonal_ad": (
+        lambda d: D.seasonal_ad(_gapless(d), freq=6, c=1.5),
+        lambda d: _fit_then_detect(_seasonal_resid(_gapless(d), 6), (None, 1.5))),
+    "regression_ad": (
+        lambda d: H.regression_ad(_wide(d), "value", ["x"], c=1.0, side="negative"),
+        lambda d: _fit_then_detect(_regression_resid(_wide(d)), (None, 1.0),
+                                   "negative")),
+    "pca_ad": (
+        lambda d: H.pca_ad(_wide(d), ["value", "x"], c=1.0),
+        lambda d: _fit_then_detect(_pca_err(_wide(d)), (1.0, 1.0))),
 }
+
+
+def _wide(d):
+    # the wide-table fits need a value in every source: drop the empty
+    # one and add a second feature, twice the value but for a bump every
+    # 11 minutes (the residual and reconstruction-error outliers)
+    bump = F.when(F.minute("ts") % 11 == 0, 6.0).otherwise(0.0)
+    return (d.where(~F.col("source").eqNullSafe("c"))
+            .withColumn("x", F.col("value") * 2.0 + bump))
+
+
+def _gapless(d):
+    # the seasonal fit needs gap-filled series
+    return _wide(d).drop("x").fillna(2.0, ["value"])
+
+
+def _seasonal_resid(d, freq):
+    r = T.seasonal_transform(d, T.seasonal_fit(d, freq=freq), out_col="_diff")
+    return r.withColumn("_mag", F.abs("_diff"))
+
+
+def _regression_resid(d):
+    model = H.regression_residual_fit(d, "value", ["x"])
+    r = H.regression_residual(d, model, "value", ["x"], out_col="_diff")
+    return r.withColumn("_mag", F.abs("_diff"))
+
+
+def _pca_err(d):
+    feats = ["value", "x"]
+    r = H.pca_reconstruction_error(d, H.pca_fit(d, feats), feats, out_col="_mag")
+    return r.withColumn("_diff", F.col("_mag"))
+
+
+def _fit_then_detect(r, c, side="both"):
+    # IQR bounds fitted on the residual's magnitude, then a broadcast join
+    bounds = D.iqr_ad_fit(r, c=c, value_col="_mag")
+    return D._compound_detect(r, bounds, side, source_col="source", out_col="label")
 
 
 def _compound_series(spark, seed):
@@ -417,3 +467,37 @@ def test_compound_fit_detect_partition_invariant(spark, name):
     assert want
     for layout, rows_ in got.items():
         assert rows_ == want, layout
+
+
+@pytest.mark.parametrize("call", [
+    lambda d: D.level_shift_ad(d, 5, value_column="nope"),
+    lambda d: D.level_shift_ad_fit(d, 5, value_column="nope"),
+    lambda d: D.level_shift_ad_detect(d, d, 5, value_column="nope"),
+    lambda d: D.volatility_shift_ad(d, 5, value_column="nope"),
+    lambda d: D.volatility_shift_ad_fit(d, 5, value_column="nope"),
+    lambda d: D.volatility_shift_ad_detect(d, d, 5, value_column="nope"),
+], ids=["level_shift_ad", "level_shift_ad_fit", "level_shift_ad_detect",
+        "volatility_shift_ad", "volatility_shift_ad_fit",
+        "volatility_shift_ad_detect"])
+def test_shift_detectors_reject_unknown_keywords(spark, call):
+    """A misspelled column keyword fails instead of silently reading
+    the default ``value`` column."""
+    with pytest.raises(TypeError, match="value_column"):
+        call(series_df(spark, STEP20))
+
+
+def test_persist_ad_keyword_errors_name_persist_ad(spark):
+    """persist_ad's bad keywords are reported against persist_ad itself,
+    and its out_col is honored."""
+    df = series_df(spark, PERSIST14)
+    with pytest.raises(TypeError, match=r"^persist_ad\(\) got an unexpected"):
+        D.persist_ad(df, value_column="nope")
+    assert D.persist_ad(df, out_col="flag").columns[-1] == "flag"
+
+
+def test_volatility_shift_ad_detect_checks_agg(spark):
+    """The train/test detect rejects a non-volatility agg as the fit does."""
+    df = series_df(spark, VOL40)
+    bounds = D.volatility_shift_ad_fit(df, 3)
+    with pytest.raises(ValueError, match="agg must be"):
+        D.volatility_shift_ad_detect(df, bounds, 3, agg="mean")

@@ -919,17 +919,52 @@ def assert_ts_ascending_per_source(df):
 
 
 def test_shift_features_one_window_expression_each(spark):
-    """volatility_shift_ad's feature frame evaluates each of its four
-    window aggregates (left/right count and std) once, though the
-    magnitude references the left one twice."""
+    """The two-window feature frames evaluate each of their four window
+    aggregates (left/right count and std or mean) once, though the
+    magnitude or diff references a side more than once:
+    volatility_shift_ad's abs_rel_diff, and double_rolling_agg's
+    abs_rel_diff, rel_diff and l2."""
+    from adtk_spark.functions.windows import double_rolling_agg
     from adtk_spark.operators.detectors import volatility_shift_ad_detect
 
     df = series_df(spark, [float(i % 7) for i in range(40)])
     bounds = spark.createDataFrame(
         [("A", float("-inf"), 1.0), ("B", float("-inf"), 1.0)],
         "source string, abs_low double, abs_high double")
-    plan = plan_of(volatility_shift_ad_detect(df, bounds, window=3))
-    assert plan.count("windowspecdefinition") == 4, plan
+    frames = [volatility_shift_ad_detect(df, bounds, window=3)] + [
+        double_rolling_agg(df, 5, "mean", diff=diff)
+        for diff in ("abs_rel_diff", "rel_diff", "l2")]
+    for out in frames:
+        plan = plan_of(out)
+        assert plan.count("windowspecdefinition") == 4, plan
+
+
+def test_persist_ad_compiles_on_non_nullable_values(spark):
+    """PersistAD's single-row right window stays whole-stage-codegen
+    compilable when ``value`` is non-nullable (as ``token_series``
+    produces): with the interpreter fallback off, a failed compile
+    raises instead of degrading silently."""
+    from adtk_spark.operators.detectors import persist_ad
+
+    nullable = series_df(spark, [float(i % 7) for i in range(40)])
+    df = nullable.select("source", "ts",
+                         F.coalesce("value", F.lit(0.0)).alias("value"))
+    assert not df.schema["value"].nullable
+    keys = {"spark.sql.codegen.factoryMode": "CODEGEN_ONLY",
+            "spark.sql.codegen.fallback": "false"}
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        labels = [[r["label"] for r in persist_ad(d, window=3).collect()]
+                  for d in (df, nullable)]
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert labels[0] == labels[1] and len(labels[0]) == 80 and 0.0 in labels[0]
 
 
 def test_interpolate_linear_no_unbounded_following(spark):
