@@ -94,13 +94,33 @@ def _bounds(kind: str, size: int, center: bool, closed: str | None) -> tuple[int
     return -size + 1, 0
 
 
-def _win(source_col: str, ts_col: str, kind: str, lo: int, hi: int) -> WindowSpec:
+def quoted(name: str) -> str:
+    """``name`` as a quoted identifier for ``select`` / ``F.col``: names
+    with dots (``value_roll_q0.5``) stay one column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def select_with(cols: list[str], name: str, col: Column, drop=()) -> list:
+    """The select list of ``withColumn(name, col).drop(*drop)`` over a
+    frame with columns ``cols``: ``name`` replaced in place or appended.
+    A builder that ends in this one projection pays one analyzer pass
+    where ``withColumn`` + ``drop`` pay two (each Dataset step
+    re-analyzes the whole plan on the driver)."""
+    out = [col.alias(name) if c == name else quoted(c) for c in cols if c not in drop]
+    return out if name in cols else out + [col.alias(name)]
+
+
+def _ordered(source_col: str, ts_col: str) -> WindowSpec:
     # Both frame kinds order by unix_micros(ts) so that every window in a
     # plan shares one (partition, sort) pair -> Catalyst reuses a single
     # exchange + sort across all window nodes. The cast handles
-    # TIMESTAMP_NTZ inputs (session TZ pinned to UTC, lossless).
+    # TIMESTAMP_NTZ inputs (session TZ pinned to UTC, lossless). Build it
+    # once per call site and derive each frame with `_frame`.
     order = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    w = Window.partitionBy(source_col).orderBy(order)
+    return Window.partitionBy(source_col).orderBy(order)
+
+
+def _frame(w: WindowSpec, kind: str, lo: int, hi: int) -> WindowSpec:
     return w.rowsBetween(lo, hi) if kind == ROWS else w.rangeBetween(lo, hi)
 
 
@@ -159,7 +179,7 @@ def type7_ranks(n: Column, p: float) -> tuple[Column, Column, Column]:
     """The two order statistics a type-7 ``p``-quantile of ``n`` values
     interpolates between: (1-based lower rank, 1-based upper rank,
     interpolation weight). Feed the picked values to `type7_interp`."""
-    pos = F.lit(float(p)) * (n.cast("double") - 1.0)  # 0-based fractional rank
+    pos = (n.cast("double") - 1.0) * float(p)  # 0-based fractional rank
     lo_i = F.floor(pos).cast("int")
     return lo_i + 1, F.least(lo_i + 2, n), pos - lo_i.cast("double")
 
@@ -176,7 +196,7 @@ def type7_interp(n: Column, frac: Column, lo: Column, hi: Column) -> Column:
     # identical values at any parallelism, whichever way (sorted array
     # or window ranks) the two order statistics were picked.
     return (
-        F.when(n == 0, F.lit(None))
+        F.when(n == 0, None)
         .when(frac == 0.0, lo)  # DuckDB returns v[FRN] directly when CRN==FRN
         .otherwise(lo * (F.lit(1.0) - frac) + hi * frac)
     )
@@ -229,10 +249,10 @@ def agg_exprs(
     params = agg_params or {}
     cnt = F.size(arr).cast("long") if arr is not None else F.count(v).over(win)
     mp = min_periods if min_periods is not None else default_min_periods
-    gate = cnt >= F.lit(mp)
+    gate = cnt >= mp
 
     def g(c: Column) -> Column:
-        return F.when(gate, c).otherwise(F.lit(None)).cast("double")
+        return F.when(gate, c).otherwise(None).cast("double")
 
     def q(p: float) -> Column:
         if arr is not None:
@@ -362,7 +382,7 @@ def rolling_agg(
             df, agg_params["bins"], value_col=value_col)
     kind, size = parse_window(window)
     lo, hi = _bounds(kind, size, center, closed)
-    win = _win(source_col, ts_col, kind, lo, hi)
+    win = _frame(_ordered(source_col, ts_col), kind, lo, hi)
     default_mp = size if kind == ROWS else 1
     src, arr = df, None
     if agg in QUANTILE_AGGS:
@@ -439,9 +459,10 @@ def double_rolling_sides(df: DataFrame, window, agg="mean", agg_params=None,
     if not center and parse_window(wl)[0] != parse_window(wr)[0]:
         return _mixed_sides(df, wl, wr, aggs, aps, mps, source_col, ts_col, value_col)
     extra, cols = [], []
+    ordered = _ordered(source_col, ts_col)
     for tag, agg_, ap, mp, (kind, lo, hi, _size, default_mp) in zip(
             "lr", aggs, aps, mps, _double_frames(window, center)):
-        win = _win(source_col, ts_col, kind, lo, hi)
+        win = _frame(ordered, kind, lo, hi)
         arr = None
         if agg_ in QUANTILE_AGGS:
             if kind == ROWS and lo == hi == 0:

@@ -9,7 +9,10 @@ The reference's per-model Python state (``abs_low_`` / ``abs_high_``)
 becomes a small per-source *bounds table* broadcast-joined back onto the
 series — that is the whole fit/predict split at cluster scale: fit runs
 one shuffle-light groupBy over training data, predict stays a pure
-column expression.
+column expression. Fitting and labelling the same series
+(``quantile_ad``, ``iqr_ad``) needs no table: the exact per-source
+quantiles are window columns over the series' own source partitioning
+(``_source_quantiles``): one Exchange, no broadcast job.
 
 adtk's tri-state AND/OR label algebra (aggregator/_aggregator.py:124-126,
 209-212) is exactly SQL three-valued logic, so compound detectors use
@@ -20,9 +23,13 @@ rule on a magnitude AND a sign rule on the signed diff. Their
 fit_detect wrappers (``persist_ad``, ``level_shift_ad``,
 ``volatility_shift_ad``, ``seasonal_ad`` and ``hd``'s ``regression_ad`` /
 ``pca_ad``) do not broadcast-join: they build the feature frame once and
-fit the IQR bounds as window columns on its own source partitioning
+fit the IQR bounds with the same window quantiles
 (``_compound_fit_detect``). The ``*_fit`` / ``*_detect`` pairs keep the
 bounds table for train/test splits and the streaming detectors.
+
+Every builder here ends in one projection (``select_with``): each
+Dataset step re-runs the analyzer over the whole plan on the driver,
+which at tier scale costs more than the rows.
 """
 
 from __future__ import annotations
@@ -35,7 +42,9 @@ from pyspark.sql import functions as F
 from ..functions.windows import (
     double_rolling_sides,
     exact_quantile_agg,
+    quoted,
     rolling_agg,
+    select_with,
     type7_interp,
     type7_ranks,
 )
@@ -54,10 +63,11 @@ def threshold_label(value: Column, low: Column | float | None, high: Column | fl
     bounds become +/-inf exactly as the reference does, which makes the
     degenerate side='both' sign check (high=-inf) flag every non-NULL row.
     """
-    lo = F.lit(-INF) if low is None else (F.lit(float(low)) if isinstance(low, (int, float)) else low)
-    hi = F.lit(INF) if high is None else (F.lit(float(high)) if isinstance(high, (int, float)) else high)
+    # plain floats become literals JVM-side: no extra round trips
+    lo = -INF if low is None else (float(low) if isinstance(low, (int, float)) else low)
+    hi = INF if high is None else (float(high) if isinstance(high, (int, float)) else high)
     flag = (value > hi) | (value < lo)
-    return F.when(value.isNull(), F.lit(None)).otherwise(flag)
+    return F.when(value.isNull(), None).otherwise(flag)
 
 
 def _as_double(label: Column) -> Column:
@@ -128,9 +138,13 @@ def _iqr_bounds(q1: Column, q3: Column, c) -> tuple[Column, Column]:
     arithmetic."""
     c_lo, c_hi = c if isinstance(c, tuple) else (c, c)
     iqr = q3 - q1
-    lo = (q1 - iqr * F.lit(float(c_lo))) if c_lo is not None else F.lit(-INF)
-    hi = (q3 + iqr * F.lit(float(c_hi))) if c_hi is not None else F.lit(INF)
+    lo = (q1 - iqr * float(c_lo)) if c_lo is not None else F.lit(-INF)
+    hi = (q3 + iqr * float(c_hi)) if c_hi is not None else F.lit(INF)
     return lo, hi
+
+
+#: the bounds table's columns, dropped once a label is made
+_BOUNDS = ("abs_low", "abs_high", "_n_valid")
 
 
 def apply_bounds(
@@ -154,24 +168,80 @@ def apply_bounds(
     """
     model = F.broadcast(bounds) if broadcast else bounds
     joined = df.join(model, on=source_col, how="left")
-    label = threshold_label(F.col(value_col), F.col("abs_low"), F.col("abs_high"))
-    out = joined.withColumn(out_col, _as_double(label))
-    if not keep_bounds:
-        out = out.drop("abs_low", "abs_high", "_n_valid")
-    return out
+    label = threshold_label(F.col(quoted(value_col)), F.col("abs_low"), F.col("abs_high"))
+    drop = () if keep_bounds else _BOUNDS
+    return joined.select(*select_with(joined.columns, out_col, _as_double(label), drop))
 
 
-def quantile_ad(df, low=None, high=None, **kw):
-    """fit_detect convenience: fit and detect on the same series."""
-    return apply_bounds(df, quantile_ad_fit(df, low, high, **_fit_kw(kw)), **kw)
+def _source_quantiles(d: DataFrame, col: str, levels, *,
+                      source_col: str) -> tuple[DataFrame, list[Column]]:
+    """Exact per-source type-7 quantiles of ``col`` at ``levels`` as
+    window columns over ``d``'s source partitioning: the fit of
+    ``quantile_ad``, ``iqr_ad`` and the compound detectors, with no
+    groupBy, join or broadcast job.
+
+    ``count`` and ``row_number`` ordered by ``col`` (nulls last), then
+    each level's two order statistics picked as unbounded
+    ``max(when(rank == k, col))``. Returns ``d`` with those helper
+    columns and one quantile Column per level, built over the helpers:
+    evaluate them in the next projection. Equal, value for value, to
+    ``exact_quantile_agg`` (NaN sorts last there too; a level <= 0 or
+    >= 1 picks the minimum or maximum; a source with no value gets
+    NULL).
+    """
+    if not levels:
+        return d, []
+    v = F.col(quoted(col))
+    by_v = Window.partitionBy(source_col).orderBy(v.asc_nulls_last())
+    whole = by_v.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranked = d.select("*", F.count(v).over(whole).alias("_n"),
+                      F.row_number().over(by_v).alias("_rk"))
+    n, rk = F.col("_n"), F.col("_rk")
+    picks, qs = [], []
+    for j, p in enumerate(levels):
+        lo_k, hi_k, frac = type7_ranks(n, min(max(float(p), 0.0), 1.0))
+        picks += [F.max(F.when(rk == lo_k, v)).over(whole).alias(f"_lo{j}"),
+                  F.max(F.when(rk == hi_k, v)).over(whole).alias(f"_hi{j}")]
+        qs.append(type7_interp(n, frac, F.col(f"_lo{j}"), F.col(f"_hi{j}")))
+    return ranked.select("*", *picks), qs
 
 
-def iqr_ad(df, c=3.0, **kw):
-    return apply_bounds(df, iqr_ad_fit(df, c, **_fit_kw(kw)), **kw)
+def _window_bounds_label(d: DataFrame, cols: list[str], lo: Column, hi: Column,
+                         *, source_col: str, value_col: str, out_col: str) -> DataFrame:
+    """Threshold ``value_col`` of a ``_source_quantiles`` frame against
+    bounds built over its helper columns, in one projection with the
+    join's column order: ``source_col``, ``cols``' others, ``out_col``.
+    NULL-source rows get NULL bounds, as the left join gives them."""
+    known = F.col(source_col).isNotNull()
+    label = threshold_label(F.col(quoted(value_col)), F.when(known, lo), F.when(known, hi))
+    keep = [source_col] + [c for c in cols if c != source_col]
+    return d.select(*select_with(keep, out_col, _as_double(label)))
 
 
-def _fit_kw(kw):
-    return {k: v for k, v in kw.items() if k in ("source_col", "value_col")}
+def quantile_ad(df: DataFrame, low: float | None = None, high: float | None = None, *,
+                source_col: str = "source", value_col: str = "value",
+                out_col: str = "label") -> DataFrame:
+    """QuantileAD fit_detect on one series: the ``quantile_ad_fit``
+    bounds as window quantiles (``_source_quantiles``), labelled as
+    ``apply_bounds`` labels — one Exchange, no join, no broadcast job.
+    Rows leave each partition in value order."""
+    levels = [p for p in (low, high) if p is not None]
+    d, qs = _source_quantiles(df, value_col, levels, source_col=source_col)
+    lo = qs.pop(0) if low is not None else F.lit(-INF)
+    hi = qs.pop(0) if high is not None else F.lit(INF)
+    return _window_bounds_label(d, df.columns, lo, hi, source_col=source_col,
+                                value_col=value_col, out_col=out_col)
+
+
+def iqr_ad(df: DataFrame, c=3.0, *, source_col: str = "source",
+           value_col: str = "value", out_col: str = "label") -> DataFrame:
+    """InterQuartileRangeAD fit_detect on one series: ``iqr_ad_fit``'s
+    bounds from window quartiles, labelled in the same plan (see
+    ``quantile_ad``)."""
+    d, (q1, q3) = _source_quantiles(df, value_col, (0.25, 0.75), source_col=source_col)
+    lo, hi = _iqr_bounds(q1, q3, c)
+    return _window_bounds_label(d, df.columns, lo, hi, source_col=source_col,
+                                value_col=value_col, out_col=out_col)
 
 
 # ---------------------------------------------------------------------------
@@ -236,6 +306,10 @@ def robust_zscore_ad_detect(
 def robust_zscore_ad(df, z: float = 3.5, **kw):
     """fit_detect convenience."""
     return robust_zscore_ad_detect(df, robust_zscore_ad_fit(df, **_fit_kw(kw)), z, **kw)
+
+
+def _fit_kw(kw):
+    return {k: v for k, v in kw.items() if k in ("source_col", "value_col")}
 
 
 # ---------------------------------------------------------------------------
@@ -442,17 +516,19 @@ def esd_ad_detect(
     # coalesce to False for parity
     flag = F.coalesce(F.abs(v - new_mean) / new_std > F.col("lam"), F.lit(False))
     label = F.when(v.isNull(), F.lit(None)).otherwise(flag)
-    return joined.withColumn(out_col, _as_double(label)).drop(
-        "normal_sum", "normal_sq_sum", "normal_count", "lam"
-    )
+    return joined.select(*select_with(
+        joined.columns, out_col, _as_double(label),
+        ("normal_sum", "normal_sq_sum", "normal_count", "lam")))
 
 
-def esd_ad(df, alpha: float = 0.05, **kw):
-    model = esd_ad_fit(df, alpha, **{k: v for k, v in kw.items()
-                                     if k in ("source_col", "ts_col", "value_col",
-                                              "portable")})
-    return esd_ad_detect(df, model, **{k: v for k, v in kw.items()
-                                       if k in ("source_col", "value_col", "out_col")})
+def esd_ad(df: DataFrame, alpha: float = 0.05, *, source_col: str = "source",
+           ts_col: str = "ts", value_col: str = "value", portable: bool = False,
+           out_col: str = "label") -> DataFrame:
+    """GeneralizedESDTestAD fit_detect on one series."""
+    model = esd_ad_fit(df, alpha, source_col=source_col, ts_col=ts_col,
+                       value_col=value_col, portable=portable)
+    return esd_ad_detect(df, model, source_col=source_col, value_col=value_col,
+                         out_col=out_col)
 
 
 # ---------------------------------------------------------------------------
@@ -485,22 +561,21 @@ def _compound_detect(
     """Label the feature frame ``df`` (``_diff``, ``_mag``) with a
     per-source bounds table: the train/test form of the compound rule."""
     joined = df.join(F.broadcast(bounds), on=source_col, how="left")
-    return _compound_label(joined, side, out_col=out_col)
+    label = _compound_label(F.col("_mag"), F.col("_diff"), F.col("abs_low"),
+                            F.col("abs_high"), side)
+    return joined.select(*select_with(joined.columns, out_col, label,
+                                        _BOUNDS + ("_diff", "_mag")))
 
 
-def _compound_label(joined, side, *, diff_col="_diff", mag_col="_mag", out_col):
-    """IQR rule on the magnitude AND sign rule on the signed diff, over a
-    frame that already carries ``abs_low`` / ``abs_high``; drops the
-    bounds and both feature columns.
+def _compound_label(mag: Column, diff: Column, lo: Column, hi: Column, side: str) -> Column:
+    """IQR rule on the magnitude AND sign rule on the signed diff, as a
+    double label.
 
     SQL three-valued AND replicates AndAggregator's NaN semantics
     (_aggregator.py:209-212) natively: FALSE & NULL = FALSE,
     TRUE & NULL = NULL.
     """
-    iqr_label = threshold_label(F.col(mag_col), F.col("abs_low"), F.col("abs_high"))
-    sign_label = _side_sign_label(F.col(diff_col), side)
-    out = joined.withColumn(out_col, _as_double(iqr_label & sign_label))
-    return out.drop("abs_low", "abs_high", "_n_valid", diff_col, mag_col)
+    return _as_double(threshold_label(mag, lo, hi) & _side_sign_label(diff, side))
 
 
 def _compound_fit_detect(
@@ -517,10 +592,8 @@ def _compound_fit_detect(
     """Fit the IQR rule (``c`` as in ``iqr_ad_fit``) on ``mag_col`` and
     label ``d`` in the same plan.
 
-    The per-source type-7 Q1/Q3 come from window columns partitioned by
-    source: ``count`` and ``row_number`` ordered by the magnitude (nulls
-    last), then the order statistics picked as unbounded
-    ``max(when(rank == k, mag))``, then the bounds and the label in one
+    The per-source type-7 Q1/Q3 are ``_source_quantiles`` window
+    columns; the bounds, the label and the dropped features are one
     projection. One Exchange at most (none when ``d`` is already
     partitioned by source, as window-built feature frames are), no join:
     equal, row for row, to ``iqr_ad_fit`` + ``_compound_detect`` on the
@@ -528,27 +601,13 @@ def _compound_fit_detect(
     them). With a ``ts_col`` the rows leave re-sorted by (source, ts)
     within partitions.
     """
-    mag = F.col(mag_col)
-    by_mag = Window.partitionBy(source_col).orderBy(mag.asc_nulls_last())
-    whole = by_mag.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    ranked = d.select("*", F.count(mag).over(whole).alias("_n"),
-                      F.row_number().over(by_mag).alias("_rk"))
-    n, rk = F.col("_n"), F.col("_rk")
-    fracs, picks = [], []
-    for j, q in enumerate((0.25, 0.75)):
-        lo_k, hi_k, frac = type7_ranks(n, q)
-        fracs.append(frac)
-        picks += [F.max(F.when(rk == lo_k, mag)).over(whole).alias(f"_lo{j}"),
-                  F.max(F.when(rk == hi_k, mag)).over(whole).alias(f"_hi{j}")]
-    q1, q3 = (type7_interp(n, frac, F.col(f"_lo{j}"), F.col(f"_hi{j}"))
-              for j, frac in enumerate(fracs))
+    picked, (q1, q3) = _source_quantiles(d, mag_col, (0.25, 0.75), source_col=source_col)
     lo, hi = _iqr_bounds(q1, q3, c)
     known = F.col(source_col).isNotNull()
-    with_bounds = ranked.select("*", *picks).select(
-        source_col, *[k for k in d.columns if k != source_col],
-        F.when(known, lo).alias("abs_low"), F.when(known, hi).alias("abs_high"))
-    out = _compound_label(with_bounds, side, diff_col=diff_col, mag_col=mag_col,
-                          out_col=out_col)
+    label = _compound_label(F.col(mag_col), F.col(diff_col), F.when(known, lo),
+                            F.when(known, hi), side)
+    keep = [source_col] + [k for k in d.columns if k != source_col]
+    out = picked.select(*select_with(keep, out_col, label, (diff_col, mag_col)))
     return out if ts_col is None else out.sortWithinPartitions(source_col, ts_col)
 
 
@@ -754,15 +813,21 @@ def autoregression_ad_detect(
     for i in range(1, n_steps + 1):
         pred = pred + F.element_at(F.col("coefs"), i) * F.col(f"_lag{i}")
     resid = F.col(value_col) - pred  # NULL if any lag/value is NULL (dropna parity)
-    d = joined.withColumn("_diff", resid).withColumn("_mag", F.abs(resid))
     # the model already carries the IQR bounds from the single broadcast join
-    out = _compound_label(d, side, out_col=out_col)
-    return out.drop("intercept", "coefs", *[f"_lag{i}" for i in range(1, n_steps + 1)])
+    label = _compound_label(F.abs(resid), resid, F.col("abs_low"), F.col("abs_high"), side)
+    drop = _BOUNDS + ("intercept", "coefs", *[f"_lag{i}" for i in range(1, n_steps + 1)])
+    return joined.select(*select_with(joined.columns, out_col, label, drop))
 
 
-def autoregression_ad(df, n_steps=1, step_size=1, c=3.0, side="both", **kw):
-    model = autoregression_ad_fit(df, n_steps, step_size, c, **kw)
-    return autoregression_ad_detect(df, model, n_steps, step_size, side, **kw)
+def autoregression_ad(df: DataFrame, n_steps: int = 1, step_size: int = 1,
+                      c: float = 3.0, side: str = "both", *, source_col: str = "source",
+                      ts_col: str = "ts", value_col: str = "value",
+                      out_col: str = "label") -> DataFrame:
+    """AutoregressionAD fit_detect on one series."""
+    cols = dict(source_col=source_col, ts_col=ts_col, value_col=value_col)
+    model = autoregression_ad_fit(df, n_steps, step_size, c, **cols)
+    return autoregression_ad_detect(df, model, n_steps, step_size, side,
+                                    out_col=out_col, **cols)
 
 
 # ---------------------------------------------------------------------------
@@ -819,11 +884,15 @@ def require_fit(model: DataFrame, *, source_col: str = "source") -> DataFrame:
     unchanged.
     """
     checks = []
-    if "_n_valid" in model.columns:
+    cols = model.columns
+    if "_n_valid" in cols:
         checks.append(F.col("_n_valid") == 0)
     for c in ("abs_high", "intercept"):
-        if c in model.columns:
+        if c in cols:
             checks.append(F.col(c).isNull() | F.isnan(F.col(c)))
+    for c in ("means", "components"):  # hd.pca_fit's model
+        if c in cols:
+            checks.append(F.col(c).isNull())
     if not checks:
         return model
     cond = checks[0]

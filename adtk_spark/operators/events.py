@@ -144,13 +144,10 @@ def to_events(
     if merge_consecutive is None:
         merge_consecutive = freq is not None
     freq_us = td_micros(freq) if freq else 0
-    pos = (F.col(label_col) == 1).cast("int")
-    flagged = labels.where(F.col(label_col) == 1)
-    end_of_point = (
-        _ts(_micros(F.col(ts_col)) + freq_us - 1) if freq else F.col(ts_col).cast("timestamp")
-    )
     if not merge_consecutive:
-        return flagged.select(
+        end_of_point = (_ts(_micros(F.col(ts_col)) + freq_us - 1) if freq
+                        else F.col(ts_col).cast("timestamp"))
+        return labels.where(F.col(label_col) == 1).select(
             source_col,
             F.col(ts_col).cast("timestamp").alias("start_ts"),
             end_of_point.alias("end_ts"),

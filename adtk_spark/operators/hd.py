@@ -53,13 +53,14 @@ def regression_residual_fit(
 ) -> DataFrame:
     """RegressionResidual fit with the default LinearRegression
     (_transformer_hd.py:144-158): closed-form OLS per source on the
-    dropna rows. Returns (source, intercept, coefs array<double>)."""
+    dropna rows. Returns (source, intercept, coefs array<double>); a
+    source without a valid row gets NULLs (``require_fit`` names it)."""
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         sub = pdf[[target] + features].dropna()
         src = pdf[source_col].iloc[0]
-        if sub.empty:
-            raise ValueError(f"source {src!r}: no valid rows for regression fit")
+        if sub.empty:  # NULL model row: NULL residuals, flagged by require_fit
+            return pd.DataFrame({source_col: [src], "intercept": [None], "coefs": [None]})
         X = np.column_stack([sub[features].values, np.ones(len(sub))])
         beta, *_ = np.linalg.lstsq(X, sub[target].values, rcond=None)
         return pd.DataFrame(
@@ -125,13 +126,14 @@ def pca_fit(
     the dropna rows. Components follow sklearn's convention (rows of V^T
     from SVD of the centered data, deterministic svd-flip sign).
     Returns (source, means array, components array<array>) with k rows
-    of components."""
+    of components; a source without a valid row gets NULLs
+    (``require_fit`` names it)."""
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         sub = pdf[features].dropna()
         src = pdf[source_col].iloc[0]
-        if sub.empty:
-            raise ValueError(f"source {src!r}: no valid rows for PCA fit")
+        if sub.empty:  # NULL model row: NULL scores, flagged by require_fit
+            return pd.DataFrame({source_col: [src], "means": [None], "components": [None]})
         X = sub.values.astype(float)
         mu = X.mean(axis=0)
         U, S, Vt = np.linalg.svd(X - mu, full_matrices=False)

@@ -284,23 +284,18 @@ def seasonal_transform(
         # per DISTINCT freq (a handful at most — already a small
         # collected action), filtered by freq and unioned: each source's
         # rows flow through exactly one branch, all JVM-native.
-        from ..functions.windows import _win
+        from ..functions.windows import ROWS, _frame, _ordered
 
         freqs = [r["freq"] for r in meta.select("freq").distinct().collect()]
+        ordered, v = _ordered(source_col, ts_col), F.col(value_col)
 
         def trend_col(f: int):
+            def ma(lo, hi):
+                w = _frame(ordered, ROWS, lo, hi)
+                return F.when(F.count(v).over(w) >= f, F.avg(v).over(w))
             if f % 2:
-                half = f // 2
-                w = _win(source_col, ts_col, "rows", -half, half)
-                return F.when(F.count(F.col(value_col)).over(w) >= f,
-                              F.avg(F.col(value_col)).over(w))
-            wa = _win(source_col, ts_col, "rows", -(f // 2), f // 2 - 1)
-            wb = _win(source_col, ts_col, "rows", -(f // 2) + 1, f // 2)
-            ta = F.when(F.count(F.col(value_col)).over(wa) >= f,
-                        F.avg(F.col(value_col)).over(wa))
-            tb = F.when(F.count(F.col(value_col)).over(wb) >= f,
-                        F.avg(F.col(value_col)).over(wb))
-            return (ta + tb) / 2
+                return ma(-(f // 2), f // 2)
+            return (ma(-(f // 2), f // 2 - 1) + ma(-(f // 2) + 1, f // 2)) / 2
 
         parts = [
             out.where(F.col("freq") == f)

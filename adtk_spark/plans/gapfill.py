@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from adtk_spark.functions.windows import td_micros
+from adtk_spark.functions.windows import select_with, td_micros
 
 
 def time_spine(
@@ -112,7 +112,7 @@ def interpolate_linear(
         )
         .when(pv.isNotNull(), pv)
     )
-    return anchored.withColumn(out_col, lerp).drop("_pv", "_pt", "_nv", "_nt")
+    return anchored.select(*select_with(df.columns, out_col, lerp))
 
 
 def counter_rate(

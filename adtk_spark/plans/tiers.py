@@ -450,6 +450,8 @@ def distribution_compare(counts: DataFrame, stat: str, by: list[str], *,
     Plan: totals (and KS's cumulative counts) are WINDOW sums over the
     ``by`` partitioning, which the final reduce reuses — one Exchange,
     no join (a totals-aggregate + join-back plans the counts twice).
+    Built as one projection and one aggregate, the score computed inside
+    the aggregate.
     Integer counts, 1e-9-quantized DECIMAL term sums and KS's integer
     cross products make every score bit-stable at any parallelism.
     """
@@ -457,23 +459,25 @@ def distribution_compare(counts: DataFrame, stat: str, by: list[str], *,
         raise ValueError(
             f"distribution_compare: stat must be psi, jsd or ks, got {stat!r}")
     w = Window.partitionBy(*by)
-    j = (counts.withColumn("n_ref", F.sum("cref").over(w))
-         .withColumn("n_cur", F.sum("ccur").over(w)))
-    n_ref, n_cur = F.col("n_ref"), F.col("n_cur")
+    cref, ccur = F.col("cref"), F.col("ccur")
+    totals = [F.sum(cref).over(w).alias("n_ref"), F.sum(ccur).over(w).alias("n_cur")]
+    # the reduce's n_ref / n_cur, referenced inside the score as well:
+    # one aggregate each (identical aggregates are evaluated once)
+    n_ref, n_cur = F.min("n_ref"), F.min("n_cur")
     if stat == "ks":
         wcum = w.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
-        j = (j.withColumn("rc", F.sum("cref").over(wcum))
-             .withColumn("cc", F.sum("ccur").over(wcum)))
+        totals += [F.sum(cref).over(wcum).alias("rc"), F.sum(ccur).over(wcum).alias("cc")]
         # DECIMAL products, numerator AND denominator: two ~3e9+ counts
         # multiplied as int64 wrap (r04 ADVICE); (38,0) holds 1e26
         dec = "decimal(20,0)"
-        agg = F.max(F.abs(F.col("rc").cast(dec) * n_cur.cast(dec)
-                          - F.col("cc").cast(dec) * n_ref.cast(dec)))
-        score = F.round(F.col("_s").cast("double") / (
+        gap = F.max(F.abs(F.col("rc").cast(dec) * F.col("n_cur").cast(dec)
+                          - F.col("cc").cast(dec) * F.col("n_ref").cast(dec)))
+        score = F.round(gap.cast("double") / (
             n_ref.cast(dec) * n_cur.cast(dec)).cast("double"), 6)
     else:
-        p = F.when(n_ref > 0, F.col("cref") / n_ref)
-        q = F.when(n_cur > 0, F.col("ccur") / n_cur)
+        nr, nc = F.col("n_ref"), F.col("n_cur")
+        p = F.when(nr > 0, cref / nr)
+        q = F.when(nc > 0, ccur / nc)
         if stat == "psi":
             term = psi_term(p, q, eps)
         else:
@@ -482,16 +486,13 @@ def distribution_compare(counts: DataFrame, stat: str, by: list[str], *,
                 F.when(p > 0, F.lit(0.5) * p * F.log(p / m)).otherwise(0.0)
                 + F.when(q > 0, F.lit(0.5) * q * F.log(q / m)).otherwise(0.0),
                 9)
-        agg = F.sum(term.cast("decimal(38,9)")).cast("double")
-        score = F.round("_s", 6)
+        score = F.round(F.sum(term.cast("decimal(38,9)")).cast("double"), 6)
     if stat != "psi":
         score = F.when((n_ref > 0) & (n_cur > 0), score)
     return (
-        j.groupBy(*by)
-        .agg(*extra, F.min("n_ref").alias("n_ref"),
-             F.min("n_cur").alias("n_cur"), agg.alias("_s"))
-        .withColumn(stat, score)
-        .drop("_s")
+        counts.select("*", *totals)
+        .groupBy(*by)
+        .agg(*extra, n_ref.alias("n_ref"), n_cur.alias("n_cur"), score.alias(stat))
     )
 
 

@@ -4,6 +4,19 @@ The same config is used by tests (local[*]) and by ``spark-submit
 --py-files`` cluster jobs; only master/cores differ. AQE is on so skewed
 shuffle partitions are split at runtime, Arrow is on so every pandas UDF
 crosses the JVM/Python boundary in columnar batches.
+
+PySpark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off. With it on,
+every ``Column`` / ``functions`` call makes five extra JVM round trips
+(active-session lookup, class lookup, conf read, origin set and clear),
+which roughly doubles the driver time spent building an operator's
+plan. The trade-off: an analysis error (say, an unknown column) still
+raises ``AnalysisException``, but its message no longer names the
+Python line that built the failing expression. Pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to get the call sites back while debugging; the setting is read when
+the first expression is built, so set it on the session's first
+``get_spark`` call.
 """
 
 from __future__ import annotations
@@ -40,6 +53,7 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cores}]" if cores else "local[*]")

@@ -501,3 +501,52 @@ def test_volatility_shift_ad_detect_checks_agg(spark):
     bounds = D.volatility_shift_ad_fit(df, 3)
     with pytest.raises(ValueError, match="agg must be"):
         D.volatility_shift_ad_detect(df, bounds, 3, agg="mean")
+
+
+def test_autoregression_ad_honors_out_col(spark):
+    """autoregression_ad's out_col reaches the detect, not the fit (which
+    raised TypeError), and labels as the default column does."""
+    df = series_df(spark, FIB18)
+    out = D.autoregression_ad(df, n_steps=2, out_col="flag")
+    assert out.columns[-1] == "flag" and "label" not in out.columns
+    want = D.autoregression_ad(df, n_steps=2).select("source", "ts", "label")
+    assert _rows(out.select("source", "ts", "flag")) == _rows(want)
+
+
+def test_esd_ad_rejects_unknown_keywords(spark):
+    """A misspelled keyword raises instead of being dropped (esd_ad
+    labelled the ``value`` column)."""
+    with pytest.raises(TypeError, match=r"^esd_ad\(\) got an unexpected"):
+        D.esd_ad(series_df(spark, IQR8 + [0] * 10), value_column="nope")
+
+
+HD = {
+    "regression_ad": (lambda d: H.regression_ad(d, "value", ["x"], c=1.0),
+                      lambda d: H.regression_residual_fit(d, "value", ["x"])),
+    "pca_ad": (lambda d: H.pca_ad(d, ["value", "x"], c=1.0),
+               lambda d: H.pca_fit(d, ["value", "x"])),
+}
+
+
+@pytest.mark.parametrize("name", sorted(HD))
+def test_hd_empty_source_gets_null_model(spark, name):
+    """A source with no valid row gets a NULL model row, as the 1-D fits
+    give NULL bounds: the other source labels as it does alone, the empty
+    one gets NULL labels, and require_fit names it."""
+    run, fit = HD[name]
+    one = _wide(_compound_series(spark, 5).where(F.col("source") == "a"))
+    empty = one.select(F.lit("c").alias("source"), "ts",
+                       F.lit(None).cast("double").alias("value"),
+                       F.lit(None).cast("double").alias("x"))
+    both = one.unionByName(empty)
+
+    def labels(df):
+        return {(r["source"], r["ts"]): r["label"] for r in run(df).collect()}
+
+    got, want = labels(both), labels(one)
+    assert {k: v for k, v in got.items() if k[0] == "a"} == want
+    assert 1.0 in want.values() and 0.0 in want.values()
+    assert {v for k, v in got.items() if k[0] == "c"} == {None}
+    with pytest.raises(RuntimeError, match="'c'"):
+        D.require_fit(fit(both))
+    D.require_fit(fit(one))

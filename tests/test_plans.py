@@ -33,10 +33,10 @@ def test_rolling_agg_single_exchange(spark):
 
 
 def test_detector_predict_is_broadcast_join(spark):
-    from adtk_spark.operators.detectors import quantile_ad
+    from adtk_spark.operators.detectors import apply_bounds, quantile_ad_fit
 
     df = series_df(spark, list(range(50)))
-    plan = plan_of(quantile_ad(df, low=0.1, high=0.9))
+    plan = plan_of(apply_bounds(df, quantile_ad_fit(df, low=0.1, high=0.9)))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
