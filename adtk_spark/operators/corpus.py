@@ -1451,8 +1451,8 @@ def mixture_budget(
     existing replays are unaffected.
 
     Scale: one groupBy(stratum) shuffle over the corpus; everything
-    after runs on the #strata-row result (the single-partition window
-    for the global min is over dozens of rows, not data). Determinism:
+    after runs on the #strata-row result (the global min is a one-row
+    aggregate over dozens of rows, not data, joined back). Determinism:
     ``available`` is an exact integer sum; ``S = min(available/w)`` and
     ``rate = least(1, w*S/available)`` are single IEEE ops in a fixed
     association, so rates replay bit-equal in any engine; ``budget``
@@ -1474,7 +1474,10 @@ def mixture_budget(
     ratio = F.when(
         F.col("target_w") > 0,
         F.col("available") * F.lit(float(max_epochs)) / F.col("target_w"))
-    s_max = F.min(ratio).over(Window.partitionBy())
+    # the global min as a one-row aggregate joined back: an
+    # unpartitioned window would log a single-partition WARN every run
+    per = per.crossJoin(per.agg(F.min(ratio).alias("_s_max")))
+    s_max = F.col("_s_max")
     rate = F.when(
         F.col("target_w") > 0,
         F.least(F.lit(float(max_epochs)),

@@ -666,7 +666,7 @@ def run_headroom(ops: list[str], small: bool) -> None:
 
 
 def main():
-    from adtk_spark.session import get_spark
+    from adtk_spark.session import codegen_compiles, get_spark
 
     sf = sf_of(SF_DIR)
     n_docs = max(10_000, int(DOCS_PER_SF * sf))
@@ -693,6 +693,7 @@ def main():
                       extra_conf={"spark.local.dir": "/dev/shm/spark-local"})
     # keeps the captured stdout tail free of WindowExec WARN lines
     spark.sparkContext.setLogLevel("ERROR")
+    compiles0, compile_ms0 = codegen_compiles(spark)
     t_all = time.time()
     tier_sec, tier_points = run_tiers(spark, n_docs)
     queries = bench_queries(spark, SF_DIR)
@@ -714,6 +715,7 @@ def main():
         extras_steal[name] = round(best_steal, 2)
     queries["tiers_tokens"] = round(tier_sec, 3)
     wall = round(time.time() - t_all, 3)
+    compiles, compile_ms = codegen_compiles(spark)
     # headline value = sum of per-query best times (what the engine
     # costs); wall_sec additionally counts the best-of-2 repeat runs
     total = round(sum(queries.values()), 3)
@@ -750,6 +752,11 @@ def main():
         "query_steal_sec": {**bench_queries.steal,
                             "tiers_tokens": getattr(run_tiers, "steal_sec", None)},
         "extra_query_steal_sec": extras_steal,
+        # generated classes Janino compiled over the whole suite and the
+        # time it took: a codegen cache too small for the suite's plans
+        # shows here as recompiles, not only as wall time
+        "codegen_classes_compiled": compiles - compiles0,
+        "codegen_compile_ms": round(compile_ms - compile_ms0, 1),
     }
     report_path = os.environ.get(
         "SPARK_GRAFT_BENCH_REPORT",

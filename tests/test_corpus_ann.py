@@ -1,6 +1,7 @@
 """Training-data pipeline ops: dedup families, text analysis, ANN, media."""
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -771,6 +772,29 @@ def test_mixture_budget_golden(spark):
     assert out["fr"]["rate"] == 1.0 and out["fr"]["budget"] == 100
     assert out["zh"]["target_w"] == 0.0
     assert out["zh"]["rate"] == 0.0 and out["zh"]["budget"] == 0
+
+
+def _window_partition_sizes(df) -> list[int]:
+    """The partition-spec length of every WindowExec in df's physical
+    plan."""
+    sizes, todo = [], [df._jdf.queryExecution().sparkPlan()]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() == "WindowExec":
+            sizes.append(node.partitionSpec().size())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return sizes
+
+
+def test_mixture_budget_no_unpartitioned_window(spark):
+    """The global min is not an unpartitioned window, which moves every
+    row to one partition and logs a WARN each time it runs."""
+    from adtk_spark.operators.corpus import mixture_budget
+
+    docs = _lang_docs(spark, {"en": 8, "de": 2})
+    assert _window_partition_sizes(docs.select(F.count("*").over(Window.partitionBy()))) == [0]
+    assert 0 not in _window_partition_sizes(mixture_budget(docs, {"en": 0.5, "de": 0.5}))
 
 
 def test_mixture_budget_rejects_unnormalized_targets(spark):

@@ -1,5 +1,6 @@
 """Driver-cost guards: how many JVM round trips building an operator's
-plan takes, and how many Spark jobs the one-series quantile fits run.
+plan takes, how many Spark jobs the one-series quantile fits run, and
+how many classes a repeated pass of the operators compiles.
 
 At tier scale the detect operators are bound by the driver, not by
 rows: every py4j command is a socket round trip, and every Dataset step
@@ -21,6 +22,7 @@ from adtk_spark.operators import detectors as D
 from adtk_spark.operators import events as ev
 from adtk_spark.plans import gapfill as gf
 from adtk_spark.plans import tiers
+from adtk_spark.session import codegen_compiles
 from tests.test_catalog_resume import _jobs
 from tests.test_detectors import _compound_series, _rows
 from tests.test_plans import plan_of
@@ -31,7 +33,9 @@ EDGES = [60.0, 80.0, 100.0, 120.0, 140.0]
 # Non-detach py4j commands to build each operator once over a fresh
 # parquet read, as measured with PySpark 4.1: the ceilings. With
 # call-site capture on, the 12 detect operators took 10,676; with it off
-# and each builder's withColumn/drop tails still in place, 3,316.
+# and each builder's withColumn/drop tails still in place, 3,316; with
+# the time spine joined back to its values (112 and 233 for the two
+# gap-fill operators) rather than built from one window, 3,040.
 BUILD_CALLS = {
     "persist_ad": (lambda s: D.persist_ad(s, window=3, c=3.0), 499),
     "level_shift_ad": (lambda s: D.level_shift_ad(s, window=5, c=6.0), 495),
@@ -43,12 +47,12 @@ BUILD_CALLS = {
     "psi_drift": (lambda s: tiers.psi_drift(s, SPLIT, EDGES), 214),
     "ks_drift": (lambda s: tiers.ks_drift(s, SPLIT), 187),
     "js_drift": (lambda s: tiers.js_drift(s, SPLIT, EDGES), 224),
-    "forward_fill": (lambda s: gf.forward_fill(gf.time_spine(s, "1min")), 112),
-    "interpolate_linear": (lambda s: gf.interpolate_linear(gf.time_spine(s, "1min")), 233),
+    "forward_fill": (lambda s: gf.forward_fill(gf.time_spine(s, "1min")), 45),
+    "interpolate_linear": (lambda s: gf.interpolate_linear(gf.time_spine(s, "1min")), 166),
     "to_events": (lambda s: ev.to_events(s, freq="1min"), 141),
 }
 #: the 12 detect operators together (all but to_events)
-DETECT_TOTAL = 3040
+DETECT_TOTAL = 2906
 
 
 @contextlib.contextmanager
@@ -92,6 +96,27 @@ def build_calls(spark, path, build) -> int:
     with py4j_commands() as n:
         build(s)
     return n[0]
+
+
+def test_get_spark_sizes_the_codegen_cache(spark):
+    """get_spark holds 1000 generated classes, where Spark's default
+    100-entry cache is smaller than one detect pass."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+def test_repeated_pass_compiles_nothing(spark, series_path):
+    """A second identical pass of the operators to a noop sink finds
+    every generated class in the codegen cache: with 100 entries, one
+    pass evicts its own classes and each pass compiles them again."""
+    def run_pass():
+        for build, _ in BUILD_CALLS.values():
+            build(spark.read.parquet(series_path)).write.format("noop").mode(
+                "overwrite").save()
+
+    run_pass()
+    n0, _ = codegen_compiles(spark)
+    run_pass()
+    assert codegen_compiles(spark)[0] - n0 == 0
 
 
 def test_get_spark_turns_call_site_capture_off(spark):

@@ -50,6 +50,49 @@ def test_gapfill_ffill_lerp(spark):
     assert got_lp == [1.0, 2.0, 3.0, 4.0, 7.0, 10.0]
 
 
+def _spine_by_join(df, secs):
+    """The spine as a min/max groupBy, an exploded sequence and a left
+    join of the values: the reference for the windowed time_spine."""
+    bounds = df.groupBy("source").agg(
+        F.min("ts").cast("timestamp").alias("_mn"), F.max("ts").cast("timestamp").alias("_mx"))
+    spine = bounds.select(
+        "source",
+        F.explode(F.sequence("_mn", "_mx", F.expr(f"interval {secs} seconds"))).alias("ts"))
+    return spine.join(df.select("source", F.col("ts").cast("timestamp").alias("ts"), "value"),
+                      ["source", "ts"], "left")
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()),
+                  key=lambda r: tuple((v is None, v) for v in r))
+
+
+def test_time_spine_matches_join_form(spark):
+    """On aligned inputs the one-window spine has the rows of the join
+    form: duplicate (source, ts) rows keep both values, NULL values stay,
+    a NULL-ts row and an all-NULL-ts source drop out, a one-row source
+    stays one row. The gap report reads the same gaps off the window."""
+    from adtk_spark.plans.gapfill import gap_report
+
+    t0 = dt.datetime(2025, 1, 1)
+    m = [t0 + dt.timedelta(minutes=i) for i in range(12)]
+    rows = [
+        ("A", m[0], 1.0), ("A", m[3], None), ("A", m[3], 3.0), ("A", m[4], 4.0),
+        ("A", m[9], 9.0), ("A", m[11], None), ("A", None, 7.0),
+        ("B", m[5], 5.0),
+        ("C", None, 1.0), ("C", None, None),
+    ]
+    df = spark.createDataFrame(rows, "source string, ts timestamp, value double")
+    got = time_spine(df, "1 minute")
+    assert got.columns == ["source", "ts", "value"]
+    spine = _sorted_rows(got)
+    assert spine == _sorted_rows(_spine_by_join(df, 60))
+    assert len(spine) == 14  # A: minutes 0-11 with minute 3 twice; B: 1
+    gaps = {(r["source"], r["gap_start"].minute, r["gap_end"].minute, r["n_missing"])
+            for r in gap_report(df, "1 minute").collect()}
+    assert gaps == {("A", 1, 2, 2), ("A", 5, 8, 4), ("A", 10, 10, 1)}
+
+
 def test_tiers_detector_on_rolled_series(spark):
     """adtk semantics applied to a tier's own series (SURVEY §7.3.5):
     a level-shifted burst in the 1m tier is detected by PersistAD."""
