@@ -28,6 +28,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import numbers
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -38,6 +40,17 @@ from .tiers import tier_mean, tier_stats, with_digest
 TIER_WIDTH_SECS = {"1m": 60, "1h": 3600, "1d": 86400}
 
 _ALGEBRAIC = ("cnt", "vmin", "vmax", "vsum")
+
+
+def _check_resolution(resolution_secs) -> None:
+    """ValueError unless ``resolution_secs`` is a positive int (a bool
+    is not one): a zero or negative width would group by
+    ``pmod(epoch, R)`` and return wrong buckets without an error."""
+    if (isinstance(resolution_secs, bool)
+            or not isinstance(resolution_secs, numbers.Integral)
+            or resolution_secs <= 0):
+        raise ValueError(
+            f"resolution_secs must be a positive int, got {resolution_secs!r}")
 
 
 def pick_tier(
@@ -57,7 +70,9 @@ def pick_tier(
     cutoff is skipped too — routing it to a vacuumed tier would
     silently truncate the answer at the cutoff, the exact wrong answer
     the ledger exists to prevent. Returns None when no tier qualifies
-    (caller falls back to raw)."""
+    (caller falls back to raw). Raises ValueError unless
+    ``resolution_secs`` is a positive int."""
+    _check_resolution(resolution_secs)
     names = TIER_WIDTH_SECS if available is None else available
     best, best_w = None, 0
     for name in names:
@@ -194,7 +209,9 @@ def rollup_at(
     (e.g. 90 s): floor-epoch tumbling rollup straight off the raw
     series, same output schema as ``route_rollup``. This is the scan
     routing exists to avoid — callers reach it deliberately via
-    ``pick_tier(...) is None``, never as a silent downgrade."""
+    ``pick_tier(...) is None``, never as a silent downgrade. Raises
+    ValueError unless ``resolution_secs`` is a positive int."""
+    _check_resolution(resolution_secs)
     return (
         _in_range(raw, ts_col, start, end)
         .groupBy(source_col, _epoch_bucket(ts_col, resolution_secs))
@@ -248,7 +265,13 @@ def route_from_catalog(
     a coarser tier that still holds that history. Only the chosen
     tier's table is read (one scan; with a day-partitioned commit the
     [start, end) predicate prunes its partitions); prefers the
-    read-optimized bucketed view when one exists."""
+    read-optimized bucketed view when one exists.
+
+    The ``[start, end)`` predicate is applied once: by the catalog's
+    range read, or on the bucketed view. The bounded tier then goes to
+    ``route_rollup`` with no bounds and no retention cutoff, as both
+    were checked here. Raises ValueError unless ``resolution_secs`` is
+    a positive int."""
     available = {t: catalog.get_retention(tbl) for t, tbl in tables.items()}
     name = pick_tier(resolution_secs, available, start=start)
     if name is None:
@@ -265,13 +288,14 @@ def route_from_catalog(
     as_of = catalog.bucketed_as_of(tables[name])
     if as_of is not None and as_of == catalog.last_snapshot(tables[name]):
         df = catalog.read_bucketed(spark, tables[name])
-    if df is None:
+    if df is not None:
+        df = _in_range(df, "bucket_ts", start, end)
+    else:
         # snapshot-union path: a time-bounded query activates the
         # manifest zone maps, so out-of-range snapshot dirs are pruned
         # on the driver before the scan is even planned
         df = read_tier_latest(catalog, spark, tables[name], start, end)
     if df is None:
         raise KeyError(f"tier table {tables[name]!r} has no committed snapshots")
-    return route_rollup({name: df}, resolution_secs, start, end, quantile,
-                        source_col=source_col,
-                        available={name: available[name]})
+    return route_rollup({name: df}, resolution_secs, quantile=quantile,
+                        source_col=source_col, available={name: None})

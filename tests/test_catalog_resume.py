@@ -576,10 +576,13 @@ def test_tier_commit_runs_no_job_beyond_bare_commit(spark, tmp_path):
 
 
 # Spark jobs of the one-append refresh_tiers below, as measured at 4
-# cores; a commit that re-reads its snapshot (or writes a lineage side
-# table), a read that infers its schema or a restatement that re-runs
-# the raw rollup pushes it over.
-REFRESH_JOBS = 14
+# cores: per tier step one broadcast of the touched keys and one write
+# (14 before small inputs were read as one partition, which drops each
+# step's shuffles). A commit that re-reads its snapshot (or writes a
+# lineage side table), a read that infers its schema, a restatement
+# that re-runs the raw rollup or a small input read with a shuffle
+# pushes it over.
+REFRESH_JOBS = 6
 
 
 def test_refresh_and_reads_job_budget(spark, tmp_path):
@@ -604,3 +607,44 @@ def test_refresh_and_reads_job_budget(spark, tmp_path):
             assert cat.read_range(spark, table, lo, hi) is not None
         read_tier_latest(cat, spark, "tier_1h", lo, hi)
     assert ids == []
+
+
+def _small_catalog(spark, tmp_path):
+    cat = TierCatalog(str(tmp_path / "small"))
+    cat.commit(token_corpus(spark, 300, n_sources=4, seed=1,
+                            span_secs=3600), "raw")
+    refresh_tiers(cat, spark)
+    return cat
+
+
+@pytest.mark.parametrize("res", [60, 300])
+def test_small_routed_read_runs_one_job(spark, tmp_path, res):
+    """A routed read of a small tier, exact-width (60 s) or re-merged
+    (300 s), runs as one Spark job: no shuffle stage, no AQE re-plan."""
+    from adtk_spark.plans.router import route_from_catalog
+
+    cat = _small_catalog(spark, tmp_path)
+    tables = {"1m": "tier_1m", "1h": "tier_1h", "1d": "tier_1d"}
+    lo, hi = dt.datetime(2025, 1, 1), dt.datetime(2025, 1, 2)
+    with _jobs(spark, "read") as ids:
+        rows = route_from_catalog(spark, cat, tables, res, lo, hi).collect()
+    assert rows and len(ids) == 1, ids
+
+
+def test_refresh_names_its_jobs(spark, tmp_path):
+    """Every job of a refresh carries its tier step's description, all
+    three steps run jobs, and the caller's description and job group
+    come back afterwards."""
+    cat = _small_catalog(spark, tmp_path)
+    cat.commit(token_corpus(spark, 100, n_sources=4, seed=2,
+                            span_secs=3600), "raw")
+    sc = spark.sparkContext
+    with _jobs(spark, "caller") as ids:
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        refresh_tiers(cat, spark)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+    store = sc._jsc.sc().statusStore()
+    descs = [store.job(i).description().get() for i in ids]
+    assert set(descs) == {f"refresh_tiers {t}"
+                          for t in ("tier_1m", "tier_1h", "tier_1d")}, descs

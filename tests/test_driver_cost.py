@@ -144,6 +144,39 @@ def test_detect_build_py4j_total(spark, series_path):
     assert total <= DETECT_TOTAL, total
 
 
+# Non-detach py4j commands to build one routed catalog read of a small
+# tier, exact-width (60 s) and re-merged (300 s): the ceilings. With the
+# [start, end) predicate applied twice (by the range read and again by
+# the router) they took 141 and 191.
+ROUTE_CALLS = {60: 121, 300: 171}
+
+
+@pytest.fixture(scope="module")
+def small_catalog(spark, tmp_path_factory):
+    from adtk_spark.plans.incremental import refresh_tiers
+    from adtk_spark.sources.catalog import TierCatalog
+    from adtk_spark.sources.tokens import token_corpus
+
+    cat = TierCatalog(str(tmp_path_factory.mktemp("route_cost") / "cat"))
+    for seed, span in ((1, 3 * 86400), (2, 3600)):
+        cat.commit(token_corpus(spark, 300, n_sources=4, seed=seed,
+                                span_secs=span), "raw")
+        refresh_tiers(cat, spark)
+    return cat
+
+
+@pytest.mark.parametrize("res", sorted(ROUTE_CALLS))
+def test_routed_read_build_py4j_ceiling(spark, small_catalog, res):
+    from adtk_spark.plans.router import route_from_catalog
+
+    tables = {"1m": "tier_1m", "1h": "tier_1h", "1d": "tier_1d"}
+    lo, hi = dt.datetime(2025, 1, 1), dt.datetime(2025, 1, 2)
+    route_from_catalog(spark, small_catalog, tables, res, lo, hi)  # warm
+    with py4j_commands() as n:
+        route_from_catalog(spark, small_catalog, tables, res, lo, hi)
+    assert n[0] <= ROUTE_CALLS[res], n[0]
+
+
 QUANTILE_FITS = {
     "quantile_ad": (lambda d: D.quantile_ad(d, low=0.01, high=0.99),
                     lambda d: D.apply_bounds(d, D.quantile_ad_fit(d, 0.01, 0.99))),

@@ -5,6 +5,7 @@ fine tiers."""
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from adtk_spark.plans.router import TIER_WIDTH_SECS, pick_tier, route_rollup
@@ -172,8 +173,6 @@ def test_route_sketch_raw_distribution_quantile(spark):
 
 
 def test_route_from_catalog_retention_steering(spark, tmp_path):
-    import pytest
-
     from adtk_spark.plans.router import route_from_catalog
     from adtk_spark.sources.catalog import TierCatalog
 
@@ -208,8 +207,6 @@ def test_route_twa_matches_direct_and_fast_path(spark):
     hour cuts subdivide 3h windows); exact-width routing is a pure
     projection; no dividing tier raises."""
     import datetime as dt
-
-    import pytest
 
     from adtk_spark.plans.router import route_twa
     from adtk_spark.plans.tiers import rollup_twa
@@ -248,3 +245,31 @@ def test_route_twa_matches_direct_and_fast_path(spark):
 
     with pytest.raises(KeyError, match="TWA tier"):
         route_twa({"1h": h}, 5400)  # 1.5h: 3600 does not divide it
+
+
+@pytest.mark.parametrize("bad", [0, -60, True, 60.0, "60", None])
+def test_bad_resolution_raises(spark, tmp_path, bad):
+    """A resolution that is not a positive int raises ValueError on
+    every routing entry point (0 used to route to 1d, -60 to 1m, then
+    group by pmod(epoch, R) without an error)."""
+    from adtk_spark.plans.router import (
+        rollup_at,
+        route_from_catalog,
+        route_rollup_sketch,
+        route_twa,
+    )
+    from adtk_spark.sources.catalog import TierCatalog
+
+    raw = _raw(spark, n=20)
+    tiers = build_tiers(raw)
+    cat = TierCatalog(str(tmp_path / "cat"))
+    cat.commit(tiers["1m"], "tier_1m")
+    calls = [lambda: pick_tier(bad),
+             lambda: route_rollup(tiers, bad),
+             lambda: route_twa(tiers, bad),
+             lambda: route_rollup_sketch(tiers, bad),
+             lambda: rollup_at(raw, bad),
+             lambda: route_from_catalog(spark, cat, {"1m": "tier_1m"}, bad)]
+    for call in calls:
+        with pytest.raises(ValueError, match="positive int"):
+            call()
