@@ -1514,8 +1514,8 @@ def q_pca_reconstruction(spark, sf_dir):
 
 
 def q_min_cluster_ad(spark, sf_dir):
-    """MinClusterDetector on the 2-feature hourly table, portable
-    variant: deterministic Lloyd's KMeans in fixed-point arithmetic
+    """MinClusterDetector on the 2-feature hourly table:
+    deterministic Lloyd's KMeans in fixed-point arithmetic
     (int64-quantized features -> exact centroid sums; init = first k
     distinct vectors lexicographically; fixed 10 iterations). The
     oracle replays the identical iteration as a DuckDB recursive CTE —
@@ -1523,7 +1523,7 @@ def q_min_cluster_ad(spark, sf_dir):
     bit-for-bit the same arithmetic on both sides. Features come from
     DECIMAL-exact hourly averages so the quantized inputs cannot flip
     with parallelism."""
-    from adtk_spark.operators.hd import min_cluster_ad_portable
+    from adtk_spark.operators.hd import min_cluster_ad
 
     ev = _events(spark, sf_dir)
     h = ev.groupBy(
@@ -1538,7 +1538,7 @@ def q_min_cluster_ad(spark, sf_dir):
     a = h.where(F.col("event_type") == "click").select("ts", F.col("v").alias("a"))
     b = h.where(F.col("event_type") == "view").select("ts", F.col("v").alias("b"))
     w = a.join(b, "ts").withColumn("source", F.lit("all"))
-    out = min_cluster_ad_portable(w, ["a", "b"], n_clusters=2, n_iter=10)
+    out = min_cluster_ad(w, ["a", "b"], n_clusters=2, n_iter=10)
     return out.select("source", "ts", "label")
 
 
@@ -4573,7 +4573,7 @@ def oracle_sql() -> dict[str, str]:
             FROM sess GROUP BY source, sid
         """,
         # MinClusterDetector: term-for-term Lloyd replay. Same fixed-point
-        # arithmetic as min_cluster_ad_portable — int64-quantized
+        # arithmetic as hd.min_cluster_ad — int64-quantized
         # features, exact integer centroid sums -> one double division,
         # first-k-distinct lexicographic init, fixed 10 iterations,
         # strict-< argmin (first minimal index wins), empty clusters keep

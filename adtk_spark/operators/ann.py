@@ -16,6 +16,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact_sum
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -386,12 +388,8 @@ def embedding_quality(
     e = emb.select(id_col, F.posexplode_outer(vec_col).alias("_i", "_x"))
     per = e.groupBy(id_col).agg(
         F.count("_i").alias("n_dims"),
-        F.sqrt(
-            F.sum(
-                (F.col("_x").cast("double") * F.col("_x").cast("double"))
-                .cast("decimal(38,9)")
-            ).cast("double")
-        ).alias("norm"),
+        F.sqrt(exact_sum(F.col("_x").cast("double") * F.col("_x").cast("double"),
+                         quantize=False)).alias("norm"),
         F.max(F.col("_x").isNull().cast("int")).alias("_has_null"),
         F.max(F.isnan(F.col("_x").cast("double")).cast("int")).alias("_has_nan"),
     )
@@ -446,24 +444,20 @@ def embedding_centroid_drift(
         e = df.select(label_col, F.posexplode(vec_col).alias("_d", "_x"))
         return (e.groupBy(label_col, "_d")
                 .agg(F.count("*").alias(f"n_{side}"),
-                     (F.sum(F.col("_x").cast("double").cast("decimal(38,9)"))
-                      .cast("double") / F.count("*").cast("double"))
+                     (exact_sum(F.col("_x").cast("double"), quantize=False)
+                      / F.count("*").cast("double"))
                      .alias(f"c_{side}")))
 
     j = cent(ref, "ref").join(cent(cur, "cur"), [label_col, "_d"])
-
-    def q(c):
-        return F.round(c, 9).cast("decimal(38,9)")
-
     cr, cc = F.col("c_ref"), F.col("c_cur")
     agg = j.groupBy(label_col).agg(
         F.count("*").alias("n_dims"),
         F.max("n_ref").alias("n_ref"),
         F.max("n_cur").alias("n_cur"),
-        F.sum(q(cr * cc)).cast("double").alias("_sab"),
-        F.sum(q(cr * cr)).cast("double").alias("_saa"),
-        F.sum(q(cc * cc)).cast("double").alias("_sbb"),
-        F.sum(q((cr - cc) * (cr - cc))).cast("double").alias("_sd"),
+        exact_sum(cr * cc).alias("_sab"),
+        exact_sum(cr * cr).alias("_saa"),
+        exact_sum(cc * cc).alias("_sbb"),
+        exact_sum((cr - cc) * (cr - cc)).alias("_sd"),
     )
     cos = F.col("_sab") / (F.sqrt(F.col("_saa")) * F.sqrt(F.col("_sbb")))
     return agg.select(

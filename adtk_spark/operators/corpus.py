@@ -7,6 +7,10 @@ fingerprinting. Everything is pure JVM expression work
 (split/explode/groupBy/higher-order functions), so the plans scale
 like any other aggregation — no Python UDFs anywhere in this module.
 
+Scores that sum floating-point terms (LM scores, entropy, KL, the Zipf
+slope) take their sums from ``functions/exact.py``, so they do not
+depend on partitioning.
+
 Scale notes: MinHash-LSH is the standard shingle -> minhash -> band ->
 bucket-join pipeline; candidate verification joins only within buckets
 (no quadratic pair join). Exact dedup groups on a 128-bit content hash
@@ -17,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.exact import exact_sum, ols_slope, ols_sums
 
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is")
 LANG_MARKERS = {
@@ -636,10 +642,9 @@ def lm_unigram_score(
         (F.coalesce(F.col("c"), F.lit(0)).cast("double") + 1.0)
         / F.lit(float(n_total + vocab))
     )
-    q = F.round(logp, 9).cast("decimal(38,9)")
     scored = j.groupBy(id_col).agg(
         F.count("*").alias("n_words"),
-        (F.sum(q).cast("double") / F.count("*")).alias("avg_logp"),
+        (exact_sum(logp) / F.count("*")).alias("avg_logp"),
     )
     out = docs.select(id_col).join(scored, id_col, "left").select(
         id_col,
@@ -729,10 +734,9 @@ def lm_bigram_score(
         / (F.coalesce(F.col("cp"), F.lit(0)).cast("double")
            + F.lit(float(vocab)))
     )
-    q = F.round(logp, 9).cast("decimal(38,9)")
     scored = j.groupBy(id_col).agg(
         F.count("*").alias("n_bigrams"),
-        (F.sum(q).cast("double") / F.count("*")).alias("avg_logp"),
+        (exact_sum(logp) / F.count("*")).alias("avg_logp"),
     )
     out = docs.select(id_col).join(scored, id_col, "left").select(
         id_col,
@@ -798,8 +802,7 @@ def token_entropy(
         .agg(
             F.min("_n").alias("n_words"),
             F.count("*").alias("n_uniq_words"),
-            F.sum(F.round(term, 9).cast("decimal(38,9)"))
-            .cast("double").alias("_h"),
+            exact_sum(term).alias("_h"),
         )
         .select(
             id_col, "n_words", "n_uniq_words",
@@ -853,8 +856,7 @@ def vocab_kl(
         .agg(
             F.min("_ng").alias("n_tokens"),
             F.count("*").alias("n_vocab"),
-            F.sum(F.round(term, 9).cast("decimal(38,9)"))
-            .cast("double").alias("_kl"),
+            exact_sum(term).alias("_kl"),
         )
         .select(group_col, "n_tokens", "n_vocab",
                 F.round("_kl", 6).alias("kl_nats"))
@@ -1859,11 +1861,9 @@ def zipf_slope(
     floods flatten it, gibberish steepens it). A cheap aggregate-level
     complement to the per-doc quality filters.
 
-    Determinism: ranks tie-break (count DESC, word ASC); each log term
-    is quantized to 1e-9 and summed as DECIMAL(38,9) (the
-    lm_unigram_score device), so the five sufficient statistics — and
-    the slope computed from them with a fixed expression tree — are
-    stable across partition layouts and replayable in SQL. Plan: one
+    Determinism: ranks tie-break (count DESC, word ASC); the slope is
+    the exact-sum OLS of ``functions/exact.py``, stable across partition
+    layouts and replayable in SQL. Plan: one
     (source, word) count shuffle, a per-source rank window over at most
     the distinct-word rows, and one tiny aggregate.
     """
@@ -1877,24 +1877,12 @@ def zipf_slope(
     )
     lnr = F.log(F.col("rank").cast("double"))
     lnc = F.log(F.col("c").cast("double"))
-
-    def q(col):
-        return F.round(col, 9).cast("decimal(38,9)")
-
     agg = ranked.groupBy(source_col).agg(
-        F.count("*").alias("n_ranks"),
-        F.sum(q(lnr)).cast("double").alias("_sx"),
-        F.sum(q(lnc)).cast("double").alias("_sy"),
-        F.sum(q(lnr * lnc)).cast("double").alias("_sxy"),
-        F.sum(q(lnr * lnr)).cast("double").alias("_sxx"),
-    )
-    n = F.col("n_ranks").cast("double")
-    slope = (n * F.col("_sxy") - F.col("_sx") * F.col("_sy")) / (
-        n * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-    )
+        F.count("*").alias("n_ranks"), *ols_sums(lnr, lnc))
+    num, den = ols_slope("n_ranks")
     return (
         agg.where(F.col("n_ranks") >= 2)
-        .select(source_col, "n_ranks", slope.alias("zipf_slope"))
+        .select(source_col, "n_ranks", (num / den).alias("zipf_slope"))
     )
 
 

@@ -39,6 +39,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact_sum
 from ..functions.windows import (
     double_rolling_sides,
     exact_quantile_agg,
@@ -329,8 +330,8 @@ def cusum_ad_fit(
     """
     v = F.col(value_col)
     m0 = train.groupBy(source_col).agg(
-        F.sum(v.cast("decimal(38,9)")).cast("double").alias("_s1"),
-        F.sum((v * v).cast("decimal(38,9)")).cast("double").alias("_s2"),
+        exact_sum(v, quantize=False).alias("_s1"),
+        exact_sum(v * v, quantize=False).alias("_s2"),
         F.count(v).alias("_n"),
     )
     mu = F.col("_s1") / F.col("_n")

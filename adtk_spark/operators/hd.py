@@ -9,17 +9,26 @@ Fits collect per-source sufficient statistics (or run small numpy
 solves per source in a grouped-map UDF); predicts are column
 expressions after a broadcast join — rows with any NULL feature yield
 NULL outputs (the reference's dropna semantics, _transformer_hd.py:160-180).
+
+The correlation and Hurst operators take their sums, Pearson r and OLS
+slope from ``functions/exact.py``, so their results do not depend on
+partitioning.
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import (
+    exact_sum,
+    ols_slope,
+    ols_sums,
+    pearson_r,
+    pearson_sums,
+)
 from .detectors import _as_double, _compound_fit_detect
 
 
@@ -251,85 +260,20 @@ def min_cluster_ad(
     df: DataFrame,
     features: list[str],
     n_clusters: int = 2,
-    seed: int = 0,
-    n_iter: int = 50,
-    *,
-    source_col: str = "source",
-    out_col: str = "label",
-) -> DataFrame:
-    """MinClusterDetector (_detector_hd.py:101-140) with a deterministic
-    Lloyd's-KMeans fit per source (the reference wraps a user-given
-    sklearn clusterer; the semantics tested here are 'membership in the
-    smallest cluster is anomalous')."""
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        sub = pdf[features].dropna()
-        src = pdf[source_col].iloc[0]
-        X = sub.values.astype(float)
-        rng = np.random.RandomState(seed)
-        centers = X[rng.choice(len(X), size=min(n_clusters, len(X)), replace=False)]
-        for _ in range(n_iter):
-            d = ((X[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-            lab = d.argmin(axis=1)
-            new = np.array([
-                X[lab == j].mean(axis=0) if (lab == j).any() else centers[j]
-                for j in range(len(centers))
-            ])
-            if np.allclose(new, centers):
-                break
-            centers = new
-        sizes = np.bincount(lab, minlength=len(centers))
-        return pd.DataFrame(
-            {source_col: [src], "centers": [[list(r) for r in centers]],
-             "min_cluster": [int(sizes.argmin())]}
-        )
-
-    schema = f"{source_col} string, centers array<array<double>>, min_cluster int"
-    model = df.groupBy(source_col).applyInPandas(fit, schema=schema)
-    joined = df.join(F.broadcast(model), on=source_col, how="left")
-    n_centers = F.size(F.col("centers"))
-
-    def dist_sq(j: Column) -> Column:
-        center = F.element_at(F.col("centers"), j)
-        expr = None
-        for i, c in enumerate(features):
-            t = F.col(c) - F.element_at(center, i + 1)
-            term = t * t
-            expr = term if expr is None else expr + term
-        return expr
-
-    # argmin over clusters via aggregate on a sequence of indices
-    assign = F.aggregate(
-        F.sequence(F.lit(1), n_centers),
-        F.struct(F.lit(0).alias("j"), F.lit(float("inf")).alias("d")),
-        lambda acc, j: F.when(dist_sq(j) < acc["d"],
-                              F.struct(j.alias("j"), dist_sq(j).alias("d"))
-                              ).otherwise(acc),
-    )["j"]
-    label = F.when(_any_null(features), F.lit(None)).otherwise(
-        (assign - 1) == F.col("min_cluster")
-    )
-    return joined.withColumn(out_col, _as_double(label)).drop("centers", "min_cluster")
-
-
-def min_cluster_ad_portable(
-    df: DataFrame,
-    features: list[str],
-    n_clusters: int = 2,
     n_iter: int = 10,
     *,
     source_col: str = "source",
     out_col: str = "label",
-    scale: int = 1_000_000,
 ) -> DataFrame:
-    """MinClusterDetector whose fit a SQL engine can replay bit-for-bit
-    (the contract oracle runs the identical Lloyd iteration as a DuckDB
-    recursive CTE). Three choices make the fit deterministic at ANY
-    partitioning/parallelism — the properties ``min_cluster_ad``'s
-    seeded-random init cannot give an oracle:
+    """MinClusterDetector (_detector_hd.py:101-140): a Lloyd's-KMeans fit
+    per source, and membership in the smallest cluster is anomalous (the
+    reference wraps a user-given sklearn clusterer). A SQL engine can
+    replay the fit bit-for-bit (the contract oracle runs the identical
+    iteration as a DuckDB recursive CTE). Three choices make the fit
+    deterministic at ANY partitioning/parallelism:
 
-    - features are quantized to 1/scale units as int64 on the JVM side
-      (``round(x*scale)``), so centroid numerators are EXACT integer
+    - features are quantized to 1e-6 units as int64 on the JVM side
+      (``round(x*1e6)``), so centroid numerators are EXACT integer
       sums — associative, order-independent;
     - init = the first ``n_clusters`` DISTINCT quantized vectors in
       lexicographic order (np.unique row order == SQL ORDER BY LIMIT k);
@@ -349,7 +293,7 @@ def min_cluster_ad_portable(
     base = df.select(
         "*",
         *[
-            F.round(F.col(c) * scale, 0).cast("long").alias(q)
+            F.round(F.col(c) * 1_000_000, 0).cast("long").alias(q)
             for c, q in zip(features, icols)
         ],
     )
@@ -470,10 +414,8 @@ def lagged_corr(
     small factor), joined to a on ts, then an algebraic groupBy on k.
     The naive form (one join per lag) multiplies shuffles by |lags|.
 
-    Determinism: all five moments are summed as DECIMAL(38,9) (products
-    quantized once in IEEE double, then summed exactly), so corr is
-    bit-identical at any parallelism — same device as the LM scorer and
-    the tier sums.
+    Determinism: the moments are exact sums (``functions/exact.py``),
+    so corr is bit-identical at any parallelism.
     """
     lags = [int(k) for k in lags]
     v, t = F.col(value_col), F.col(ts_col)
@@ -490,22 +432,8 @@ def lagged_corr(
     ).select("lag", (F.col("_tb") - F.col("lag") * F.lit(step_us)).alias("_t"),
              "_vb")
     j = a.join(shifted, "_t")
-
-    def dsum(c):
-        return F.sum(c.cast("decimal(38,9)")).cast("double")
-
-    va, vb = F.col("_va"), F.col("_vb")
-    agged = j.groupBy("lag").agg(
-        F.count("*").alias("n"),
-        dsum(va).alias("sx"), dsum(vb).alias("sy"),
-        dsum(va * va).alias("sxx"), dsum(vb * vb).alias("syy"),
-        dsum(va * vb).alias("sxy"),
-    )
-    n = F.col("n").cast("double")
-    num = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    den = F.sqrt((n * F.col("sxx") - F.col("sx") * F.col("sx"))
-                 * (n * F.col("syy") - F.col("sy") * F.col("sy")))
-    return agged.select("lag", "n", (num / den).alias("corr"))
+    agged = j.groupBy("lag").agg(*pearson_sums(F.col("_va"), F.col("_vb")))
+    return agged.select("lag", "n", pearson_r().alias("corr"))
 
 
 def corr_matrix(
@@ -537,9 +465,7 @@ def corr_matrix(
     where |buckets| is small and S² rows are 40-byte moment tuples; the
     shuffle key (bucket) is uniform by construction.
 
-    Determinism: the five moments are DECIMAL(38,9) sums of
-    once-quantized IEEE products, so corr is bit-identical at any
-    parallelism (same device as lagged_corr / the LM scorer).
+    Determinism: the moments are exact sums, as in [[lagged_corr]].
     """
     r = (df.where(F.col(value_col).isNotNull())
          .select(F.col(source_col).alias("_s"),
@@ -552,23 +478,11 @@ def corr_matrix(
          .select(F.col("x._s").alias("source_a"),
                  F.col("y._s").alias("source_b"),
                  F.col("x._v").alias("_va"), F.col("y._v").alias("_vb")))
-
-    def dsum(c):
-        return F.sum(c.cast("decimal(38,9)")).cast("double")
-
-    va, vb = F.col("_va"), F.col("_vb")
     agged = j.groupBy("source_a", "source_b").agg(
-        F.count("*").alias("n"),
-        dsum(va).alias("sx"), dsum(vb).alias("sy"),
-        dsum(va * va).alias("sxx"), dsum(vb * vb).alias("syy"),
-        dsum(va * vb).alias("sxy"),
+        *pearson_sums(F.col("_va"), F.col("_vb"))
     ).where(F.col("n") >= int(min_n))
-    n = F.col("n").cast("double")
-    num = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    den = F.sqrt((n * F.col("sxx") - F.col("sx") * F.col("sx"))
-                 * (n * F.col("syy") - F.col("sy") * F.col("sy")))
     return agged.select("source_a", "source_b", "n",
-                        (num / den).alias("corr"))
+                        pearson_r().alias("corr"))
 
 
 def hurst_exponent(
@@ -596,11 +510,10 @@ def hurst_exponent(
     (source, m, block) keys that grow with the data (no driver-side
     fit). Only FULL blocks count (trailing remainders drop).
 
-    Determinism: block means and squared-deviation sums are
-    DECIMAL(38,9)-quantized; the cumulative deviation is a sequential
-    running sum (bitwise-equal association in any engine); the final
-    OLS uses the zipf_slope 1e-9-quantized sufficient statistics —
-    hash-equal to the SQL replay at any parallelism.
+    Determinism: block means, squared-deviation sums and the final OLS
+    are exact sums (``functions/exact.py``); the cumulative deviation
+    is a sequential running sum (bitwise-equal association in any
+    engine) — hash-equal to the SQL replay at any parallelism.
     """
     sizes = sorted(int(m) for m in block_sizes)
     wsrc = Window.partitionBy(source_col).orderBy(ts_col)
@@ -617,44 +530,29 @@ def hurst_exponent(
     w_run = w_b.orderBy("_i").rowsBetween(Window.unboundedPreceding,
                                           Window.currentRow)
     b = (e.withColumn("_cnt", F.count("*").over(w_b))
-         .withColumn("_sumv", F.sum(F.col("_v").cast("decimal(38,9)"))
-                     .over(w_b).cast("double"))
+         .withColumn("_sumv", exact_sum(F.col("_v"), quantize=False,
+                                        over=w_b))
          .where(F.col("_cnt") == F.col("m"))
          .withColumn("_dev", F.col("_v")
                      - F.col("_sumv") / F.col("m").cast("double")))
     b = b.withColumn("_cum", F.sum("_dev").over(w_run))
-
-    def dsum(c):
-        return F.sum(F.round(c, 9).cast("decimal(38,9)")).cast("double")
-
     g = (b.groupBy(source_col, "m", "_blk")
          .agg((F.max("_cum") - F.min("_cum")).alias("_R"),
-              dsum(F.col("_dev") * F.col("_dev")).alias("_ssd")))
+              exact_sum(F.col("_dev") * F.col("_dev")).alias("_ssd")))
     rs = F.col("_R") / F.sqrt(F.col("_ssd") / F.col("m").cast("double"))
     per_m = (g.where(F.col("_ssd") > 0)
              .select(source_col, "m", F.round(rs, 9).alias("_rs"))
              .groupBy(source_col, "m")
              .agg(F.count("*").alias("n_blocks"),
-                  dsum(F.col("_rs")).alias("_sum_rs")))
+                  exact_sum(F.col("_rs")).alias("_sum_rs")))
     lnm = F.log(F.col("m").cast("double"))
     lny = F.log(F.col("_sum_rs") / F.col("n_blocks").cast("double"))
     pts = per_m.select(source_col, lnm.alias("_x"), lny.alias("_y"))
-
-    def q(c):
-        return F.round(c, 9).cast("decimal(38,9)")
-
     agg = pts.groupBy(source_col).agg(
-        F.count("*").alias("n_sizes"),
-        F.sum(q(F.col("_x"))).cast("double").alias("_sx"),
-        F.sum(q(F.col("_y"))).cast("double").alias("_sy"),
-        F.sum(q(F.col("_x") * F.col("_y"))).cast("double").alias("_sxy"),
-        F.sum(q(F.col("_x") * F.col("_x"))).cast("double").alias("_sxx"),
-    )
-    n = F.col("n_sizes").cast("double")
-    slope = (n * F.col("_sxy") - F.col("_sx") * F.col("_sy")) / (
-        n * F.col("_sxx") - F.col("_sx") * F.col("_sx"))
+        F.count("*").alias("n_sizes"), *ols_sums(F.col("_x"), F.col("_y")))
+    num, den = ols_slope("n_sizes")
     return (agg.where(F.col("n_sizes") >= 2)
-            .select(source_col, "n_sizes", slope.alias("hurst")))
+            .select(source_col, "n_sizes", (num / den).alias("hurst")))
 
 
 def acf(
@@ -680,9 +578,8 @@ def acf(
     (source, lag). Input contract: an aligned series (tier buckets),
     never raw irregular points.
 
-    Determinism: the five moments are DECIMAL(38,9) sums of
-    once-quantized products — bit-stable at any parallelism and
-    hash-equal to the SQL replay.
+    Determinism: the moments are exact sums, as in [[lagged_corr]] —
+    bit-stable at any parallelism and hash-equal to the SQL replay.
     """
     lags = [int(k) for k in lags]
     v, t = F.col(value_col), F.col(ts_col)
@@ -698,23 +595,9 @@ def acf(
         F.col("_v").alias("_vb"),
     )
     j = base.join(shifted, ["_s", "_t"])
-
-    def dsum(c):
-        return F.sum(c.cast("decimal(38,9)")).cast("double")
-
-    va, vb = F.col("_v"), F.col("_vb")
-    agged = j.groupBy("_s", "lag").agg(
-        F.count("*").alias("n"),
-        dsum(va).alias("sx"), dsum(vb).alias("sy"),
-        dsum(va * va).alias("sxx"), dsum(vb * vb).alias("syy"),
-        dsum(va * vb).alias("sxy"),
-    )
-    n = F.col("n").cast("double")
-    num = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    den = F.sqrt((n * F.col("sxx") - F.col("sx") * F.col("sx"))
-                 * (n * F.col("syy") - F.col("sy") * F.col("sy")))
+    agged = j.groupBy("_s", "lag").agg(*pearson_sums(F.col("_v"), F.col("_vb")))
     return agged.select(F.col("_s").alias(source_col), "lag", "n",
-                        (num / den).alias("acf"))
+                        pearson_r().alias("acf"))
 
 
 def rolling_corr(
@@ -742,9 +625,9 @@ def rolling_corr(
     tier buckets per the detector routing contract). Five running
     moment sums share the partition.
 
-    Determinism: moments are DECIMAL(38,9) running sums of
-    once-quantized products over an exact ROWS frame — bit-stable at
-    any parallelism and hash-equal to the SQL replay.
+    Determinism: the moments are 1e-9-quantized exact running sums
+    over an exact ROWS frame — bit-stable at any parallelism and
+    hash-equal to the SQL replay.
     """
     pair_rows = [(i, str(a), str(b)) for i, (a, b) in enumerate(pairs)]
     pm = df.sparkSession.createDataFrame(
@@ -763,25 +646,10 @@ def rolling_corr(
          .select("pair_id", "sa", "sb", "_t", "_va", "_vb"))
     w = (Window.partitionBy("pair_id").orderBy("_t")
          .rowsBetween(-(int(window) - 1), 0))
-
-    def dsum(c):
-        return F.sum(F.round(c, 9).cast("decimal(38,9)")).over(w) \
-                .cast("double")
-
-    va, vb = F.col("_va"), F.col("_vb")
-    m = j.select(
-        "sa", "sb", "_t",
-        F.count("*").over(w).alias("n"),
-        dsum(va).alias("sx"), dsum(vb).alias("sy"),
-        dsum(va * va).alias("sxx"), dsum(vb * vb).alias("syy"),
-        dsum(va * vb).alias("sxy"),
-    )
-    n = F.col("n").cast("double")
-    num = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    den = F.sqrt((n * F.col("sxx") - F.col("sx") * F.col("sx"))
-                 * (n * F.col("syy") - F.col("sy") * F.col("sy")))
+    m = j.select("sa", "sb", "_t", *pearson_sums(
+        F.col("_va"), F.col("_vb"), quantize=True, over=w))
     return m.select(
         F.col("sa").alias("source_a"), F.col("sb").alias("source_b"),
         F.col("_t").alias(ts_col), "n",
-        F.when(F.col("n") == int(window), num / den).alias("corr"),
+        F.when(F.col("n") == int(window), pearson_r()).alias("corr"),
     )

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from adtk_spark.functions.exact import exact_sum
 from adtk_spark.functions.windows import quoted, select_with, td_micros
 
 
@@ -166,11 +167,9 @@ def counter_rate(
         df.select(source_col, ts_col, inc.alias("_inc"))
         .groupBy(source_col, tier_bucket(F.col(ts_col), tier))
         .agg(
-            # DECIMAL-quantized exact sum: the per-bucket increase (and
-            # every threshold decision on it) is bit-identical at any
-            # parallelism — same device as the tier sums / LM scorer
-            F.sum(F.round(F.col("_inc"), 9).cast("decimal(38,9)"))
-            .cast("double").alias("increase"))
+            # exact sum: the per-bucket increase (and every threshold
+            # decision on it) is bit-identical at any parallelism
+            exact_sum(F.col("_inc")).alias("increase"))
         .withColumn(
             "_width",
             (F.unix_timestamp(F.col("bucket_ts") + F.expr(shift))

@@ -15,6 +15,10 @@ tier rows uses them — the rollups here, the router's merges and raw
 fallback, and the streaming 1m rollups — so ``tier_stats`` is the one
 place where the type of ``vsum`` is decided.
 
+The statistics built on floating-point sums (drift scores, seasonality,
+slopes, SAX, profiles) take their sums from ``functions/exact.py``, so
+they do not depend on partitioning.
+
 Scale notes:
 - groupBy keys are (source, bucket): cardinality grows with time span,
   so parallelism scales with data; per-key size is bounded by
@@ -33,6 +37,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact_sum, ols_slope, ols_sums
 from ..functions.windows import _interp_sorted, exact_quantile_agg, sorted_frame_arr
 
 TIER_INTERVALS = {"1m": "minute", "1h": "hour", "1d": "day"}
@@ -486,7 +491,7 @@ def distribution_compare(counts: DataFrame, stat: str, by: list[str], *,
                 F.when(p > 0, F.lit(0.5) * p * F.log(p / m)).otherwise(0.0)
                 + F.when(q > 0, F.lit(0.5) * q * F.log(q / m)).otherwise(0.0),
                 9)
-        score = F.round(F.sum(term.cast("decimal(38,9)")).cast("double"), 6)
+        score = F.round(exact_sum(term, quantize=False), 6)
     if stat != "psi":
         score = F.when((n_ref > 0) & (n_cur > 0), score)
     return (
@@ -848,46 +853,11 @@ def seasonality_strength(
     strength > 0.6) into the seasonal detectors, plain shift/persist
     detectors for the rest.
 
-    Plan shape: one (source, phase) window for the phase means, one
-    (source) window + groupBy sharing the source partitioning — two
-    Exchanges, no join. Determinism: phase/overall means come from
-    1e-9-quantized DECIMAL sums with ONE final division, squared
-    residuals are re-quantized before the DECIMAL variance sums, so
-    the score is bit-stable at any parallelism (the verify-recipe rule:
-    never hash an unordered raw-double aggregation).
+    This is ``seasonality_scan`` over the one period: the same plan and
+    the same columns ``(source, n, period_secs, strength)``.
     """
-    v = F.col(value_col)
-    secs = F.unix_micros(F.col(ts_col).cast("timestamp")) / F.lit(1_000_000)
-    phase = F.floor(secs).cast("long") % F.lit(int(period_secs))
-    d = df.where(v.isNotNull()).select(
-        source_col, v.alias("_v"), phase.alias("_ph"))
-
-    def dec_mean(win) -> Column:
-        s = F.sum(F.round(F.col("_v"), 9).cast("decimal(38,9)")).over(win)
-        return s.cast("double") / F.count(F.lit(1)).over(win)
-
-    wp = Window.partitionBy(source_col, "_ph")
-    ws = Window.partitionBy(source_col)
-    d = d.withColumn("_pm", dec_mean(wp)).withColumn("_m", dec_mean(ws))
-    rq = F.round((F.col("_v") - F.col("_pm"))
-                 * (F.col("_v") - F.col("_pm")), 9).cast("decimal(38,9)")
-    tq = F.round((F.col("_v") - F.col("_m"))
-                 * (F.col("_v") - F.col("_m")), 9).cast("decimal(38,9)")
-    out = d.groupBy(source_col).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(rq).cast("double").alias("_ssr"),
-        F.sum(tq).cast("double").alias("_sst"),
-    )
-    strength = F.when(
-        F.col("_sst") > 0,
-        F.greatest(F.lit(0.0),
-                   F.round(F.lit(1.0) - F.col("_ssr") / F.col("_sst"), 6)),
-    )
-    return out.select(
-        source_col, "n",
-        F.lit(int(period_secs)).alias("period_secs"),
-        strength.alias("strength"),
-    )
+    return seasonality_scan(df, [period_secs], source_col=source_col,
+                            ts_col=ts_col, value_col=value_col)
 
 
 def seasonality_scan(
@@ -905,9 +875,11 @@ def seasonality_scan(
     calls would cost 2p. The practical router call: scan
     [hour, day, week], route each source by its best period.
 
-    Output one row per (source, period_secs) with n and strength;
-    same DECIMAL quantization as seasonality_strength, so values for
-    any single period are identical to the single-period op's.
+    Output one row per (source, period_secs) with n and strength.
+    Determinism: phase/overall means are exact sums with ONE final
+    division and the squared residuals are exact sums
+    (``functions/exact.py``), so the score is bit-stable at any
+    parallelism.
     """
     v = F.col(value_col)
     secs = F.unix_micros(F.col(ts_col).cast("timestamp")) / F.lit(1_000_000)
@@ -920,21 +892,21 @@ def seasonality_scan(
         .withColumn("_ph", F.col("_secs") % F.col("period_secs"))
     )
 
-    def dec_mean(win) -> Column:
-        s = F.sum(F.round(F.col("_v"), 9).cast("decimal(38,9)")).over(win)
-        return s.cast("double") / F.count(F.lit(1)).over(win)
+    def mean(win) -> Column:
+        return (exact_sum(F.col("_v"), over=win)
+                / F.count(F.lit(1)).over(win))
+
+    def ss(mean_col: str) -> Column:
+        r = F.col("_v") - F.col(mean_col)
+        return exact_sum(r * r)
 
     wp = Window.partitionBy(source_col, "period_secs", "_ph")
     ws = Window.partitionBy(source_col, "period_secs")
-    d = d.withColumn("_pm", dec_mean(wp)).withColumn("_m", dec_mean(ws))
-    rq = F.round((F.col("_v") - F.col("_pm"))
-                 * (F.col("_v") - F.col("_pm")), 9).cast("decimal(38,9)")
-    tq = F.round((F.col("_v") - F.col("_m"))
-                 * (F.col("_v") - F.col("_m")), 9).cast("decimal(38,9)")
+    d = d.withColumn("_pm", mean(wp)).withColumn("_m", mean(ws))
     out = d.groupBy(source_col, "period_secs").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(rq).cast("double").alias("_ssr"),
-        F.sum(tq).cast("double").alias("_sst"),
+        ss("_pm").alias("_ssr"),
+        ss("_m").alias("_sst"),
     )
     strength = F.when(
         F.col("_sst") > 0,
@@ -995,12 +967,10 @@ def seasonal_naive_anomaly(
     # binary-rounding engine disagree (~1/1000 rows) — caught live at
     # sf0.1.
     d = d.withColumn("_r", F.col("_v") - F.col("_base"))
-    r9 = F.round(F.col("_r"), 9)
     ws = Window.partitionBy(source_col)
     n = F.count("_r").over(ws)
-    s = F.sum(r9.cast("decimal(38,9)")).over(ws).cast("double")
-    ss = F.sum(F.round(F.col("_r") * F.col("_r"), 9)
-               .cast("decimal(38,9)")).over(ws).cast("double")
+    s = exact_sum(F.col("_r"), over=ws)
+    ss = exact_sum(F.col("_r") * F.col("_r"), over=ws)
     d = d.select(source_col, ts_col, "_v", "_base", "_r",
                  n.alias("_n"), s.alias("_s"), ss.alias("_ss"))
     mu = F.col("_s") / F.col("_n")
@@ -1206,9 +1176,8 @@ def rollup_slope(
 
     Determinism: x is derived from integer micros relative to the
     bucket start (never absolute epoch, so Sxx stays small and the
-    per-row doubles are exact to micros); each per-row term is
-    1e-9-quantized and DECIMAL-summed; the final slope is one fixed
-    double expression over the exact sums. Zero-variance buckets
+    per-row doubles are exact to micros); the slope is the exact-sum
+    OLS of ``functions/exact.py``. Zero-variance buckets
     (single point, or all points at one timestamp) emit NULL rather
     than an IEEE infinity.
     """
@@ -1226,20 +1195,10 @@ def rollup_slope(
         xs.alias("_x"),
         v.alias("_y"),
     )
-
-    def dsum(c: Column) -> Column:
-        return F.sum(F.round(c, 9).cast("decimal(38,9)")).cast("double")
-
     agg = d.groupBy(source_col, "bucket_ts").agg(
-        F.count("*").alias("n"),
-        dsum(F.col("_x")).alias("_sx"),
-        dsum(F.col("_y")).alias("_sy"),
-        dsum(F.col("_x") * F.col("_x")).alias("_sxx"),
-        dsum(F.col("_x") * F.col("_y")).alias("_sxy"),
-    )
+        F.count("*").alias("n"), *ols_sums(F.col("_x"), F.col("_y")))
+    num, denom = ols_slope("n")
     n = F.col("n").cast("double")
-    denom = n * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-    num = n * F.col("_sxy") - F.col("_sx") * F.col("_sy")
     # Variance floor, not just != 0: for an (near-)zero-x-variance
     # bucket the denominator is PURE 1e-9-quantization residue (round
     # (x*x,9) vs round(x,9)^2), and num/denom amplifies engine-level
@@ -1367,11 +1326,9 @@ def sax_downsample(
         raise ValueError(f"alphabet must be in {sorted(SAX_BREAKPOINTS)}")
     bps = SAX_BREAKPOINTS[alphabet]
     v = F.col(value_col)
-    q = F.round(v, 9).cast("decimal(38,9)")
-    q2 = F.round(v * v, 9).cast("decimal(38,9)")
     stats = tier_df.groupBy(source_col).agg(
-        F.sum(q).cast("double").alias("_s1"),
-        F.sum(q2).cast("double").alias("_s2"),
+        exact_sum(v).alias("_s1"),
+        exact_sum(v * v).alias("_s2"),
         F.count(v).alias("_n"),
     ).select(
         source_col,
@@ -1387,7 +1344,7 @@ def sax_downsample(
     seg_ts = F.timestamp_seconds(_e - (_e % segment_secs))
     paa = (
         tier_df.groupBy(source_col, seg_ts.alias("seg_ts"))
-        .agg(F.sum(q).cast("double").alias("_ps"),
+        .agg(exact_sum(v).alias("_ps"),
              F.count(v).alias("n_buckets"))
         .withColumn("paa", F.col("_ps") / F.col("n_buckets"))
     )
@@ -1600,7 +1557,7 @@ def weekday_profile(
                  F.dayofweek(t).alias("dow"),
                  F.hour(t).alias("hour"))
         .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(v.cast("decimal(38,9)")).cast("double").alias("_s"))
+             exact_sum(v, quantize=False).alias("_s"))
         .select(source_col, "dow", "hour", "n",
                 F.round(F.col("_s") / F.col("n").cast("double"), 6)
                 .alias("mean_value"))

@@ -66,6 +66,33 @@ def fetch(df, col, sources=("A", "B")):
     return out
 
 
+def assert_layout_invariant(spark, df, op):
+    """Assert that ``op(df)`` emits identical rows whatever the input
+    partitioning (1 vs 13) and the shuffle width (1 vs 7, with AQE
+    coalescing off so the width is really used); return the rows,
+    sorted."""
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    prev = {k: spark.conf.get(k) for k in keys}
+    got = {}
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        for width in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(width))
+            for parts in (1, 13):
+                got[(width, parts)] = sorted(
+                    (tuple(r) for r in op(df.repartition(parts)).collect()),
+                    key=repr)
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    want = got[(1, 1)]
+    assert want
+    for layout, rows in got.items():
+        assert rows == want, layout
+    return want
+
+
 def _eq(a, b, tol=1e-9):
     if a is None and b is None:
         return True

@@ -4,6 +4,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from tests.conftest import assert_layout_invariant
+
 
 @pytest.fixture(scope="module")
 def docs(spark):
@@ -1004,6 +1006,15 @@ def test_zipf_slope_detects_flat_vs_natural(spark):
     got = {r["source"]: r["zipf_slope"] for r in zipf_slope(docs).collect()}
     assert -1.15 < got["pl"] < -0.85   # ~ -1 by construction
     assert abs(got["flat"]) < 0.05
+    # many documents per source: identical slopes at any partitioning
+    import random
+
+    rng = random.Random(986)
+    many = spark.createDataFrame(
+        [(s, " ".join(f"w{int(rng.paretovariate(1.2))}" for _ in range(30)))
+         for s in ("x", "y", "z") for _ in range(120)],
+        "source string, text string")
+    assert_layout_invariant(spark, many, zipf_slope)
 
 
 from hypothesis import given, settings

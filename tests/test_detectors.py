@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from adtk_spark.operators import detectors as D
 from adtk_spark.operators import hd as H
 from adtk_spark.operators import transformers as T
-from tests.conftest import NAN, assert_series, series_df
+from tests.conftest import NAN, assert_layout_invariant, assert_series, series_df
 
 THRESH6 = [0, -10, 0, NAN, 0, 10]
 IQR8 = [0, -10, 0, 0, 0, NAN, 0, 10]
@@ -163,6 +163,15 @@ def test_cusum_matches_recursion(spark):
            .orderBy("ts").collect()]
     assert all(l == 0.0 for l in out[:8])
     assert any(l == 1.0 for l in out[8:])
+    # real-valued input: mu/sigma are identical at any partitioning
+    import random
+
+    rng = random.Random(129)
+    noisy = spark.createDataFrame(
+        [(s, t0 + dt.timedelta(minutes=i), rng.gauss(10.0, 3.0))
+         for s in ("a", "b", "c") for i in range(300)],
+        "source string, ts timestamp, value double")
+    assert_layout_invariant(spark, noisy, cusum_ad_fit)
 
 
 def test_robust_zscore_vs_numpy(spark):
@@ -449,24 +458,7 @@ def test_compound_fit_detect_partition_invariant(spark, name):
     shuffle width (1 vs 7, with AQE coalescing off so the width is
     really used)."""
     fit_detect, _ = COMPOUND[name]
-    df = _compound_series(spark, 7)
-    keys = ("spark.sql.shuffle.partitions",
-            "spark.sql.adaptive.coalescePartitions.enabled")
-    prev = {k: spark.conf.get(k) for k in keys}
-    got = {}
-    try:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        for width in (1, 7):
-            spark.conf.set("spark.sql.shuffle.partitions", str(width))
-            for parts in (1, 13):
-                got[(width, parts)] = _rows(fit_detect(df.repartition(parts)))
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
-    want = got[(1, 1)]
-    assert want
-    for layout, rows_ in got.items():
-        assert rows_ == want, layout
+    assert_layout_invariant(spark, _compound_series(spark, 7), fit_detect)
 
 
 @pytest.mark.parametrize("call", [

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from adtk_spark.operators import custom as C
 from adtk_spark.operators import hd as H
-from tests.conftest import NAN, assert_series, series_df
+from tests.conftest import NAN, assert_layout_invariant, assert_series, series_df
 
 
 def wide_df(spark, cols: dict, start="2017-01-01"):
@@ -258,16 +258,23 @@ def test_lagged_corr_shifted_copy(spark):
     assert out[1][1] == 1.0 and out[1][0] == 40
     assert abs(out[0][1]) < 0.5 and out[0][0] == 39
     assert abs(out[-1][1]) < 0.5 and out[2][0] == 39
+    # real-valued input around 1e6, where the moment sums cancel: a
+    # double sum would change with the partitioning, the exact one not
+    noisy = spark.createDataFrame(
+        [(s, t0 + dt.timedelta(hours=i), float(v))
+         for s in ("a", "b") for i, v in enumerate(1e6 + rng.randn(300))],
+        "source string, ts timestamp, value double")
+    assert_layout_invariant(spark, noisy, lambda d: lagged_corr(
+        d, "a", "b", lags=[-2, 0, 1, 5], step_secs=3600))
 
 
-def test_min_cluster_ad_portable_blobs_and_nulls(spark):
-    """Portable (oracle-replayable) MinClusterDetector: the small blob
-    is anomalous, NULL features yield NULL labels, and a re-run on a
-    repartitioned input gives identical labels (the fixed-point fit is
-    order/partitioning independent)."""
-    import datetime as dt
+def test_min_cluster_ad_blobs_and_nulls(spark):
+    """MinClusterDetector's fixed-point fit: the small blob is
+    anomalous, NULL features yield NULL labels, and the labels do not
+    depend on the input partitioning or the shuffle width."""
+    import random
 
-    from adtk_spark.operators.hd import min_cluster_ad_portable
+    from adtk_spark.operators.hd import min_cluster_ad
 
     t0 = dt.datetime(2025, 1, 1)
     rows = []
@@ -278,15 +285,25 @@ def test_min_cluster_ad_portable_blobs_and_nulls(spark):
     rows.append(("all", t0 + dt.timedelta(minutes=200), None, 5.0))
     df = spark.createDataFrame(rows, "source string, ts timestamp, a double, b double")
     out = {r["ts"]: r["label"]
-           for r in min_cluster_ad_portable(df, ["a", "b"], n_clusters=2).collect()}
+           for r in min_cluster_ad(df, ["a", "b"], n_clusters=2).collect()}
     assert sum(1 for v in out.values() if v == 1.0) == 5
     assert out[t0 + dt.timedelta(minutes=200)] is None
     for i in range(5):
         assert out[t0 + dt.timedelta(minutes=100 + i)] == 1.0
-    out2 = {r["ts"]: r["label"]
-            for r in min_cluster_ad_portable(
-                df.repartition(7), ["a", "b"], n_clusters=2).collect()}
-    assert out == out2
+    # 300 rows in three Gaussian blobs of 150, 100 and 50 points: every
+    # layout flags exactly the 50-point blob (an init drawn from the row
+    # order would change with the partitioning)
+    rng = random.Random(263)
+    blobs = [((0.0, 0.0), 150), ((6.0, 6.0), 100), ((12.0, 0.0), 50)]
+    pts = [(cx, cy) for (cx, cy), n in blobs for _ in range(n)]
+    three = spark.createDataFrame(
+        [("all", t0 + dt.timedelta(minutes=i), rng.gauss(cx, 1.0), rng.gauss(cy, 1.0))
+         for i, (cx, cy) in enumerate(pts)],
+        "source string, ts timestamp, a double, b double")
+    got = assert_layout_invariant(spark, three, lambda d: min_cluster_ad(
+        d, ["a", "b"], n_clusters=3).select("ts", "label"))
+    flagged = sorted(ts for ts, label in got if label == 1.0)
+    assert flagged == [t0 + dt.timedelta(minutes=i) for i in range(250, 300)]
 
 
 def test_corr_matrix_known_relationships(spark):

@@ -8,7 +8,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import series_df
+from tests.conftest import assert_layout_invariant, series_df
 
 
 def plan_of(df) -> str:
@@ -830,26 +830,7 @@ def test_drift_family_partition_invariant(spark, op):
             for s in ("a", "b", "c") for i in range(300)]
     df = spark.createDataFrame(
         rows, "source string, ts timestamp, value double")
-
-    keys = ("spark.sql.shuffle.partitions",
-            "spark.sql.adaptive.coalescePartitions.enabled")
-    prev = {k: spark.conf.get(k) for k in keys}
-    got = {}
-    try:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        for width in (1, 7):
-            spark.conf.set("spark.sql.shuffle.partitions", str(width))
-            for parts in (1, 13):
-                got[(width, parts)] = sorted(
-                    (tuple(r) for r in run(df.repartition(parts)).collect()),
-                    key=repr)
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
-    want = got[(1, 1)]
-    assert want
-    for layout, rows_ in got.items():
-        assert rows_ == want, layout
+    assert_layout_invariant(spark, df, run)
 
 
 def test_distribution_compare_rejects_unknown_stat(spark):

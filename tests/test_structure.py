@@ -1,0 +1,21 @@
+"""Spark-free guards on how the package is put together."""
+
+from __future__ import annotations
+
+import pathlib
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "adtk_spark"
+
+
+def test_exact_sum_type_spelled_only_in_exact_module():
+    """The exact-sum type ``decimal(38,9)`` is spelled only in
+    ``functions/exact.py``: every operator sums through its helpers
+    instead of re-rolling a local copy of the rule."""
+    hits = [
+        f"{path.relative_to(PKG)}:{lineno}"
+        for path in sorted(PKG.rglob("*.py"))
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if "decimal(38,9)" in line.replace(" ", "")
+    ]
+    assert hits, "functions/exact.py no longer defines the exact sum"
+    assert all(h.startswith("functions/exact.py:") for h in hits), hits

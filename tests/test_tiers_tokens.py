@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from adtk_spark.plans.gapfill import forward_fill, interpolate_linear, time_spine
 from adtk_spark.plans.tiers import build_tiers, rollup_raw, rollup_up, tier_series
 from adtk_spark.sources.tokens import token_corpus, token_equality_check, token_series
-from tests.conftest import assert_series, series_df
+from tests.conftest import assert_layout_invariant, assert_series, series_df
 
 
 def test_token_corpus_invariants(spark):
@@ -518,6 +518,16 @@ def test_seasonal_naive_anomaly_golden(spark):
     # all other observed residuals are 0 and unflagged
     flagged = [t for t, (_, _, f) in out.items() if f]
     assert flagged == [t3]
+    # real-valued input: identical rows at any partitioning
+    import random
+
+    rng = random.Random(485)
+    noisy = spark.createDataFrame(
+        [(s, base + dt.timedelta(hours=i), rng.gauss(10.0, 4.0))
+         for s in ("a", "b", "c") for i in range(24 * 10)],
+        "source string, ts timestamp, value double")
+    assert_layout_invariant(
+        spark, noisy, lambda d: seasonal_naive_anomaly(d, 86400, z=1.5))
 
 
 def test_seasonal_naive_plan_one_exchange_no_join(spark):
@@ -604,6 +614,17 @@ def test_rollup_slope_golden(spark):
     assert got[base] == (3, 2.0)
     assert got[base + dt.timedelta(hours=1)] == (1, None)
     assert got[base + dt.timedelta(hours=2)] == (2, None)
+    # real-valued input around 1e12 (a byte counter): a double sum of
+    # x*y would change with the partitioning, the exact one not
+    import random
+
+    rng = random.Random(583)
+    noisy = spark.createDataFrame(
+        [(s, base + dt.timedelta(seconds=rng.uniform(0, 4 * 3600)),
+          1e12 + rng.gauss(0.0, 1e6)) for s in ("a", "b", "c")
+         for _ in range(400)],
+        "source string, ts timestamp, value double")
+    assert_layout_invariant(spark, noisy, lambda d: rollup_slope(d, "1h"))
 
 
 def test_rollup_slope_plan_one_exchange(spark):
