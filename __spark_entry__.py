@@ -126,7 +126,7 @@ def q_rollup_sliding_5m(spark, sf_dir):
 
 def q_sketch_tier_1h(spark, sf_dir):
     """Sketch-carrying tier chain raw -> 1m -> 1h (plans/tiers.py
-    rollup_raw_sketch / rollup_up_sketch): drives t-digest construction
+    rollup_raw_sketch, then rollup_up): drives t-digest construction
     and merge under the driver. The oracle checks the exact algebraic
     columns against a direct 1h rollup from raw. Excluded on purpose:
     vq/vdigest (approximate, rank error O(1/delta) — no SQL equivalent;
@@ -134,11 +134,11 @@ def q_sketch_tier_1h(spark, sf_dir):
     keeps production double sums whose re-aggregation order is not
     hash-stable; the DECIMAL(38,9) oracle variant is covered by
     rollup_1h_2level)."""
-    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_up_sketch
+    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_up
 
     ev = _events(spark, sf_dir).select(
         F.col("event_type").alias("source"), "ts", "value")
-    t1h = rollup_up_sketch(rollup_raw_sketch(ev, "1m"), "1h")
+    t1h = rollup_up(rollup_raw_sketch(ev, "1m"), "1h")
     return t1h.select(
         "source", "bucket_ts", "cnt",
         F.round("vmin", 6).alias("vmin"),
@@ -1939,7 +1939,7 @@ def q_rollup_twa_1h(spark, sf_dir):
 
     ev = _events(spark, sf_dir).select(
         F.col("event_type").alias("source"), "ts", "value")
-    return rollup_twa(ev, "1h")
+    return rollup_twa(ev, "1h").drop("_w_us", "_vw")
 
 
 def q_psi_timeline(spark, sf_dir):
@@ -2182,17 +2182,17 @@ def q_customized_transformer(spark, sf_dir):
 
 
 def q_rollup_twa_up(spark, sf_dir):
-    """Upward TWA merge (plans/tiers.py rollup_twa_up): the 1d tier from
+    """Upward TWA merge (plans/tiers.py rollup_up): the 1d tier from
     the 1h tier's carried exact partials (integer weight micros + DECIMAL
     value-seconds), the raw point level never re-read. The oracle replays
     the hour-cut quantization then regroups to the day — the DECIMAL and
     integer sums re-associate exactly, so merged == replay bit-for-bit.
     Closes the mergeable-family oracle gap (r4 VERDICT item #4)."""
-    from adtk_spark.plans.tiers import rollup_twa, rollup_twa_up
+    from adtk_spark.plans.tiers import rollup_twa, rollup_up
 
     ev = _events(spark, sf_dir).select(
         F.col("event_type").alias("source"), "ts", "value")
-    return rollup_twa_up(rollup_twa(ev, "1h", carry_sums=True), "1d")
+    return rollup_up(rollup_twa(ev, "1h"), "1d").drop("_w_us", "_vw")
 
 
 _FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -2215,20 +2215,18 @@ def q_image_features(spark, sf_dir):
 
 
 def q_twa_route_3h(spark, sf_dir):
-    """Query-time TWA routing (plans/router.py route_twa): a 3-hour
-    time-weighted average served from the 1h carry-sums tier — the
+    """Query-time TWA routing (plans/router.py route_rollup): a 3-hour
+    time-weighted average served from the 1h TWA tier — its carried
     integer weight-micros and DECIMAL value-seconds partials regroup on
-    floor-epoch windows exactly, raw points never re-read (arithmetic
-    means route via route_rollup; TWA needs the partials or a 1-point
-    hour weighs like a 3600-point hour). Oracle = the same hour-cut
-    quantization regrouped at 10800 s."""
-    from adtk_spark.plans.router import route_twa
+    floor-epoch windows exactly, raw points never re-read (a mean of
+    hourly TWAs would weigh a 1-point hour like a 3600-point hour).
+    Oracle = the same hour-cut quantization regrouped at 10800 s."""
+    from adtk_spark.plans.router import route_rollup
     from adtk_spark.plans.tiers import rollup_twa
 
     ev = _events(spark, sf_dir).select(
         F.col("event_type").alias("source"), "ts", "value")
-    h = rollup_twa(ev, "1h", carry_sums=True)
-    return route_twa({"1h": h}, 10800)
+    return route_rollup({"1h": rollup_twa(ev, "1h")}, 10800)
 
 
 def q_embedding_dup(spark, sf_dir):

@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 DIGEST_TYPE = "struct<means:array<double>,weights:array<double>>"
+#: the compression of every stored digest: <= 200 centroids a tier row
 DEFAULT_DELTA = 200
 
 
@@ -127,14 +128,14 @@ def _udf(name: str):
     return _UDFS[name]
 
 
-def digest_of_sorted_arr(arr, delta: int = DEFAULT_DELTA):
+def digest_of_sorted_arr(arr):
     """Digest column from a per-bucket value array (need not be sorted)."""
-    return _udf("digest_of_arr")(arr, F.lit(int(delta)))
+    return _udf("digest_of_arr")(arr, F.lit(DEFAULT_DELTA))
 
 
-def merge_digests(digest_list, delta: int = DEFAULT_DELTA):
+def merge_digests(digest_list):
     """Digest column merging an array<digest> (from collect_list)."""
-    return _udf("merge_digest_lists")(digest_list, F.lit(int(delta)))
+    return _udf("merge_digest_lists")(digest_list, F.lit(DEFAULT_DELTA))
 
 
 def digest_quantile(digest, q: float, vmin, vmax):

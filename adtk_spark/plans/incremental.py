@@ -24,12 +24,16 @@ stage, the job and the re-plan bought nothing.
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .tiers import TIER_INTERVALS, rollup_raw, rollup_up, tier_bucket
+from .tiers import (
+    TIER_INTERVALS,
+    rollup_raw,
+    rollup_raw_sketch,
+    rollup_up,
+    tier_bucket,
+)
 
 RAW_TABLE = "raw"
 WATERMARK_KEY = "tiers_from_raw"
@@ -151,16 +155,15 @@ def refresh_tiers(
     *,
     series_of=None,
     sketch: bool = False,
-    delta: int = 200,
 ) -> dict:
     """Roll every unprocessed raw snapshot into the 1m/1h/1d tiers.
 
     ``series_of``: optional fn(DataFrame) -> (source, ts, value) long
     series; defaults to the token-corpus n_tok series.
 
-    ``sketch=True`` switches to the t-digest-carrying rollups
-    (plans/tiers.py rollup_raw_sketch / rollup_up_sketch): every tier
-    row then stores a mergeable digest and ``vq`` estimates the RAW
+    ``sketch=True`` builds the 1m tier with ``rollup_raw_sketch``:
+    every tier row then stores a mergeable digest (``rollup_up`` merges
+    whatever family the finer tier carries) and ``vq`` estimates the RAW
     distribution's quantile, while restatement/watermark semantics are
     identical — restated buckets rebuild their digests from the scoped
     raw windows, so incremental refresh never degrades sketch accuracy.
@@ -207,15 +210,6 @@ def refresh_tiers(
             "or reset the watermark and re-rollup) — mixing tier flavors "
             "would corrupt the quantile estimates or the reads"
         )
-    if sketch:
-        from .tiers import rollup_raw_sketch, rollup_up_sketch
-
-        r_raw = partial(rollup_raw_sketch, delta=delta)
-        r_up = partial(rollup_up_sketch, delta=delta)
-    else:
-        # module globals, looked up per call: tracers wrap these names
-        r_raw, r_up = rollup_raw, rollup_up
-
     series_of = series_of or token_series
     new_raw = catalog.read_since(spark, RAW_TABLE, wm).drop("snap")
     all_raw = catalog.read(spark, RAW_TABLE).drop("snap")
@@ -243,7 +237,8 @@ def refresh_tiers(
     stats = {}
     try:
         sc.setJobDescription("refresh_tiers tier_1m")
-        t1m = r_raw(scoped, "1m", quantile)
+        # module globals, looked up per call: tracers wrap these names
+        t1m = (rollup_raw_sketch if sketch else rollup_raw)(scoped, "1m", quantile)
         stats["tier_1m"] = commit_with_lineage(catalog, t1m, "tier_1m",
                                                {"raw_watermark": last})
 
@@ -266,7 +261,7 @@ def refresh_tiers(
                 ),
                 how="leftsemi",
             )
-            out = r_up(scoped_finer, tier, quantile)
+            out = rollup_up(scoped_finer, tier, quantile)
             stats[table] = commit_with_lineage(catalog, out, table,
                                                {"raw_watermark": last})
     finally:

@@ -3,13 +3,21 @@ can serve it, never from raw.
 
 The reference has no storage layer; this is the continuous-aggregate
 engine's query-time half (TimescaleDB's real-time aggregate planner /
-Grafana's auto-downsample): a request "give me R-second buckets of
-(cnt, min, max, sum, mean) over [start, end)" is served by re-merging
-the coarsest materialized tier whose bucket width divides R — the
-algebraic stats merge exactly (sum of sums, min of mins, count of
-counts; mean = vsum/cnt), so the routed answer is point-identical to
-aggregating raw, at a fraction of the scan cost (contract query
-``tier_route_2h`` proves the identity against a raw-side DuckDB oracle).
+Grafana's auto-downsample): a request "give me R-second buckets over
+[start, end)" is served by re-merging the coarsest materialized tier
+whose bucket width divides R, with the same per-family merge that
+builds a coarser tier (``tiers.merge_tier``; the tier's columns name
+its family):
+
+- stats: (cnt, min, max, sum, mean) merge exactly (sum of sums, min of
+  mins, count of counts; mean = vsum/cnt), so the routed answer is
+  point-identical to aggregating raw, at a fraction of the scan cost
+  (contract query ``tier_route_2h`` proves the identity against a
+  raw-side DuckDB oracle);
+- sketch: the same stats plus re-merged t-digests, whose ``vq``
+  estimates the raw distribution's quantile per window;
+- TWA: the integer weight micros and DECIMAL value-seconds regroup
+  exactly (contract query ``twa_route_3h``).
 
 Scale notes:
 - The time-range predicate lands on ``bucket_ts`` BEFORE the re-agg, so
@@ -33,13 +41,14 @@ import numbers
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.windows import exact_quantile_agg
-from .tiers import tier_mean, tier_stats, with_digest
+from .tiers import merge_tier, tier_family, tier_mean, tier_stats
 
 #: seconds per bucket of each materialized tier
 TIER_WIDTH_SECS = {"1m": 60, "1h": 3600, "1d": 86400}
 
 _ALGEBRAIC = ("cnt", "vmin", "vmax", "vsum")
+#: the routed output of a TWA tier (its carried sums stay behind)
+_TWA = ("covered_secs", "twa")
 
 
 def _check_resolution(resolution_secs) -> None:
@@ -96,19 +105,6 @@ def _in_range(df: DataFrame, col: str, start, end) -> DataFrame:
     return df
 
 
-def _serving_tier(tiers: dict[str, DataFrame], resolution_secs: int,
-                  start, end, available, kind: str,
-                  fallback: str) -> tuple[str, DataFrame]:
-    """The tier ``pick_tier`` chooses from ``tiers`` and its rows in
-    ``[start, end)``; KeyError naming ``fallback`` when none qualifies."""
-    name = pick_tier(resolution_secs, available, start=start)
-    if name is None or name not in tiers:
-        raise KeyError(
-            f"no materialized {kind}tier divides resolution="
-            f"{resolution_secs}s (have {sorted(tiers)}); {fallback}")
-    return name, _in_range(tiers[name], "bucket_ts", start, end)
-
-
 def _epoch_bucket(ts_col: str, resolution_secs: int) -> Column:
     """``bucket_ts`` of the floor-epoch ``resolution_secs`` window."""
     epoch = F.unix_timestamp(F.col(ts_col)).cast("long")
@@ -127,72 +123,54 @@ def route_rollup(
     available: dict | None = None,
 ) -> DataFrame:
     """Serve an R-second rollup over [start, end) from the coarsest
-    qualifying tier in ``tiers`` (as built by ``build_tiers`` /
-    TierCatalog reads: columns source, bucket_ts, cnt, vmin, vmax,
-    vsum, mean).
+    qualifying tier in ``tiers`` (``pick_tier``), in the family the
+    tiers carry (``tiers.tier_family``):
 
-    ``quantile`` (if set) adds ``vq`` = exact type-7 quantile of the
-    serving tier's ``mean`` points per output window — the same
-    per-tier series semantics as ``rollup_up``. Raises KeyError when no
-    tier divides R (the caller should then aggregate raw via
-    ``rollup_at`` — routing exists precisely to avoid that scan, so it
-    is an explicit decision, not a silent fallback).
+    - stats (``build_tiers`` / TierCatalog reads): source, bucket_ts,
+      cnt, vmin, vmax, vsum, mean; ``quantile`` (if set) adds ``vq``,
+      the exact type-7 quantile of the serving tier's ``mean`` points
+      per output window — the same per-tier series semantics as
+      ``rollup_up``.
+    - sketch (``rollup_raw_sketch`` chains): the stats plus the
+      re-merged ``vdigest`` and its ``vq``, which estimates the RAW
+      distribution's ``quantile`` (0.5 when None) per window, rank
+      error O(1/delta).
+    - TWA (``rollup_twa`` chains): source, bucket_ts, covered_secs,
+      twa. A mean of hourly TWAs would weight a 1-point hour like a
+      3600-point hour; the carried weight micros and value-seconds
+      re-associate exactly instead, so a routed window equals
+      ``rollup_twa`` at that width wherever window boundaries align with
+      the finer tier's segment cuts.
+
+    Raises KeyError when no tier divides R (the caller should then
+    aggregate raw via ``rollup_at``, ``rollup_twa`` or
+    ``rollup_raw_sketch`` — routing exists precisely to avoid that scan,
+    so it is an explicit decision, not a silent fallback).
     """
-    name, t = _serving_tier(tiers, resolution_secs, start, end, available,
-                            "", "aggregate from raw explicitly")
-    if TIER_WIDTH_SECS[name] == resolution_secs and quantile is None:
-        # exact-width fast path: filter + project, no shuffle
-        return t.select(source_col, "bucket_ts", *_ALGEBRAIC, "mean")
-
-    aggs = tier_stats()
-    if quantile is not None:
-        aggs.append(exact_quantile_agg(F.col("mean"), quantile).alias("vq"))
-    return (t.groupBy(source_col, _epoch_bucket("bucket_ts", resolution_secs))
-            .agg(*aggs).select("*", tier_mean()))
+    name = pick_tier(resolution_secs, available, start=start)
+    if name is None or name not in tiers:
+        raise KeyError(
+            f"no materialized tier divides resolution={resolution_secs}s "
+            f"(have {sorted(tiers)}); aggregate from raw explicitly")
+    t = tiers[name]
+    return _merge_routed(_in_range(t, "bucket_ts", start, end), name,
+                         resolution_secs, quantile, tier_family(t.columns),
+                         source_col)
 
 
-def route_twa(
-    tiers: dict[str, DataFrame],
-    resolution_secs: int,
-    start=None,
-    end=None,
-    *,
-    source_col: str = "source",
-    available: dict | None = None,
-) -> DataFrame:
-    """Serve an R-second TIME-WEIGHTED average over [start, end) from
-    the coarsest qualifying carry-sums TWA tier
-    (``rollup_twa(..., carry_sums=True)``: columns source, bucket_ts,
-    _w_us, _vw, covered_secs, twa).
-
-    Plain arithmetic means re-merge through ``route_rollup``; TWA can't
-    (a mean of hourly TWAs weights a 1-point hour like a 3600-point
-    hour). The carried integer weight-micros and DECIMAL value-seconds
-    partials re-associate EXACTLY, so a routed window equals
-    ``rollup_twa`` run at that width wherever window boundaries align
-    with the finer tier's segment cuts — the same contract as
-    ``rollup_twa_up``, at query time and at any dividing resolution
-    (fixed-width epoch windows: R is a query resolution, not a calendar
-    retention tier). One tier-row groupBy; raw points never re-read.
-    Same retention-ledger semantics as ``pick_tier``; raises KeyError
-    when no tier divides R.
-    """
-    name, t = _serving_tier(tiers, resolution_secs, start, end, available,
-                            "TWA ", "run rollup_twa on raw explicitly")
+def _merge_routed(t: DataFrame, name: str, resolution_secs: int, quantile,
+                  family: str, source_col: str) -> DataFrame:
+    """Rows ``t`` of tier ``name`` (of ``family``) merged to
+    ``resolution_secs`` windows (``tiers.merge_tier``)."""
     if TIER_WIDTH_SECS[name] == resolution_secs:
         # exact-width fast path: filter + project, no shuffle
-        return t.select(source_col, "bucket_ts", "covered_secs", "twa")
-    g = t.groupBy(source_col, _epoch_bucket("bucket_ts", resolution_secs)).agg(
-        F.sum("_w_us").alias("_w_us"), F.sum("_vw").alias("_vw"))
-    return g.select(
-        source_col, "bucket_ts",
-        F.round(F.col("_w_us").cast("double") / 1000000.0, 6)
-        .alias("covered_secs"),
-        F.round(
-            F.col("_vw").cast("double")
-            / (F.col("_w_us").cast("double") / 1000000.0), 6,
-        ).alias("twa"),
-    )
+        if family == "twa":
+            return t.select(source_col, "bucket_ts", *_TWA)
+        if family == "stats" and quantile is None:
+            return t.select(source_col, "bucket_ts", *_ALGEBRAIC, "mean")
+    out = merge_tier(t, _epoch_bucket("bucket_ts", resolution_secs), quantile,
+                     family=family, source_col=source_col)
+    return out.select(source_col, "bucket_ts", *_TWA) if family == "twa" else out
 
 
 def rollup_at(
@@ -220,33 +198,6 @@ def rollup_at(
     )
 
 
-def route_rollup_sketch(
-    tiers: dict[str, DataFrame],
-    resolution_secs: int,
-    start=None,
-    end=None,
-    quantile: float = 0.5,
-    delta: int = 200,
-    *,
-    source_col: str = "source",
-    available: dict | None = None,
-) -> DataFrame:
-    """Route over SKETCH-carrying tiers (``rollup_raw_sketch`` /
-    ``rollup_up_sketch`` output): algebraic stats merge exactly and the
-    per-window ``vq`` re-merges the serving tier's t-digests, so the
-    routed answer estimates the RAW value distribution's quantile at
-    the requested resolution (rank error O(1/delta)) — without the
-    coarser-tier caveat of quantile-of-means, and still never touching
-    raw. Same tier-choice rule as ``route_rollup``."""
-    from ..functions.sketch import merge_digests
-
-    _, t = _serving_tier(tiers, resolution_secs, start, end, available,
-                         "sketch ", "use rollup_raw_sketch on raw")
-    agged = t.groupBy(source_col, _epoch_bucket("bucket_ts", resolution_secs)).agg(
-        *tier_stats(), F.collect_list("vdigest").alias("_parts"))
-    return with_digest(agged, merge_digests(F.col("_parts"), delta), quantile)
-
-
 def route_from_catalog(
     spark,
     catalog,
@@ -268,10 +219,10 @@ def route_from_catalog(
     read-optimized bucketed view when one exists.
 
     The ``[start, end)`` predicate is applied once: by the catalog's
-    range read, or on the bucketed view. The bounded tier then goes to
-    ``route_rollup`` with no bounds and no retention cutoff, as both
-    were checked here. Raises ValueError unless ``resolution_secs`` is
-    a positive int."""
+    range read, or on the bucketed view. The bounded tier is then merged
+    as ``route_rollup`` merges it, in the family the manifest's recorded
+    columns name; ``quantile`` as there. Raises ValueError unless
+    ``resolution_secs`` is a positive int."""
     available = {t: catalog.get_retention(tbl) for t, tbl in tables.items()}
     name = pick_tier(resolution_secs, available, start=start)
     if name is None:
@@ -297,5 +248,7 @@ def route_from_catalog(
         df = read_tier_latest(catalog, spark, tables[name], start, end)
     if df is None:
         raise KeyError(f"tier table {tables[name]!r} has no committed snapshots")
-    return route_rollup({name: df}, resolution_secs, quantile=quantile,
-                        source_col=source_col, available={name: None})
+    # the family from the manifest's recorded schema: no JVM round trip
+    family = tier_family(catalog.columns(spark, tables[name]))
+    return _merge_routed(df, name, resolution_secs, quantile, family,
+                         source_col)

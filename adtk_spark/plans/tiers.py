@@ -13,7 +13,9 @@ The tier algebra is defined once: ``tier_bucket`` (the bucket key),
 ``tier_mean`` and ``with_digest`` (the t-digest tail). Every producer of
 tier rows uses them — the rollups here, the router's merges and raw
 fallback, and the streaming 1m rollups — so ``tier_stats`` is the one
-place where the type of ``vsum`` is decided.
+place where the type of ``vsum`` is decided. Each routed family (stats,
+sketch, TWA) is merged once, by ``merge_tier``: ``rollup_up`` calls it
+with a coarser tier's bucket key, the router with a query window.
 
 The statistics built on floating-point sums (drift scores, seasonality,
 slopes, SAX, profiles) take their sums from ``functions/exact.py``, so
@@ -115,6 +117,56 @@ def rollup_raw(
     )
 
 
+def tier_family(columns) -> str:
+    """The mergeable family a tier's ``columns`` carry: ``"sketch"``
+    (a ``vdigest`` t-digest), ``"twa"`` (the ``_w_us`` / ``_vw``
+    time-weight sums) or ``"stats"`` (the ``tier_stats`` columns and
+    ``mean``)."""
+    if "vdigest" in columns:
+        return "sketch"
+    return "twa" if "_w_us" in columns else "stats"
+
+
+def merge_tier(
+    finer: DataFrame,
+    key: Column,
+    quantile: float | None = None,
+    *,
+    family: str,
+    source_col: str = "source",
+) -> DataFrame:
+    """Re-merge a finer tier's stored state per (``source_col``,
+    ``key``), never its raw points: the one merge of each family, for a
+    coarser tier (``rollup_up``, ``key`` a ``tier_bucket``) and for a
+    routed read (``route_rollup``, ``key`` a floor-epoch window). Both
+    keys are aliased ``bucket_ts``.
+
+    - ``stats``: ``tier_stats`` merged exactly, then ``mean``; with a
+      ``quantile``, ``vq`` is the exact quantile of the finer tier's
+      ``mean`` points (per-tier series semantics).
+    - ``sketch``: the same stats plus the finer digests merged by concat
+      and one re-compress (``with_digest``), so ``vq`` estimates the RAW
+      distribution's quantile at every level; ``quantile`` None is 0.5.
+    - ``twa``: the integer weight micros and DECIMAL value-seconds sum
+      exactly, then ``twa_finish``; ``quantile`` is not used.
+    """
+    g = finer.groupBy(source_col, key)
+    if family == "sketch":
+        from ..functions.sketch import merge_digests
+
+        agged = g.agg(*tier_stats(), F.collect_list("vdigest").alias("_parts"))
+        return with_digest(agged, merge_digests(F.col("_parts")),
+                           0.5 if quantile is None else quantile)
+    if family == "twa":
+        return twa_finish(g.agg(F.sum("_w_us").alias("_w_us"),
+                                F.sum("_vw").alias("_vw")),
+                          source_col=source_col)
+    aggs = tier_stats()
+    if quantile is not None:
+        aggs.append(exact_quantile_agg(F.col("mean"), quantile).alias("vq"))
+    return g.agg(*aggs).select("*", tier_mean())
+
+
 def rollup_up(
     finer: DataFrame,
     tier: str,
@@ -122,15 +174,14 @@ def rollup_up(
     *,
     source_col: str = "source",
 ) -> DataFrame:
-    """Re-aggregate a finer tier into a coarser one. Algebraic stats
-    merge exactly; the quantile is the quantile of the finer tier's mean
-    points (per-tier series semantics)."""
-    return (
-        finer.groupBy(source_col, tier_bucket(F.col("bucket_ts"), tier))
-        .agg(*tier_stats(),
-             exact_quantile_agg(F.col("mean"), quantile).alias("vq"))
-        .select("*", tier_mean())
-    )
+    """Re-aggregate a finer tier into a coarser one, in the family its
+    columns carry (``tier_family``; see ``merge_tier``). Algebraic stats
+    and TWA sums merge exactly; the stats quantile is the quantile of
+    the finer tier's mean points, the sketch quantile re-merges the
+    digests. The result carries the same state, so tiers chain
+    1m -> 1h -> 1d in every family."""
+    return merge_tier(finer, tier_bucket(F.col("bucket_ts"), tier), quantile,
+                      family=tier_family(finer.columns), source_col=source_col)
 
 
 def build_tiers(
@@ -219,7 +270,6 @@ def rollup_raw_sketch(
     df: DataFrame,
     tier: str = "1m",
     quantile: float = 0.5,
-    delta: int = 200,
     *,
     source_col: str = "source",
     ts_col: str = "ts",
@@ -229,40 +279,21 @@ def rollup_raw_sketch(
     raw value distribution (functions/sketch.py).
 
     This is the 100 TB scale path for *raw-distribution* quantiles at
-    coarse tiers: the exact chain (``rollup_raw``/``rollup_up``) defines
-    ``vq`` over the finer tier's mean points, and recovering the true
-    raw quantile at 1d would otherwise re-scan raw. Here every tier row
-    stores <= ``delta`` centroids (~3 KB) that coarser tiers re-merge
+    coarse tiers: the exact stats chain defines ``vq`` over the finer
+    tier's mean points, and recovering the true raw quantile at 1d
+    would otherwise re-scan raw. Here every tier row stores <= 200
+    centroids (``sketch.DEFAULT_DELTA``, ~3 KB) that coarser tiers
+    (``rollup_up``) and routed reads (``route_rollup``) re-merge
     algebraically, so the 1d raw quantile costs one pass over the 1h
-    rows — never a raw re-scan. ``vq`` is the digest estimate
-    (rank error O(1/delta)); cnt/min/max/sum/mean stay exact.
+    rows — never a raw re-scan. ``vq`` is the digest estimate (rank
+    error O(1/delta)); cnt/min/max/sum/mean stay exact.
     """
     from ..functions.sketch import digest_of_sorted_arr
 
     v = F.col(value_col)
     agged = df.groupBy(source_col, tier_bucket(F.col(ts_col), tier)).agg(
         *tier_stats(v), F.collect_list(v).alias("_parts"))
-    return with_digest(agged, digest_of_sorted_arr(F.col("_parts"), delta),
-                       quantile)
-
-
-def rollup_up_sketch(
-    finer: DataFrame,
-    tier: str,
-    quantile: float = 0.5,
-    delta: int = 200,
-    *,
-    source_col: str = "source",
-) -> DataFrame:
-    """Re-aggregate a sketch-carrying tier: algebraic stats merge
-    exactly; digests merge by concat + one vectorized re-compress, so
-    ``vq`` estimates the *raw* distribution's quantile at every level
-    without touching raw again."""
-    from ..functions.sketch import merge_digests
-
-    agged = finer.groupBy(source_col, tier_bucket(F.col("bucket_ts"), tier)).agg(
-        *tier_stats(), F.collect_list("vdigest").alias("_parts"))
-    return with_digest(agged, merge_digests(F.col("_parts"), delta), quantile)
+    return with_digest(agged, digest_of_sorted_arr(F.col("_parts")), quantile)
 
 
 def rollup_ohlc(
@@ -578,7 +609,6 @@ def rollup_twa(
     source_col: str = "source",
     ts_col: str = "ts",
     value_col: str = "value",
-    carry_sums: bool = False,
 ) -> DataFrame:
     """Time-weighted average per (source, bucket) for IRREGULAR series
     (TimescaleDB ``time_weight('LOCF')`` analogue): each observation
@@ -597,9 +627,9 @@ def rollup_twa(
     micros are integers, each ``value x overlap-seconds`` term is
     quantized to 1e-6 and DECIMAL-summed, the weight sum is an exact
     integer — one final division, bit-stable at any parallelism.
-    ``carry_sums=True`` additionally emits the exact ``_w_us``/``_vw``
-    partials so ``rollup_twa_up`` can merge the tier upward without
-    re-reading raw points.
+    The tier keeps those exact partials as ``_w_us``/``_vw`` next to
+    ``covered_secs`` and ``twa`` (``twa_finish``), so ``rollup_up`` and
+    ``route_rollup`` merge it without re-reading raw points.
     """
     trunc = TIER_INTERVALS[tier]
     # CALENDAR interval stepping, not fixed 60/3600/86400 s: with a
@@ -639,45 +669,23 @@ def rollup_twa(
         F.sum(ov).alias("_w_us"),
         F.sum(term).alias("_vw"),
     )
-    out = agged.select(
-        source_col, "bucket_ts", "_w_us", "_vw",
-        F.round(F.col("_w_us").cast("double") / 1000000.0, 6)
-        .alias("covered_secs"),
-        F.round(
-            F.col("_vw").cast("double")
-            / (F.col("_w_us").cast("double") / 1000000.0), 6,
-        ).alias("twa"),
-    )
-    if carry_sums:
-        return out
-    return out.drop("_w_us", "_vw")
+    return twa_finish(agged, source_col=source_col)
 
 
-def rollup_twa_up(
-    twa_finer: DataFrame,
-    tier: str = "1d",
-    *,
-    source_col: str = "source",
-) -> DataFrame:
-    """TWA at a COARSER tier merged from the finer tier's carried sums
-    (``rollup_twa(..., carry_sums=True)``) — one groupBy over tier
-    rows, the raw point level never re-read: the weight micros sum
-    EXACTLY (integers) and the value-seconds DECIMALs sum exactly, so
-    the merged TWA differs from a direct coarse rollup only by where
-    segments were cut for quantization (hour vs day boundaries) —
+def twa_finish(sums: DataFrame, *, source_col: str = "source") -> DataFrame:
+    """A TWA tier's rows from its exact sums: ``_w_us`` (integer weight
+    micros) and ``_vw`` (DECIMAL value-seconds), then ``covered_secs``
+    and ``twa``, each one division of the sums rounded to 6 places.
+
+    A merged tier differs from a direct coarse ``rollup_twa`` only by
+    where segments were cut for quantization (hour vs day boundaries):
     bounded by 5e-7 x pieces / covered_secs, far below the 1e-6 output
-    rounding for any real bucket (tolerance-tested).
-    """
-    g = twa_finer.groupBy(source_col, tier_bucket(F.col("bucket_ts"), tier)).agg(
-        F.sum("_w_us").alias("_w_us"), F.sum("_vw").alias("_vw"))
-    return g.select(
-        source_col, "bucket_ts",
-        F.round(F.col("_w_us").cast("double") / 1000000.0, 6)
-        .alias("covered_secs"),
-        F.round(
-            F.col("_vw").cast("double")
-            / (F.col("_w_us").cast("double") / 1000000.0), 6,
-        ).alias("twa"),
+    rounding for any real bucket (tolerance-tested)."""
+    secs = F.col("_w_us").cast("double") / 1000000.0
+    return sums.select(
+        source_col, "bucket_ts", "_w_us", "_vw",
+        F.round(secs, 6).alias("covered_secs"),
+        F.round(F.col("_vw").cast("double") / secs, 6).alias("twa"),
     )
 
 

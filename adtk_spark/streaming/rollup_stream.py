@@ -16,6 +16,8 @@ have the batch tier's values, types and column order.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,6 +25,7 @@ from ..plans.router import TIER_WIDTH_SECS
 from ..plans.tiers import (
     bin_counts,
     bin_index,
+    merge_tier,
     psi_sum,
     tier_mean,
     tier_stats,
@@ -61,14 +64,13 @@ def streaming_rollup_1m_sketch(
     spark: SparkSession,
     source_dir: str,
     watermark: str = "5 minutes",
-    delta: int = 200,
     quantile: float = 0.5,
 ) -> DataFrame:
     """Sketch-carrying variant of the streaming 1m rollup: each finalized
     bucket also gets a mergeable t-digest of its raw values (same
     columns, in the same order, as the batch ``rollup_raw_sketch``), so
-    streamed snapshots can feed ``rollup_up_sketch`` re-aggregation and
-    ``route_rollup_sketch`` raw-distribution quantile queries directly —
+    streamed snapshots can feed ``rollup_up`` re-aggregation and
+    ``route_rollup`` raw-distribution quantile queries directly —
     the streaming ingest edge stops being a sketch-less second class.
 
     State cost: the only non-algebraic aggregate is the per-bucket
@@ -80,8 +82,7 @@ def streaming_rollup_1m_sketch(
 
     agged = _stream_1m(spark, source_dir, watermark,
                        F.collect_list("value").alias("_parts"))
-    return with_digest(agged, digest_of_sorted_arr(F.col("_parts"), delta),
-                       quantile)
+    return with_digest(agged, digest_of_sorted_arr(F.col("_parts")), quantile)
 
 
 def streaming_psi_drift(
@@ -213,7 +214,7 @@ def streaming_twa_partials(
     buckets and emitted as EXACT mergeable partial rows —
     ``w_us`` integer overlap micros and ``vw_u`` the value-seconds term
     in 1e-6 units, quantized with the SAME HALF_UP-at-6 rule as
-    ``rollup_twa(carry_sums=True)`` (``Decimal(repr(t))`` replicates
+    ``rollup_twa``'s ``_vw`` (``Decimal(repr(t))`` replicates
     Spark's BigDecimal.valueOf(double) semantics bit-for-bit; probed
     over 4,300 adversarial doubles). Streamed partials therefore merge
     with batch partials exactly: ``twa_merge_partials`` over this
@@ -232,7 +233,7 @@ def streaming_twa_partials(
     """
     import numpy as np
     import pandas as pd
-    from decimal import Decimal, ROUND_HALF_UP
+    from decimal import ROUND_HALF_UP
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -293,20 +294,19 @@ def twa_merge_partials(
     partials: DataFrame, *, source_col: str = "source",
 ) -> DataFrame:
     """(source, bucket_ts, covered_secs, twa) from accumulated partial
-    rows (streamed epochs and/or batch carry-sums converted to 1e-6
-    units): integer sums are exact in any order, one final division —
-    equals the batch ``rollup_twa`` output on the same points."""
-    g = partials.groupBy(source_col, "bucket_ts").agg(
-        F.sum("w_us").alias("w_us"), F.sum("vw_u").alias("vw_u"))
-    return g.select(
-        source_col, "bucket_ts",
-        F.round(F.col("w_us").cast("double") / 1000000.0, 6)
-        .alias("covered_secs"),
-        F.round(
-            (F.col("vw_u").cast("double") / 1000000.0)
-            / (F.col("w_us").cast("double") / 1000000.0), 6,
-        ).alias("twa"),
-    )
+    rows (streamed epochs and/or batch ``_w_us``/``_vw`` sums converted
+    to 1e-6 units): ``vw_u`` becomes the tier's DECIMAL(38,6)
+    ``_vw`` exactly (unscaled value ``vw_u``, no double step), and the
+    rows merge per bucket with the tier merge (``merge_tier``) — exact
+    sums in any order, one final division, equal to the batch
+    ``rollup_twa`` output on the same points."""
+    sums = partials.select(
+        source_col, "bucket_ts", F.col("w_us").alias("_w_us"),
+        (F.col("vw_u").cast("decimal(38,0)") * F.lit(Decimal("0.000001")))
+        .cast("decimal(38,6)").alias("_vw"))
+    merged = merge_tier(sums, F.col("bucket_ts"), family="twa",
+                        source_col=source_col)
+    return merged.select(source_col, "bucket_ts", "covered_secs", "twa")
 
 
 def streaming_dedup_exact(

@@ -89,7 +89,7 @@ def main(argv=None):
                    help="with --route on a sketch-flavored catalog: also "
                         "serve this RAW-distribution quantile by "
                         "re-merging the routed tier's t-digests "
-                        "(route_rollup_sketch)")
+                        "(route_from_catalog)")
     p.add_argument("--m4", default=None, metavar="WIDTH",
                    help="with --route: M4-downsample the routed mean "
                         "series to WIDTH pixel columns (e.g. '15 minutes') "
@@ -357,19 +357,14 @@ def main(argv=None):
             "rows": routed.count(),
         }
         if args.route_q is not None:
-            from adtk_spark.plans.incremental import read_tier_latest
-            from adtk_spark.plans.router import route_rollup_sketch
-
-            name = pick_tier(res, avail, start=start)
-            tier = read_tier_latest(catalog, spark, tables[name], start, end)
-            if tier is None or "vdigest" not in tier.columns:
+            served = report["route"]["served_by"]
+            if "vdigest" not in catalog.columns(spark, tables[served]):
                 raise ValueError(
                     "--route-q needs a sketch-flavored catalog (run the "
                     "refresh with --sketch / the ingest with "
                     "--stream-sketch); the routed tier has no vdigest")
-            sq = route_rollup_sketch({name: tier}, res, start, end,
-                                     quantile=args.route_q,
-                                     available={name: avail[name]})
+            sq = route_from_catalog(spark, catalog, tables, res, start, end,
+                                    quantile=args.route_q)
             qrow = sq.agg(
                 F.count("*").alias("n"),
                 F.avg("vq").alias("avg_vq")).collect()[0]

@@ -714,11 +714,13 @@ def test_rollup_twa_up_merges_exactly(spark):
     """The upward TWA merge: weight micros sum exactly, merged TWA
     equals a direct coarse rollup within the hour-vs-day quantization
     bound (5e-7 per piece / covered), and on hour-aligned data the two
-    are IDENTICAL (same pieces, same quantization)."""
+    are IDENTICAL (same pieces, same quantization). A merged tier
+    carries its sums, so the 3-level chain 1m -> 1h -> 1d holds the
+    same contract."""
     import datetime as dt
     import random
 
-    from adtk_spark.plans.tiers import rollup_twa, rollup_twa_up
+    from adtk_spark.plans.tiers import rollup_twa, rollup_up
 
     base = dt.datetime(2025, 1, 1)
     rng = random.Random(7)
@@ -727,26 +729,31 @@ def test_rollup_twa_up_merges_exactly(spark):
             for s in sorted(rng.sample(range(0, 3 * 86400), 500))]
     df = spark.createDataFrame(
         rows, "source string, ts timestamp, value double")
-    merged = {r["bucket_ts"]: (r["covered_secs"], r["twa"])
-              for r in rollup_twa_up(
-                  rollup_twa(df, "1h", carry_sums=True), "1d").collect()}
+    chains = {
+        "1h->1d": lambda d: rollup_up(rollup_twa(d, "1h"), "1d"),
+        "1m->1h->1d": lambda d: rollup_up(rollup_up(rollup_twa(d, "1m"), "1h"), "1d"),
+    }
     direct = {r["bucket_ts"]: (r["covered_secs"], r["twa"])
               for r in rollup_twa(df, "1d").collect()}
-    assert set(merged) == set(direct)
-    for b in direct:
-        assert merged[b][0] == direct[b][0], b          # weights exact
-        assert abs(merged[b][1] - direct[b][1]) < 1e-3, b
+    for name, chain in chains.items():
+        merged = {r["bucket_ts"]: (r["covered_secs"], r["twa"])
+                  for r in chain(df).collect()}
+        assert set(merged) == set(direct), name
+        for b in direct:
+            assert merged[b][0] == direct[b][0], (name, b)   # weights exact
+            assert abs(merged[b][1] - direct[b][1]) < 1e-3, (name, b)
 
     # hour-aligned observations: identical piece set -> identical twa
     rows2 = [("a", base + dt.timedelta(hours=h), float(h % 5))
              for h in range(49)]
     df2 = spark.createDataFrame(
         rows2, "source string, ts timestamp, value double")
-    m2 = {r["bucket_ts"]: (r["covered_secs"], r["twa"]) for r in
-          rollup_twa_up(rollup_twa(df2, "1h", carry_sums=True), "1d").collect()}
     d2 = {r["bucket_ts"]: (r["covered_secs"], r["twa"])
           for r in rollup_twa(df2, "1d").collect()}
-    assert m2 == d2
+    for name, chain in chains.items():
+        m2 = {r["bucket_ts"]: (r["covered_secs"], r["twa"])
+              for r in chain(df2).collect()}
+        assert m2 == d2, name
 
 
 def test_rollup_twa_two_exchanges(spark):

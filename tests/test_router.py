@@ -151,14 +151,13 @@ def test_rollup_at_matches_direct(spark):
 
 
 def test_route_sketch_raw_distribution_quantile(spark):
-    from adtk_spark.plans.router import route_rollup_sketch
-    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_up_sketch
+    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_up
     from tests.test_sketch import rank_of
 
     raw = _raw(spark)
     s1m = rollup_raw_sketch(raw, "1m")
-    s1h = rollup_up_sketch(s1m, "1h")
-    routed = route_rollup_sketch({"1m": s1m, "1h": s1h}, 7200, quantile=0.5)
+    s1h = rollup_up(s1m, "1h")
+    routed = route_rollup({"1m": s1m, "1h": s1h}, 7200, quantile=0.5)
     # algebraic columns stay exact through the sketch path
     _cmp(routed.drop("vq", "vdigest"), _direct(raw, 7200))
     # vq estimates the RAW distribution per 2h window within rank error
@@ -202,13 +201,12 @@ def test_route_from_catalog_retention_steering(spark, tmp_path):
 
 
 def test_route_twa_matches_direct_and_fast_path(spark):
-    """route_twa from 1h carry-sums partials at 3h == rollup_twa-style
+    """route_rollup from the 1h TWA tier's partials at 3h == rollup_twa-style
     direct computation at 3h wherever segment cuts align (here always:
     hour cuts subdivide 3h windows); exact-width routing is a pure
     projection; no dividing tier raises."""
     import datetime as dt
 
-    from adtk_spark.plans.router import route_twa
     from adtk_spark.plans.tiers import rollup_twa
 
     t0 = dt.datetime(2025, 1, 1)
@@ -219,13 +217,13 @@ def test_route_twa_matches_direct_and_fast_path(spark):
             rows.append((s, t0 + dt.timedelta(minutes=7 * i + (i % 3)),
                          float((i * 13) % 50)))
     df = spark.createDataFrame(rows, "source string, ts timestamp, value double")
-    h = rollup_twa(df, "1h", carry_sums=True)
+    h = rollup_twa(df, "1h")
 
     routed = {(r["source"], r["bucket_ts"]): (r["covered_secs"], r["twa"])
-              for r in route_twa({"1h": h}, 10800).collect()}
+              for r in route_rollup({"1h": h}, 10800).collect()}
 
     # direct: same hour-cut quantized partials regrouped at 3h on the
-    # driver (the rollup_twa_up exactness contract at query time)
+    # driver (the upward TWA merge's exactness contract at query time)
     agg = {}
     for r in h.collect():
         key = (r["source"],
@@ -240,11 +238,54 @@ def test_route_twa_matches_direct_and_fast_path(spark):
         assert abs(twa - round(float(vw) / (w / 1e6), 6)) < 1e-9, k
 
     # exact width: projection only (no new Exchange beyond the tier's)
-    exact = route_twa({"1h": h}, 3600)
+    exact = route_rollup({"1h": h}, 3600)
     assert {r[0] for r in exact.select("source").distinct().collect()} == {"a", "b"}
 
-    with pytest.raises(KeyError, match="TWA tier"):
-        route_twa({"1h": h}, 5400)  # 1.5h: 3600 does not divide it
+    with pytest.raises(KeyError, match="materialized tier"):
+        route_rollup({"1h": h}, 5400)  # 1.5h: 3600 does not divide it
+
+
+def test_route_from_catalog_serves_each_family(spark, tmp_path):
+    """A stored sketch or TWA tier routes through route_from_catalog (the
+    family read off the manifest schema) to the rows route_rollup gives
+    for the same tier in memory."""
+    from adtk_spark.plans.router import route_from_catalog
+    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_twa
+    from adtk_spark.sources.catalog import TierCatalog
+
+    raw = _raw(spark)
+    cat = TierCatalog(str(tmp_path / "cat"))
+    cases = {
+        "sketch": (rollup_raw_sketch(raw, "1m"),
+                   ["cnt", "vmin", "vmax", "vsum", "vdigest", "mean", "vq"]),
+        "twa": (rollup_twa(raw, "1m"), ["covered_secs", "twa"]),
+    }
+    for family, (tier, cols) in cases.items():
+        cat.commit(tier, family)
+        got = route_from_catalog(spark, cat, {"1m": family}, 600)
+        want = route_rollup({"1m": tier}, 600)
+        assert got.columns == want.columns == ["source", "bucket_ts", *cols]
+        exact = [c for c in got.columns if c not in ("vdigest", "vq")]
+        assert sorted(map(tuple, got.select(exact).collect())) == \
+            sorted(map(tuple, want.select(exact).collect())), family
+
+
+@pytest.mark.parametrize("family", ["sketch", "twa"])
+def test_route_rollup_families_layout_invariant(spark, family):
+    """route_rollup over a sketch tier (its exact columns) and over a TWA
+    tier (covered_secs, twa) emits the same rows whatever the input
+    partitioning and the shuffle width."""
+    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_twa
+    from tests.conftest import assert_layout_invariant
+
+    def run(d):
+        if family == "twa":
+            return route_rollup({"1m": rollup_twa(d, "1m")}, 600)
+        return route_rollup({"1m": rollup_raw_sketch(d, "1m")}, 600).select(
+            "source", "bucket_ts", "cnt", "vmin", "vmax", "vsum", "mean")
+
+    rows = assert_layout_invariant(spark, _raw(spark), run)
+    assert len(rows) == 2 * 13  # 600 points 13 s apart: 13 windows a source
 
 
 @pytest.mark.parametrize("bad", [0, -60, True, 60.0, "60", None])
@@ -252,22 +293,20 @@ def test_bad_resolution_raises(spark, tmp_path, bad):
     """A resolution that is not a positive int raises ValueError on
     every routing entry point (0 used to route to 1d, -60 to 1m, then
     group by pmod(epoch, R) without an error)."""
-    from adtk_spark.plans.router import (
-        rollup_at,
-        route_from_catalog,
-        route_rollup_sketch,
-        route_twa,
-    )
+    from adtk_spark.plans.router import rollup_at, route_from_catalog
+    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_twa
     from adtk_spark.sources.catalog import TierCatalog
 
     raw = _raw(spark, n=20)
     tiers = build_tiers(raw)
+    sketch = {"1m": rollup_raw_sketch(raw, "1m")}
+    twa = {"1h": rollup_twa(raw, "1h")}
     cat = TierCatalog(str(tmp_path / "cat"))
     cat.commit(tiers["1m"], "tier_1m")
     calls = [lambda: pick_tier(bad),
              lambda: route_rollup(tiers, bad),
-             lambda: route_twa(tiers, bad),
-             lambda: route_rollup_sketch(tiers, bad),
+             lambda: route_rollup(twa, bad),
+             lambda: route_rollup(sketch, bad),
              lambda: rollup_at(raw, bad),
              lambda: route_from_catalog(spark, cat, {"1m": "tier_1m"}, bad)]
     for call in calls:

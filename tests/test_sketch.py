@@ -51,19 +51,14 @@ def test_sketch_tier_chain(spark):
     the exact path bit-for-bit; the 1d vq estimates the RAW distribution
     quantile (which the exact path cannot provide without re-scanning
     raw) within t-digest rank error."""
-    from adtk_spark.plans.tiers import (
-        rollup_raw,
-        rollup_raw_sketch,
-        rollup_up,
-        rollup_up_sketch,
-    )
+    from adtk_spark.plans.tiers import rollup_raw, rollup_raw_sketch, rollup_up
     from adtk_spark.sources.tokens import token_corpus, token_series
 
     raw = token_series(token_corpus(spark, 4000, n_sources=4, seed=41,
                                     span_secs=3 * 86400)).cache()
     s1m = rollup_raw_sketch(raw, "1m")
-    s1h = rollup_up_sketch(s1m, "1h")
-    s1d = rollup_up_sketch(s1h, "1d")
+    s1h = rollup_up(s1m, "1h")
+    s1d = rollup_up(s1h, "1d")
 
     e1d = rollup_up(rollup_up(rollup_raw(raw, "1m"), "1h"), "1d")
     key = ["source", "bucket_ts"]
@@ -89,11 +84,11 @@ def test_sketch_tier_chain(spark):
 def test_sketch_plan_single_shuffle(spark):
     """The digest rides the existing one-exchange-per-tier plan: no
     extra shuffle vs the exact path."""
-    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_up_sketch
+    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_up
     from adtk_spark.sources.tokens import token_corpus, token_series
 
     raw = token_series(token_corpus(spark, 500, n_sources=4, seed=42))
-    plan = rollup_up_sketch(rollup_raw_sketch(raw, "1m"), "1h") \
+    plan = rollup_up(rollup_raw_sketch(raw, "1m"), "1h") \
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 3  # gen roundrobin + one per tier
 
@@ -104,8 +99,8 @@ def test_sketch_tiers_digest_once_per_group(spark):
     digest UDF once: one ``collect_list`` and one ``digest_of_arr`` /
     ``merge_digest_lists`` per optimized plan, although ``vdigest`` is
     both emitted and read by ``vq``."""
-    from adtk_spark.plans.router import route_rollup_sketch
-    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_up_sketch
+    from adtk_spark.plans.router import route_rollup
+    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_up
     from adtk_spark.sources.tokens import token_corpus, token_series
 
     raw = token_series(token_corpus(spark, 300, n_sources=3, seed=43))
@@ -113,8 +108,8 @@ def test_sketch_tiers_digest_once_per_group(spark):
     done = s1m.localCheckpoint()  # the upper plans show only their own level
     plans = {
         "rollup_raw_sketch": s1m,
-        "rollup_up_sketch": rollup_up_sketch(done, "1h"),
-        "route_rollup_sketch": route_rollup_sketch({"1m": done}, 600),
+        "rollup_up": rollup_up(done, "1h"),
+        "route_rollup": route_rollup({"1m": done}, 600),
     }
     for name, df in plans.items():
         plan = df._jdf.queryExecution().optimizedPlan().toString()

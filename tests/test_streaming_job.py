@@ -508,10 +508,10 @@ def test_streaming_sketch_rollup_matches_batch(spark, tmp_path):
     """Sketch-carrying streaming 1m rollup: finalized buckets match the
     batch rollup_raw_sketch point-for-point (algebraic stats exact,
     digest quantile identical for the same per-bucket multiset), and the
-    streamed digests re-merge upward with rollup_up_sketch."""
+    streamed digests re-merge upward with rollup_up."""
     import datetime as dt
 
-    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_up_sketch
+    from adtk_spark.plans.tiers import rollup_raw_sketch, rollup_up
     from adtk_spark.sources.tokens import token_corpus, token_series
     from adtk_spark.streaming.rollup_stream import (
         run_available_now,
@@ -545,9 +545,9 @@ def test_streaming_sketch_rollup_matches_batch(spark, tmp_path):
 
     # streamed digests feed the batch upward merge: 1h vq from streamed
     # 1m digests equals 1h vq from batch 1m digests
-    up_g = key(rollup_up_sketch(
+    up_g = key(rollup_up(
         got.where(F.col("bucket_ts") < F.lit(cutoff)), "1h").collect())
-    up_b = key(rollup_up_sketch(
+    up_b = key(rollup_up(
         batch.where(F.col("bucket_ts") < F.lit(cutoff)), "1h").collect())
     assert up_g == up_b and up_g
 
@@ -851,7 +851,7 @@ def test_streaming_cusum_matches_batch(spark, tmp_path):
 def test_streaming_twa_partials_match_batch(spark, tmp_path):
     """TWA at the ingest edge: the same series streamed in 3 event-time
     chunks must produce partial rows whose merge equals the batch
-    rollup_twa(carry_sums=True) tier BIT-FOR-BIT — weight micros,
+    rollup_twa tier BIT-FOR-BIT — weight micros,
     1e-6-unit value-seconds, covered_secs AND twa — including segments
     that straddle chunk boundaries (only the (last_ts, last_value)
     state carry can close those)."""
@@ -869,7 +869,7 @@ def test_streaming_twa_partials_match_batch(spark, tmp_path):
         token_series(token_corpus(spark, 4000, n_sources=5, seed=17,
                                   span_secs=7200, start="2025-03-01 00:00:00"))
     ).cache()
-    batch = rollup_twa(raw, "1m", carry_sums=True)
+    batch = rollup_twa(raw, "1m")
     expect = {
         (r["source"], r["bucket_ts"]):
             (r["_w_us"], int(r["_vw"].scaleb(6)), r["covered_secs"], r["twa"])
@@ -930,7 +930,7 @@ def test_tier_producers_share_one_algebra(spark, tmp_path):
     so do the batch and streamed plain tiers."""
     import datetime as dt
 
-    from adtk_spark.plans.router import rollup_at, route_rollup_sketch
+    from adtk_spark.plans.router import rollup_at, route_rollup
     from adtk_spark.plans.tiers import rollup_raw, rollup_raw_sketch, salt_partials
     from adtk_spark.streaming.rollup_stream import (
         run_available_now,
@@ -969,7 +969,7 @@ def test_tier_producers_share_one_algebra(spark, tmp_path):
     # where the batch quantile does
     s1m = rollup_raw_sketch(raw, "1m")
     schemas = {
-        "routed": (route_rollup_sketch({"1m": s1m}, 60), s1m),
+        "routed": (route_rollup({"1m": s1m}, 60), s1m),
         "stream_sketch": (streaming_rollup_1m_sketch(spark, src), s1m),
         "stream": (streaming_rollup_1m(spark, src), producers["rollup_raw"]),
     }

@@ -19,3 +19,13 @@ def test_exact_sum_type_spelled_only_in_exact_module():
     ]
     assert hits, "functions/exact.py no longer defines the exact sum"
     assert all(h.startswith("functions/exact.py:") for h in hits), hits
+
+
+def test_tier_family_merges_written_once():
+    """Each routed tier family's merge is written once
+    (``plans/tiers.merge_tier``): the digest list and the TWA weight sum
+    are each aggregated in one place, which ``rollup_up``, ``route_rollup``
+    and the streaming TWA merge all call."""
+    text = "\n".join(path.read_text() for path in sorted(PKG.rglob("*.py")))
+    for spelling in ('collect_list("vdigest")', 'F.sum("_w_us")'):
+        assert text.count(spelling) == 1, spelling
