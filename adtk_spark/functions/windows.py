@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from ..session import one_partition_if_small
+
 MICROS = 1_000_000  # Spark timestamps are microsecond-resolution
 
 ROWS = "rows"
@@ -100,14 +102,20 @@ def quoted(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def select_with(cols: list[str], name: str, col: Column, drop=()) -> list:
+def select_with(cols: list[str], name: str, col: Column | str, drop=()) -> list:
     """The select list of ``withColumn(name, col).drop(*drop)`` over a
     frame with columns ``cols``: ``name`` replaced in place or appended.
     A builder that ends in this one projection pays one analyzer pass
     where ``withColumn`` + ``drop`` pay two (each Dataset step
-    re-analyzes the whole plan on the driver)."""
-    out = [col.alias(name) if c == name else quoted(c) for c in cols if c not in drop]
-    return out if name in cols else out + [col.alias(name)]
+    re-analyzes the whole plan on the driver). A str ``col`` is a SQL
+    expression, and the list is then one for ``selectExpr``."""
+    new = col.alias(name) if isinstance(col, Column) else f"{col} AS {quoted(name)}"
+    out = [new if c == name else quoted(c) for c in cols if c not in drop]
+    return out if name in cols else out + [new]
+
+
+#: the SQL of ``_ordered``'s sort key
+_ORDER_SQL = "unix_micros(CAST({} AS TIMESTAMP))"
 
 
 def _ordered(source_col: str, ts_col: str) -> WindowSpec:
@@ -116,12 +124,24 @@ def _ordered(source_col: str, ts_col: str) -> WindowSpec:
     # exchange + sort across all window nodes. The cast handles
     # TIMESTAMP_NTZ inputs (session TZ pinned to UTC, lossless). Build it
     # once per call site and derive each frame with `_frame`.
-    order = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    order = F.expr(_ORDER_SQL.format(quoted(ts_col)))
     return Window.partitionBy(source_col).orderBy(order)
 
 
 def _frame(w: WindowSpec, kind: str, lo: int, hi: int) -> WindowSpec:
     return w.rowsBetween(lo, hi) if kind == ROWS else w.rangeBetween(lo, hi)
+
+
+def _over(source_col: str, ts_col: str, kind: str, lo: int, hi: int) -> str:
+    """``_frame(_ordered(source_col, ts_col), kind, lo, hi)`` as a SQL
+    ``OVER`` clause: a window projection written as a string costs one
+    py4j round trip, where the WindowSpec alone takes about 25."""
+    def bound(b: int) -> str:
+        return "CURRENT ROW" if b == 0 else f"{abs(b)} {'PRECEDING' if b < 0 else 'FOLLOWING'}"
+
+    return (f"OVER (PARTITION BY {quoted(source_col)} ORDER BY "
+            f"{_ORDER_SQL.format(quoted(ts_col))} "
+            f"{kind.upper()} BETWEEN {bound(lo)} AND {bound(hi)})")
 
 
 def exact_quantile_agg(v: Column, p: float) -> Column:
@@ -154,12 +174,15 @@ def exact_quantile_over(v: Column, win: WindowSpec, p: float) -> Column:
 QUANTILE_AGGS = ("median", "quantile", "iqr", "idr")
 
 
-def sorted_frame_arr(value_col: str, win: WindowSpec) -> Column:
-    """The frame's non-null values as ONE sorted-array window expression.
+def sorted_frame_arr(value_col: str, win: WindowSpec | str) -> Column | str:
+    """The frame's non-null values as ONE sorted-array window expression
+    (a SQL string when ``win`` is an ``_over`` clause).
 
     Quantile kernels index into this attribute after a projection
     boundary, so the frame is buffered and sorted exactly once per row
     regardless of how many quantiles/references are computed."""
+    if isinstance(win, str):
+        return f"array_sort(collect_list({quoted(value_col)}) {win})"
     return F.array_sort(F.collect_list(F.col(value_col)).over(win))
 
 
@@ -382,17 +405,21 @@ def rolling_agg(
             df, agg_params["bins"], value_col=value_col)
     kind, size = parse_window(window)
     lo, hi = _bounds(kind, size, center, closed)
-    win = _frame(_ordered(source_col, ts_col), kind, lo, hi)
+    df = one_partition_if_small(df)
     default_mp = size if kind == ROWS else 1
-    src, arr = df, None
     if agg in QUANTILE_AGGS:
-        src = df.select("*", sorted_frame_arr(value_col, win).alias("_qarr"))
-        arr = F.col("_qarr")
+        # quantile kernels read only the sorted frame array
+        qarr = sorted_frame_arr(value_col, _over(source_col, ts_col, kind, lo, hi))
+        src, win, arr = df.selectExpr("*", f"{qarr} AS _qarr"), None, F.col("_qarr")
+        keep = df.columns
+    else:
+        src, win, arr = df, _frame(_ordered(source_col, ts_col), kind, lo, hi), None
+        keep = ["*"]
     exprs = agg_exprs(value_col, win, agg, agg_params, min_periods, default_mp,
                       arr=arr)
     base = out_col or f"{value_col}_roll"
     cols = [c.alias(base if sfx is None else f"{base}_{sfx}") for sfx, c in exprs.items()]
-    return src.select(*df.columns, *cols)
+    return src.select(*keep, *cols)
 
 
 def _double_frames(
@@ -456,25 +483,30 @@ def double_rolling_sides(df: DataFrame, window, agg="mean", agg_params=None,
     aps = agg_params if isinstance(agg_params, tuple) else (agg_params, agg_params)
     mps = min_periods if isinstance(min_periods, tuple) else (min_periods, min_periods)
     wl, wr = window if isinstance(window, tuple) else (window, window)
+    df = one_partition_if_small(df)
     if not center and parse_window(wl)[0] != parse_window(wr)[0]:
         return _mixed_sides(df, wl, wr, aggs, aps, mps, source_col, ts_col, value_col)
-    extra, cols = [], []
-    ordered = _ordered(source_col, ts_col)
+    extra, cols, ordered = [], [], None
     for tag, agg_, ap, mp, (kind, lo, hi, _size, default_mp) in zip(
             "lr", aggs, aps, mps, _double_frames(window, center)):
-        win = _frame(ordered, kind, lo, hi)
-        arr = None
+        win = arr = None
         if agg_ in QUANTILE_AGGS:
+            # quantile kernels read only the sorted frame array
             if kind == ROWS and lo == hi == 0:
                 arr = single_row_arr(value_col)
             else:
-                extra.append(sorted_frame_arr(value_col, win).alias(f"_qarr_{tag}"))
+                qarr = sorted_frame_arr(value_col, _over(source_col, ts_col, kind, lo, hi))
+                extra.append(f"{qarr} AS _qarr_{tag}")
                 arr = F.col(f"_qarr_{tag}")
+        else:
+            ordered = ordered or _ordered(source_col, ts_col)
+            win = _frame(ordered, kind, lo, hi)
         exprs = agg_exprs(value_col, win, agg_, ap, mp, default_mp, arr=arr)
         cols += [c.alias(f"_{tag}" if sfx is None else f"_{tag}_{sfx}")
                  for sfx, c in exprs.items()]
-    src = df.select("*", *extra) if extra else df
-    return src.select(*df.columns, *cols)
+    if not extra:
+        return df.select("*", *cols)
+    return df.selectExpr("*", *extra).select(*df.columns, *cols)
 
 
 def _mixed_sides(

@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import exact_sum
+from ..session import one_partition_if_small
 from ..functions.windows import (
     double_rolling_sides,
     exact_quantile_agg,
@@ -93,6 +94,14 @@ def threshold_ad(
 # trainable bounds rules (QuantileAD / InterQuartileRangeAD)
 # ---------------------------------------------------------------------------
 
+def _check_levels(levels) -> None:
+    """Quantile levels must lie in [0, 1], as numpy's percentile
+    requires (adtk's QuantileAD fits with it)."""
+    bad = [p for p in levels if not 0.0 <= float(p) <= 1.0]
+    if bad:
+        raise ValueError(f"quantile levels must lie in [0, 1], got {bad}")
+
+
 def quantile_ad_fit(
     train: DataFrame,
     low: float | None = None,
@@ -106,6 +115,7 @@ def quantile_ad_fit(
     approx_percentile; point-parity requires exact).
     Result is a tiny (n_sources x 3) model table.
     """
+    _check_levels([p for p in (low, high) if p is not None])
     v = F.col(value_col)
     return train.groupBy(source_col).agg(
         (exact_quantile_agg(v, float(low)) if low is not None else F.lit(-INF)).alias("abs_low"),
@@ -195,8 +205,11 @@ def _source_quantiles(d: DataFrame, col: str, levels, *,
     v = F.col(quoted(col))
     by_v = Window.partitionBy(source_col).orderBy(v.asc_nulls_last())
     whole = by_v.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    ranked = d.select("*", F.count(v).over(whole).alias("_n"),
-                      F.row_number().over(by_v).alias("_rk"))
+    # the rank columns as SQL: a string costs one py4j round trip
+    by_v_sql = f"PARTITION BY {quoted(source_col)} ORDER BY {quoted(col)} ASC NULLS LAST"
+    ranked = d.selectExpr(
+        "*", f"count({quoted(col)}) OVER ({by_v_sql} ROWS BETWEEN UNBOUNDED PRECEDING "
+        "AND UNBOUNDED FOLLOWING) AS _n", f"row_number() OVER ({by_v_sql}) AS _rk")
     n, rk = F.col("_n"), F.col("_rk")
     picks, qs = [], []
     for j, p in enumerate(levels):
@@ -227,6 +240,8 @@ def quantile_ad(df: DataFrame, low: float | None = None, high: float | None = No
     ``apply_bounds`` labels — one Exchange, no join, no broadcast job.
     Rows leave each partition in value order."""
     levels = [p for p in (low, high) if p is not None]
+    _check_levels(levels)
+    df = one_partition_if_small(df)
     d, qs = _source_quantiles(df, value_col, levels, source_col=source_col)
     lo = qs.pop(0) if low is not None else F.lit(-INF)
     hi = qs.pop(0) if high is not None else F.lit(INF)
@@ -239,6 +254,7 @@ def iqr_ad(df: DataFrame, c=3.0, *, source_col: str = "source",
     """InterQuartileRangeAD fit_detect on one series: ``iqr_ad_fit``'s
     bounds from window quartiles, labelled in the same plan (see
     ``quantile_ad``)."""
+    df = one_partition_if_small(df)
     d, (q1, q3) = _source_quantiles(df, value_col, (0.25, 0.75), source_col=source_col)
     lo, hi = _iqr_bounds(q1, q3, c)
     return _window_bounds_label(d, df.columns, lo, hi, source_col=source_col,

@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from adtk_spark.functions.windows import td_micros
+from adtk_spark.functions.windows import quoted, td_micros
+from adtk_spark.session import one_partition_if_small
 
 US = "1 microsecond"
 
@@ -152,16 +153,15 @@ def to_events(
             F.col(ts_col).cast("timestamp").alias("start_ts"),
             end_of_point.alias("end_ts"),
         )
-    # gaps-and-islands over row positions
-    w = Window.partitionBy(source_col).orderBy(ts_col)
-    rn_all = labels.select(
-        source_col, ts_col, label_col, F.row_number().over(w).alias("_rn")
-    )
-    flagged = rn_all.where(F.col(label_col) == 1)
-    w2 = Window.partitionBy(source_col).orderBy("_rn")
-    grp = (F.col("_rn") - F.row_number().over(w2)).alias("_grp")
+    # gaps-and-islands over row positions, the two row_number windows as
+    # SQL strings (one py4j round trip each, a WindowSpec about 20); a
+    # small input runs as one partition and plans no Exchange
+    s, t, lab = quoted(source_col), quoted(ts_col), quoted(label_col)
     return (
-        flagged.select(source_col, ts_col, grp)
+        one_partition_if_small(labels)
+        .selectExpr(s, t, lab, f"row_number() OVER (PARTITION BY {s} ORDER BY {t}) AS _rn")
+        .where(f"{lab} = 1")
+        .selectExpr(s, t, f"_rn - row_number() OVER (PARTITION BY {s} ORDER BY _rn) AS _grp")
         .groupBy(source_col, "_grp")
         .agg(
             F.min(ts_col).cast("timestamp").alias("start_ts"),

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from adtk_spark.functions.exact import exact_sum
 from adtk_spark.functions.windows import quoted, select_with, td_micros
+from adtk_spark.session import one_partition_if_small
 
 
 def _with_next(df: DataFrame, source_col: str, ts_col: str, *cols: str) -> DataFrame:
@@ -33,14 +34,24 @@ def _with_next(df: DataFrame, source_col: str, ts_col: str, *cols: str) -> DataF
     NULL timestamps sort first, so no other row sees one as ``_next``.
     Built from SQL strings: as Column and WindowSpec calls, this one
     projection took 42 py4j round trips and the whole spine 113; as
-    strings the spine takes 16."""
+    strings the spine takes 16. A small input runs as one partition
+    (``one_partition_if_small``), so the window and the fills and
+    interpolation over its output plan no Exchange."""
     s, t = quoted(source_col), f"CAST({quoted(ts_col)} AS TIMESTAMP)"
-    return df.selectExpr(s, f"{t} AS {quoted(ts_col)}", *map(quoted, cols),
-                         f"lead({t}) OVER (PARTITION BY {s} ORDER BY {t}) AS _next")
+    return one_partition_if_small(df).selectExpr(
+        s, f"{t} AS {quoted(ts_col)}", *map(quoted, cols),
+        f"lead({t}) OVER (PARTITION BY {s} ORDER BY {t}) AS _next")
+
+
+#: a running frame: every row from the partition's first up to this one
+_RUNNING = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 
 
 def _step(freq: str) -> str:
-    return f"INTERVAL {td_micros(freq) // 1_000_000} SECONDS"
+    micros = td_micros(freq)
+    if micros <= 0 or micros % 1_000_000:
+        raise ValueError(f"freq must be a positive whole number of seconds, got {freq!r}")
+    return f"INTERVAL {micros // 1_000_000} SECONDS"
 
 
 def time_spine(
@@ -77,12 +88,13 @@ def forward_fill(
     value_col: str = "value",
     out_col: str = "value_ff",
 ) -> DataFrame:
-    w = (
-        Window.partitionBy(source_col)
-        .orderBy(ts_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.withColumn(out_col, F.last(value_col, ignorenulls=True).over(w))
+    """Each row's last non-NULL value up to it (its own included), per
+    source in ts order. One projection from a SQL string: its
+    WindowSpec, ``F.last`` and ``withColumn`` took 29 py4j round trips,
+    the string takes 11."""
+    ff = (f"last({quoted(value_col)}, true) OVER (PARTITION BY {quoted(source_col)} "
+          f"ORDER BY {quoted(ts_col)} {_RUNNING})")
+    return df.selectExpr(*select_with(df.columns, out_col, ff))
 
 
 def interpolate_linear(
@@ -95,36 +107,29 @@ def interpolate_linear(
 ) -> DataFrame:
     """pandas ``Series.interpolate('linear')`` parity: interior NULLs get
     the time-weighted line between anchors, trailing NULLs carry the last
-    value forward, leading NULLs stay NULL."""
-    v = F.col(value_col)
-    t = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    value forward, leading NULLs stay NULL. Built from SQL strings (35
+    py4j round trips; as Column and WindowSpec calls, 150)."""
+    s, ts, v = quoted(source_col), quoted(ts_col), quoted(value_col)
+    t = f"unix_micros(CAST({ts} AS TIMESTAMP))"
     # next anchor = the last non-NULL of a running frame over DESCENDING
     # ts: a growing frame is O(1) per row, where the equivalent
     # first(...) over rowsBetween(0, unboundedFollowing) re-aggregates
     # the shrinking tail on every row (O(n^2) per source)
-    wp = Window.partitionBy(source_col).orderBy(ts_col).rowsBetween(Window.unboundedPreceding, 0)
-    wn = (Window.partitionBy(source_col).orderBy(F.col(ts_col).desc())
-          .rowsBetween(Window.unboundedPreceding, 0))
-    vt = F.when(v.isNotNull(), t)
+    wp = f"OVER (PARTITION BY {s} ORDER BY {ts} {_RUNNING})"
+    wn = f"OVER (PARTITION BY {s} ORDER BY {ts} DESC {_RUNNING})"
+    vt = f"CASE WHEN {v} IS NOT NULL THEN {t} END"
     # anchors projected once and referenced by name (WindowExec does not
     # dedupe the formula's repeated references); the descending frame
     # goes first so rows leave the ascending one in (source, ts) order
     anchored = (
-        df.select("*", F.last(v, ignorenulls=True).over(wn).alias("_nv"),
-                  F.last(vt, ignorenulls=True).over(wn).alias("_nt"))
-        .select("*", F.last(v, ignorenulls=True).over(wp).alias("_pv"),
-                F.last(vt, ignorenulls=True).over(wp).alias("_pt"))
+        df.selectExpr("*", f"last({v}, true) {wn} AS _nv", f"last({vt}, true) {wn} AS _nt")
+        .selectExpr("*", f"last({v}, true) {wp} AS _pv", f"last({vt}, true) {wp} AS _pt")
     )
-    pv, pt, nv, nt = (F.col(k) for k in ("_pv", "_pt", "_nv", "_nt"))
-    lerp = (
-        F.when(v.isNotNull(), v)
-        .when(
-            pv.isNotNull() & nv.isNotNull() & (nt != pt),
-            pv + (nv - pv) * (t - pt) / (nt - pt),
-        )
-        .when(pv.isNotNull(), pv)
-    )
-    return anchored.select(*select_with(df.columns, out_col, lerp))
+    lerp = (f"CASE WHEN {v} IS NOT NULL THEN {v} "
+            "WHEN _pv IS NOT NULL AND _nv IS NOT NULL AND _nt != _pt "
+            f"THEN _pv + (_nv - _pv) * ({t} - _pt) / (_nt - _pt) "
+            "WHEN _pv IS NOT NULL THEN _pv END")
+    return anchored.selectExpr(*select_with(df.columns, out_col, lerp))
 
 
 def counter_rate(

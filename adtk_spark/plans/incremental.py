@@ -12,7 +12,7 @@ Readers use ``read_tier_latest`` to resolve bucket restatements: the
 highest snapshot id wins per (source, bucket) — Iceberg's
 MERGE-on-read semantics expressed as a window dedup.
 
-Small inputs are read as ONE partition (``one_partition_if_small``):
+Small inputs are read as ONE partition (``session.one_partition_if_small``):
 the manifest's lineage gives each snapshot's row count, so the driver
 knows before planning that a tier read or a refresh input is small.
 Read that way, the latest-wins window and the rollup aggregates need no
@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import one_partition_if_small
 from .tiers import (
     TIER_INTERVALS,
     rollup_raw,
@@ -55,32 +56,11 @@ def _rows(lineage: dict, ids) -> int | None:
     return None if None in rows else sum(rows)
 
 
-def one_partition_if_small(df: DataFrame, rows: int | None) -> DataFrame:
-    """``df`` coalesced to one partition when it is small, else as is.
-
-    Small means ``rows`` (from the manifest's lineage) times the row
-    width ``defaultSize`` is at most ``spark.sql.autoBroadcastJoinThreshold``
-    (10 MB by default): Spark's own size for "small enough to handle
-    whole in one place". ``rows`` None (snapshots committed before
-    lineage was recorded) or a threshold of -1 keeps today's plan.
-
-    Measured at 4 cores (10 overlapping snapshots, the latest-wins
-    window plus ``rollup_up``, to ``noop``; median of 3, one partition
-    against shuffled): 756 against 918 ms at 100k rows (8 MB
-    estimated), 1037 against 1158 ms at 300k (24 MB), 2374 against
-    1672 ms at 1M (80 MB). An earlier run of the same probe had the
-    shuffled plan ahead at 300k already (793 against 849 ms), so the
-    crossover lies somewhere between 8 and 80 MB and 10 MB sits below
-    it. Not measured above 4 cores. A real-valued double ``vsum`` may
-    differ in its last bits between the two plans (a sum's order
-    follows the partitioning)."""
-    if rows is None:
-        return df
-    limit = df.sparkSession._jsparkSession.sessionState().conf() \
-        .autoBroadcastJoinThreshold()
-    if limit < 0 or rows * df._jdf.schema().defaultSize() > limit:
-        return df
-    return df.coalesce(1)
+def _small(df: DataFrame, rows: int | None) -> DataFrame:
+    """``df`` as one partition when the manifest's ``rows`` say it is
+    small (``one_partition_if_small``); ``rows`` None (snapshots
+    committed before lineage was recorded) keeps today's plan."""
+    return df if rows is None else one_partition_if_small(df, rows)
 
 
 def read_tier_latest(
@@ -110,7 +90,7 @@ def read_tier_latest(
     if df is None:
         return None
     lin = catalog.lineage(table)
-    df = one_partition_if_small(df, _rows(lin, lin if ids is None else ids))
+    df = _small(df, _rows(lin, lin if ids is None else ids))
     w = Window.partitionBy("source", "bucket_ts").orderBy(F.desc("snap"))
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -214,9 +194,8 @@ def refresh_tiers(
     new_raw = catalog.read_since(spark, RAW_TABLE, wm).drop("snap")
     all_raw = catalog.read(spark, RAW_TABLE).drop("snap")
     lin = catalog.lineage(RAW_TABLE)
-    new_series = one_partition_if_small(
-        series_of(new_raw), _rows(lin, [i for i in lin if i > wm]))
-    full_series = one_partition_if_small(series_of(all_raw), _rows(lin, lin))
+    new_series = _small(series_of(new_raw), _rows(lin, [i for i in lin if i > wm]))
+    full_series = _small(series_of(all_raw), _rows(lin, lin))
 
     # affected 1m buckets: only windows the new snapshots touch
     touched = new_series.select("source", tier_bucket(F.col("ts"), "1m")).distinct()

@@ -40,7 +40,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import exact_sum, ols_slope, ols_sums
-from ..functions.windows import _interp_sorted, exact_quantile_agg, sorted_frame_arr
+from ..functions.windows import _interp_sorted, exact_quantile_agg, quoted, sorted_frame_arr
+from ..session import one_partition_if_small
 
 TIER_INTERVALS = {"1m": "minute", "1h": "hour", "1d": "day"}
 #: one bucket of each tier as a CALENDAR interval (DST-safe bucket steps)
@@ -426,9 +427,13 @@ def rollup_topk_up(
 
 def bin_index(v: Column, edges: list[float]) -> Column:
     """Number of ``edges`` <= v (NULL for NULL): a branch-free sum of
-    indicator casts — whole-stage codegen, identical in any SQL dialect."""
-    return reduce(operator.add,
-                  [(v >= F.lit(float(e))).cast("int") for e in edges])
+    indicator casts — whole-stage codegen, identical in any SQL dialect.
+    ``edges`` must be non-empty and strictly increasing, as
+    ``numpy.histogram`` requires of its bin edges."""
+    edges = [float(e) for e in edges]
+    if not edges or any(b <= a for a, b in zip(edges, edges[1:])):
+        raise ValueError(f"bin edges must be non-empty and strictly increasing, got {edges}")
+    return reduce(operator.add, [(v >= e).cast("int") for e in edges])
 
 
 def bin_counts(bin_col: Column, k: int) -> list[Column]:
@@ -463,7 +468,9 @@ def split_counts(df: DataFrame, key: Column, split_ts, *,
                  value_col: str = "value") -> DataFrame:
     """(source, k, cref, ccur): per (source, ``key``) counts of the
     reference (``ts < split_ts``) and current windows over the non-NULL
-    values — one map-side combinable shuffle."""
+    values — one map-side combinable shuffle, none for a small input
+    (``one_partition_if_small``)."""
+    df = one_partition_if_small(df)
     is_ref = F.col(ts_col) < F.lit(split_ts)
     return (
         df.where(F.col(value_col).isNotNull())
@@ -494,15 +501,16 @@ def distribution_compare(counts: DataFrame, stat: str, by: list[str], *,
     if stat not in ("psi", "jsd", "ks"):
         raise ValueError(
             f"distribution_compare: stat must be psi, jsd or ks, got {stat!r}")
-    w = Window.partitionBy(*by)
-    cref, ccur = F.col("cref"), F.col("ccur")
-    totals = [F.sum(cref).over(w).alias("n_ref"), F.sum(ccur).over(w).alias("n_cur")]
+    # the window sums as SQL: a string costs one py4j round trip, a
+    # WindowSpec and its Columns about ten
+    w = "PARTITION BY " + ", ".join(map(quoted, by))
+    totals = [f"sum(cref) OVER ({w}) AS n_ref", f"sum(ccur) OVER ({w}) AS n_cur"]
     # the reduce's n_ref / n_cur, referenced inside the score as well:
     # one aggregate each (identical aggregates are evaluated once)
     n_ref, n_cur = F.min("n_ref"), F.min("n_cur")
     if stat == "ks":
-        wcum = w.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
-        totals += [F.sum(cref).over(wcum).alias("rc"), F.sum(ccur).over(wcum).alias("cc")]
+        wcum = f"OVER ({w} ORDER BY k ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+        totals += [f"sum(cref) {wcum} AS rc", f"sum(ccur) {wcum} AS cc"]
         # DECIMAL products, numerator AND denominator: two ~3e9+ counts
         # multiplied as int64 wrap (r04 ADVICE); (38,0) holds 1e26
         dec = "decimal(20,0)"
@@ -511,6 +519,7 @@ def distribution_compare(counts: DataFrame, stat: str, by: list[str], *,
         score = F.round(gap.cast("double") / (
             n_ref.cast(dec) * n_cur.cast(dec)).cast("double"), 6)
     else:
+        cref, ccur = F.col("cref"), F.col("ccur")
         nr, nc = F.col("n_ref"), F.col("n_cur")
         p = F.when(nr > 0, cref / nr)
         q = F.when(nc > 0, ccur / nc)
@@ -526,7 +535,7 @@ def distribution_compare(counts: DataFrame, stat: str, by: list[str], *,
     if stat != "psi":
         score = F.when((n_ref > 0) & (n_cur > 0), score)
     return (
-        counts.select("*", *totals)
+        counts.selectExpr("*", *totals)
         .groupBy(*by)
         .agg(*extra, n_ref.alias("n_ref"), n_cur.alias("n_cur"), score.alias(stat))
     )

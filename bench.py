@@ -172,6 +172,9 @@ EXTRAS = (
     "mixture_sample", "quality_gate", "psi_timeline", "rollup_twa_1h",
     "event_cooccurrence", "stratified_take", "winsorize",
     "mixture_epochs", "seasonality_strength", "duplicate_spans",
+    # the heaviest parity plans by Exchange count (5-7 each but seasonal_ad)
+    "regularize_hourly", "seasonal_resid", "seasonal_ad", "regression_ad",
+    "pca_ad",
 )
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import tempfile
 
 import pytest
 from pyspark.sql import SparkSession
@@ -68,25 +69,35 @@ def fetch(df, col, sources=("A", "B")):
 
 def assert_layout_invariant(spark, df, op):
     """Assert that ``op(df)`` emits identical rows whatever the input
-    partitioning (1 vs 13) and the shuffle width (1 vs 7, with AQE
-    coalescing off so the width is really used); return the rows,
-    sorted."""
+    partitioning (1 vs 13), the shuffle width (1 vs 7, with AQE
+    coalescing off so the width is really used) and whether small
+    inputs run as one partition (``session.one_partition_if_small``:
+    the default ``spark.sql.autoBroadcastJoinThreshold`` vs -1); return
+    the rows, sorted. ``df`` is read back from a parquet copy, so Spark
+    knows its size and the rule applies to it: a frame built from
+    Python rows has no size estimate and keeps the shuffled plan."""
     keys = ("spark.sql.shuffle.partitions",
-            "spark.sql.adaptive.coalescePartitions.enabled")
+            "spark.sql.adaptive.coalescePartitions.enabled",
+            "spark.sql.autoBroadcastJoinThreshold")
     prev = {k: spark.conf.get(k) for k in keys}
     got = {}
-    try:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        for width in (1, 7):
-            spark.conf.set("spark.sql.shuffle.partitions", str(width))
-            for parts in (1, 13):
-                got[(width, parts)] = sorted(
-                    (tuple(r) for r in op(df.repartition(parts)).collect()),
-                    key=repr)
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
-    want = got[(1, 1)]
+    with tempfile.TemporaryDirectory() as tmp:
+        df.write.parquet(tmp + "/input")
+        df = spark.read.parquet(tmp + "/input")
+        try:
+            spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+            for rule in (prev["spark.sql.autoBroadcastJoinThreshold"], "-1"):
+                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", rule)
+                for width in (1, 7):
+                    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+                    for parts in (1, 13):
+                        got[(rule, width, parts)] = sorted(
+                            (tuple(r) for r in op(df.repartition(parts)).collect()),
+                            key=repr)
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+    want = next(iter(got.values()))
     assert want
     for layout, rows in got.items():
         assert rows == want, layout

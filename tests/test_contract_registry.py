@@ -30,7 +30,7 @@ def test_bench_times_registered_queries():
     import bench
 
     registered = set(entry.queries())
-    assert len(bench.HEADLINE) == 11 and len(bench.EXTRAS) == 62
+    assert len(bench.HEADLINE) == 11 and len(bench.EXTRAS) == 67
     assert set(bench.HEADLINE) <= registered
     assert set(bench.EXTRAS) <= registered
     assert len(bench.PROD_EXTRAS) == 7

@@ -873,29 +873,44 @@ def test_weekday_profile_golden(spark):
     assert out2 == {k: tuple(v) for k, v in out.items()}
 
 
-@pytest.mark.parametrize("op", ["persist_ad", "level_shift_ad",
-                                "volatility_shift_ad"])
-def test_compound_fit_detect_one_scan_one_exchange(spark, tmp_path, op):
-    """The compound trio's fit_detect fits its IQR bounds as window
-    columns on the feature frame's own partitioning: one scan, one
-    shuffle, no broadcast and no join; rows leave re-sorted by ts."""
+#: the compound trio and the window each test builds it with
+_COMPOUND = {"persist_ad": 3, "level_shift_ad": 5, "volatility_shift_ad": 5}
+
+
+def _compound_out(spark, tmp_path, op):
     from adtk_spark.operators import detectors as D
 
     path = str(tmp_path / "series")
     series_df(spark, [float(i % 7) for i in range(40)]).write.parquet(path)
-    df = spark.read.parquet(path)
-    run = {
-        "persist_ad": lambda d: D.persist_ad(d, window=3),
-        "level_shift_ad": lambda d: D.level_shift_ad(d, window=5),
-        "volatility_shift_ad": lambda d: D.volatility_shift_ad(d, window=5),
-    }[op]
-    out = run(df)
+    out = getattr(D, op)(spark.read.parquet(path), window=_COMPOUND[op])
     plan = plan_of(out)
     assert plan.count("FileScan") == 1, plan
-    assert count_exchanges(plan) == 1, plan
     assert "BroadcastExchange" not in plan, plan
     assert "Join" not in plan, plan
     assert_ts_ascending_per_source(out)
+    return plan
+
+
+@pytest.mark.parametrize("op", sorted(_COMPOUND))
+def test_compound_fit_detect_one_scan_one_exchange(spark, tmp_path, op):
+    """The compound trio's fit_detect fits its IQR bounds as window
+    columns on the feature frame's own partitioning: one scan, one
+    shuffle, no broadcast and no join; rows leave re-sorted by ts.
+    Pinned to the shuffled plan (``spark.sql.autoBroadcastJoinThreshold``
+    -1): this small input would otherwise run as one partition."""
+    from tests.test_small_reads import threshold
+
+    with threshold(spark, "-1"):
+        plan = _compound_out(spark, tmp_path, op)
+    assert count_exchanges(plan) == 1, plan
+
+
+@pytest.mark.parametrize("op", sorted(_COMPOUND))
+def test_compound_fit_detect_small_input_no_exchange(spark, tmp_path, op):
+    """With the one-partition rule on (the default threshold), the same
+    small parquet input plans no Exchange at all."""
+    plan = _compound_out(spark, tmp_path, op)
+    assert "Exchange" not in plan, plan
 
 
 def assert_ts_ascending_per_source(df):

@@ -29,3 +29,24 @@ def test_tier_family_merges_written_once():
     text = "\n".join(path.read_text() for path in sorted(PKG.rglob("*.py")))
     for spelling in ('collect_list("vdigest")', 'F.sum("_w_us")'):
         assert text.count(spelling) == 1, spelling
+
+
+def test_small_input_rule_written_once():
+    """The one-partition rule for small inputs (``coalesce(1)`` when the
+    estimated size is at most ``spark.sql.autoBroadcastJoinThreshold``)
+    is written once, in ``session.one_partition_if_small``: every
+    operator entry and tier read calls it, so the rule and its off
+    switch cannot drift apart between callers."""
+    def hits(*spellings):
+        return [
+            f"{path.relative_to(PKG)}:{lineno}"
+            for path in sorted(PKG.rglob("*.py"))
+            for lineno, line in enumerate(path.read_text().splitlines(), 1)
+            if any(s in line.replace(" ", "") for s in spellings)
+        ]
+
+    coalesce = hits("coalesce(1)")
+    # the threshold read, as a SQLConf call or as a conf lookup by key
+    reads = hits(".autoBroadcastJoinThreshold()", 'get("spark.sql.autoBroadcastJoinThreshold"')
+    for found in (coalesce, reads):
+        assert len(found) == 1 and found[0].startswith("session.py:"), found
